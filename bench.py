@@ -409,7 +409,7 @@ def main() -> None:
             # r14: also drop Python references so the ContextCleaner
             # can unpersist the freeze() localCheckpoint blocks the
             # finished query pinned — same between-queries hygiene,
-            # new storage class (declared in OPTIMIZATION_r14.md)
+            # new storage class
             release_sketch_caches()
             df = None
             import gc

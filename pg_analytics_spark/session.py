@@ -63,16 +63,18 @@ def get_spark(
     """Build (or fetch) the singleton SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
-    all cores).  ``shuffle_partitions`` defaults to the local core
-    count — on a cluster leave it at Spark's default and let AQE
-    coalesce.
+    all cores).  ``shuffle_partitions`` defaults to that core count
+    (every host core for ``*``) — on a cluster leave it at Spark's
+    default and let AQE coalesce.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 8
+        shuffle_partitions = (
+            int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
+        )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

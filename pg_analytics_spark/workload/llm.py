@@ -1662,9 +1662,12 @@ def _register_dedup_clusters():
         oracle=oracle,
         doc="Connected components over the duplicate graph -> cluster "
         "assignment (cluster_id = min member id; keep-one rule is "
-        "doc_id == cluster_id). Spark runs distributed min-label "
-        "propagation to fixpoint (iterations ~ component diameter, "
-        "driver reads only a convergence count); the oracle walks the "
+        "doc_id == cluster_id). Spark picks the component algorithm "
+        "from the measured edge count: a graph within the broadcast "
+        "threshold (16 B per edge) runs union-find in one Arrow task, "
+        "a larger one distributed min-label propagation to fixpoint "
+        "(iterations ~ component diameter); either way the driver reads "
+        "only counts. The oracle walks the "
         "same graph with a recursive CTE. Edges here come from the "
         "exact-fingerprint pairs so both engines derive the identical "
         "graph; the operator accepts any pair relation (minhash, "
@@ -1949,10 +1952,12 @@ def _register_dedup_near_keep():
         "only each cluster's min-id representative survives.  This is "
         "the operator a pre-training pipeline actually runs (pairs and "
         "clusters are diagnostics; the deliverable is the kept "
-        "corpus).  Scale: banding bounds candidate generation, label "
-        "propagation is iterations~diameter distributed joins with "
-        "periodic localCheckpoint, and the final keep is one join — "
-        "no stage touches |docs|² anywhere.",
+        "corpus).  Scale: banding bounds candidate generation; "
+        "components run as one-task union-find while the edge list "
+        "fits the broadcast threshold, else as label propagation "
+        "(iterations~diameter distributed joins with periodic "
+        "localCheckpoint); the final keep is one join — no stage "
+        "touches |docs|² anywhere.",
     )
     def dedup_near_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pg_analytics_spark.operators.dedup import neardup_clusters
@@ -2122,7 +2127,7 @@ def _register_dedup_semantic_keep():
         "contract as dedup_near_keep (pairs and clusters are "
         "diagnostics; the deliverable is the kept set); scale per "
         "SCALE.md's semantic ledger entry (bounded-size cells, "
-        "label-propagation components).",
+        "size-selected components, as in dedup_clusters).",
     )
     def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pg_analytics_spark.operators.dedup import (

@@ -7,6 +7,7 @@ DuckDB is the oracle (SURVEY §5's test plan).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import duckdb
@@ -48,6 +49,33 @@ def oracle():
         )
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def conf_set(spark, key: str, value: str | None):
+    """Set one session conf for the ``with`` body and restore it after;
+    ``None`` leaves the session's value in place."""
+    prev = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+#: ``neardup_clusters`` branch -> broadcast threshold that selects it:
+#: ``-1`` forces the label-propagation loop, the session default (10 MB)
+#: sends every test-sized graph to the one-task union-find
+CC_BRANCHES = {"loop": "-1", "union_find": None}
+
+
+@pytest.fixture(params=sorted(CC_BRANCHES))
+def cc_branch(request, spark):
+    with conf_set(
+        spark, "spark.sql.autoBroadcastJoinThreshold", CC_BRANCHES[request.param]
+    ):
+        yield request.param
 
 
 def assert_df_matches_oracle(df, con, sql, float_tol=1e-9):

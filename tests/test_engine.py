@@ -3,11 +3,56 @@
 
 from __future__ import annotations
 
+import os
+import types
+
 import pytest
 
 from pg_analytics_spark.errors import DataTypeMismatch, EngineError
 
 from .conftest import SF_DIR
+
+
+@pytest.mark.parametrize(
+    "cpus, master, partitions",
+    [("2", "local[2]", "2"), (None, "local[*]", str(os.cpu_count() or 8))],
+)
+def test_shuffle_partitions_follow_requested_cores(monkeypatch, cpus, master, partitions):
+    """get_spark's default shuffle partitions come from the cores it
+    asks for ($SPARK_GRAFT_CPUS), not from the host's core count.
+    ``SparkSession.builder`` is a stub here: the shared test session
+    stays untouched."""
+    from pg_analytics_spark import session
+
+    seen = {}
+
+    class _Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            return types.SimpleNamespace(
+                sparkContext=types.SimpleNamespace(setLogLevel=lambda level: None)
+            )
+
+    monkeypatch.setattr(
+        session, "SparkSession", types.SimpleNamespace(builder=_Builder())
+    )
+    if cpus is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    session.get_spark()
+    assert seen["master"] == master
+    assert seen["spark.sql.shuffle.partitions"] == partitions
 
 
 def test_attach_and_count(engine):

@@ -243,9 +243,11 @@ def test_release_sketch_caches(docs_with_dups):
     assert release_sketch_caches() == 0
 
 
-def test_neardup_clusters_chain_component(spark):
-    """A 16-node chain (diameter 15) exercises the localCheckpoint path
-    (lineage truncation every 5 iterations) and min-label convergence."""
+def test_neardup_clusters_chain_component(spark, cc_branch):
+    """A 16-node chain (diameter 15): on the loop branch it exercises
+    the localCheckpoint path (lineage truncation every 5 iterations)
+    and min-label convergence; on the union-find branch, a root chain
+    15 links deep."""
     from pg_analytics_spark.operators.dedup import neardup_clusters
 
     n = 16
@@ -258,14 +260,15 @@ def test_neardup_clusters_chain_component(spark):
     assert all(r.cluster_id == 0 for r in out)
 
 
-def test_neardup_edges_build_single_pass_over_pairs(spark):
+def test_neardup_edges_build_single_pass_over_pairs(spark, cc_branch):
     """The dup-edge build must execute the pair-producing pipeline
-    EXACTLY ONCE: both edge directions come from one explode pass, not
-    a union of two selects over the same (expensive) pair source —
-    Spark does no CSE across union branches, so the union shape ran the
-    whole minhash/embedding pair pipeline once per branch.  Counted via
-    an accumulator on the pair source: a star graph's 20 pairs must be
-    seen 20 times (once), not 40 (twice)."""
+    EXACTLY ONCE, on both component branches: both edge directions
+    come from one explode pass, not a union of two selects over the
+    same (expensive) pair source — Spark does no CSE across union
+    branches, so the union shape ran the whole minhash/embedding pair
+    pipeline once per branch.  Counted via an accumulator on the pair
+    source: a star graph's 20 pairs must be seen 20 times (once), not
+    40 (twice)."""
     from pg_analytics_spark.operators.dedup import neardup_clusters
 
     acc = spark.sparkContext.accumulator(0)
@@ -283,6 +286,66 @@ def test_neardup_edges_build_single_pass_over_pairs(spark):
     assert len(out) == 30
     assert sum(1 for r in out if r.cluster_id == 0) == 21  # the star
     assert acc.value == 20  # pair source executed once, not per branch
+
+
+def test_neardup_clusters_nan_ids_are_one_vertex(spark, cc_branch):
+    """Spark joins NaN to NaN and orders it above every number; Python
+    does neither (a NaN root never equals itself, so union-find would
+    not terminate), so float ids stay on the label-propagation loop:
+    the two NaN ends below are one vertex joining 1.0 and 2.0."""
+    from pg_analytics_spark.operators.dedup import neardup_clusters
+
+    nan = float("nan")
+    nodes = spark.createDataFrame([(1.0,), (2.0,), (nan,), (3.0,)], "doc_id double")
+    pairs = spark.createDataFrame([(1.0, nan), (2.0, nan)], "id_a double, id_b double")
+    got = sorted(
+        (repr(r.doc_id), repr(r.cluster_id))
+        for r in neardup_clusters(nodes, pairs, "doc_id").collect()
+    )
+    assert got == [("1.0", "1.0"), ("2.0", "1.0"), ("3.0", "3.0"), ("nan", "1.0")]
+
+
+def test_union_find_task_asserts_the_counted_edge_bound():
+    """The one-task kernel roots each component at its minimum id and
+    raises when it receives more edges than the driver counted — the
+    count that sent the graph to one task."""
+    import pyarrow as pa
+
+    from pg_analytics_spark.operators.dedup import _union_find_labels
+
+    batch = pa.RecordBatch.from_pydict(
+        {"_u": [3, 2, 7, None], "_v": [2, 1, 8, 5]}
+    )
+    (out,) = _union_find_labels(4)(iter([batch]))
+    assert dict(zip(out["_u"].to_pylist(), out["_lbl"].to_pylist())) == {
+        3: 1, 2: 1, 1: 1, 7: 7, 8: 7,
+    }
+    with pytest.raises(RuntimeError, match="more than the 3 counted"):
+        list(_union_find_labels(3)(iter([batch])))
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_neardup_clusters_keep_the_id_type(spark, cc_branch, id_type):
+    """Labels come back in the id column's own type on both branches
+    (the union-find task emits Arrow in the input's type), with the
+    min-id rule applied in that type's order: "d10" < "d9" as strings."""
+    from pg_analytics_spark.operators.dedup import neardup_clusters
+
+    conv = int if id_type == "int" else (lambda i: f"d{i}")
+    nodes = spark.createDataFrame(
+        [(conv(i),) for i in range(12)], f"doc_id {id_type}"
+    )
+    pairs = spark.createDataFrame(
+        [(conv(9), conv(10)), (conv(10), conv(11)), (conv(1), conv(2))],
+        f"id_a {id_type}, id_b {id_type}",
+    )
+    out = neardup_clusters(nodes, pairs, "doc_id")
+    assert out.schema["cluster_id"].dataType.simpleString() == id_type
+    got = {r.doc_id: r.cluster_id for r in out.collect()}
+    root = conv(9) if id_type == "int" else conv(10)
+    want = {conv(i): conv(i) for i in range(12)}
+    want.update({conv(2): conv(1), conv(9): root, conv(10): root, conv(11): root})
+    assert got == want
 
 
 def test_bloom_no_false_negatives_and_plan_broadcasts(spark):

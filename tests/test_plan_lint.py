@@ -19,6 +19,9 @@ instead of living invisibly behind healthy sf0.1 walls:
   review, or be rewritten distributed.
 - ``test_datasource_modules_collect_free``: the two Python DataSource
   modules (the 100 TB ingest path) stay at ZERO collects.
+- ``test_dedup_rows_job_census``: the Spark jobs of a warm call of each
+  dedup row are pinned as an upper bound, so a row that gains jobs
+  fails here without a bench run.
 
 Limit worth knowing: rows that materialize inside their function
 (streaming fixtures, writer round-trips returning
@@ -30,7 +33,7 @@ rows (the overwhelming majority) are linted for real.
 
 from __future__ import annotations
 
-import re
+import ast
 from pathlib import Path
 
 import pytest
@@ -100,19 +103,29 @@ _WORKLOAD = Path(__file__).resolve().parent.parent / (
 #: docstring for what qualifies); bump ONLY with a reason in the
 #: commit that bumps it
 _COLLECT_PINS = {
-    "core_sql.py": 2,
-    "llm.py": 4,
+    "core_sql.py": 1,
+    "llm.py": 2,
     "sketch.py": 1,
-    # 12th: streaming_delta_sink_day_partitioned's bounded result
-    # round-trip (createDataFrame(out.collect(), …) of the 3-day
-    # slice — the same rows the oracle returns)
-    "stream.py": 12,
 }
+
+
+def _collect_calls(src: str) -> int:
+    """``.collect()`` CALLS in the module's code — parsed, so a
+    ``.collect()`` quoted in a docstring or comment does not count."""
+    return sum(
+        1
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "collect"
+        and not node.args
+        and not node.keywords
+    )
 
 
 def test_no_new_workload_collects():
     counts = {
-        p.name: len(re.findall(r"\.collect\(\)", p.read_text()))
+        p.name: _collect_calls(p.read_text())
         for p in sorted(_WORKLOAD.glob("*.py"))
     }
     counts = {k: v for k, v in counts.items() if v}
@@ -132,3 +145,40 @@ def test_datasource_modules_collect_free():
         assert ".collect()" not in text, (
             f"{mod}: the DataSource ingest path must stay collect-free"
         )
+
+
+#: Spark jobs per call of each dedup row at the test SF, warm (the
+#: first call of a session also pays one-off file listings and the
+#: embedding-dimension probe).  An upper bound: lower it when a change
+#: saves jobs; a row that gains jobs fails here, without a bench run.
+_JOB_PINS = {
+    "dedup_clusters": 9,
+    "dedup_near_keep": 19,
+    "dedup_near_keep_best": 20,
+    "dedup_semantic_keep": 9,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JOB_PINS))
+def test_dedup_rows_job_census(spark, name):
+    from pg_analytics_spark.operators.dedup import release_sketch_caches
+    from pg_analytics_spark.workload.base import drain_listener_bus
+
+    sc = spark.sparkContext
+    group = f"job-census-{name}"
+    try:
+        for g in (group + "-warm", group):
+            release_sketch_caches()
+            sc.setJobGroup(g, name)
+            REGISTRY[name].spark(spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_sketch_caches()
+    drain_listener_bus(spark)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _JOB_PINS[name], (
+        f"{name} ran {jobs} Spark jobs, pinned at most {_JOB_PINS[name]}"
+    )

@@ -12,6 +12,8 @@ from hypothesis import strategies as st
 
 from pg_analytics_spark.operators.temporal import asof_join, banded_range_join
 
+from .conftest import CC_BRANCHES, conf_set
+
 _EPOCH = dt.datetime(2024, 1, 1)
 
 
@@ -198,11 +200,13 @@ def test_hash_split_is_deterministic_and_total(spark, texts):
             lambda e: e[0] != e[1]
         ),
         max_size=20,
-    )
+    ),
+    branch=st.sampled_from(sorted(CC_BRANCHES)),
 )
 @_SETTINGS
-def test_neardup_clusters_match_naive_components(spark, edges):
-    """Min-label propagation == naive union-find on random graphs."""
+def test_neardup_clusters_match_naive_components(spark, edges, branch):
+    """Both component branches (label propagation, one-task union-find;
+    drawn per example) == naive union-find on random graphs."""
     from pg_analytics_spark.operators.dedup import neardup_clusters
 
     n = 16
@@ -211,10 +215,13 @@ def test_neardup_clusters_match_naive_components(spark, edges):
         [(min(a, b), max(a, b)) for a, b in edges] or [(0, 0)],
         "id_a long, id_b long",
     ).filter("id_a < id_b")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(nodes, pairs, "doc_id").collect()
-    }
+    with conf_set(
+        spark, "spark.sql.autoBroadcastJoinThreshold", CC_BRANCHES[branch]
+    ):
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in neardup_clusters(nodes, pairs, "doc_id").collect()
+        }
     parent = list(range(n))
 
     def find(x):
