@@ -42,7 +42,7 @@ from pg_analytics_spark.errors import UnsupportedFormat
 
 #: repo root, pickled BY VALUE into executor closures (the round-8
 #: driver-sim rule: a vanilla driver's workers lack the driver's
-#: sys.path — see sources/delta_write._REPO_ROOT).
+#: sys.path — see sources/arrow_part._REPO_ROOT).
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )

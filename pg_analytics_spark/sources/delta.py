@@ -84,11 +84,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
         # must stay un-memoized
         if _NATIVE_DELTA_FORMAT is None:
             msg = str(exc)
-            if (
-                "DATA_SOURCE_NOT_FOUND" in msg
-                or "Failed to find" in msg
-                or "ClassNotFoundException" in msg
-            ):
+            if "DATA_SOURCE_NOT_FOUND" in msg or "ClassNotFoundException" in msg:
                 _NATIVE_DELTA_FORMAT = False
         if ts is not None:
             version = _resolve_timestamp(
@@ -226,6 +222,16 @@ def _partition_overlaps(
     return True
 
 
+#: ``_metadata.file_path`` as the log's decoded absolute path: the
+#: URI prefix goes, and the percent escapes decode (space → %20 …).
+#: The '+' pre-escape keeps url_decode (a form decoder) from turning a
+#: literal '+' in a path into a space.
+_FILE_PATH_SQL = (
+    "url_decode(replace(regexp_replace("
+    "_metadata.file_path, '^file:/+', '/'), '+', '%2B'))"
+)
+
+
 def _load_via_log(
     spark: SparkSession,
     table_path: str,
@@ -354,14 +360,7 @@ def _load_via_log(
         others = [
             F.col(c) for c in df.columns if c not in (keep_phys or [])
         ]
-        # _metadata.file_path is a URI (space → %20 …); percent-decode
-        # it so the key matches the log's DECODED abs paths.  The '+'
-        # pre-escape keeps url_decode (a form decoder) from turning a
-        # literal '+' in a path into a space.
-        file_col = F.expr(
-            "url_decode(replace(regexp_replace("
-            "_metadata.file_path, '^file:/+', '/'), '+', '%2B'))"
-        ).alias("_pv_file")
+        file_col = F.expr(_FILE_PATH_SQL).alias("_pv_file")
         df = df.select(
             *others, *phys_keep, *(meta_cols if with_meta else []),
             file_col,
@@ -370,26 +369,44 @@ def _load_via_log(
             df, meta, part_cols, keep_cols=[*(keep_phys or []), "_pv_file"]
         )
         pv_rows = [
-            (p, *[None if v is None else str(v) for v in key])
+            (p, True, *[None if v is None else str(v) for v in key])
             for key, paths in groups.items()
             for p in paths
         ]
         from pyspark.sql import types as T
 
         pv_schema = T.StructType(
-            [T.StructField("_pv_file", T.StringType(), False)]
+            [
+                T.StructField("_pv_file", T.StringType(), False),
+                T.StructField("_pv_hit", T.BooleanType(), False),
+            ]
             + [
                 T.StructField(f"_pv_{c}", T.StringType(), True)
                 for c in part_cols
             ]
         )
         pvdf = spark.createDataFrame(pv_rows, pv_schema)
-        df = df.join(F.broadcast(pvdf), "_pv_file")
+        # LEFT join: a file whose key matches no add action must fail
+        # the read, not silently lose its rows (NULL partition values
+        # stay legal — only the non-null marker tells the two apart)
+        df = df.join(F.broadcast(pvdf), "_pv_file", "left")
+        miss = F.raise_error(
+            F.concat(
+                F.lit("delta read: data file "),
+                F.col("_pv_file"),
+                F.lit(" matches no add action of the snapshot"),
+            )
+        )
         for c in part_cols:
             df = df.withColumn(
-                c, F.col(f"_pv_{c}").cast(part_types[c])
+                c,
+                F.when(F.col("_pv_hit").isNull(), miss)
+                .otherwise(F.col(f"_pv_{c}"))
+                .cast(part_types[c]),
             )
-        out = df.drop("_pv_file", *[f"_pv_{c}" for c in part_cols])
+        out = df.drop(
+            "_pv_file", "_pv_hit", *[f"_pv_{c}" for c in part_cols]
+        )
     else:
         for key, paths in sorted(
             groups.items(), key=lambda kv: tuple(map(str, kv[0]))

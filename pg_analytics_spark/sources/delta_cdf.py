@@ -227,7 +227,9 @@ def read_table_changes(
             by_pv.setdefault(key, []).append(
                 os.path.join(path, _decode_log_path(rec["path"]))
             )
-        for key, files in sorted(by_pv.items(), key=lambda kv: kv[0]):
+        for key, files in sorted(
+            by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))
+        ):
             df = spark.read.option("mergeSchema", "true").parquet(*files)
             ct = (
                 F.lit(change_type)

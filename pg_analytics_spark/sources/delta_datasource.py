@@ -70,7 +70,7 @@ from pg_analytics_spark.errors import UnsupportedFormat
 #: SEPARATE python worker process that knows this module's file but
 #: NOT the driver's sys.path mutations — a vanilla session (driver-sim)
 #: therefore cannot lazily import the package there.  Same structural
-#: fix as delta_write._REPO_ROOT: the repo root travels with the
+#: fix as arrow_part._REPO_ROOT: the repo root travels with the
 #: module and re-enters sys.path on demand.
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -704,237 +704,37 @@ class _DeltaWriteMessage(WriterCommitMessage):
         self.files = files
 
 
-def _write_task_files_partitioned(
-    path: str, schema_names: list[str], part_cols: list[str], iterator
-):
-    """Partitioned worker staging: split each Arrow batch by its
-    partition tuple and stream every group into its own hive-dir
-    parquet file (``p=v/part-….parquet``, value percent-encoded the
-    way the log's partitionValues parser unquotes).  Partition
-    columns are DROPPED from the data files (the hive convention this
-    table's reader expects — it projects them back as constants from
-    each add action's partitionValues).  NULL partition values are
-    refused (delta's __HIVE_DEFAULT_PARTITION__ sentinel is out of
-    scope for this writer).  One open writer per distinct tuple per
-    task — repartition by the partition columns upstream to bound
-    fan-out; a >256-writer task refuses loudly rather than thrash."""
-    import json as _json
+def _write_task_files(path: str, schema, part_cols: list[str], iterator):
+    """Worker-side: this task's Arrow batches through the Delta write
+    kernel (``delta_write._delta_files``): one parquet file per
+    distinct partition tuple (one file when unpartitioned), partition
+    columns in Hive directories and dropped from the files, footer
+    stats per file.  A task meeting more than 256 tuples refuses
+    loudly — repartition by the partition columns upstream.  Returns
+    the commit message; the files only become visible if the DRIVER
+    commit publishes them."""
     import uuid as _uuid
-    from urllib.parse import quote
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     _ensure_importable()
-    from pg_analytics_spark.sources.arrow_part import (
-        BoundedGroupBuffer as _BoundedGroupBuffer,
-    )
-    from pg_analytics_spark.sources.arrow_part import (
-        group_take as _group_take,
+    from pg_analytics_spark.sources.delta_write import (
+        _delta_files,
+        _partition_values,
     )
 
-    writers: dict[tuple, tuple] = {}  # tuple -> (writer, relpath, stats)
-    data_names = [c for c in schema_names if c not in part_cols]
-
-    def _stats_new():
-        return {"n": 0, "mins": {}, "maxs": {}, "nulls": {}, "skip": set()}
-
-    def _stats_update(st, batch):
-        st["n"] += batch.num_rows
-        statable = (
-            pa.types.is_integer,
-            pa.types.is_floating,
-            pa.types.is_string,
-            pa.types.is_boolean,
-            pa.types.is_date,
-        )
-        for i, name in enumerate(batch.schema.names):
-            col = batch.column(i)
-            st["nulls"][name] = st["nulls"].get(name, 0) + col.null_count
-            if name in st["skip"] or not any(
-                f(col.type) for f in statable
-            ):
-                continue
-            if pa.types.is_floating(col.type) and bool(
-                pc.any(pc.is_nan(pc.drop_null(col))).as_py()
-                if len(col) - col.null_count
-                else False
-            ):
-                st["skip"].add(name)
-                st["mins"].pop(name, None)
-                st["maxs"].pop(name, None)
-                continue
-            mm = pc.min_max(col)
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            if lo is None:
-                continue
-            st["mins"][name] = (
-                lo if name not in st["mins"] else min(st["mins"][name], lo)
-            )
-            st["maxs"][name] = (
-                hi if name not in st["maxs"] else max(st["maxs"][name], hi)
-            )
-
-    # accumulate each tuple's slices and flush as ONE table per ~64 MB
-    # (guide §4.2): a 30-day epoch otherwise writes every ~10k-row
-    # batch as 30 tiny row groups with 30×columns Python-side stats
-    # calls — the accumulated flush writes large row groups and runs
-    # min/max once per flushed table instead of once per micro-slice.
-    # The buffer carries a GLOBAL per-task byte cap (guide §5): a
-    # 256-tuple task must not hold 256 × 64 MB before any flush.
-    def _write_group(tup, t2):
-        if tup not in writers:
-            if len(writers) >= 256:
-                raise UnsupportedFormat(
-                    "delta_native partitioned write: >256 distinct "
-                    "partition tuples in one task — repartition by "
-                    "the partition columns first"
-                )
-            rel_dir = "/".join(
-                f"{c}={quote(str(v), safe='')}"
-                for c, v in zip(part_cols, tup)
-            )
-            rel = f"{rel_dir}/part-{_uuid.uuid4().hex}.c000.parquet"
-            full = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(full), exist_ok=True)
-            writers[tup] = (
-                pq.ParquetWriter(full, t2.schema),
-                rel,
-                _stats_new(),
-            )
-        w, _rel, st = writers[tup]
-        w.write_table(t2)
-        _stats_update(st, t2)
-
-    buf = _BoundedGroupBuffer(_write_group, 64 << 20)
-    for batch in iterator:
-        t = pa.Table.from_batches([batch])
-        # distinct partition tuples in this batch — Arrow hash
-        # group-by (arrow_part.group_take), not per-row Python masks
-        for tup, idx in _group_take(
-            [t[c] for c in part_cols], t.num_rows
-        ):
-            if any(v is None for v in tup):
-                raise UnsupportedFormat(
-                    "delta_native partitioned write: NULL partition "
-                    "values are not supported by this writer"
-                )
-            buf.add(tup, t.take(idx).select(data_names))
-    buf.close()
-    out = []
-    for tup, (w, rel, st) in writers.items():
-        w.close()
-        full = os.path.join(path, rel)
-        s = os.stat(full)
-        stats = _json.dumps(
-            {
-                "numRecords": st["n"],
-                "minValues": {
-                    k: (v.isoformat() if hasattr(v, "isoformat") else v)
-                    for k, v in st["mins"].items()
-                },
-                "maxValues": {
-                    k: (v.isoformat() if hasattr(v, "isoformat") else v)
-                    for k, v in st["maxs"].items()
-                },
-                "nullCount": {
-                    k: st["nulls"].get(k, 0) for k in data_names
-                },
-            }
-        )
-        out.append(
-            (
-                rel,
-                s.st_size,
-                int(s.st_mtime * 1000),
-                stats,
-                {c: str(v) for c, v in zip(part_cols, tup)},
-            )
-        )
-    return _DeltaWriteMessage(out)
-
-
-def _write_task_files(path: str, schema_names: list[str], iterator):
-    """Worker-side: stream this task's Arrow batches into ONE parquet
-    file under the table root (uuid name — never clobbers), computing
-    the Delta add-action stats (numRecords + min/max/nullCount for
-    primitive columns; float/double columns containing NaN are left
-    out of min/max, the safe pruning choice) from the batches as they
-    pass through.  Returns the commit message; the file only becomes
-    visible if the DRIVER commit publishes it."""
-    import json as _json
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    fname = f"part-{_uuid.uuid4().hex}.c000.parquet"
-    full = os.path.join(path, fname)
-    os.makedirs(path, exist_ok=True)
-    writer = None
-    n_rows = 0
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    skip_stats: set = set()
-    statable = (
-        pa.types.is_integer,
-        pa.types.is_floating,
-        pa.types.is_string,
-        pa.types.is_boolean,
-        pa.types.is_date,
-    )
-    for batch in iterator:
-        if writer is None:
-            writer = pq.ParquetWriter(full, batch.schema)
-        writer.write_batch(batch)
-        n_rows += batch.num_rows
-        import pyarrow.compute as pc
-
-        for i, name in enumerate(batch.schema.names):
-            col = batch.column(i)
-            nulls[name] = nulls.get(name, 0) + col.null_count
-            if name in skip_stats or not any(
-                f(col.type) for f in statable
-            ):
-                continue
-            if pa.types.is_floating(col.type) and bool(
-                pc.any(pc.is_nan(pc.drop_null(col))).as_py()
-                if len(col) - col.null_count
-                else False
-            ):
-                # NaN breaks min/max ordering — omit the column
-                skip_stats.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            mm = pc.min_max(col)
-            lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            if lo is None:
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    if writer is None:
-        return _DeltaWriteMessage([])  # empty task: no file minted
-    writer.close()
-    st = os.stat(full)
-    stats = _json.dumps(
-        {
-            "numRecords": n_rows,
-            "minValues": {
-                k: (v.isoformat() if hasattr(v, "isoformat") else v)
-                for k, v in mins.items()
-            },
-            "maxValues": {
-                k: (v.isoformat() if hasattr(v, "isoformat") else v)
-                for k, v in maxs.items()
-            },
-            "nullCount": {k: nulls.get(k, 0) for k in schema_names},
-        }
+    files = _delta_files(
+        iterator,
+        path,
+        [f.name for f in schema.fields],
+        part_cols,
+        lambda: f"part-{_uuid.uuid4().hex}.c000.parquet",
+        schema,
+        max_open=256,
     )
     return _DeltaWriteMessage(
-        [(fname, st.st_size, int(st.st_mtime * 1000), stats, {})]
+        [
+            (rel, size, mtime_ms, stats, _partition_values(rel))
+            for rel, stats, size, mtime_ms, _rows in files
+        ]
     )
 
 
@@ -1130,12 +930,9 @@ class _DeltaBatchWriter(DataSourceArrowWriter):
         self._part_cols = part_cols
 
     def write(self, iterator):
-        names = [f.name for f in self._schema.fields]
-        if self._part_cols:
-            return _write_task_files_partitioned(
-                self._path, names, self._part_cols, iterator
-            )
-        return _write_task_files(self._path, names, iterator)
+        return _write_task_files(
+            self._path, self._schema, self._part_cols, iterator
+        )
 
     def commit(self, messages):
         _commit_files(
@@ -1176,12 +973,9 @@ class _DeltaStreamWriter(DataSourceStreamArrowWriter):
         self._part_cols = part_cols
 
     def write(self, iterator):
-        names = [f.name for f in self._schema.fields]
-        if self._part_cols:
-            return _write_task_files_partitioned(
-                self._path, names, self._part_cols, iterator
-            )
-        return _write_task_files(self._path, names, iterator)
+        return _write_task_files(
+            self._path, self._schema, self._part_cols, iterator
+        )
 
     def commit(self, messages, batchId: int):
         _commit_files(

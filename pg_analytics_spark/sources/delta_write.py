@@ -47,34 +47,12 @@ import uuid
 from pyspark.sql import DataFrame
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.sources.footer_stats import footer_stats
 
 _STATS_TYPES = {
     "byte", "short", "integer", "long", "float", "double",
     "string", "boolean", "date",
 }
-
-
-#: repo root, pickled BY VALUE into executor closures: a vanilla
-#: driver (cwd elsewhere, repo on the DRIVER's sys.path only) ships
-#: the footer-stats closures by value, and their lazy package imports
-#: would die on the Python workers — the fallback re-adds the shared
-#: filesystem path (round-8 driver-sim find; on a real cluster with a
-#: shipped package the primary import just succeeds).
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-
-def _import_footer_minmax():
-    try:
-        from pg_analytics_spark.sources.footer_stats import footer_minmax
-    except ModuleNotFoundError:  # executor worker without driver sys.path
-        import sys as _sys
-
-        if _REPO_ROOT not in _sys.path:
-            _sys.path.insert(0, _REPO_ROOT)
-        from pg_analytics_spark.sources.footer_stats import footer_minmax
-    return footer_minmax
 
 
 def _json_stat(v):
@@ -86,15 +64,15 @@ def _json_stat(v):
 
 
 def _file_stats(path: str, schema) -> str | None:
-    """stats JSON from the parquet footer: numRecords + min/max for
-    top-level primitive columns (the public Delta stats shape).
-    Optional: an unreadable footer yields None (no stats, file still
-    committed); the ROW COUNT the writer reports never depends on this
-    (it observes the write job)."""
-    footer_minmax = _import_footer_minmax()
-
+    """stats JSON from the parquet footer: numRecords, nullCount for
+    the file's top-level primitive columns, and min/max for the
+    columns of ``schema`` with a statable type (the public Delta stats
+    shape).  A caller leaves a float column holding NaN out of
+    ``schema`` (see footer_stats).  Optional: an unreadable footer
+    yields None (no stats, file still committed); the ROW COUNT the
+    writer reports never depends on this."""
     try:
-        bounds, num_rows = footer_minmax(path)
+        bounds, nulls, num_rows = footer_stats(path)
     except Exception:
         return None
     statable = {
@@ -109,7 +87,12 @@ def _file_stats(path: str, schema) -> str | None:
             mins[name] = _json_stat(lo)
             maxs[name] = _json_stat(hi)
     return json.dumps(
-        {"numRecords": num_rows, "minValues": mins, "maxValues": maxs}
+        {
+            "numRecords": num_rows,
+            "minValues": mins,
+            "maxValues": maxs,
+            "nullCount": nulls,
+        }
     )
 
 
@@ -245,14 +228,17 @@ def _conform_append_schema(df, prev_schema: str, *, merge_schema: bool):
     return out, evolved
 
 
-def _partition_values(rel_path: str) -> dict[str, str]:
+def _partition_values(rel_path: str) -> dict[str, str | None]:
+    """Delta ``partitionValues`` of a data file from its Hive
+    directories; the NULL sentinel directory is JSON null."""
     from urllib.parse import unquote
 
-    pv: dict[str, str] = {}
+    pv: dict[str, str | None] = {}
     for seg in rel_path.split("/")[:-1]:
         if "=" in seg:
             k, _, v = seg.partition("=")
-            pv[unquote(k)] = unquote(v)
+            v = unquote(v)
+            pv[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
     return pv
 
 
@@ -1158,6 +1144,43 @@ _DIRECT_PART_TYPES = frozenset(
 )
 
 
+def _delta_files(
+    batches, root: str, names: list[str], part_cols: list[str], fname,
+    schema, file_stats=None, **kw,
+):
+    """Worker side of every native Delta data-file write:
+    ``arrow_part.write_partitioned`` with the Delta layout (partition
+    columns in Hive directories, not in the files) and footer stats.
+
+    ``fname()`` names a file; ``schema=None`` skips stats (CDC files);
+    ``file_stats`` replaces ``_file_stats``; ``kw`` (``compression``,
+    ``max_open``) go to the kernel.  Yields ``(rel, stats|None, size,
+    mtime_ms, rows)`` per file."""
+    from pyspark.sql.types import StructType
+
+    from pg_analytics_spark.sources.arrow_part import (
+        hive_path,
+        write_partitioned,
+    )
+
+    file_stats = file_stats or _file_stats
+    part_idx = [names.index(c) for c in part_cols]
+    for f in write_partitioned(
+        batches,
+        root,
+        data_idx=[i for i, c in enumerate(names) if c not in part_cols],
+        key_fn=(lambda b: [b.column(i) for i in part_idx]) if part_cols else None,
+        name_of=lambda key: hive_path(part_cols, key, fname()),
+        **kw,
+    ):
+        stats = None
+        if schema is not None:
+            # no min/max for a float column holding NaN (footer_stats)
+            keep = [x for x in schema.fields if x.name not in f.nan_cols]
+            stats = file_stats(f.dst, StructType(keep))
+        yield f.rel, stats, f.size, f.mtime, f.rows
+
+
 def _stage_parquet_direct(
     df: DataFrame,
     dest_root: str,
@@ -1166,170 +1189,55 @@ def _stage_parquet_direct(
     schema_for_stats,
     compression: str,
 ) -> list[tuple]:
-    """DIRECT distributed parquet staging — one Spark job, one pass
-    (r13 optimization; the Iceberg writer's twin, guide §1.2/§6).
+    """DIRECT distributed parquet staging — one Spark job, one pass.
 
-    Each task groups its Arrow batches by the partition tuple and
-    writes one parquet file per tuple straight into the table tree
-    under hive-style dirs and a commit-unique name (``.tmp`` + posix
-    rename), computing the Delta footer stats in the same task.
+    Each task writes its rows through ``_delta_files`` straight into
+    the table tree, one file per partition tuple under a commit-unique
+    name, with the Delta footer stats computed in the same task.
     Commit atomicity is unchanged: only the JSON log commit publishes
     files, so a crash leaves unreferenced files (VACUUM's orphan
-    class).  Replaces the staged Hadoop write + driver rename walk +
-    second footer pass whose per-file and per-job constants dominated
-    every DML fixture.
+    class).
 
     Returns ``[(rel_path, stats_json|None, size, mtime_ms, rows)]``.
     ``schema_for_stats=None`` skips stats (CDC files).
     """
-    out_schema = (
-        "rel STRING, stats STRING, size BIGINT, mtime BIGINT, "
-        "rows BIGINT"
-    )
-    repo_root = _REPO_ROOT
-    data_idx = [i for i, c in enumerate(df.columns) if c not in part_cols]
-    part_idx = [df.columns.index(c) for c in part_cols]
-    part_names = list(part_cols)
-    # stats normally import IN the worker (vanilla-driver rule: a
-    # module-level function in the closure would pickle by reference
-    # and die on workers without the repo sys.path) — but a REPLACED
-    # _file_stats (test instrumentation) is a <locals> function that
-    # cloudpickle ships by value, so honor it
-    stats_override = (
-        _file_stats if "<locals>" in _file_stats.__qualname__ else None
+    from pg_analytics_spark.sources.arrow_part import (
+        map_files,
+        shippable,
+        write_empty,
     )
 
-    def _write_partition(batches):
-        # EXECUTOR closure — repo imports via the _REPO_ROOT fallback
-        # (vanilla-driver rule: workers may lack the driver sys.path)
-        import datetime as _dt
-        import os as _os
-        import sys as _sys
-        import uuid as _uuid
-        from urllib.parse import quote as _q
+    names = df.columns
+    stats_ref = shippable(_file_stats)
 
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+    def _write_task(batches):
+        from pg_analytics_spark.sources.arrow_part import resolve
+        from pg_analytics_spark.sources.delta_write import _delta_files
 
-        if repo_root not in _sys.path:
-            _sys.path.insert(0, repo_root)
-        from pg_analytics_spark.sources.arrow_part import (
-            BoundedGroupBuffer,
-            group_take,
+        return _delta_files(
+            batches,
+            dest_root,
+            names,
+            part_cols,
+            lambda: f"{fname_prefix}-{uuid.uuid4().hex}.parquet",
+            schema_for_stats,
+            compression=compression,
+            file_stats=resolve(stats_ref),
         )
-
-        if stats_override is not None:
-            _file_stats = stats_override
-        else:
-            from pg_analytics_spark.sources.delta_write import _file_stats
-
-        def _hval(v):
-            # hive dir value — decode side is urllib unquote, so any
-            # %XX-escaping round-trips; formats mirror Spark's for the
-            # _DIRECT_PART_TYPES allowlist
-            if v is None:
-                return "__HIVE_DEFAULT_PARTITION__"
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            if isinstance(v, (_dt.date, _dt.datetime)):
-                return v.isoformat()
-            return _q(str(v), safe="")
-
-        writers: dict[tuple, list] = {}  # key -> [writer, rel, dst]
-
-        # 128 MB row groups per tuple, bounded by the GLOBAL per-task
-        # buffer cap (guide §5): largest accumulator flushes first
-        def _write_group(key, t):
-            got = writers.get(key)
-            if got is None:
-                rel_dir = "/".join(
-                    f"{_q(c, safe='')}={_hval(v)}"
-                    for c, v in zip(part_names, key)
-                )
-                fname = f"{fname_prefix}-{_uuid.uuid4().hex}.parquet"
-                rel = f"{rel_dir}/{fname}" if rel_dir else fname
-                dst = _os.path.join(dest_root, rel)
-                _os.makedirs(_os.path.dirname(dst), exist_ok=True)
-                w = _pq.ParquetWriter(
-                    dst + ".tmp", t.schema, compression=compression
-                )
-                got = writers[key] = [w, rel, dst]
-            got[0].write_table(t)
-
-        buf = BoundedGroupBuffer(_write_group, 128 << 20)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            data = _pa.Table.from_batches([b.select(data_idx)])
-            if not part_idx:
-                groups = [((), None)]
-            else:
-                groups = group_take(
-                    [b.column(i) for i in part_idx], b.num_rows
-                )
-            for key, idx in groups:
-                part = data if idx is None else data.take(idx)
-                buf.add(tuple(key), part)
-        buf.close()
-        out = {"rel": [], "stats": [], "size": [], "mtime": [], "rows": []}
-        for key, (w, rel, dst) in writers.items():
-            w.close()
-            _os.replace(dst + ".tmp", dst)
-            md = _pq.ParquetFile(dst).metadata
-            out["rel"].append(rel)
-            out["stats"].append(
-                None
-                if schema_for_stats is None
-                else _file_stats(dst, schema_for_stats)
-            )
-            out["size"].append(_os.path.getsize(dst))
-            out["mtime"].append(int(_os.path.getmtime(dst) * 1000))
-            out["rows"].append(md.num_rows)
-        if out["rel"]:
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "rel": _pa.array(out["rel"], _pa.string()),
-                    "stats": _pa.array(out["stats"], _pa.string()),
-                    "size": _pa.array(out["size"], _pa.int64()),
-                    "mtime": _pa.array(out["mtime"], _pa.int64()),
-                    "rows": _pa.array(out["rows"], _pa.int64()),
-                }
-            )
 
     os.makedirs(dest_root, exist_ok=True)
-    rows = df.mapInArrow(_write_partition, out_schema).collect()
-    staged = [
-        (r["rel"], r["stats"], int(r["size"]), int(r["mtime"]),
-         int(r["rows"]))
-        for r in rows
-    ]
+    staged = map_files(df, _write_task)
     if not staged and not part_cols:
-        # empty UNPARTITIONED write: the Spark staged path emitted one
-        # 0-row schema-only file (numRecords 0 stats) — keep that
-        # contract driver-side
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         fname = f"{fname_prefix}-{uuid.uuid4().hex}.parquet"
         dst = os.path.join(dest_root, fname)
-        sch = to_arrow_schema(df.schema)
-        _pq.write_table(
-            _pa.table(
-                {f.name: _pa.array([], f.type) for f in sch}, schema=sch
-            ),
-            dst,
-            compression=compression,
-        )
+        write_empty(df.schema, dst, compression)
+        st = os.stat(dst)
         stats = (
             None
             if schema_for_stats is None
             else _file_stats(dst, schema_for_stats)
         )
-        staged = [
-            (fname, stats, os.path.getsize(dst),
-             int(os.path.getmtime(dst) * 1000), 0)
-        ]
+        staged = [(fname, stats, st.st_size, int(st.st_mtime * 1000), 0)]
     return staged
 
 

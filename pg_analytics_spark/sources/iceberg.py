@@ -114,11 +114,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
         # definitive); real read errors stay un-memoized
         if _NATIVE_ICEBERG_FORMAT is None:
             msg = str(exc)
-            if (
-                "DATA_SOURCE_NOT_FOUND" in msg
-                or "Failed to find" in msg
-                or "ClassNotFoundException" in msg
-            ):
+            if "DATA_SOURCE_NOT_FOUND" in msg or "ClassNotFoundException" in msg:
                 _NATIVE_ICEBERG_FORMAT = False
         df = _load_via_metadata(
             spark,

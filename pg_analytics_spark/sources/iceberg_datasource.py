@@ -773,111 +773,62 @@ def _ice_write_task(
     iterator,
     part_cols: list[str] | None = None,
 ):
-    """Worker-side: parquet files under <table>/data/ with Appendix-D
-    bounds from each finished file's footer.  Unpartitioned: one file
-    per task.  Partitioned: one file per distinct partition TUPLE in
-    this task's input (source columns STAY in the files — the Iceberg
-    convention; the tuple rides the manifest entry) — repartition by
-    the partition columns upstream to bound fan-out.  ``part_cols``
-    entries are spec strings — plain columns (identity) or transforms
-    (``days(ts)``, ``bucket(8, k)``, …): values are transformed
-    VECTORIZED with the READER's reference semantics
+    """Worker-side: this task's Arrow batches through the Iceberg write
+    kernel (``iceberg_write._iceberg_files``): parquet files under
+    <table>/data/ with Appendix-D bounds from each finished file's
+    footer.  Unpartitioned: one file per task.  Partitioned: one file
+    per distinct partition TUPLE in this task's input (source columns
+    STAY in the files — the Iceberg convention; the tuple rides the
+    manifest entry); a task meeting more than 256 tuples refuses
+    loudly — repartition by the partition columns upstream.
+    ``part_cols`` entries are spec strings — plain columns (identity)
+    or transforms (``days(ts)``, ``bucket(8, k)``, …): values are
+    transformed VECTORIZED with the READER's reference semantics
     (``arrow_part.transform_array``, the Arrow-compute twin of
     ``iceberg_prune.transform_value`` — parity property-pinned, so
-    write and read agree bit-for-bit), and rows split per partition
-    tuple by Arrow's hash group-by instead of per-row Python masks —
-    the 100 TB ingest path stays C-side even for
-    ``bucket(N, unique_id)``."""
-    import uuid as _uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    write and read agree bit-for-bit)."""
     _ensure_importable()
-    from pg_analytics_spark.sources.arrow_part import (
-        BoundedGroupBuffer,
-        group_take,
-        transform_array,
-    )
+    from pg_analytics_spark.sources.arrow_part import transform_array
     from pg_analytics_spark.sources.iceberg_write import (
         _canonical_transform,
-        _file_bounds,
+        _iceberg_files,
         _parse_transform,
         _transform_result_type,
     )
 
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    if not part_cols:
-        full = os.path.join(
-            data_dir, f"pyds-{_uuid.uuid4().hex}.parquet"
-        )
-        writer = None
-        for batch in iterator:
-            if writer is None:
-                writer = pq.ParquetWriter(full, batch.schema)
-            writer.write_batch(batch)
-        if writer is None:
-            return _IceWriteMessage([])
-        writer.close()
-        lowers, uppers, rows = _file_bounds(full, fields)
-        return _IceWriteMessage(
-            [(full, os.path.getsize(full), rows, lowers, uppers, None)]
-        )
     type_of = {f["name"]: f["type"] for f in fields}
     specs = []  # (canonical transform, src col, src ice type)
-    for raw in part_cols:
+    for raw in part_cols or []:
         kind, param, src = _parse_transform(raw)
         _transform_result_type(kind, param, src, type_of[src])  # validate
         specs.append((_canonical_transform(kind, param), src, type_of[src]))
-
-    writers: dict[tuple, tuple] = {}
-
-    # accumulate each tuple's slices and flush as ONE table per
-    # ~64 MB (guide §4.2) — large row groups instead of one tiny row
-    # group per (micro-batch, tuple) — under a GLOBAL per-task byte
-    # cap (guide §5): a 256-tuple task must not buffer 256 × 64 MB
-    def _write_group(tup, t2):
-        if tup not in writers:
-            if len(writers) >= 256:
-                raise UnsupportedFormat(
-                    "iceberg_native partitioned write: >256 "
-                    "distinct partition tuples in one task — "
-                    "repartition by the partition columns first"
-                )
-            full = os.path.join(
-                data_dir, f"pyds-{_uuid.uuid4().hex}.parquet"
-            )
-            writers[tup] = (
-                pq.ParquetWriter(full, t2.schema),
-                full,
-            )
-        writers[tup][0].write_table(t2)
-
-    buf = BoundedGroupBuffer(_write_group, 64 << 20)
-    for batch in iterator:
-        t = pa.Table.from_batches([batch])
-        key_arrays = [
-            transform_array(tr, t[src], st) for tr, src, st in specs
-        ]
-        for tup, idx in group_take(key_arrays, t.num_rows):
-            buf.add(tup, t.take(idx))
-    buf.close()
-    out = []
-    for tup, (w, full) in writers.items():
-        w.close()
-        lowers, uppers, rows = _file_bounds(full, fields)
-        out.append(
+    files = _iceberg_files(
+        iterator,
+        os.path.join(path, "data"),
+        fields,
+        "pyds",
+        data_idx=None,
+        key_fn=(
             (
-                full,
-                os.path.getsize(full),
-                rows,
-                lowers,
-                uppers,
-                dict(zip(part_cols, tup)),
+                lambda b: [
+                    transform_array(tr, b.column(src), st)
+                    for tr, src, st in specs
+                ]
             )
-        )
-    return _IceWriteMessage(out)
+            if specs
+            else None
+        ),
+        max_open=256,
+    )
+    return _IceWriteMessage(
+        [
+            (
+                dst, size, rows, lowers, uppers,
+                dict(zip(part_cols, key)) if part_cols else None,
+            )
+            for key, dst, size, rows, lowers, uppers in files
+        ]
+    )
 
 
 def _ice_abort(messages) -> None:

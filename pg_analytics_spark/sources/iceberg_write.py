@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.avro import read_container, write_container
 from pg_analytics_spark.sources.delta_write import _truthy_opt
+from pg_analytics_spark.sources.footer_stats import footer_stats
 
 #: Spark typeName → Iceberg primitive type (inverse of the reader map)
 _SPARK_TO_ICE = {
@@ -162,10 +163,9 @@ def _ice_type(spark_field) -> str:
     )
 
 
-#: repo root, pickled BY VALUE into executor closures (see
-#: delta_write._REPO_ROOT — same round-8 driver-sim find): the lazy
-#: package import inside _file_bounds must be resolvable on Python
-#: workers that never saw the driver's sys.path.
+#: repo root, pickled BY VALUE into the upsert staging closure (see
+#: arrow_part._REPO_ROOT): its lazy package imports must be resolvable
+#: on Python workers that never saw the driver's sys.path.
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -211,15 +211,7 @@ def _file_bounds(path: str, fields: list[dict]) -> tuple[list, list, int]:
     """(lower_bounds kv, upper_bounds kv, num_rows) from the parquet
     footer, Appendix-D encoded per field id.  Loud on an unreadable
     footer — the manifest's record_count requires it anyway."""
-    try:
-        from pg_analytics_spark.sources.footer_stats import footer_minmax
-    except ModuleNotFoundError:  # executor worker without driver sys.path
-        import sys as _sys
-
-        if _REPO_ROOT not in _sys.path:
-            _sys.path.insert(0, _REPO_ROOT)
-        from pg_analytics_spark.sources.footer_stats import footer_minmax
-    bounds, num_rows = footer_minmax(path)
+    bounds, _nulls, num_rows = footer_stats(path)
     lowers, uppers = [], []
     for f in fields:
         if f["name"] not in bounds or not isinstance(f["type"], str):
@@ -540,36 +532,6 @@ def _bounds_for_files(spark, files: list[str], fields) -> dict[str, tuple]:
     return per_file_on_executors(spark, files, _one)
 
 
-def _partition_tuple(rel_dir: str, part_fields: list[dict]) -> dict:
-    """Typed partition tuple from the staging dir path (`_p0=v/...`),
-    keyed by the spec field NAME (what the reader's pruning reads)."""
-    import datetime as dt
-    from urllib.parse import unquote
-
-    raw: dict[int, str] = {}
-    for seg in rel_dir.split(os.sep):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            if k.startswith("_p") and k[2:].isdigit():
-                raw[int(k[2:])] = unquote(v)
-    out = {}
-    for i, pf in enumerate(part_fields):
-        v = raw.get(i)
-        if v is None or v == "__HIVE_DEFAULT_PARTITION__":
-            out[pf["name"]] = None
-            continue
-        t = pf["_ice_type"]
-        if t in ("int", "long"):
-            out[pf["name"]] = int(v)
-        elif t == "date":
-            out[pf["name"]] = (
-                dt.date.fromisoformat(v) - dt.date(1970, 1, 1)
-            ).days
-        else:
-            out[pf["name"]] = v
-    return out
-
-
 def _latest_metadata(meta_dir: str) -> tuple[int, dict | None]:
     if not os.path.isdir(meta_dir):
         return 0, None
@@ -631,6 +593,31 @@ def _typed_partition_value(v, ice_type: str):
     return str(v)
 
 
+def _iceberg_files(
+    batches, data_dir: str, fields: list[dict], prefix: str,
+    file_bounds=None, **kw,
+):
+    """Worker side of every native Iceberg data-file write:
+    ``arrow_part.write_partitioned`` into ``data/`` (files named
+    ``{prefix}-{uuid}.parquet``) with Appendix-D footer bounds.
+    ``file_bounds`` replaces ``_file_bounds``; ``kw`` (``data_idx``,
+    ``key_fn``, ``compression``, ``max_open``) go to the kernel.
+    Yields ``(key, dst, size, rows, lowers, uppers)`` per file."""
+    import uuid as _uuid
+
+    from pg_analytics_spark.sources.arrow_part import write_partitioned
+
+    file_bounds = file_bounds or _file_bounds
+    for f in write_partitioned(
+        batches,
+        data_dir,
+        name_of=lambda key: f"{prefix}-{_uuid.uuid4().hex}.parquet",
+        **kw,
+    ):
+        lowers, uppers, _rows = file_bounds(f.dst, fields)
+        yield f.key, f.dst, f.size, f.rows, lowers, uppers
+
+
 def _write_data_files_direct(
     out_df: DataFrame,
     n_data_cols: int,
@@ -643,165 +630,55 @@ def _write_data_files_direct(
 
     ``out_df`` carries the table columns first and the partition
     transform values as trailing ``_pN`` columns (none for an
-    unpartitioned write).  Each task groups its Arrow batches by
-    partition tuple (``arrow_part.group_take`` — C-side hash group-by)
-    and writes one parquet file per tuple straight into ``data/``
-    under a commit-unique name (written as ``.tmp`` + posix rename so
-    a crash never leaves a half-file under a data name), computing the
-    Appendix-D footer bounds in the same task via the SAME
-    ``_file_bounds`` the staged path used.
-
-    Replaces the Hadoop FileFormatWriter staging path whose constants
-    dominate many-partition commits: the 318-file month×bucket fixture
-    measured ~18 ms/file of task-side writer+committer overhead plus a
-    driver rename walk plus a second footer-stats pass; pyarrow writes
-    the same files at ~1 ms/file in the pass that already holds the
-    data.  At scale the shape is unchanged — one file per
-    (task, partition tuple), writer memory bounded by 128 MB row-group
-    flushes per tuple.
+    unpartitioned write).  Each task writes its rows through
+    ``_iceberg_files``: one parquet file per partition tuple straight
+    into ``data/`` under a commit-unique name, with the footer bounds
+    computed in the same task.
 
     Returns ``[(partition_values_raw, dst, rows, size, lowers,
     uppers)]`` where raw partition values are int/str/None (dates as
     epoch days).
     """
-    import pickle as _pickle
+    import datetime as dt
 
-    out_schema = (
-        "parts STRING, dst STRING, rows BIGINT, size BIGINT, "
-        "bounds BINARY"
-    )
-    repo_root = _REPO_ROOT
-    # bounds normally import IN the worker (vanilla-driver rule) — but
-    # a REPLACED _file_bounds (test instrumentation) is a <locals>
-    # function cloudpickle ships by value, so honor it
-    bounds_override = (
-        _file_bounds if "<locals>" in _file_bounds.__qualname__ else None
+    from pg_analytics_spark.sources.arrow_part import (
+        map_files,
+        shippable,
+        write_empty,
     )
 
-    def _write_partition(batches):
-        # EXECUTOR closure — repo imports via the _REPO_ROOT fallback
-        # (vanilla-driver rule: workers may lack the driver sys.path)
-        import datetime as _dt
-        import json as _json
-        import os as _os
-        import pickle as _pk
-        import sys as _sys
-        import uuid as _uuid
+    bounds_ref = shippable(_file_bounds)
+    partitioned = len(out_df.columns) > n_data_cols
 
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+    def _write_task(batches):
+        from pg_analytics_spark.sources.arrow_part import resolve
+        from pg_analytics_spark.sources.iceberg_write import _iceberg_files
 
-        if repo_root not in _sys.path:
-            _sys.path.insert(0, repo_root)
-        from pg_analytics_spark.sources.arrow_part import (
-            BoundedGroupBuffer,
-            group_take,
+        return _iceberg_files(
+            batches,
+            data_dir,
+            fields,
+            str(snapshot_id),
+            data_idx=list(range(n_data_cols)),
+            key_fn=(lambda b: b.columns[n_data_cols:]) if partitioned else None,
+            compression=compression,
+            file_bounds=resolve(bounds_ref),
         )
 
-        if bounds_override is not None:
-            _file_bounds = bounds_override
-        else:
-            from pg_analytics_spark.sources.iceberg_write import (
-                _file_bounds,
-            )
-
-        EPOCH = _dt.date(1970, 1, 1)
-
-        def _raw(v):
-            if isinstance(v, _dt.datetime):
-                return (v.date() - EPOCH).days
-            if isinstance(v, _dt.date):
-                return (v - EPOCH).days
-            return v
-
-        writers: dict[tuple, list] = {}  # key -> [writer, dst]
-
-        # 128 MB row groups per tuple, bounded by the GLOBAL per-task
-        # buffer cap (guide §5): largest accumulator flushes first
-        def _write_group(key, t):
-            got = writers.get(key)
-            if got is None:
-                dst = _os.path.join(
-                    data_dir,
-                    f"{snapshot_id}-{_uuid.uuid4().hex}.parquet",
-                )
-                w = _pq.ParquetWriter(
-                    dst + ".tmp", t.schema, compression=compression
-                )
-                got = writers[key] = [w, dst]
-            got[0].write_table(t)
-
-        buf = BoundedGroupBuffer(_write_group, 128 << 20)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            data = _pa.Table.from_batches(
-                [b.select(list(range(n_data_cols)))]
-            )
-            if b.num_columns == n_data_cols:
-                groups = [((), None)]
-            else:
-                key_arrays = [
-                    b.column(i)
-                    for i in range(n_data_cols, b.num_columns)
-                ]
-                groups = group_take(key_arrays, b.num_rows)
-            for key, idx in groups:
-                part = data if idx is None else data.take(idx)
-                buf.add(tuple(_raw(v) for v in key), part)
-        buf.close()
-        out = {"parts": [], "dst": [], "rows": [], "size": [], "bounds": []}
-        for key, (w, dst) in writers.items():
-            w.close()
-            _os.replace(dst + ".tmp", dst)
-            lowers, uppers, rows = _file_bounds(dst, fields)
-            out["parts"].append(_json.dumps(list(key)))
-            out["dst"].append(dst)
-            out["rows"].append(rows)
-            out["size"].append(_os.path.getsize(dst))
-            out["bounds"].append(_pk.dumps((lowers, uppers)))
-        if out["dst"]:
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "parts": _pa.array(out["parts"], _pa.string()),
-                    "dst": _pa.array(out["dst"], _pa.string()),
-                    "rows": _pa.array(out["rows"], _pa.int64()),
-                    "size": _pa.array(out["size"], _pa.int64()),
-                    "bounds": _pa.array(out["bounds"], _pa.binary()),
-                }
-            )
-
-    rows = out_df.mapInArrow(_write_partition, out_schema).collect()
-    if not rows and n_data_cols == len(out_df.columns):
-        # empty UNPARTITIONED commit: the staged path's Spark write
-        # emitted one 0-row file (schema-only), and readers treat a
-        # snapshot with zero live data files as corrupt — keep that
-        # contract with a driver-side empty file
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+    files = map_files(out_df, _write_task)
+    if not files and not partitioned:
         dst = os.path.join(
             data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
         )
-        sch = to_arrow_schema(out_df.schema)
-        _pq.write_table(
-            _pa.table(
-                {f.name: _pa.array([], f.type) for f in sch}, schema=sch
-            ),
-            dst,
-            compression=compression,
-        )
+        write_empty(out_df.schema, dst, compression)
         return [([], dst, 0, os.path.getsize(dst), [], [])]
+    epoch = dt.date(1970, 1, 1)
     return [
         (
-            json.loads(r["parts"]),
-            r["dst"],
-            int(r["rows"]),
-            int(r["size"]),
-            *_pickle.loads(bytes(r["bounds"])),
+            [(v - epoch).days if isinstance(v, dt.date) else v for v in key],
+            dst, rows, size, lowers, uppers,
         )
-        for r in rows
+        for key, dst, size, rows, lowers, uppers in files
     ]
 
 
@@ -3127,6 +3004,8 @@ def _stage_upsert_parts(
     import pyarrow as _pa_drv
     import pyarrow.parquet as _pq_drv
 
+    from pg_analytics_spark.sources.arrow_part import shippable
+
     staging = os.path.join(
         os.path.dirname(path.rstrip("/")) or ".",
         f"_ice_upsboth-{uuid.uuid4().hex}",
@@ -3135,9 +3014,7 @@ def _stage_upsert_parts(
     del_part = os.path.join(staging, "del.parquet")
     kcols = list(key_cols)
     repo_root = _REPO_ROOT
-    bounds_override = (
-        _file_bounds if "<locals>" in _file_bounds.__qualname__ else None
-    )
+    bounds_ref = shippable(_file_bounds)
 
     def _stage(batches):
         import os as _os
@@ -3150,12 +3027,9 @@ def _stage_upsert_parts(
 
         if repo_root not in _sys.path:
             _sys.path.insert(0, repo_root)
-        if bounds_override is not None:
-            _file_bounds = bounds_override
-        else:
-            from pg_analytics_spark.sources.iceberg_write import (
-                _file_bounds,
-            )
+        from pg_analytics_spark.sources.arrow_part import resolve
+
+        _file_bounds = resolve(bounds_ref)
 
         tag = _uuid.uuid4().hex
         add_part = _os.path.join(staging, f"add-{tag}.parquet")

@@ -9,6 +9,8 @@ without ignoreDeletes/ignoreChanges.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -346,45 +348,73 @@ def test_stream_rate_limit_max_commits_per_trigger(ds, tmp_path):
     assert e3["version"] == 5  # the next trigger advances again
 
 
-def test_writer_partitioned_roundtrip(ds, tmp_path):
-    """partitionBy writes: hive-dir staging (values percent-encoded,
-    partition columns dropped from the files), per-file
-    partitionValues in the add actions, reader projects them back —
-    and the datasource reader prunes on them."""
+#: partition column type -> value of row i (one more row has a NULL key)
+_PART_CASES = {
+    "int": lambda i: i % 3,
+    "string": lambda i: "a b" if i % 2 else "z",
+    "boolean": lambda i: i % 2 == 0,
+    "date": lambda i: dt.date(2024, 1, 1 + i % 3),
+}
+
+
+def _log_adds(d):
     import json as _json
     import os as _os
 
+    log = _os.path.join(d, "_delta_log")
+    return [
+        _json.loads(line)["add"]
+        for fn in sorted(f for f in _os.listdir(log) if f.endswith(".json"))
+        for line in open(_os.path.join(log, fn))
+        if '"add"' in line
+    ]
+
+
+@pytest.mark.parametrize("ptype", sorted(_PART_CASES))
+def test_writer_partitioned_roundtrip(ds, tmp_path, ptype):
+    """partitionBy writes: hive-dir staging (partition columns dropped
+    from the files), per-file partitionValues in the add actions equal
+    to those write_delta produces for the same rows (NULL key
+    included), both readers project them back (NULL as NULL), and the
+    datasource reader prunes on them."""
+    val = _PART_CASES[ptype]
+    rows = [(i, val(i), float(i)) for i in range(20)] + [(20, None, 20.0)]
+    df = ds.createDataFrame(rows, f"id bigint, p {ptype}, v double")
     d = str(tmp_path / "t")
-    df = ds.createDataFrame(
-        [(i, "a b" if i % 2 else "z", float(i)) for i in range(20)],
-        "id bigint, p string, v double",
-    )
     df.repartition(2, "p").write.format("delta_native").mode(
         "overwrite"
     ).option("path", d).option("partitionBy", "p").save()
-    back = load_source(ds, d, "delta")
-    assert back.count() == 20
-    assert {r["p"] for r in back.collect()} == {"a b", "z"}
+    ref = str(tmp_path / "ref")
+    write_delta(df, ref, mode="overwrite", partition_by="p")
+
+    def layout(root):
+        return sorted(
+            {
+                (str(a["partitionValues"]), a["path"].rsplit("/", 1)[0])
+                for a in _log_adds(root)
+            }
+        )
+
+    assert layout(d) == layout(ref)
+    assert ({"p": None}, "p=__HIVE_DEFAULT_PARTITION__") in [
+        (a["partitionValues"], a["path"].rsplit("/", 1)[0])
+        for a in _log_adds(d)
+    ]
     # appends must match the spec; a mismatch refuses
-    df.limit(2).write.format("delta_native").mode("append").option(
+    df.filter("id < 2").write.format("delta_native").mode("append").option(
         "path", d
     ).option("partitionBy", "p").save()
-    assert load_source(ds, d, "delta").count() == 22
+    rows += rows[:2]
     with pytest.raises(Exception, match="partition mismatch"):
         df.limit(1).write.format("delta_native").mode("append").option(
             "path", d
         ).save()
-    # log shape: hive rel paths, encoded space, partitionValues carried
-    log = _os.path.join(d, "_delta_log")
-    adds = []
-    for fn in sorted(f for f in _os.listdir(log) if f.endswith(".json")):
-        for line in open(_os.path.join(log, fn)):
-            if '"add"' in line:
-                adds.append(_json.loads(line)["add"])
+    adds = _log_adds(d)
     assert all(a["partitionValues"] for a in adds)
-    assert any(a["partitionValues"].get("p") == "a b" for a in adds)
     assert all(" " not in a["path"] for a in adds)
     # partition columns are NOT in the data files
+    import os as _os
+
     import pyarrow.parquet as _pq
 
     from pg_analytics_spark.sources.delta_write import _decode_log_path
@@ -393,15 +423,18 @@ def test_writer_partitioned_roundtrip(ds, tmp_path):
         _os.path.join(d, _decode_log_path(adds[0]["path"]))
     ).names
     assert "p" not in cols
-    # datasource read + partition pruning agree with the replay reader
-    out = (
-        ds.read.format("delta_native")
-        .option("path", d)
-        .load()
-        .filter(F.col("p") == "a b")
-    )
-    fresh = load_source(ds, d, "delta")
-    assert out.count() == fresh.filter(F.col("p") == "a b").count()
+    # both readers project the values back (NULL as NULL); the
+    # datasource reader's partition pruning keeps exactly the matches
+    native = ds.read.format("delta_native").option("path", d).load()
+    for back in (load_source(ds, d, "delta"), native):
+        got = back.select("id", "p", "v").collect()
+        assert sorted(map(tuple, got)) == sorted(rows)
+    for cond, want in (
+        (F.col("p") == val(1), [r[0] for r in rows if r[1] == val(1)]),
+        (F.col("p").isNull(), [20]),
+    ):
+        got = [r["id"] for r in native.filter(cond).collect()]
+        assert sorted(got) == sorted(want)
 
 
 def test_writer_refuses_enforcement_tables(ds, tmp_path):

@@ -19,6 +19,8 @@ instead of living invisibly behind healthy sf0.1 walls:
   review, or be rewritten distributed.
 - ``test_datasource_modules_collect_free``: the two Python DataSource
   modules (the 100 TB ingest path) stay at ZERO collects.
+- ``test_one_parquet_writer_kernel``: ``ParquetWriter(`` calls per
+  package module are pinned; the native lake writers share one kernel.
 - ``test_dedup_rows_job_census``: the Spark jobs of a warm call of each
   dedup row are pinned as an upper bound, so a row that gains jobs
   fails here without a bench run.
@@ -145,6 +147,36 @@ def test_datasource_modules_collect_free():
         assert ".collect()" not in text, (
             f"{mod}: the DataSource ingest path must stay collect-free"
         )
+
+
+#: ``ParquetWriter(`` calls per package module: the one task-side write
+#: kernel (``arrow_part.write_partitioned``) and the Iceberg upsert
+#: staging.  The pins only go down: a module that opens its own
+#: Parquet writer forks the kernel's layout, stats and tmp-rename rules.
+_PARQUET_WRITER_PINS = {"arrow_part.py": 1, "iceberg_write.py": 1}
+
+
+def _parquet_writer_calls(src: str) -> int:
+    return sum(
+        1
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and "ParquetWriter"
+        in (getattr(node.func, "attr", None), getattr(node.func, "id", None))
+    )
+
+
+def test_one_parquet_writer_kernel():
+    counts = {
+        p.name: _parquet_writer_calls(p.read_text())
+        for p in sorted(_WORKLOAD.parent.rglob("*.py"))
+    }
+    counts = {k: v for k, v in counts.items() if v}
+    assert counts == _PARQUET_WRITER_PINS, (
+        f"ParquetWriter census changed: {counts} vs pinned "
+        f"{_PARQUET_WRITER_PINS} — write data files through "
+        "arrow_part.write_partitioned"
+    )
 
 
 #: Spark jobs per call of each dedup row at the test SF, warm (the

@@ -602,3 +602,120 @@ def test_bounded_group_buffer_key_flush_precedes_cap():
     assert calls == [("hot", 2048)]
     buf.close()
     assert ("cold", 1024) in calls
+
+
+# ------------------------------------------------------------------ #
+# arrow_part.write_partitioned — the one task-side write kernel
+# ------------------------------------------------------------------ #
+
+
+def test_write_partitioned_kernel(tmp_path):
+    """Spark-free: multi-key grouping into one file per tuple (NULL
+    keys in the Hive sentinel directory), no ``.tmp`` left behind, NaN
+    float columns reported, the ``max_open`` refusal, and no file for
+    empty input."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from pg_analytics_spark.errors import UnsupportedFormat
+    from pg_analytics_spark.sources.arrow_part import (
+        hive_path,
+        write_partitioned,
+    )
+
+    def run(batches, root, **kw):
+        return list(
+            write_partitioned(
+                iter(batches),
+                str(root),
+                data_idx=[2, 3],
+                key_fn=lambda b: [b.column(0), b.column(1)],
+                name_of=lambda k: hive_path(["a", "b"], k, "f.parquet"),
+                **kw,
+            )
+        )
+
+    nan = float("nan")
+    b = pa.record_batch(
+        {
+            "a": [1, 1, 2, 2, None],
+            "b": ["x", "y", "x", "x", "x"],
+            "v": [1.0, nan, 3.0, 4.0, None],
+            "n": [10, 11, 12, 13, 14],
+        }
+    )
+    files = run([b, b.slice(0, 2)], tmp_path / "t")
+    got = {f.key: (f.rel, f.rows, f.nan_cols) for f in files}
+    assert got == {
+        (1, "x"): ("a=1/b=x/f.parquet", 2, frozenset()),
+        (1, "y"): ("a=1/b=y/f.parquet", 2, frozenset({"v"})),
+        (2, "x"): ("a=2/b=x/f.parquet", 2, frozenset()),
+        (None, "x"): (
+            "a=__HIVE_DEFAULT_PARTITION__/b=x/f.parquet", 1, frozenset()
+        ),
+    }
+    for f in files:
+        t = pq.read_table(f.dst)
+        assert t.column_names == ["v", "n"] and t.num_rows == f.rows
+        assert f.size == (tmp_path / "t" / f.rel).stat().st_size
+    two_x = pq.read_table(tmp_path / "t" / "a=2/b=x/f.parquet")
+    assert two_x["n"].to_pylist() == [12, 13]
+    assert not [p for p in (tmp_path / "t").rglob("*") if p.suffix == ".tmp"]
+
+    wide = pa.record_batch(
+        {
+            "a": list(range(257)),
+            "b": ["x"] * 257,
+            "v": [0.0] * 257,
+            "n": [0] * 257,
+        }
+    )
+    with pytest.raises(
+        UnsupportedFormat, match=">256 distinct partition tuples"
+    ):
+        run([wide], tmp_path / "wide", max_open=256)
+
+    assert run([b.slice(0, 0)], tmp_path / "e") == []
+    assert not (tmp_path / "e").exists()
+
+
+def test_delta_file_stats_from_the_kernel(tmp_path):
+    """Delta stats of a kernel-written file: nullCount from the footer
+    for every column, and no min/max for a float column holding NaN
+    (Arrow's footer bounds leave NaN out)."""
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from pg_analytics_spark.sources.delta_write import _delta_files
+
+    b = pa.record_batch(
+        {
+            "id": [1, 2, None],
+            "v": [1.0, float("nan"), None],
+            "w": [0.5, None, 2.5],
+        }
+    )
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("v", DoubleType()),
+            StructField("w", DoubleType()),
+        ]
+    )
+    ((rel, stats, _size, _mtime, rows),) = _delta_files(
+        iter([b]), str(tmp_path), ["id", "v", "w"], [], lambda: "f.parquet",
+        schema,
+    )
+    st = json.loads(stats)
+    assert rel == "f.parquet" and rows == st["numRecords"] == 3
+    assert st["nullCount"] == {"id": 1, "v": 1, "w": 1}
+    assert st["minValues"] == {"id": 1, "w": 0.5}
+    assert st["maxValues"] == {"id": 2, "w": 2.5}

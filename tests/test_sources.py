@@ -297,6 +297,22 @@ def test_delta_fallback_partition_columns(spark, tmp_path):
     assert regions == {1, 2}
 
 
+def test_delta_partition_join_fails_loudly_on_unmatched_file(
+    spark, tmp_path, monkeypatch
+):
+    """A data file whose path key matches no add action fails the read
+    instead of losing its rows to an inner join."""
+    from pg_analytics_spark.sources import delta
+
+    root = str(tmp_path / "dlp")
+    _write_delta_fixture(spark, root, partitioned=True)
+    monkeypatch.setattr(
+        delta, "_FILE_PATH_SQL", f"concat({delta._FILE_PATH_SQL}, '#')"
+    )
+    with pytest.raises(Exception, match="matches no add action"):
+        load_source(spark, root, "delta").collect()
+
+
 def test_delta_fallback_rejects_non_delta_dir(spark, tmp_path):
     from pg_analytics_spark.errors import MissingDependency
 
