@@ -2900,27 +2900,21 @@ class Engine:
         )
         rows = []
         if att.format == "delta":
+            from pg_analytics_spark.sources.delta import _commit_info
+
             log_dir = _os.path.join(att.files[0], "_delta_log")
             for f in sorted(_os.listdir(log_dir)):
                 if not (f.endswith(".json") and f[:20].isdigit()):
                     continue
-                v = int(f[:20])
-                ts_ms = int(_os.path.getmtime(_os.path.join(log_dir, f)) * 1000)
-                op, params = None, None
-                with open(_os.path.join(log_dir, f)) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        ci = _json.loads(line).get("commitInfo")
-                        if ci:
-                            ts_ms = int(ci.get("timestamp", ts_ms))
-                            op = ci.get("operation")
-                            params = _json.dumps(
-                                ci.get("operationParameters") or {},
-                                sort_keys=True,
-                            )
-                            break
-                rows.append((v, ts_ms, op, params))
+                ts_ms, ci = _commit_info(log_dir, int(f[:20]))
+                params = (
+                    _json.dumps(
+                        ci.get("operationParameters") or {}, sort_keys=True
+                    )
+                    if ci
+                    else None
+                )
+                rows.append((int(f[:20]), ts_ms, ci.get("operation"), params))
         else:
             from pg_analytics_spark.sources.iceberg_write import (
                 _latest_metadata,

@@ -18,17 +18,19 @@ anti-join on parquet ``_metadata.row_index``, the same merge-on-read
 shape as the Iceberg positional-delete path — and COLUMN MAPPING
 (modes ``name``/``id``): physical parquet names resolve to logical
 names via the schemaString's ``delta.columnMapping.physicalName``
-metadata; nested struct/array/map fields are renamed in one positional
-cast to the logical Spark type (physical field order in the files is
-the schemaString order, per the protocol).  NAME-based schema
-evolution: each file group reads with mergeSchema and conforms to the
-CURRENT schemaString — columns added after a file was written surface
-as typed NULLs, primitives cast to their declared types.
+metadata.  NAME-based schema evolution: every snapshot and change-feed
+read is ONE parquet scan under an explicit schema — the CURRENT
+schemaString under its physical names (:func:`_scan_files`) — so a
+column added after a file was written reads as typed NULLs, and one
+projection renames to the logical names (a positional cast renames
+every nested level).
 
 Scale note: the log replay is driver-side metadata work (exactly like
 delta-spark's snapshot resolution); the data read is a plain parquet
-scan over the active files — pushdown/pruning apply as usual.  Files
-sharing identical partition values are read in one reader call.
+scan over the active files — pushdown/pruning apply as usual.  Every
+active file is read by the same reader call, whatever its partition
+values; a file is identified by one key, its decoded absolute path
+(:func:`_abs_file` from the log, :func:`_file_key` from the scan).
 """
 
 from __future__ import annotations
@@ -42,7 +44,10 @@ from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import MissingDependency
 from pg_analytics_spark.sources.base import apply_common
-from pg_analytics_spark.sources.delta_write import _decode_log_path
+from pg_analytics_spark.sources.delta_write import (
+    _decode_log_path,
+    _phys_renames,
+)
 from pg_analytics_spark.types import duckdb_type_to_spark
 
 
@@ -125,11 +130,28 @@ def _ts_ms(ts) -> int:
     return int(d.timestamp() * 1000)
 
 
+def _commit_info(
+    log_dir: str, version: int, actions: list[dict] | None = None
+) -> tuple[int, dict]:
+    """A commit's (timestamp in epoch millis, commitInfo action): the
+    timestamp is the first commitInfo's ``timestamp``, else the commit
+    file's mtime (the protocol-permitted fallback); the action is
+    ``{}`` when the commit has none.  ``actions`` are the commit's
+    parsed lines when the caller already read them.  The one rule
+    behind time travel, the change feed and DESCRIBE HISTORY/DETAIL."""
+    p = os.path.join(log_dir, f"{version:020d}.json")
+    with open(p) as fh:
+        if actions is None:
+            actions = (json.loads(ln) for ln in fh if ln.strip())
+        ci = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+    ts = ci.get("timestamp")
+    return (int(os.path.getmtime(p) * 1000) if ts is None else int(ts)), ci
+
+
 def _resolve_timestamp(log_dir: str, ts_ms: int) -> int:
-    """Latest commit version whose timestamp is <= ts_ms.  Timestamps
-    come from each commit's commitInfo action (file mtime as the
-    protocol-permitted fallback); per the protocol they are
-    monotonically non-decreasing across versions."""
+    """Latest commit version whose timestamp (:func:`_commit_info`) is
+    <= ts_ms; per the protocol commit timestamps are monotonically
+    non-decreasing across versions."""
     if not os.path.isdir(log_dir):
         raise MissingDependency(f"not a Delta table (no _delta_log): {log_dir}")
     versions = sorted(
@@ -139,23 +161,9 @@ def _resolve_timestamp(log_dir: str, ts_ms: int) -> int:
     )
     best = None
     for v in versions:
-        p = os.path.join(log_dir, f"{v:020d}.json")
-        t = None
-        with open(p) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                ci = json.loads(line).get("commitInfo")
-                if ci and "timestamp" in ci:
-                    t = int(ci["timestamp"])
-                    break
-        if t is None:
-            t = int(os.path.getmtime(p) * 1000)
-        if t <= ts_ms:
-            best = v
-        else:
+        if _commit_info(log_dir, v)[0] > ts_ms:
             break
+        best = v
     if best is None:
         raise MissingDependency(
             f"no Delta commit at or before timestamp {ts_ms} in {log_dir}"
@@ -222,14 +230,23 @@ def _partition_overlaps(
     return True
 
 
-#: ``_metadata.file_path`` as the log's decoded absolute path: the
-#: URI prefix goes, and the percent escapes decode (space → %20 …).
-#: The '+' pre-escape keeps url_decode (a form decoder) from turning a
-#: literal '+' in a path into a space.
-_FILE_PATH_SQL = (
-    "url_decode(replace(regexp_replace("
-    "_metadata.file_path, '^file:/+', '/'), '+', '%2B'))"
-)
+def _abs_file(table_path: str, log_path: str) -> str:
+    """An action's ``path`` → its file key: the decoded absolute path
+    (shallow clones store absolute paths, which stay as they are).
+    :func:`_file_key` makes the same string from a scanned file."""
+    rel = _decode_log_path(log_path)
+    return os.path.abspath(os.path.join(table_path, rel))
+
+
+def _file_key(uri) -> F.Column:
+    """A scanned file's URI (``_metadata.file_path``,
+    ``input_file_name()``) → its file key, the string :func:`_abs_file`
+    makes from the log: the ``file:`` prefix goes and the percent
+    escapes decode once (space → %20 …).  The '+' pre-escape keeps
+    url_decode (a form decoder) from turning a literal '+' in a path
+    into a space."""
+    no_scheme = F.regexp_replace(uri, "^file:/+", "/")
+    return F.url_decode(F.replace(no_scheme, F.lit("+"), F.lit("%2B")))
 
 
 def _load_via_log(
@@ -240,17 +257,19 @@ def _load_via_log(
     keep_meta: bool = False,
     keep_phys: list[str] | None = None,
 ) -> DataFrame:
-    """``keep_meta=True`` keeps the internal ``_dv_file`` (absolute
-    data-file path) and ``_dv_pos`` (physical parquet row index)
-    columns on the result — the coordinate system deletion vectors
-    address — for the DV-writing DML path (delta_write._rewrite_where).
-    Already-deleted rows are still anti-joined away, so ``_dv_pos`` on
-    the survivors is exactly the physical index a NEW DV must mark.
+    """The snapshot at ``version`` (latest by default) as one
+    :func:`_scan_files` over its active files.
 
-    ``keep_phys`` names HIDDEN physical columns to carry through the
-    schema conformance (long-typed NULL when a file group lacks them)
-    — the row-tracking materialized identity columns live outside the
-    table schema and are normally projected away."""
+    ``keep_meta=True`` keeps the internal ``_dv_file`` (file key) and
+    ``_dv_pos`` (physical parquet row index) columns on the result —
+    the coordinate system deletion vectors address — for the
+    DV-writing DML path (delta_write._rewrite_where).  Already-deleted
+    rows are still anti-joined away, so ``_dv_pos`` on the survivors
+    is exactly the physical index a NEW DV must mark.
+
+    ``keep_phys`` names HIDDEN physical long columns to carry (NULL
+    where a file lacks them) — the row-tracking materialized identity
+    columns live outside the table schema and are otherwise not read."""
     log_dir = os.path.join(table_path, "_delta_log")
     if not os.path.isdir(log_dir):
         raise MissingDependency(
@@ -260,14 +279,11 @@ def _load_via_log(
     if meta is None:
         raise MissingDependency(f"Delta log has no metaData action: {table_path}")
     part_cols = meta.get("partitionColumns", [])
-    part_types = _partition_types(meta, part_cols)
-    mapping = _column_mapping(meta)  # logical name → (physical, Column)
-    phys_of = {c: mapping[c][0] for c in mapping} if mapping else {}
+    # partitionValues keys are PHYSICAL names under column mapping
+    phys_of = _phys_renames(meta) or {}
 
-    # group active files by partition values → one reader call per group
-    # (partitionValues keys are PHYSICAL names under column mapping)
-    groups: dict[tuple, list[str]] = {}
-    deletions: list[tuple[str, int]] = []  # (abs file path, row index)
+    files: list[tuple[str, tuple]] = []
+    deletions: list[tuple[str, int]] = []  # (file key, row index)
     for add in active.values():
         if stats_filter and not all(
             _file_overlaps_stats(add, phys_of.get(c, c), lo, hi)
@@ -279,11 +295,9 @@ def _load_via_log(
         ):
             continue  # hive partition value outside the range
         pv = add.get("partitionValues") or {}
+        abs_path = _abs_file(table_path, add["path"])
         key = tuple(pv.get(phys_of.get(c, c)) for c in part_cols)
-        abs_path = os.path.abspath(
-            os.path.join(table_path, _decode_log_path(add["path"]))
-        )
-        groups.setdefault(key, []).append(abs_path)
+        files.append((abs_path, key))
         dv = add.get("deletionVector")
         if dv:
             from pg_analytics_spark.sources.delta_dv import dv_deleted_rows
@@ -291,7 +305,7 @@ def _load_via_log(
             deletions.extend(
                 (abs_path, int(r)) for r in dv_deleted_rows(table_path, dv)
             )
-    if not groups:
+    if not files:
         # a truncated / just-created table is EMPTY, not broken: read
         # back as 0 rows under the declared schema (DELETE without
         # WHERE commits pure removes — the protocol allows zero adds)
@@ -309,194 +323,131 @@ def _load_via_log(
             ]
         )
         return spark.createDataFrame([], schema)
+    return _scan_files(
+        spark, meta, files, deletions=deletions, keep_meta=keep_meta,
+        keep_phys=keep_phys or (),
+    )
 
-    with_meta = bool(deletions) or keep_meta
-    meta_cols = [
-        F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
-            "_dv_file"
-        ),
-        F.col("_metadata.row_index").alias("_dv_pos"),
+
+def _scan_files(
+    spark: SparkSession,
+    meta: dict,
+    files: list[tuple[str, tuple]],
+    *,
+    deletions: list[tuple[str, int]] = (),
+    keep_meta: bool = False,
+    keep_phys=(),
+    extra=(),
+) -> DataFrame:
+    """ONE parquet scan of ``files`` — (file key, partition-value
+    tuple) pairs, the tuple in ``partitionColumns`` order — projected
+    onto the table's CURRENT schema: data columns in schemaString
+    order, then ``keep_phys``, ``extra``, the ``_dv_*`` columns
+    (``keep_meta``) and the partition columns.
+
+    The read schema is the schemaString under its PHYSICAL names
+    (top-level and nested column-mapping names; the logical ones on an
+    unmapped table): no footer inference, and the reader null-fills a
+    column a file lacks.  One projection renames to the logical names
+    — the positional cast renames every nested level.  Partition values
+    are literals when every file shares one tuple; otherwise a
+    broadcast join on the file key attaches them, and a scanned file no
+    pair names fails the read (LEFT join + non-null marker: NULL
+    partition values stay legal).  ``deletions`` — (file key, row
+    index) pairs — are anti-joined away.  ``keep_phys`` are hidden long
+    columns to carry (row tracking); ``extra`` are StructFields read
+    and kept as they are (the cdc ``_change_type``)."""
+    from pyspark.sql import types as T
+
+    part_cols = meta.get("partitionColumns") or []
+    part_types = _partition_types(meta, part_cols)
+    phys_of = _phys_renames(meta) or {}
+    fields = [
+        (f["name"], phys_of.get(f["name"], f["name"]), f["type"])
+        for f in json.loads(meta["schemaString"])["fields"]
+        if f["name"] not in part_cols
     ]
-    # EXPLICIT read schema from schemaString (no column mapping only —
-    # mapped tables need the per-footer physical nested names that
-    # mergeSchema discovers): skips mergeSchema's footer-inference job
-    # per file group, the dominant cost of assembling a many-group
-    # partitioned read (measured 2.8–4.6× on a 30-day table).  The
-    # parquet reader null-fills columns a pre-evolution file lacks —
-    # the same result mergeSchema + _conform_delta produced.
-    explicit_schema = None
-    if mapping is None:
-        from pyspark.sql import types as T
-
-        sfields = [
-            T.StructField(f["name"], _delta_type_to_spark(f["type"]), True)
-            for f in json.loads(meta["schemaString"])["fields"]
-            if f["name"] not in part_cols
+    read_schema = T.StructType(
+        [
+            T.StructField(phys, _delta_type_to_spark(t, bool(phys_of)))
+            for _name, phys, t in fields
         ]
-        have = {f.name for f in sfields}
-        sfields += [
-            T.StructField(c, T.LongType(), True)
-            for c in (keep_phys or [])
-            if c not in have
-        ]
-        explicit_schema = T.StructType(sfields)
-    out: DataFrame | None = None
-    if explicit_schema is not None and len(groups) > 1:
-        # r14 (guide §5 plan-size / §1.2): MANY partition groups used
-        # to build one spark.read per group + an N-leaf unionByName —
-        # ~80 ms of py4j + analysis per group on a 30-day table, paid
-        # at PLAN BUILD time for every read.  With an explicit schema
-        # the reader null-fills evolved columns identically for every
-        # file, so read ALL active files in ONE scan and attach each
-        # file's partition values with a broadcast join on
-        # _metadata.file_path (the per-file constant the group loop
-        # expressed as a literal).  Column-mapped tables keep the loop
-        # (their per-group mergeSchema discovers physical names).
-        all_paths = [p for paths in groups.values() for p in paths]
-        df = spark.read.schema(explicit_schema).parquet(*all_paths)
-        phys_keep = [
-            F.col(c).cast("long").alias(c) for c in (keep_phys or [])
-        ]
-        others = [
-            F.col(c) for c in df.columns if c not in (keep_phys or [])
-        ]
-        file_col = F.expr(_FILE_PATH_SQL).alias("_pv_file")
+        + [T.StructField(c, T.LongType()) for c in keep_phys]
+        + list(extra)
+    )
+    df = spark.read.schema(read_schema).parquet(*[p for p, _ in files])
+    keys = {key for _, key in files}
+    need_pos = bool(deletions) or keep_meta
+    df = df.select(
+        *[
+            F.col(phys).cast(_delta_type_to_spark(t)).alias(name)
+            for name, phys, t in fields
+        ],
+        *keep_phys,
+        *[f.name for f in extra],
+        *(
+            [_file_key(F.col("_metadata.file_path")).alias("_dv_file")]
+            if need_pos or len(keys) > 1
+            else []
+        ),
+        *([F.col("_metadata.row_index").alias("_dv_pos")] if need_pos else []),
+    )
+    if len(keys) == 1:
+        (key,) = keys
         df = df.select(
-            *others, *phys_keep, *(meta_cols if with_meta else []),
-            file_col,
+            "*",
+            *[
+                F.lit(v).cast(part_types[c]).alias(c)
+                for c, v in zip(part_cols, key)
+            ],
         )
-        df = _conform_delta(
-            df, meta, part_cols, keep_cols=[*(keep_phys or []), "_pv_file"]
-        )
-        pv_rows = [
-            (p, True, *[None if v is None else str(v) for v in key])
-            for key, paths in groups.items()
-            for p in paths
-        ]
-        from pyspark.sql import types as T
-
+    else:
         pv_schema = T.StructType(
             [
                 T.StructField("_pv_file", T.StringType(), False),
                 T.StructField("_pv_hit", T.BooleanType(), False),
             ]
-            + [
-                T.StructField(f"_pv_{c}", T.StringType(), True)
-                for c in part_cols
-            ]
+            + [T.StructField(f"_pv_{c}", T.StringType()) for c in part_cols]
         )
-        pvdf = spark.createDataFrame(pv_rows, pv_schema)
-        # LEFT join: a file whose key matches no add action must fail
-        # the read, not silently lose its rows (NULL partition values
-        # stay legal — only the non-null marker tells the two apart)
-        df = df.join(F.broadcast(pvdf), "_pv_file", "left")
+        pvdf = spark.createDataFrame(
+            [
+                (p, True, *[None if v is None else str(v) for v in key])
+                for p, key in files
+            ],
+            pv_schema,
+        )
         miss = F.raise_error(
             F.concat(
                 F.lit("delta read: data file "),
-                F.col("_pv_file"),
+                F.col("_dv_file"),
                 F.lit(" matches no add action of the snapshot"),
             )
         )
-        for c in part_cols:
-            df = df.withColumn(
-                c,
+        df = df.join(
+            F.broadcast(pvdf), F.col("_dv_file") == F.col("_pv_file"), "left"
+        ).select(
+            *df.columns,
+            *[
                 F.when(F.col("_pv_hit").isNull(), miss)
                 .otherwise(F.col(f"_pv_{c}"))
-                .cast(part_types[c]),
-            )
-        out = df.drop(
-            "_pv_file", "_pv_hit", *[f"_pv_{c}" for c in part_cols]
+                .cast(part_types[c])
+                .alias(c)
+                for c in part_cols
+            ],
         )
-    else:
-        for key, paths in sorted(
-            groups.items(), key=lambda kv: tuple(map(str, kv[0]))
-        ):
-            # mergeSchema unions columns across files written under
-            # older schemas (ADD COLUMN evolution); _conform_delta then
-            # fixes presence, order, and declared types vs schemaString
-            if explicit_schema is not None:
-                df = spark.read.schema(explicit_schema).parquet(*paths)
-            else:
-                df = spark.read.option("mergeSchema", "true").parquet(*paths)
-            phys_keep = [
-                F.col(c).cast("long").alias(c)
-                if c in df.columns
-                else F.lit(None).cast("long").alias(c)
-                for c in (keep_phys or [])
-            ]
-            if mapping:
-                # a physical column can be absent from every file in
-                # the group (ADD COLUMN after they were written) — skip
-                # it here; _conform_delta null-fills the logical name
-                data_cols = [
-                    mapping[c][1]
-                    for c in mapping
-                    if c not in part_cols and mapping[c][0] in df.columns
-                ]
-                df = df.select(
-                    *data_cols, *phys_keep,
-                    *(meta_cols if with_meta else []),
-                )
-            else:
-                others = [
-                    F.col(c)
-                    for c in df.columns
-                    if c not in (keep_phys or [])
-                ]
-                df = df.select(
-                    *others, *phys_keep,
-                    *(meta_cols if with_meta else []),
-                )
-            df = _conform_delta(df, meta, part_cols, keep_cols=keep_phys)
-            for c, v in zip(part_cols, key):
-                lit = F.lit(v).cast(part_types[c])
-                df = df.withColumn(c, lit)
-            out = df if out is None else out.unionByName(df)
     if deletions:
         dels = spark.createDataFrame(deletions, ["_dv_file", "_dv_pos"])
-        out = out.join(
-            F.broadcast(dels), ["_dv_file", "_dv_pos"], "left_anti"
-        )
-    if with_meta and not keep_meta:
-        out = out.drop("_dv_file", "_dv_pos")
-    return out
+        df = df.join(F.broadcast(dels), ["_dv_file", "_dv_pos"], "left_anti")
+    if not keep_meta:
+        df = df.drop("_dv_file", "_dv_pos")
+    return df
 
 
-def _conform_delta(
-    df: DataFrame, meta: dict, part_cols, keep_cols: list[str] | None = None
-) -> DataFrame:
-    """NAME-based schema evolution: project to the CURRENT schemaString
-    — columns added after a file was written surface as typed NULLs,
-    dropped ones disappear, primitives cast to the declared type.
-    Internal _dv_* columns (and any explicitly kept hidden physical
-    columns) ride along untouched."""
-    schema = json.loads(meta["schemaString"])
-    fields = [
-        f for f in schema.get("fields", []) if f["name"] not in part_cols
-    ]
-    if not fields:
-        return df
-    have = {c.lower(): c for c in df.columns}
-    cols = []
-    for f in fields:
-        t = _delta_type_to_spark(f["type"])
-        name = f["name"]
-        if name.lower() in have:
-            cols.append(F.col(have[name.lower()]).cast(t).alias(name))
-        else:
-            cols.append(F.lit(None).cast(t).alias(name))
-    keep = [
-        c
-        for c in df.columns
-        if c.startswith("_dv_") or c in (keep_cols or [])
-    ]
-    return df.select(*cols, *keep)
-
-
-def _delta_type_to_spark(t):
-    """Delta schemaString type JSON → Spark DataType (with LOGICAL
-    nested field names — a positional cast onto this type renames every
-    nested level in one expression)."""
+def _delta_type_to_spark(t, physical: bool = False):
+    """Delta schemaString type JSON → Spark DataType.  Nested field
+    names are the LOGICAL ones (a positional cast onto this type
+    renames every nested level in one expression), or with
+    ``physical`` the column-mapping physical names the files carry."""
     from pyspark.sql.types import (
         ArrayType,
         MapType,
@@ -511,8 +462,12 @@ def _delta_type_to_spark(t):
         return StructType(
             [
                 StructField(
-                    f["name"],
-                    _delta_type_to_spark(f["type"]),
+                    (f.get("metadata") or {}).get(
+                        "delta.columnMapping.physicalName", f["name"]
+                    )
+                    if physical
+                    else f["name"],
+                    _delta_type_to_spark(f["type"], physical),
                     f.get("nullable", True),
                 )
                 for f in t["fields"]
@@ -520,34 +475,16 @@ def _delta_type_to_spark(t):
         )
     if kind == "array":
         return ArrayType(
-            _delta_type_to_spark(t["elementType"]), t.get("containsNull", True)
+            _delta_type_to_spark(t["elementType"], physical),
+            t.get("containsNull", True),
         )
     if kind == "map":
         return MapType(
-            _delta_type_to_spark(t["keyType"]),
-            _delta_type_to_spark(t["valueType"]),
+            _delta_type_to_spark(t["keyType"], physical),
+            _delta_type_to_spark(t["valueType"], physical),
             t.get("valueContainsNull", True),
         )
     raise MissingDependency(f"unsupported Delta type {t!r}")
-
-
-def _column_mapping(meta: dict) -> dict[str, tuple[str, F.Column]] | None:
-    """Column-mapping resolution (delta.columnMapping.mode name|id):
-    logical name → (physical top-level name, select Column that reads
-    the physical column and positionally casts nested levels to the
-    logical schema).  None when the table has no mapping."""
-    cfg = meta.get("configuration") or {}
-    if cfg.get("delta.columnMapping.mode", "none") not in ("name", "id"):
-        return None
-    schema = json.loads(meta["schemaString"])
-    out: dict[str, tuple[str, F.Column]] = {}
-    for f in schema.get("fields", []):
-        phys = (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        col = F.col(phys).cast(_delta_type_to_spark(f["type"])).alias(f["name"])
-        out[f["name"]] = (phys, col)
-    return out
 
 
 def _replay_log(

@@ -24,17 +24,17 @@ version range then works per commit:
 
 Output: the table's CURRENT columns + ``_change_type``,
 ``_commit_version``, ``_commit_timestamp`` — delta-spark's
-``table_changes`` shape.  Every per-version read conforms files
-through the same name/column-mapping resolution as the main reader,
-so feeds survive ALTER TABLE renames.
+``table_changes`` shape.  Every per-version read is the snapshot
+reader's own scan (sources/delta.py::_scan_files) under the CURRENT
+schema and column mapping, so feeds survive ALTER TABLE renames.
 
 Reference scope: the reference reads Delta snapshots only
 (src/duckdb/delta.rs); CDF is additive parity-plus mirroring
 delta-spark's readChangeFeed surface.
 
 Scale: one driver pass over the range's commit JSONs (metadata-sized)
-plans the read; row work is one distributed scan per touched file
-group — O(changed data), the point of CDF vs snapshot-diffing.
+plans the read; row work is one distributed scan per (commit, action
+kind) — O(changed data), the point of CDF vs snapshot-diffing.
 """
 
 from __future__ import annotations
@@ -44,6 +44,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.delta_write import _decode_log_path
@@ -57,53 +58,6 @@ def _commit_actions(log_dir: str, version: int) -> list[dict] | None:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def _conform_change(
-    df: DataFrame, meta: dict, part_vals_cols: list[str]
-) -> DataFrame:
-    """Project a change-file scan to the CURRENT logical schema (+ the
-    ride-along _cdf_* columns), resolving physical names through the
-    table's column mapping exactly like the snapshot reader."""
-    from pg_analytics_spark.sources.delta import (
-        _column_mapping,
-        _delta_type_to_spark,
-    )
-
-    mapping = _column_mapping(meta)
-    fields = json.loads(meta["schemaString"])["fields"]
-    have = {c.lower(): c for c in df.columns}
-    cols = []
-    for f in fields:
-        t = _delta_type_to_spark(f["type"])
-        name = f["name"]
-        if name in part_vals_cols:
-            continue  # re-attached from partitionValues by the caller
-        phys = mapping[name][0] if mapping and name in mapping else name
-        if phys.lower() in have:
-            cols.append(F.col(have[phys.lower()]).cast(t).alias(name))
-        elif name.lower() in have:  # pre-mapping-era file
-            cols.append(F.col(have[name.lower()]).cast(t).alias(name))
-        else:
-            cols.append(F.lit(None).cast(t).alias(name))
-    keep = [c for c in df.columns if c.startswith("_cdf_")]
-    return df.select(*cols, *keep)
-
-
-def _commit_ts_ms(log_dir: str, version: int) -> int:
-    """A commit's timestamp: commitInfo when present, mtime fallback
-    (the same rule DESCRIBE HISTORY uses)."""
-    f = os.path.join(log_dir, f"{version:020d}.json")
-    ts = int(os.path.getmtime(f) * 1000)
-    with open(f) as fh:
-        for line in fh:
-            if not line.strip():
-                continue
-            ci = json.loads(line).get("commitInfo")
-            if ci and ci.get("timestamp"):
-                return int(ci["timestamp"])
-            break
-    return ts
-
-
 def _version_at_timestamp(log_dir: str, ts: str, side: str) -> int:
     """delta-spark's timestamp-bound resolution: start side → the
     EARLIEST version committed at-or-after ``ts``; end side → the
@@ -111,12 +65,13 @@ def _version_at_timestamp(log_dir: str, ts: str, side: str) -> int:
     qualifies."""
     import datetime as _dt
 
+    from pg_analytics_spark.sources.delta import _commit_info
     from pg_analytics_spark.sources.delta_write import _next_version
 
     ts_ms = int(_dt.datetime.fromisoformat(ts).timestamp() * 1000)
     latest = _next_version(log_dir) - 1
     stamped = [
-        (v, _commit_ts_ms(log_dir, v))
+        (v, _commit_info(log_dir, v)[0])
         for v in range(latest + 1)
         if os.path.isfile(os.path.join(log_dir, f"{v:020d}.json"))
     ]
@@ -156,10 +111,17 @@ def read_table_changes(
             os.path.join(path, "_delta_log"), end_version, "end"
         )
     from pg_analytics_spark.sources.delta import (
+        _abs_file,
+        _commit_info,
         _delta_type_to_spark,
         _replay_log,
+        _scan_files,
     )
-    from pg_analytics_spark.sources.delta_write import _next_version
+    from pg_analytics_spark.sources.delta_write import (
+        _next_version,
+        _partition_values,
+        _phys_renames,
+    )
 
     log_dir = os.path.join(path, "_delta_log")
     if not os.path.isdir(log_dir):
@@ -184,30 +146,24 @@ def read_table_changes(
             "('delta.enableChangeDataFeed' = 'true') first"
         )
     part_cols = meta.get("partitionColumns") or []
-    mapping_phys = {}
-    from pg_analytics_spark.sources.delta import _column_mapping
-
-    mapping = _column_mapping(meta)
-    if mapping:
-        mapping_phys = {c: mapping[c][0] for c in mapping}
-    part_types = {
-        f["name"]: _delta_type_to_spark(f["type"])
+    phys_of = _phys_renames(meta) or {}
+    data_cols = [
+        f["name"]
         for f in json.loads(meta["schemaString"])["fields"]
-        if f["name"] in part_cols
-    }
+        if f["name"] not in part_cols
+    ]
+    change_types = {"add": "insert", "remove": "delete"}
+    change_type = T.StructField("_change_type", T.StringType())
 
     pieces: list[DataFrame] = []
 
     def _files_piece(
-        actions: list[dict],
-        kind: str,
-        version: int,
-        ts: int,
-        change_type: str | F.Column,
+        actions: list[dict], kind: str, version: int, ts: int
     ) -> None:
-        """One scan per (version, action-kind) group: read the named
-        files, attach partition values from the actions, conform."""
-        by_pv: dict[tuple, list[str]] = {}
+        """One scan per (version, action kind): the named files with
+        partition values from the actions, under the current schema.
+        cdc files carry their own ``_change_type`` column."""
+        files = []
         for a in actions:
             rec = a[kind]
             pv = rec.get("partitionValues") or {}
@@ -216,36 +172,23 @@ def read_table_changes(
                 # partitionValues (r9 ADVICE), and the staged data
                 # files don't contain partition columns — recover the
                 # values from the hive directories in the file path
-                from pg_analytics_spark.sources.delta_write import (
-                    _partition_values,
-                )
-
                 pv = _partition_values(_decode_log_path(rec["path"]))
-            key = tuple(
-                pv.get(mapping_phys.get(c, c)) for c in part_cols
-            )
-            by_pv.setdefault(key, []).append(
-                os.path.join(path, _decode_log_path(rec["path"]))
-            )
-        for key, files in sorted(
-            by_pv.items(), key=lambda kv: tuple(map(str, kv[0]))
-        ):
-            df = spark.read.option("mergeSchema", "true").parquet(*files)
-            ct = (
-                F.lit(change_type)
-                if isinstance(change_type, str)
-                else change_type
-            )
-            df = df.select(
-                "*",
+            key = tuple(pv.get(phys_of.get(c, c)) for c in part_cols)
+            files.append((_abs_file(path, rec["path"]), key))
+        if kind == "cdc":
+            extra, ct = [change_type], F.col("_change_type")
+        else:
+            extra, ct = (), F.lit(change_types[kind])
+        df = _scan_files(spark, meta, files, extra=extra)
+        pieces.append(
+            df.select(
+                *data_cols,
                 ct.alias("_cdf_ct"),
                 F.lit(version).cast("long").alias("_cdf_v"),
                 F.lit(ts).cast("long").alias("_cdf_ts"),
+                *part_cols,
             )
-            df = _conform_change(df, meta, part_cols)
-            for c, v in zip(part_cols, key):
-                df = df.withColumn(c, F.lit(v).cast(part_types[c]))
-            pieces.append(df)
+        )
 
     for v in range(start_version, end_version + 1):
         actions = _commit_actions(log_dir, v)
@@ -254,12 +197,8 @@ def read_table_changes(
                 f"table_changes: commit {v} was cleaned up after "
                 "checkpointing — the change feed for it is gone"
             )
-        ts = 0
-        op = ""
-        for a in actions:
-            if "commitInfo" in a:
-                ts = int(a["commitInfo"].get("timestamp") or 0)
-                op = str(a["commitInfo"].get("operation") or "")
+        ts, ci = _commit_info(log_dir, v, actions)
+        op = str(ci.get("operation") or "")
         cdc = [a for a in actions if "cdc" in a]
         adds = [
             a
@@ -273,7 +212,7 @@ def read_table_changes(
         ]
         if cdc:
             # the cdc files carry their own _change_type column
-            _files_piece(cdc, "cdc", v, ts, F.col("_change_type"))
+            _files_piece(cdc, "cdc", v, ts)
             continue
         if removes and adds and op.upper() not in ("WRITE", "CREATE"):
             raise UnsupportedFormat(
@@ -284,16 +223,12 @@ def read_table_changes(
                 "synthesized from file actions"
             )
         if adds:
-            _files_piece(adds, "add", v, ts, "insert")
+            _files_piece(adds, "add", v, ts)
         if removes:
             missing = [
                 a
                 for a in removes
-                if not os.path.isfile(
-                    os.path.join(
-                        path, _decode_log_path(a["remove"]["path"])
-                    )
-                )
+                if not os.path.isfile(_abs_file(path, a["remove"]["path"]))
             ]
             if missing:
                 raise UnsupportedFormat(
@@ -301,12 +236,10 @@ def read_table_changes(
                     "were since vacuumed — delete images cannot be "
                     "synthesized"
                 )
-            _files_piece(removes, "remove", v, ts, "delete")
+            _files_piece(removes, "remove", v, ts)
 
     if not pieces:
         fields = json.loads(meta["schemaString"])["fields"]
-        from pyspark.sql import types as T
-
         schema = T.StructType(
             [
                 T.StructField(

@@ -228,6 +228,7 @@ def _table_state(path: str, version: int | None = None):
     Context-free: runs inside the DataSource plan worker."""
     _ensure_importable()
     from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta_write import _phys_renames
     from pyspark.sql import types as T
 
     log_dir = os.path.join(path, "_delta_log")
@@ -240,13 +241,7 @@ def _table_state(path: str, version: int | None = None):
         raise UnsupportedFormat(f"Delta log has no metaData: {path}")
     part_cols = list(meta.get("partitionColumns") or [])
     fields = json.loads(meta["schemaString"])["fields"]
-    cfg = meta.get("configuration") or {}
-    phys_of = {}
-    if cfg.get("delta.columnMapping.mode", "none") in ("name", "id"):
-        for f in fields:
-            phys_of[f["name"]] = (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName", f["name"]
-            )
+    phys_of = _phys_renames(meta) or {}
     schema = T.StructType(
         [
             T.StructField(
@@ -269,8 +264,8 @@ def _partitions_for_adds(
     part_filters: list | None = None,
 ) -> list[_DeltaFilePartition]:
     _ensure_importable()
+    from pg_analytics_spark.sources.delta import _abs_file
     from pg_analytics_spark.sources.delta_dv import dv_blob
-    from pg_analytics_spark.sources.delta_write import _decode_log_path
 
     out = []
     for add in adds.values():
@@ -280,9 +275,7 @@ def _partitions_for_adds(
             f(pv) for f in part_filters
         ):
             continue
-        abs_path = os.path.abspath(
-            os.path.join(path, _decode_log_path(add["path"]))
-        )
+        abs_path = _abs_file(path, add["path"])
         dv = add.get("deletionVector")
         blob = dv_blob(path, dv) if dv else None
         card = dv.get("cardinality") if dv else None

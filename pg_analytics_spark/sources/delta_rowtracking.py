@@ -25,7 +25,7 @@ Spec shape mirrored here:
   and ``delta.rowTracking.materializedRowCommitVersionColumnName``).
   A non-NULL materialized value overrides the fresh default; the
   columns never appear in the table schema, and the normal read path
-  (delta._conform_delta) projects them away.
+  (delta._scan_files) does not read them.
 
 Scale shape: id assignment is O(add actions) driver-side arithmetic
 off footer ``numRecords`` (already computed for stats); the read path
@@ -208,7 +208,7 @@ def attach_current_ids(
     broadcast join of a file→(baseRowId, defaultRowCommitVersion)
     map — metadata-sized.  Shared by UPDATE/DELETE/MERGE so the
     preservation arithmetic cannot drift between DML paths."""
-    from pg_analytics_spark.sources.delta import _decode_log_path
+    from pg_analytics_spark.sources.delta import _abs_file
 
     mat_id, mat_ver = materialized_cols(meta)
     base_rows = []
@@ -220,9 +220,7 @@ def attach_current_ids(
             )
         base_rows.append(
             (
-                os.path.abspath(
-                    os.path.join(table_path, _decode_log_path(a["path"]))
-                ),
+                _abs_file(table_path, a["path"]),
                 int(a["baseRowId"]),
                 int(a["defaultRowCommitVersion"]),
             )

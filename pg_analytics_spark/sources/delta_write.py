@@ -243,13 +243,15 @@ def _partition_values(rel_path: str) -> dict[str, str | None]:
 
 
 def _phys_renames(meta_like: dict) -> dict[str, str] | None:
-    """Column-mapping write translation: logical top-level name →
-    physical parquet name, from the metaData that will govern the
-    commit.  None when the table has no mapping (the common case) —
-    callers then stage files under logical names exactly as before.
+    """Column mapping's name rule: logical top-level name → physical
+    parquet name, from a metaData action's schemaString.  None when
+    the table has no mapping (the common case) — files then carry the
+    logical names.  The one copy of the rule: the snapshot and
+    change-feed reader (sources/delta.py::_scan_files), the
+    ``delta_native`` DataSource and this writer all call it; pure
+    Python, so the DataSource plan worker (no SparkContext) can too.
     Nested fields need no write-side handling: the reader's positional
-    cast onto the logical type renames every nested level on read
-    (sources/delta.py::_column_mapping)."""
+    cast onto the logical type renames every nested level on read."""
     cfg = meta_like.get("configuration") or {}
     if cfg.get("delta.columnMapping.mode", "none") not in ("name", "id"):
         return None
@@ -1598,7 +1600,7 @@ def write_delta(
     # new columns read non-nullable and would poison later appends) —
     # stage parquet under PHYSICAL names, and keep LOGICAL names in
     # partitionColumns: exactly the split the reader resolves
-    # (delta.py::_column_mapping)
+    # (_phys_renames)
     annotated, eff_cfg, renames, map_proto = _apply_column_mapping(
         prev_meta,
         append_evolved_schema
@@ -1820,19 +1822,6 @@ def _write_commit(
             pass
 
 
-def _uri_to_abs(uri: str) -> str:
-    """`input_file_name()`/`_metadata.file_path` URI → normalized
-    absolute filesystem path."""
-    from urllib.parse import unquote
-
-    p = unquote(uri)
-    if p.startswith("file:"):
-        p = p[5:]
-        while p.startswith("//"):
-            p = p[1:]
-    return os.path.normpath(os.path.abspath(p))
-
-
 def _encode_log_path(rel: str) -> str:
     """Delta protocol: an action's ``path`` is a RELATIVE path
     percent-encoded per RFC 2396 (delta-io PROTOCOL.md, Add File and
@@ -1857,21 +1846,16 @@ def _decode_log_path(p: str) -> str:
 
 
 def _active_by_abs(path: str, prev_active: dict) -> dict[str, str]:
-    """Map each active file's normalized ABSOLUTE path → its log path
-    key.  Keying on the full path (not the basename) matters: CONVERT
+    """Map each active file's key — the decoded absolute path
+    (delta._abs_file) a DML scan's ``_tfile`` carries — to its log
+    path.  Keying on the full path (not the basename) matters: CONVERT
     TO DELTA adopts hive layouts whose basenames REPEAT across
     partition directories (basename keying silently collapsed them —
     duplicate rows after DML, caught by the convert gate row), and
     shallow clones store absolute paths outright."""
-    out = {}
-    for p in prev_active:
-        d = _decode_log_path(p)
-        out[
-            os.path.normpath(
-                d if os.path.isabs(d) else os.path.join(path, d)
-            )
-        ] = p
-    return out
+    from pg_analytics_spark.sources.delta import _abs_file
+
+    return {_abs_file(path, p): p for p in prev_active}
 
 
 def merge_delta(
@@ -1901,7 +1885,7 @@ def merge_delta(
        "values": {col: sql_expr} | "all", "condition": …}``
 
     Dataflow (scales like the join it contains — no driver data):
-    the target scan carries ``input_file_name()``; ONE inner join
+    the target scan carries its file key (``_tfile``); ONE inner join
     finds the TOUCHED files (collect is file-list-sized) and errors
     if any target row matches more than one source row (the ambiguity
     Delta rejects); only touched files are rewritten — their rows
@@ -1981,9 +1965,11 @@ def merge_delta(
             )
         tgt = tgt.withColumn("_tid", F.monotonically_increasing_id())
     else:
+        from pg_analytics_spark.sources.delta import _file_key
+
         tgt = (
             load_source(spark, path, "delta")
-            .withColumn("_tfile", F.input_file_name())
+            .withColumn("_tfile", _file_key(F.input_file_name()))
             .withColumn("_tid", F.monotonically_increasing_id())
         )
     src = source.withColumn("_smark", F.lit(1))
@@ -2009,12 +1995,12 @@ def merge_delta(
         touched_abs = [
             r["_tfile"] for r in joined.select("_tfile").distinct().collect()
         ]
-    # map the scan's absolute file URIs back to the log's path keys
-    # by FULL normalized path (basenames repeat on converted layouts)
+    # map the scan's file keys back to the log's path keys by FULL
+    # path (basenames repeat on converted layouts)
     abs_of = _active_by_abs(path, prev_active)
     removes: list[str] = []
     for f in touched_abs:
-        key = _uri_to_abs(f)
+        key = os.path.normpath(f)
         if key not in abs_of:
             raise UnsupportedFormat(
                 f"MERGE: scanned file {key} not in the active set "
@@ -2397,8 +2383,10 @@ def _rewrite_where(
             .withColumnRenamed("_dv_pos", "_tpos")
         )
     else:
+        from pg_analytics_spark.sources.delta import _file_key
+
         tgt = load_source(spark, path, "delta").withColumn(
-            "_tfile", F.input_file_name()
+            "_tfile", _file_key(F.input_file_name())
         )
     if "_tfile" not in tgt.columns:  # empty table: no files to touch
         tgt = tgt.withColumn("_tfile", F.lit(None).cast("string"))
@@ -2431,7 +2419,7 @@ def _rewrite_where(
     abs_of = _active_by_abs(path, prev_active)
     removes = []
     for f in touched_abs:
-        key = _uri_to_abs(f)
+        key = os.path.normpath(f)
         if key not in abs_of:
             raise UnsupportedFormat(
                 f"{op}: scanned file {key} not in the active set "
@@ -2467,7 +2455,7 @@ def _rewrite_where(
         dv_uuid = uuid.uuid4()
         blob = bytearray(b"\x01")
         for f in sorted(new_pos):
-            rel = abs_of[_uri_to_abs(f)]
+            rel = abs_of[os.path.normpath(f)]
             old_desc = prev_active[rel].get("deletionVector")
             positions = set(new_pos[f])
             if old_desc:  # successive deletes accumulate: union old DV
@@ -2661,7 +2649,7 @@ def _rewrite_where(
             removes_dv.append(
                 {
                     "remove": {
-                        "path": abs_of[_uri_to_abs(f)],
+                        "path": abs_of[os.path.normpath(f)],
                         "deletionTimestamp": now_ms,
                         "dataChange": True,
                     }
@@ -3192,7 +3180,7 @@ def describe_detail_delta(path: str) -> dict:
     partition columns, active file count and byte size, properties,
     protocol versions.  Metadata-sized: one log replay plus the add
     actions' recorded sizes (no data file is opened)."""
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import _commit_info, _replay_log
 
     log_dir = os.path.join(path, "_delta_log")
     if not os.path.isdir(log_dir):
@@ -3207,28 +3195,10 @@ def describe_detail_delta(path: str) -> dict:
         f for f in os.listdir(log_dir)
         if f.endswith(".json") and f[:20].isdigit()
     )
-    created_ms = None
+    created_ms = last_ms = None
     if commits:
-        with open(os.path.join(log_dir, commits[0])) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                ci = json.loads(line).get("commitInfo")
-                if ci and ci.get("timestamp"):
-                    created_ms = int(ci["timestamp"])
-                break
-    last_ms = None
-    if commits:
-        last_path = os.path.join(log_dir, commits[-1])
-        last_ms = int(os.path.getmtime(last_path) * 1000)
-        with open(last_path) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                ci = json.loads(line).get("commitInfo")
-                if ci and ci.get("timestamp"):
-                    last_ms = int(ci["timestamp"])
-                break
+        created_ms = _commit_info(log_dir, int(commits[0][:20]))[0]
+        last_ms = _commit_info(log_dir, int(commits[-1][:20]))[0]
     return {
         "format": "delta",
         "id": meta.get("id"),

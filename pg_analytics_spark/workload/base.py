@@ -143,6 +143,12 @@ def freeze(df: DataFrame) -> DataFrame:
     ~2s per 100k-row readback, paid by every writer/streaming row.  The
     schema and values are identical (localCheckpoint is an identity on
     the relation); only the JVM→Python→JVM round trip is gone.
+
+    Bound: the checkpointed blocks live only in executor storage (no
+    replica, no lineage back to the scratch files), so they are lost
+    with their executor — a later action on the relation then fails
+    instead of recomputing.  Fine for a gate row's result, consumed
+    within the row on a local master; not a durable cache.
     """
     return df.localCheckpoint(eager=True)
 

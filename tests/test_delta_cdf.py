@@ -306,11 +306,11 @@ def test_table_changes_timestamp_bounds(spark, tmp_path):
     update_delta(spark, path, {"v": "v + 100"}, "k < 3")  # v1
     delete_delta(spark, path, "k >= 8")  # v2
     # commit timestamps (publication-stamped) bracket the range
-    from pg_analytics_spark.sources.delta_cdf import _commit_ts_ms
+    from pg_analytics_spark.sources.delta import _commit_info
 
     log = path + "/_delta_log"
-    t1 = _commit_ts_ms(log, 1)
-    t2 = _commit_ts_ms(log, 2)
+    t1 = _commit_info(log, 1)[0]
+    t2 = _commit_info(log, 2)[0]
     iso = lambda ms: dt.datetime.fromtimestamp(ms / 1000).isoformat()
     by_version = _counts(read_table_changes(spark, path, 1, 2))
     got = _counts(

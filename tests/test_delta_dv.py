@@ -481,11 +481,15 @@ def _parquet_state(path):
     )
 
 
-def test_dv_delete_marks_positions_without_rewriting(spark, tmp_path):
+@pytest.mark.parametrize("dirname", ["t", "t with space", "t%41x"])
+def test_dv_delete_marks_positions_without_rewriting(spark, tmp_path, dirname):
+    """Also under directory names that Spark's file URIs percent-encode:
+    the DV anti-join and the DML's file lookup must key on the path the
+    log names, decoded exactly once (``%41`` is not ``A``)."""
     from pg_analytics_spark.sources.delta import _load_via_log
     from pg_analytics_spark.sources.delta_write import delete_delta
 
-    t = tmp_path / "t"
+    t = tmp_path / dirname
     _mk_table(spark, t)
     before = _parquet_state(t)
     res = delete_delta(spark, str(t), "k = 3", dv=True)

@@ -37,8 +37,8 @@ def _ids(spark, path):
 
 
 @pytest.fixture()
-def rt_table(spark, tmp_path):
-    path = str(tmp_path / "t")
+def rt_table(spark, tmp_path, request):
+    path = str(tmp_path / getattr(request, "param", "t"))
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(10)], "k long, s string"
     ).orderBy("k").coalesce(1)
@@ -66,8 +66,12 @@ def test_append_assigns_fresh_ids(spark, rt_table):
     assert all(a["defaultRowCommitVersion"] == 0 for a in adds)
 
 
+@pytest.mark.parametrize("rt_table", ["t", "t with space"], indirect=True)
 def test_update_preserves_ids_and_bumps_modified_version(spark, rt_table):
+    """Also under a directory name Spark's file URIs percent-encode:
+    the identity join keys on the log's decoded path."""
     before = _ids(spark, rt_table)
+    assert {i for i, _v in before.values()} == set(range(15))
     update_delta(
         spark, rt_table, set_map={"s": "'upd'"}, where="k % 3 = 0"
     )

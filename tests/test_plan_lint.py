@@ -24,6 +24,11 @@ instead of living invisibly behind healthy sf0.1 walls:
 - ``test_dedup_rows_job_census``: the Spark jobs of a warm call of each
   dedup row are pinned as an upper bound, so a row that gains jobs
   fails here without a bench run.
+- ``test_delta_reads_are_one_scan`` / ``test_one_delta_reader_call``:
+  a Delta snapshot read (column-mapped, 30 partitions) and a change
+  feed commit touching several partitions each plan ONE parquet scan
+  with no Union, and building the snapshot DataFrame runs at most one
+  job; the reader modules hold one ``parquet(`` read and no mergeSchema.
 
 Limit worth knowing: rows that materialize inside their function
 (streaming fixtures, writer round-trips returning
@@ -214,3 +219,97 @@ def test_dedup_rows_job_census(spark, name):
     assert jobs <= _JOB_PINS[name], (
         f"{name} ran {jobs} Spark jobs, pinned at most {_JOB_PINS[name]}"
     )
+
+
+def _jobs_in(spark, group: str, fn):
+    """(result of ``fn()``, Spark jobs it ran) — the census method above."""
+    from pg_analytics_spark.workload.base import drain_listener_bus
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain_listener_bus(spark)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _scans_and_unions(df) -> tuple[int, int]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet"), plan.count("Union")
+
+
+def test_delta_reads_are_one_scan(spark, tmp_path):
+    """Every Delta read is one explicit-schema parquet scan: a
+    column-mapped table with 30 partition values (the old per-partition
+    loop ran one footer-inference job and one scan per value), and a
+    change-feed commit whose files span several partitions."""
+    from pyspark.sql import functions as F
+
+    from pg_analytics_spark.sources import load_source
+    from pg_analytics_spark.sources.delta_cdf import read_table_changes
+    from pg_analytics_spark.sources.delta_write import (
+        alter_delta,
+        update_delta,
+        write_delta,
+    )
+
+    path = str(tmp_path / "mapped")
+    rows = spark.range(300).select(
+        "id",
+        (F.col("id") % 30).cast("int").alias("day"),
+        (F.col("id") * 2).alias("v"),
+    )
+    write_delta(
+        rows, path, partition_by=["day"],
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    alter_delta(path, rename=("v", "val"))  # v1: column mapping on
+    load_source(spark, path, "delta")  # warm: first-call listings
+    df, jobs = _jobs_in(
+        spark, "delta-one-scan", lambda: load_source(spark, path, "delta")
+    )
+    assert jobs <= 1, f"building the snapshot DataFrame ran {jobs} jobs"
+    assert _scans_and_unions(df) == (1, 0)
+    assert df.columns == ["id", "val", "day"]
+    assert df.agg(F.sum("val"), F.countDistinct("day")).first() == (89700, 30)
+
+    update_delta(spark, path, {"val": "val + 1"}, "id < 6")  # v2: 6 days
+    for v in (0, 2):
+        ch = read_table_changes(spark, path, v, v)
+        assert _scans_and_unions(ch) == (1, 0), v
+    got = sorted(
+        (r["val"], r["day"], r["_change_type"])
+        for r in ch.filter("id = 5").collect()
+    )
+    assert got == [(10, 5, "update_preimage"), (11, 5, "update_postimage")]
+    assert ch.select("day").distinct().count() == 6
+
+
+def _reader_calls(src: str) -> tuple[int, int]:
+    """(``.parquet(`` calls, ``.option("mergeSchema", …)`` calls)."""
+    calls = [
+        n for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+    merge = sum(
+        1 for n in calls
+        if n.func.attr == "option" and n.args
+        and isinstance(n.args[0], ast.Constant)
+        and n.args[0].value == "mergeSchema"
+    )
+    return sum(1 for n in calls if n.func.attr == "parquet"), merge
+
+
+def test_one_delta_reader_call():
+    """The Delta snapshot and change-feed readers share one parquet
+    read (``delta._scan_files``), under an explicit schema: no
+    per-partition reader loop and no mergeSchema footer inference."""
+    src = _WORKLOAD.parent / "sources"
+    counts = {
+        mod: _reader_calls((src / mod).read_text())
+        for mod in ("delta.py", "delta_cdf.py")
+    }
+    assert counts == {"delta.py": (1, 0), "delta_cdf.py": (0, 0)}, counts

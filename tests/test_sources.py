@@ -302,12 +302,15 @@ def test_delta_partition_join_fails_loudly_on_unmatched_file(
 ):
     """A data file whose path key matches no add action fails the read
     instead of losing its rows to an inner join."""
+    from pyspark.sql import functions as F
+
     from pg_analytics_spark.sources import delta
 
     root = str(tmp_path / "dlp")
     _write_delta_fixture(spark, root, partitioned=True)
+    key = delta._file_key
     monkeypatch.setattr(
-        delta, "_FILE_PATH_SQL", f"concat({delta._FILE_PATH_SQL}, '#')"
+        delta, "_file_key", lambda uri: F.concat(key(uri), F.lit("#"))
     )
     with pytest.raises(Exception, match="matches no add action"):
         load_source(spark, root, "delta").collect()
