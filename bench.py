@@ -625,6 +625,10 @@ def main() -> None:
         ),
         "runs": runs,
         "sf": sf,
+        # the parallelism this run actually had (tail scalars)
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
     # Key ORDER inside the stdout line: per-query dicts first, every
     # scalar (metric/unit, all group totals, runs, sf) LAST.  The

@@ -33,6 +33,7 @@ from pg_analytics_spark.errors import EngineError
 from pg_analytics_spark.session import get_spark
 from pg_analytics_spark.sources import load_source, split_files
 from pg_analytics_spark.sources.secrets import apply_secret
+from pg_analytics_spark.types import local_frame
 
 
 #: DuckDB `COPY (query) TO 'path' [(FORMAT fmt ...)]` — the COPY text a
@@ -483,7 +484,7 @@ class Engine:
             if name not in self._macros and not m.group("ifex"):
                 raise EngineError(f"macro {name!r} does not exist")
             self._macros.pop(name, None)
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return local_frame(self.spark, [(name,)], "dropped string")
         if self._macros:
             query = self._expand_macros(query)
         q_strip = query.strip()
@@ -630,7 +631,7 @@ class Engine:
                     "json" if p.endswith((".json", ".ndjson")) else "parquet"
                 )
             n = self.copy_to(m.group("q"), m.group("path"), format=fmt)
-            return self.spark.createDataFrame([(n,)], "count bigint")
+            return local_frame(self.spark, [(n,)], "count bigint")
         m = _CTAS_LAKE_RE.match(query.strip())
         if m:
             # CREATE TABLE … USING delta|iceberg LOCATION '…' AS SELECT …
@@ -1220,11 +1221,10 @@ class Engine:
     def parquet_describe(self, files: str | list[str]) -> DataFrame:
         """Logical describe (api/parquet.rs:113-190): column_name/column_type."""
         df = load_source(self.spark, files, "parquet", {})
-        return self.spark.createDataFrame(
-            [
-                {"column_name": f.name, "column_type": f.dataType.simpleString()}
-                for f in df.schema.fields
-            ]
+        return local_frame(
+            self.spark,
+            [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            "column_name string, column_type string",
         )
 
     def sniff_csv(self, files: str | list[str], sample_size: int = 20480) -> dict:
@@ -1409,7 +1409,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(int(res.get("rows", 0)),)], "count bigint"
         )
 
@@ -1473,7 +1474,8 @@ class Engine:
         through to the other statement forms)."""
         m = _CREATE_EXTENSION_RE.match(q)
         if m:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(m.group("name"),)], "extension string"
             )
         m = _CREATE_FDW_RE.match(q)
@@ -1487,7 +1489,7 @@ class Engine:
                     "conventionally named <format>_wrapper)"
                 )
             self._wrappers[w] = self._WRAPPER_FORMATS[stem]
-            return self.spark.createDataFrame([(w,)], "wrapper string")
+            return local_frame(self.spark, [(w,)], "wrapper string")
         m = _CREATE_SERVER_RE.match(q)
         if m:
             w = m.group("w").lower()
@@ -1505,7 +1507,8 @@ class Engine:
                 fmt,
                 self._parse_ddl_options(m.group("opts")),
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(m.group("s"), fmt)], "server string, format string"
             )
         m = _CREATE_USER_MAPPING_RE.match(q)
@@ -1521,7 +1524,8 @@ class Engine:
                 # into DuckDB secrets with (secret.rs) → secret store
                 stype = str(opts.pop("type", "s3")).lower()
                 self.add_secret(stype, {k: str(v) for k, v in opts.items()})
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(srv, len(opts))], "server string, n_options int"
             )
         m = _CREATE_FOREIGN_TABLE_RE.match(q)
@@ -1547,7 +1551,8 @@ class Engine:
             self.attach(
                 name, files, fmt, opts or None, columns or None
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(name, fmt, len(files))],
                 "table string, format string, n_files int",
             )
@@ -1560,7 +1565,7 @@ class Engine:
                 raise EngineError(
                     f"DROP FOREIGN TABLE: {name!r} is not attached"
                 )
-            return self.spark.createDataFrame([(name,)], "dropped string")
+            return local_frame(self.spark, [(name,)], "dropped string")
         return None
 
     @staticmethod
@@ -1627,7 +1632,7 @@ class Engine:
         snap = self.sql(m.group("q")).localCheckpoint(eager=True)
         snap.createOrReplaceTempView(name)
         self._temp_tables[name.lower()] = snap
-        return self.spark.createDataFrame([(name,)], "created string")
+        return local_frame(self.spark, [(name,)], "created string")
 
     def _drop_table_statement(self, m) -> DataFrame:
         """``DROP TABLE [IF EXISTS] t`` for engine temp tables (only
@@ -1637,7 +1642,8 @@ class Engine:
         if name in self._temp_tables:
             self._temp_tables.pop(name)
             self.spark.catalog.dropTempView(m.group("name"))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(m.group("name"),)], "dropped string"
             )
         # only attachments can reach here — refuse rather than guess
@@ -1820,7 +1826,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -2106,7 +2113,8 @@ class Engine:
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -2211,7 +2219,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(int(res["rows_updated"]), int(res["version"]))],
                 "rows_updated bigint, version int",
             )
@@ -2241,7 +2250,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(int(res["rows_deleted"]), int(res["version"]))],
                 "rows_deleted bigint, version int",
             )
@@ -2265,7 +2275,8 @@ class Engine:
             if not arg:
                 raise UnsupportedDialect("PRAGMA table_info needs a table name")
             schema = self.spark.table(arg).schema
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         i,
@@ -2281,12 +2292,14 @@ class Engine:
                 "dflt_value string, pk boolean",
             )
         if name == "version":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f"pg_analytics_spark (Spark {self.spark.version})", "")],
                 "library_version string, source_id string",
             )
         if name == "database_list":
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(0, "memory", "")], "seq int, name string, file string"
             )
         if name == "show_tables":
@@ -2452,11 +2465,7 @@ class Engine:
 
                         pat = args.strip("'\"")
                         rows = [(f,) for f in sorted(_glob.glob(pat))]
-                        df = self.spark.createDataFrame(
-                            rows, "file string"
-                        ) if rows else self.spark.createDataFrame(
-                            [], "file string"
-                        )
+                        df = local_frame(self.spark, rows, "file string")
                         # per-expansion monotonic id — hash-derived
                         # names can collide across distinct patterns
                         # in one statement (r7 ADVICE)
@@ -2475,7 +2484,8 @@ class Engine:
                             )
                             for a in self._attachments.values()
                         ]
-                        df = self.spark.createDataFrame(
+                        df = local_frame(
+                            self.spark,
                             rows,
                             "database_name string, schema_name string, "
                             "table_name string, temporary boolean, "
@@ -2823,7 +2833,8 @@ class Engine:
         att = self._dml_delta_attachment(m.group("name"), "VACUUM")
         hours = float(m.group("hours")) if m.group("hours") else 168.0
         res = vacuum_delta(att.files[0], retention_hours=hours)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(int(res["files_deleted"]), int(res["bytes_deleted"]))],
             "files_deleted bigint, bytes_deleted bigint",
         )
@@ -2940,7 +2951,8 @@ class Engine:
                     )
                 )
         rows.sort(key=lambda r: -r[0] if att.format == "delta" else -r[1])
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     v,
@@ -2976,7 +2988,8 @@ class Engine:
             if ms is not None
             else None
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     d["format"],
@@ -3027,7 +3040,8 @@ class Engine:
                 snapshot_id=int(sid) if sid else None,
                 **kw,
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(r["name"], r["type"], int(r["snapshot_id"]), int(r["version"]))],
             "name string, type string, snapshot_id bigint, version bigint",
         )
@@ -3056,7 +3070,8 @@ class Engine:
             r = alter_delta_constraints(
                 att.files[0], drop=m.group("drop_name")
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(r["operation"], r["name"], int(r["version"]))],
             "operation string, name string, version bigint",
         )
@@ -3079,7 +3094,8 @@ class Engine:
         r = convert_parquet_to_delta(
             self.spark, m.group("path").strip(), partition_by=decls
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(int(r["files"]), int(r["rows"]), int(r["version"]))],
             "files bigint, rows bigint, version bigint",
         )
@@ -3101,7 +3117,8 @@ class Engine:
             )
 
             r = rewrite_manifests_iceberg(path)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         int(r["manifests_before"]),
@@ -3119,7 +3136,8 @@ class Engine:
 
             hours = float(m.group("arg")) if m.group("arg") else 72.0
             r = remove_orphan_files_iceberg(path, older_than_hours=hours)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         int(r["files_deleted"]),
@@ -3137,7 +3155,8 @@ class Engine:
         keep = int(m.group("arg")) if m.group("arg") else 1
         r = expire_iceberg_snapshots(self.spark, path, retain_last=keep)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(r["snapshots_expired"]),
@@ -3165,7 +3184,8 @@ class Engine:
             int(version) if version is not None else None,
         )
         self.attach(m.group("target"), [m.group("location")], "delta")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["source_version"]),
@@ -3188,7 +3208,8 @@ class Engine:
             schema = self.sql(body).schema
         else:
             schema = self.spark.table(body).schema
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     f.name,
@@ -3225,7 +3246,8 @@ class Engine:
             self.attach(
                 att.name, att.files, att.format, att.options, att.columns
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(int(res_i["rolled_back_to"]), int(res_i["version"]))],
                 "rolled_back_to bigint, version int",
             )
@@ -3235,7 +3257,8 @@ class Engine:
             self.spark, att.files[0], int(m.group("version"))
         )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["restored_to"]),
@@ -3275,9 +3298,7 @@ class Engine:
             )
             props = dict((meta_d or {}).get("configuration") or {})
         rows = sorted((str(k), str(v)) for k, v in props.items())
-        if not rows:
-            return self.spark.createDataFrame([], "key string, value string")
-        return self.spark.createDataFrame(rows, "key string, value string")
+        return local_frame(self.spark, rows, "key string, value string")
 
     def _alter_props_statement(self, m) -> DataFrame:
         """``ALTER TABLE t SET TBLPROPERTIES ('k'='v', …)`` / ``UNSET
@@ -3335,7 +3356,8 @@ class Engine:
                 unset_props or None,
             )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(m.group("verb").upper(), int(res["version"]))],
             "operation string, version int",
         )
@@ -3362,7 +3384,8 @@ class Engine:
         ] if body else []
         res = alter_iceberg_partition(att.files[0], parts)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(int(res["spec_id"]), int(res["version"]))],
             "spec_id int, version int",
         )
@@ -3397,7 +3420,8 @@ class Engine:
 
             res = alter_delta(att.files[0], **kw)
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(str(res["operation"]), int(res["version"]))],
             "operation string, version int",
         )
@@ -3419,7 +3443,8 @@ class Engine:
             self.spark, att.files[0], zorder_by=cols or None
         )
         self.attach(att.name, att.files, att.format, att.options, att.columns)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["files_before"]),
@@ -3469,7 +3494,8 @@ class Engine:
         return iceberg_statistics(self.spark, att.files[0])
 
     def _dml_metrics(self, res: dict) -> DataFrame:
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     int(res["rows_written"]),
@@ -3517,7 +3543,8 @@ class Engine:
         self._macros[name] = (
             params, m.group("body").strip(), bool(m.group("table"))
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(name, len(params))], "macro string, n_params int"
         )
 
@@ -3697,7 +3724,8 @@ class Engine:
                     break
             bucket = b.split("/", 1)[0] or None
         applied = self.add_secret(secret_type, opts, bucket=bucket)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted(applied.items()), "key string, value string"
         )
 
@@ -4052,7 +4080,8 @@ def _summarize(spark: SparkSession, df: DataFrame) -> DataFrame:
                 round(100.0 * row[f"{c}!nulls"] / total, 2) if total else 0.0,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "column_name string, column_type string, min string, max string, "
         "approx_unique long, avg double, std double, q25 double, q50 double, "

@@ -50,6 +50,18 @@ _DEFAULT_CONF: dict[str, str] = {
     # Python DataSources (delta_native) prune partitions via
     # pushFilters; off by default in Spark 4.1
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Compiled whole-stage and expression classes live in one JVM-wide
+    # LRU cache.  Spark's default of 100 entries is smaller than one
+    # pass of the perfbench read_mix workload (about 440 classes), so
+    # at 100 every warm pass compiled its plans again.  Census
+    # (tools/codegen_census.py; three read_mix passes, three lake_dml
+    # passes and frozen-33 in one session): 916 distinct classes.  A
+    # warm read_mix pass recompiles 1-7 of them at 4000 entries and
+    # 427-458 at 100; lake_dml adds about 28 per pass (its seeded
+    # literals are inlined), so 4000 leaves 4x headroom for longer
+    # sessions.  JVM metaspace after the census: 193 MB at 4000, 188 MB
+    # at 100.  Static: read once, when the session is built.
+    "spark.sql.codegen.cache.maxEntries": "4000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

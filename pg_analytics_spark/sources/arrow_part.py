@@ -34,7 +34,8 @@ Appendix-D bounds).  The pieces it is built from:
   partition value (``__HIVE_DEFAULT_PARTITION__`` for NULL,
   ``true``/``false`` for booleans, percent-quoted ``str`` otherwise).
 - :func:`map_files` — the driver side of a direct write: one
-  ``mapInArrow`` job runs the task and collects one record per file.
+  ``mapInArrow`` job runs the task and collects one record per file,
+  on a local master only (:func:`require_local_master`).
 
 Parity of :func:`transform_array` with the scalar path is pinned
 property-style in
@@ -388,13 +389,32 @@ _REPO_ROOT = os.path.dirname(
 )
 
 
-def map_files(df, task) -> list:
+def require_local_master(sc, target: str) -> None:
+    """A direct write's tasks write files under ``target`` that the
+    driver then reads, stats and commits.  That needs the driver and
+    the executors to share one filesystem, which only a local master
+    (``local`` or ``local[...]``) guarantees; on any other master the
+    write fails here, before a task runs, instead of committing files
+    the driver cannot see."""
+    master = sc.master
+    if master != "local" and not master.startswith("local["):
+        from pg_analytics_spark.errors import EngineError
+
+        raise EngineError(
+            f"direct lake write to {target!r} needs a local master "
+            f"(local or local[...]); master {master!r} runs tasks whose "
+            "files the driver cannot see"
+        )
+
+
+def map_files(df, task, target: str) -> list:
     """Run ``task(batches)`` over every partition of ``df`` in ONE
     ``mapInArrow`` job and return the records it yields (picklable
-    values, one per written file).  The task runs with the repo root
-    on ``sys.path``, so it imports the package lazily."""
+    values, one per written file under ``target``).  The task runs with
+    the repo root on ``sys.path``, so it imports the package lazily."""
     import pickle
 
+    require_local_master(df.sparkSession.sparkContext, target)
     root = _REPO_ROOT
 
     def _run(batches):

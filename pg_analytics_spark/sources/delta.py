@@ -48,7 +48,7 @@ from pg_analytics_spark.sources.delta_write import (
     _decode_log_path,
     _phys_renames,
 )
-from pg_analytics_spark.types import duckdb_type_to_spark
+from pg_analytics_spark.types import duckdb_type_to_spark, local_frame
 
 
 #: Tri-state memo for "is the delta-spark format installed?": None =
@@ -322,7 +322,7 @@ def _load_via_log(
                 for f in fields
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _scan_files(
         spark, meta, files, deletions=deletions, keep_meta=keep_meta,
         keep_phys=keep_phys or (),
@@ -350,11 +350,12 @@ def _scan_files(
     unmapped table): no footer inference, and the reader null-fills a
     column a file lacks.  One projection renames to the logical names
     — the positional cast renames every nested level.  Partition values
-    are literals when every file shares one tuple; otherwise a
-    broadcast join on the file key attaches them, and a scanned file no
-    pair names fails the read (LEFT join + non-null marker: NULL
-    partition values stay legal).  ``deletions`` — (file key, row
-    index) pairs — are anti-joined away.  ``keep_phys`` are hidden long
+    are literals when every file shares one tuple; otherwise a literal
+    lookup on the file key attaches them (:func:`_partition_lookup`, no
+    join and no job), and a scanned file no pair names fails the read
+    (the lookup's struct is the hit marker: NULL partition values stay
+    legal).  ``deletions`` — (file key, row index) pairs — are
+    anti-joined away.  ``keep_phys`` are hidden long
     columns to carry (row tracking); ``extra`` are StructFields read
     and kept as they are (the cdc ``_change_type``)."""
     from pyspark.sql import types as T
@@ -402,20 +403,6 @@ def _scan_files(
             ],
         )
     else:
-        pv_schema = T.StructType(
-            [
-                T.StructField("_pv_file", T.StringType(), False),
-                T.StructField("_pv_hit", T.BooleanType(), False),
-            ]
-            + [T.StructField(f"_pv_{c}", T.StringType()) for c in part_cols]
-        )
-        pvdf = spark.createDataFrame(
-            [
-                (p, True, *[None if v is None else str(v) for v in key])
-                for p, key in files
-            ],
-            pv_schema,
-        )
         miss = F.raise_error(
             F.concat(
                 F.lit("delta read: data file "),
@@ -423,24 +410,54 @@ def _scan_files(
                 F.lit(" matches no add action of the snapshot"),
             )
         )
-        df = df.join(
-            F.broadcast(pvdf), F.col("_dv_file") == F.col("_pv_file"), "left"
-        ).select(
-            *df.columns,
+        df = df.withColumn("_pv", _partition_lookup(files, len(part_cols)))
+        df = df.select(
+            *df.columns[:-1],
             *[
-                F.when(F.col("_pv_hit").isNull(), miss)
-                .otherwise(F.col(f"_pv_{c}"))
+                F.when(F.col("_pv").isNull(), miss)
+                .otherwise(F.col("_pv")[f"v{i}"])
                 .cast(part_types[c])
                 .alias(c)
-                for c in part_cols
+                for i, c in enumerate(part_cols)
             ],
         )
     if deletions:
-        dels = spark.createDataFrame(deletions, ["_dv_file", "_dv_pos"])
+        dels = local_frame(spark, deletions, "_dv_file string, _dv_pos bigint")
         df = df.join(F.broadcast(dels), ["_dv_file", "_dv_pos"], "left_anti")
     if not keep_meta:
         df = df.drop("_dv_file", "_dv_pos")
     return df
+
+
+def _partition_lookup(files: list[tuple[str, tuple]], width: int) -> F.Column:
+    """Each row's partition values, looked up by its file key
+    (``_dv_file``) in a literal built from ``files``: a struct
+    ``v0..v{width-1}`` of strings (a NULL value stays NULL), or NULL
+    when no pair names the file.  The lookup is part of the row's
+    projection: no join, so no broadcast job.
+
+    A map literal is probed by a linear scan of its keys, so the pairs
+    are spread over ``len(files)`` small maps by the CRC-32 of the key
+    (Python's ``zlib.crc32`` and Spark's ``crc32`` agree on the UTF-8
+    bytes); a row probes one map, so the cost per row does not grow
+    with the file count.  The literal is one JSON text that
+    ``from_json`` parses and the optimizer folds to a constant: one
+    driver call however many files there are."""
+    import zlib
+
+    n = len(files)
+    buckets: list[dict] = [{} for _ in range(n)]
+    for key, values in files:
+        buckets[zlib.crc32(key.encode()) % n][key] = {
+            f"v{i}": None if v is None else str(v) for i, v in enumerate(values)
+        }
+    vtype = ",".join(f"v{i}:string" for i in range(width))
+    table = F.from_json(
+        F.lit(json.dumps(buckets)), f"array<map<string,struct<{vtype}>>>"
+    )
+    key = F.col("_dv_file")
+    slot = (F.pmod(F.crc32(key.cast("binary")), F.lit(n)) + 1).cast("int")
+    return F.try_element_at(F.element_at(table, slot), key)
 
 
 def _delta_type_to_spark(t, physical: bool = False):

@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.delta_write import _decode_log_path
+from pg_analytics_spark.types import local_frame
 
 
 def _commit_actions(log_dir: str, version: int) -> list[dict] | None:
@@ -253,7 +254,7 @@ def read_table_changes(
                 T.StructField("_commit_timestamp", T.LongType(), True),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.types import local_frame
 
 #: domainMetadata domain name the spec reserves for row tracking.
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
@@ -231,8 +232,8 @@ def attach_current_ids(
             .withColumn("_rt_ver", F.lit(None).cast("long"))
             .drop(mat_id, mat_ver)
         )
-    base_df = spark.createDataFrame(
-        base_rows, f"{file_col} string, _rt_base long, _rt_defver long"
+    base_df = local_frame(
+        spark, base_rows, f"{file_col} string, _rt_base long, _rt_defver long"
     )
     return (
         df.join(F.broadcast(base_df), file_col, "left")

@@ -1228,7 +1228,7 @@ def _stage_parquet_direct(
         )
 
     os.makedirs(dest_root, exist_ok=True)
-    staged = map_files(df, _write_task)
+    staged = map_files(df, _write_task, dest_root)
     if not staged and not part_cols:
         fname = f"{fname_prefix}-{uuid.uuid4().hex}.parquet"
         dst = os.path.join(dest_root, fname)

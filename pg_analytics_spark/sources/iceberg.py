@@ -67,6 +67,7 @@ from pg_analytics_spark.sources.iceberg_prune import (
     schema_field_types,
     spec_fields_for,
 )
+from pg_analytics_spark.types import local_frame
 
 
 #: Tri-state memo for "is the iceberg-spark runtime installed?" —
@@ -504,16 +505,15 @@ def _apply_row_deletes(
             for pos in positions
         ]
         if rows:
-            dvdf = spark.createDataFrame(
-                rows, "_ice_file string, _ice_pos long"
-            )
+            dvdf = local_frame(spark, rows, "_ice_file string, _ice_pos long")
             data = data.join(
                 F.broadcast(dvdf), ["_ice_file", "_ice_pos"], "left_anti"
             )
     if eq_delete_files:
-        seq_map = spark.createDataFrame(
+        seq_map = local_frame(
+            spark,
             [(_delete_key_py(p), s) for p, s in data_files.items()],
-            ["_ice_file", "_ice_seq"],
+            "_ice_file string, _ice_seq bigint",
         )
         data = data.join(F.broadcast(seq_map), "_ice_file", "left")
         for dpath, dseq in sorted(eq_delete_files):

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.types import local_frame
 
 
 def iceberg_changelog(
@@ -266,7 +267,7 @@ def iceberg_changelog(
             ", `_change_type` string, `_sequence_number` bigint, "
             "`_snapshot_id` bigint"
         )
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)

@@ -55,6 +55,7 @@ from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.avro import read_container, write_container
 from pg_analytics_spark.sources.delta_write import _truthy_opt
 from pg_analytics_spark.sources.footer_stats import footer_stats
+from pg_analytics_spark.types import local_frame
 
 #: Spark typeName → Iceberg primitive type (inverse of the reader map)
 _SPARK_TO_ICE = {
@@ -665,7 +666,7 @@ def _write_data_files_direct(
             file_bounds=resolve(bounds_ref),
         )
 
-    files = map_files(out_df, _write_task)
+    files = map_files(out_df, _write_task, data_dir)
     if not files and not partitioned:
         dst = os.path.join(
             data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
@@ -1875,12 +1876,13 @@ def _visible_target(
     if eq_deletes:
         from pg_analytics_spark.sources.iceberg import _delete_key_py
 
-        seq_map = spark.createDataFrame(
+        seq_map = local_frame(
+            spark,
             [
                 (_delete_key_py(os.path.abspath(p)), s)
                 for p, s in data_seq.items()
             ],
-            ["_ik", "_iseq"],
+            "_ik string, _iseq bigint",
         )
         key_expr = F.regexp_replace(F.col("_ifile"), r"^.*/(?=data/)", "")
         tgt = tgt.withColumn("_ik", key_expr).join(
@@ -2519,9 +2521,7 @@ def compact_iceberg(spark, path: str) -> dict:
             part_proj=_adoption_projection(prev_meta, prev_list),
         )
         key_expr = F.regexp_replace(F.col("_ifile"), r"^.*/(?=data/)", "")
-        idx_map = spark.createDataFrame(
-            [(k, i) for k, i in idx_of.items()], "_k string, _pt int"
-        )
+        idx_map = local_frame(spark, list(idx_of.items()), "_k string, _pt int")
         staged = (
             kept.withColumn("_k", key_expr)
             .join(F.broadcast(idx_map), "_k")
@@ -3004,8 +3004,12 @@ def _stage_upsert_parts(
     import pyarrow as _pa_drv
     import pyarrow.parquet as _pq_drv
 
-    from pg_analytics_spark.sources.arrow_part import shippable
+    from pg_analytics_spark.sources.arrow_part import (
+        require_local_master,
+        shippable,
+    )
 
+    require_local_master(src.sparkSession.sparkContext, path)
     staging = os.path.join(
         os.path.dirname(path.rstrip("/")) or ".",
         f"_ice_upsboth-{uuid.uuid4().hex}",
@@ -3764,7 +3768,8 @@ def rewrite_data_files_iceberg(
             meta=prev_meta,
             part_proj=part_proj,
         )
-        bin_map = spark.createDataFrame(
+        bin_map = local_frame(
+            spark,
             [(os.path.abspath(p), i) for p, i in sorted(selected.items())],
             "_ifile string, _bin int",
         )
@@ -5062,7 +5067,7 @@ def merge_iceberg(
                 )
             sch = sch.add(f["name"], t)
         tgt = (
-            spark.createDataFrame([], sch)
+            local_frame(spark, [], sch)
             .withColumn("_ifile", F.lit(""))
             .withColumn("_ipos", F.lit(0).cast("long"))
         )

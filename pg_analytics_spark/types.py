@@ -11,6 +11,10 @@ pair is a native ``cast``; what remains is:
 2. the permissive-numeric-cast rule: a declared numeric column accepts
    any numeric physical type via silent cast (cell.rs:754-757);
    non-numeric mismatches raise DataTypeMismatch (cell.rs:1404-1417).
+
+:func:`local_frame` builds the engine's small driver-side frames
+(statement results, lookup sides) from Arrow tables of exact Spark
+types.
 """
 
 from __future__ import annotations
@@ -104,6 +108,35 @@ def duckdb_type_to_spark(name: str) -> T.DataType:
         return _DUCKDB_TO_SPARK[n]
     # Fall back to Spark's own DDL parser (covers struct<...>, array<...>, map<...>)
     return T.DataType.fromDDL(n)
+
+
+def local_frame(spark, rows, schema: T.StructType | str) -> DataFrame:
+    """A small driver-built relation as a DataFrame, through Arrow.
+
+    ``rows`` are tuples in ``schema`` order (a ``StructType`` or a DDL
+    string such as ``"count bigint, version int"``).  The rows become
+    one ``pa.Table`` typed by the exact Arrow image of the Spark schema
+    (``to_arrow_schema``: ints keep their width, decimals their
+    precision and scale, ``timestamp`` is UTC), which
+    ``createDataFrame`` ships to the JVM as an Arrow stream.  A list of
+    tuples instead becomes a pickled Python RDD, whose first action
+    runs Python-worker tasks: about 0.4 s more for a 1-row result
+    (local[2] on a 4-vCPU host).  The DataFrame's schema is ``schema``
+    itself, names, types and nullability included; a ``None`` is a
+    NULL.  A naive ``datetime`` for a ``timestamp`` column is read as
+    UTC wall time.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def is_numeric(dt: T.DataType) -> bool:

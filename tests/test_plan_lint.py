@@ -29,6 +29,13 @@ instead of living invisibly behind healthy sf0.1 walls:
   feed commit touching several partitions each plan ONE parquet scan
   with no Union, and building the snapshot DataFrame runs at most one
   job; the reader modules hold one ``parquet(`` read and no mergeSchema.
+  Its partition values attach with no job of their own.
+- ``test_warm_plans_compile_nothing``: a plan that ran before compiles
+  no class again after more distinct plans than Spark's default
+  codegen cache holds.
+- ``test_small_frames_go_through_arrow``: ``createDataFrame(<list>, …)``
+  calls per package module are pinned; small frames are built from
+  Arrow by ``types.local_frame``.
 
 Limit worth knowing: rows that materialize inside their function
 (streaming fixtures, writer round-trips returning
@@ -274,7 +281,15 @@ def test_delta_reads_are_one_scan(spark, tmp_path):
     assert jobs <= 1, f"building the snapshot DataFrame ran {jobs} jobs"
     assert _scans_and_unions(df) == (1, 0)
     assert df.columns == ["id", "val", "day"]
-    assert df.agg(F.sum("val"), F.countDistinct("day")).first() == (89700, 30)
+    # the 30 partition tuples attach by a literal lookup, not a
+    # broadcast join: no job per action beyond the scan's own
+    (n, agg), jobs = _jobs_in(
+        spark, "delta-partition-values",
+        lambda: (df.count(), df.agg(F.sum("val"), F.sum("day")).first()),
+    )
+    assert (n, agg) == (300, (89700, 4350))
+    assert jobs <= 4, f"count() + agg() ran {jobs} jobs"
+    assert df.agg(F.countDistinct("day")).first()[0] == 30
 
     update_delta(spark, path, {"val": "val + 1"}, "id < 6")  # v2: 6 days
     for v in (0, 2):
@@ -313,3 +328,66 @@ def test_one_delta_reader_call():
         for mod in ("delta.py", "delta_cdf.py")
     }
     assert counts == {"delta.py": (1, 0), "delta_cdf.py": (0, 0)}, counts
+
+
+def test_warm_plans_compile_nothing(spark):
+    """A plan that ran before compiles no class again, even after more
+    distinct plans than Spark's default codegen cache holds (100
+    entries): ``session.py`` sizes the cache for a whole workload."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def run(i: int) -> None:
+        # the literal is inlined into the generated code: a new class
+        spark.range(2).selectExpr(f"id * {i} + {i} AS x").collect()
+
+    before = compiles.getCount()
+    for i in range(1, 201):
+        run(i)
+    assert compiles.getCount() - before > 100
+    before = compiles.getCount()
+    run(1)
+    assert compiles.getCount() == before, "a warm plan compiled again"
+
+
+def _list_frames(src: str) -> int:
+    """``createDataFrame(`` calls whose rows are a list literal or a
+    list comprehension."""
+    return sum(
+        1
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+        and node.args
+        and isinstance(node.args[0], (ast.List, ast.ListComp))
+    )
+
+
+#: ``createDataFrame(<list>, …)`` calls per package module.  Each ships
+#: its rows as a pickled Python RDD, whose first action runs
+#: Python-worker tasks; ``types.local_frame`` builds the same frame from
+#: an Arrow table.  The pins only go down (lower a pin when a site
+#: moves onto ``local_frame``).
+_LIST_FRAME_PINS = {
+    "bitmap_index.py": 1,
+    "bloom_ingest.py": 1,
+    "moments_ingest.py": 1,
+    "similarity.py": 1,
+    "sketch.py": 1,
+    "sketch_ingest.py": 2,
+    "sketches.py": 1,
+    "zorder.py": 1,
+}
+
+
+def test_small_frames_go_through_arrow():
+    counts = {
+        p.name: _list_frames(p.read_text())
+        for p in sorted(_WORKLOAD.parent.rglob("*.py"))
+    }
+    counts = {k: v for k, v in counts.items() if v}
+    assert counts == _LIST_FRAME_PINS, (
+        f"list-built createDataFrame census changed: {counts} vs pinned "
+        f"{_LIST_FRAME_PINS} — build small frames with types.local_frame"
+    )

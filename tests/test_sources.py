@@ -316,6 +316,45 @@ def test_delta_partition_join_fails_loudly_on_unmatched_file(
         load_source(spark, root, "delta").collect()
 
 
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
+def test_direct_writes_allow_local_masters(master):
+    from types import SimpleNamespace
+
+    from pg_analytics_spark.sources.arrow_part import require_local_master
+
+    require_local_master(SimpleNamespace(master=master), "/t")
+
+
+@pytest.mark.parametrize(
+    "master", ["spark://head:7077", "yarn", "k8s://https://h:443",
+               "local-cluster[2,1,1024]"],
+)
+def test_direct_writes_fail_loudly_off_local_master(master, tmp_path):
+    """Direct writes run tasks whose files the driver reads back; off a
+    local master they fail before any task runs, naming the master and
+    the target (a stub context: no cluster starts)."""
+    from types import SimpleNamespace
+
+    from pg_analytics_spark.errors import EngineError
+    from pg_analytics_spark.sources.arrow_part import map_files
+    from pg_analytics_spark.sources.iceberg_write import _stage_upsert_parts
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(master=master)
+        )
+    )
+    target = str(tmp_path / "tbl")
+    for write in (
+        lambda: map_files(df, lambda batches: [], target),
+        lambda: _stage_upsert_parts(df, target, ["k"], []),
+    ):
+        with pytest.raises(EngineError) as exc:
+            write()
+        assert master in str(exc.value) and target in str(exc.value)
+    assert os.listdir(tmp_path) == []
+
+
 def test_delta_fallback_rejects_non_delta_dir(spark, tmp_path):
     from pg_analytics_spark.errors import MissingDependency
 
