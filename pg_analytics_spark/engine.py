@@ -16,6 +16,7 @@ which reproduces the reference's flagship demo (README.md:98-118).
 
 from __future__ import annotations
 
+import contextlib
 import re as _re
 import time
 from collections.abc import Iterable
@@ -1204,19 +1205,26 @@ class Engine:
                 for i in range(len(sch)):
                     c = sch.column(i)
                     rows.append(
-                        {
-                            "file_name": f,
-                            "name": c.name,
-                            "type": str(c.physical_type),
-                            "converted_type": str(c.converted_type),
-                            "logical_type": str(c.logical_type),
-                            "max_definition_level": c.max_definition_level,
-                            "max_repetition_level": c.max_repetition_level,
-                            "num_rows": meta.metadata.num_rows,
-                            "num_row_groups": meta.metadata.num_row_groups,
-                        }
+                        (
+                            str(c.converted_type),
+                            f,
+                            str(c.logical_type),
+                            c.max_definition_level,
+                            c.max_repetition_level,
+                            c.name,
+                            meta.metadata.num_row_groups,
+                            meta.metadata.num_rows,
+                            str(c.physical_type),
+                        )
                     )
-        return self.spark.createDataFrame(rows)
+        return local_frame(
+            self.spark,
+            rows,
+            "converted_type string, file_name string, logical_type string, "
+            "max_definition_level bigint, max_repetition_level bigint, "
+            "name string, num_row_groups bigint, num_rows bigint, "
+            "type string",
+        )
 
     def parquet_describe(self, files: str | list[str]) -> DataFrame:
         """Logical describe (api/parquet.rs:113-190): column_name/column_type."""
@@ -1285,8 +1293,12 @@ class Engine:
                 loaded = bool(probe())
             except Exception:
                 loaded = False
-            rows.append({"extension_name": name, "loaded": loaded, "description": desc})
-        return self.spark.createDataFrame(rows)
+            rows.append((desc, name, loaded))
+        return local_frame(
+            self.spark,
+            rows,
+            "description string, extension_name string, loaded boolean",
+        )
 
     # ------------------------------------------------------------------ #
     # Credentials (S7 — src/duckdb/secret.rs)
@@ -1358,53 +1370,24 @@ class Engine:
                     f"({[f.name for f in tbl_schema.fields]})"
                 )
             src = df.toDF(*[f.name for f in tbl_schema.fields])
-        # try_cast + a null-introduction check: a value the target type
-        # cannot represent (e.g. 'abc' into BIGINT) must ERROR like
-        # standard INSERT / DuckDB, not silently become NULL (plain
-        # non-ANSI cast would).  One extra aggregate job over the
-        # persisted SELECT result — the query itself runs once.
-        casted = src.select(
-            *[
-                F.col(f.name).try_cast(f.dataType).alias(f.name)
-                for f in tbl_schema.fields
-            ],
-            *[
-                (
-                    F.col(f.name).isNotNull()
-                    & F.col(f.name).try_cast(f.dataType).isNull()
-                ).alias(f"__bad_{i}")
-                for i, f in enumerate(tbl_schema.fields)
-            ],
-        ).persist()
-        try:
-            bad = casted.agg(
-                *[
-                    F.sum(F.col(f"__bad_{i}").cast("int")).alias(f"b{i}")
-                    for i in range(len(tbl_schema.fields))
-                ]
-            ).first()
-            for i, f in enumerate(tbl_schema.fields):
-                if (bad[f"b{i}"] or 0) > 0:
-                    raise EngineError(
-                        f"INSERT INTO {att.name}: {bad[f'b{i}']} value(s) "
-                        f"cannot be cast to {f.name} "
-                        f"{f.dataType.simpleString()}"
-                    )
-            return self._insert_lake_write(
-                att, target, casted.select(*[f.name for f in tbl_schema.fields])
-            )
-        finally:
-            casted.unpersist()
+        return self._insert_lake_write(
+            att, target, _insert_cast(src, att.name, tbl_schema), tbl_schema
+        )
 
-    def _insert_lake_write(self, att, target: str, df: DataFrame) -> DataFrame:
-        if att.format == "delta":
-            from pg_analytics_spark.sources.delta_write import write_delta
+    def _insert_lake_write(
+        self, att, target: str, df: DataFrame, tbl_schema
+    ) -> DataFrame:
+        with _insert_cast_errors(att.name, tbl_schema):
+            if att.format == "delta":
+                from pg_analytics_spark.sources.delta_write import write_delta
 
-            res = write_delta(df, target, mode="append")
-        else:
-            from pg_analytics_spark.sources.iceberg_write import write_iceberg
+                res = write_delta(df, target, mode="append")
+            else:
+                from pg_analytics_spark.sources.iceberg_write import (
+                    write_iceberg,
+                )
 
-            res = write_iceberg(df, target, mode="append")
+                res = write_iceberg(df, target, mode="append")
         # refresh the temp view onto the new snapshot
         self.attach(
             att.name, att.files, att.format, att.options, att.columns
@@ -1744,47 +1727,26 @@ class Engine:
             )
         src = df.toDF(*[f.name for f in tbl_schema.fields])
         # positional INSERT coercion with the null-introduction check
-        # (same contract as _insert_lake_statement)
-        casted = src.select(
-            *[
-                F.col(f.name).try_cast(f.dataType).alias(f.name)
-                for f in tbl_schema.fields
-            ],
-            *[
-                (
-                    F.col(f.name).isNotNull()
-                    & F.col(f.name).try_cast(f.dataType).isNull()
-                ).alias(f"__bad_{i}")
-                for i, f in enumerate(tbl_schema.fields)
-            ],
-        ).persist()
+        # (same contract as _insert_lake_statement); the rows persist
+        # because the key probe and the MERGE both read them
+        casted = _insert_cast(src, att.name, tbl_schema).persist()
         try:
-            # ONE validation job: per-column null-introduction counts
-            # AND the duplicate-conflict-key probe (count vs distinct
-            # over the key tuple) ride the same aggregate
-            bad = casted.agg(
-                *[
-                    F.sum(F.col(f"__bad_{i}").cast("int")).alias(f"b{i}")
-                    for i in range(len(tbl_schema.fields))
-                ],
-                F.count(
-                    F.when(
-                        functools.reduce(
-                            lambda a, b: a & b,
-                            [F.col(k).isNotNull() for k in keys],
-                        ),
-                        F.lit(1),
-                    )
-                ).alias("__nk"),
-                F.countDistinct(*[F.col(k) for k in keys]).alias("__ndk"),
-            ).first()
-            for i, f in enumerate(tbl_schema.fields):
-                if (bad[f"b{i}"] or 0) > 0:
-                    raise EngineError(
-                        f"INSERT INTO {att.name}: {bad[f'b{i}']} value(s) "
-                        f"cannot be cast to {f.name} "
-                        f"{f.dataType.simpleString()}"
-                    )
+            # the duplicate-conflict-key probe (count vs distinct over
+            # the key tuple): the first job over the cast rows, so a
+            # value that cannot be cast raises here
+            with _insert_cast_errors(att.name, tbl_schema):
+                bad = casted.agg(
+                    F.count(
+                        F.when(
+                            functools.reduce(
+                                lambda a, b: a & b,
+                                [F.col(k).isNotNull() for k in keys],
+                            ),
+                            F.lit(1),
+                        )
+                    ).alias("__nk"),
+                    F.countDistinct(*[F.col(k) for k in keys]).alias("__ndk"),
+                ).first()
             # NULL-keyed rows never conflict (SQL 3VL), so both
             # counters cover exactly the fully-non-NULL key tuples:
             # strictly more rows than distinct tuples == a collision
@@ -1795,7 +1757,6 @@ class Engine:
                     "first (row-at-a-time upsert order is undefined on "
                     "a distributed engine)"
                 )
-            source = casted.select(*[f.name for f in tbl_schema.fields])
             on_cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
             clauses: list[dict] = []
             if m.group("setlist"):
@@ -1817,10 +1778,11 @@ class Engine:
                     "condition": None,
                 }
             )
-            res = merge_fn(
-                source, att.files[0], on_cond, clauses,
-                target_alias="t", source_alias="s",
-            )
+            with _insert_cast_errors(att.name, tbl_schema):
+                res = merge_fn(
+                    casted, att.files[0], on_cond, clauses,
+                    target_alias="t", source_alias="s",
+                )
         finally:
             casted.unpersist()
         self.attach(
@@ -3939,6 +3901,50 @@ class Engine:
                     _prev(signum, frame)
 
             _signal.signal(s, _handler)
+
+
+def _cast_error(table: str, f) -> str:
+    return (
+        f"INSERT INTO {table}: value(s) cannot be cast to {f.name} "
+        f"{f.dataType.simpleString()}"
+    )
+
+
+def _insert_cast(src: DataFrame, table: str, tbl_schema) -> DataFrame:
+    """``src`` cast column by column to ``tbl_schema``'s types.  A value
+    the target type cannot represent (e.g. 'abc' into BIGINT) must
+    ERROR like standard INSERT / DuckDB, not silently become NULL: a
+    non-NULL value whose ``try_cast`` is NULL raises inside the plan,
+    so the check runs in the job that consumes the rows (the writer's)
+    and needs none of its own.  Run that job under
+    :func:`_insert_cast_errors`."""
+    from pyspark.sql import functions as F
+
+    cols = []
+    for f in tbl_schema.fields:
+        c = F.col(f.name)
+        cast = c.try_cast(f.dataType)
+        bad = F.raise_error(F.lit(_cast_error(table, f)))
+        cols.append(
+            F.when(c.isNotNull() & cast.isNull(), bad)
+            .otherwise(cast)
+            .alias(f.name)
+        )
+    return src.select(*cols)
+
+
+@contextlib.contextmanager
+def _insert_cast_errors(table: str, tbl_schema):
+    """Re-raise a failure of :func:`_insert_cast`'s check as the
+    ``EngineError`` naming the column."""
+    try:
+        yield
+    except Exception as exc:
+        text = str(exc)
+        for f in tbl_schema.fields:
+            if _cast_error(table, f) in text:
+                raise EngineError(_cast_error(table, f)) from None
+        raise
 
 
 def _probe_delta() -> bool:

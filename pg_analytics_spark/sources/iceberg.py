@@ -11,7 +11,11 @@ driver-side —
   table/metadata/v*.metadata.json  (or version-hint.text)
     → current snapshot → manifest list (Avro, sources/avro.py)
     → manifests (Avro) → live parquet data files
-    → spark.read.parquet(*files)
+    → spark.read.schema(S).parquet(*files)   (_scan_files)
+
+where ``S`` is the schema the files' parquet footer declares, read on
+the driver (``parquet.footer_schema``): the schema comes from metadata
+and the scan reads only data, so no Spark schema-inference job runs.
 
 Supported: format v1 and v2 append/overwrite tables, multiple
 snapshots (current via current-snapshot-id; ``snapshot_id`` and
@@ -60,6 +64,7 @@ from pyspark.sql import functions as F
 from pg_analytics_spark.errors import MissingDependency, fallback_warning
 from pg_analytics_spark.sources.base import apply_common
 from pg_analytics_spark.sources.avro import read_container
+from pg_analytics_spark.sources.parquet import footer_schema, infer_flags
 from pg_analytics_spark.sources.iceberg_prune import (
     file_bounds_may_match,
     file_may_match,
@@ -395,15 +400,10 @@ def _load_via_metadata(
         raise MissingDependency(
             f"Iceberg snapshot {snap_id} has no live data files"
         )
-    paths = sorted(data_files)
     if not (pos_delete_files or eq_delete_files or dv_entries):
         return _apply_row_predicate(
-            _read_conformed(
-                spark,
-                paths,
-                meta,
-                with_meta_cols=False,
-                part_proj=part_proj or None,
+            _scan_files(
+                spark, sorted(data_files), meta, part_proj=part_proj or None
             ),
             partition_filter,
         )
@@ -467,6 +467,41 @@ def _delete_key_py(path: str) -> str:
     return p[i + 1 :] if i >= 0 else p
 
 
+#: The columns a scan's row coordinates may add (:func:`_coords`).
+_COORD_COLS = ("_ice_file", "_ice_pos", "_ifile", "_ipos")
+
+
+def _coords(coords: str, path: Column, pos: Column) -> list[Column]:
+    """A row's (file, position) coordinates, in one of two keyings:
+    ``"key"``, the reader's (``_ice_file``: the path from ``data/`` on,
+    see :func:`_delete_key`; ``_ice_pos``), or ``"path"``, the
+    writers' (``_ifile``: the absolute path without its scheme;
+    ``_ipos``)."""
+    if coords == "key":
+        file_col = _delete_key(path).alias("_ice_file")
+        return [file_col, pos.cast("long").alias("_ice_pos")]
+    file_col = F.regexp_replace(path, "^file:/+", "/").alias("_ifile")
+    return [file_col, pos.cast("long").alias("_ipos")]
+
+
+def _pos_deletes(spark: SparkSession, paths: list[str], coords: str) -> DataFrame:
+    """The (file, position) pairs of position-delete files, read under
+    the spec's fixed ``file_path string, pos long`` schema
+    (§position-delete-files) and keyed as :func:`_coords`."""
+    return (
+        spark.read.schema("file_path string, pos long")
+        .parquet(*sorted(set(paths)))
+        .select(*_coords(coords, F.col("file_path"), F.col("pos")))
+    )
+
+
+def _read_footer_schema(spark: SparkSession, path: str) -> DataFrame:
+    """One parquet file (an equality-delete file) read under the schema
+    its footer declares."""
+    schema = footer_schema(path, infer_flags(spark))
+    return spark.read.schema(schema).parquet(path)
+
+
 def _apply_row_deletes(
     spark: SparkSession,
     data_files: dict[str, int],
@@ -483,19 +518,15 @@ def _apply_row_deletes(
     (null-safe, per spec), applied only to data files whose sequence
     number is BELOW the delete's.  Everything is a distributed join —
     no driver-side row state; AQE broadcasts small delete sides."""
-    data = _read_conformed(
-        spark,
-        sorted(data_files),
-        meta,
-        with_meta_cols=True,
-        part_proj=part_proj,
+    data = _scan_files(
+        spark, sorted(data_files), meta, coords="key", part_proj=part_proj
     )
     if pos_delete_files:
-        dels = spark.read.parquet(*sorted(set(pos_delete_files))).select(
-            _delete_key(F.col("file_path")).alias("_ice_file"),
-            F.col("pos").cast("long").alias("_ice_pos"),
+        data = data.join(
+            _pos_deletes(spark, pos_delete_files, "key"),
+            ["_ice_file", "_ice_pos"],
+            "left_anti",
         )
-        data = data.join(dels, ["_ice_file", "_ice_pos"], "left_anti")
     if dv_entries:
         from pg_analytics_spark.sources.iceberg_dv import dv_positions_map
 
@@ -518,7 +549,7 @@ def _apply_row_deletes(
         data = data.join(F.broadcast(seq_map), "_ice_file", "left")
         for dpath, dseq in sorted(eq_delete_files):
             d = data.alias("d")
-            x = spark.read.parquet(dpath).alias("x")
+            x = _read_footer_schema(spark, dpath).alias("x")
             cond = F.col("d._ice_seq") < F.lit(int(dseq))
             for c in x.columns:
                 cond = cond & F.col(f"d.{c}").eqNullSafe(F.col(f"x.{c}"))
@@ -672,85 +703,85 @@ def _conform_to_schema(
             cols.append(F.lit(None).cast(spark_t).alias(name))
         # absent nested column in old files: cannot synthesize a typed
         # null without the full nested type — skip (reader must add it)
-    internal = [c for c in df.columns if c.startswith("_ice_")]
-    return df.select(*cols, *internal)
+    return df.select(*cols, *[c for c in df.columns if c in _COORD_COLS])
 
 
-def _read_conformed(
+def _scan_files(
     spark: SparkSession,
     paths: list[str],
     meta: dict,
-    with_meta_cols: bool,
+    *,
+    coords: str | None = None,
     part_proj: dict[str, dict[str, Any]] | None = None,
 ) -> DataFrame:
-    """Scan data files conformed to the current table schema.
+    """The one Iceberg data-file scan: ``paths`` conformed to the
+    table's CURRENT schema (:func:`_conform_to_schema`), carrying the
+    row coordinates named by ``coords`` (:func:`_coords`) when given.
 
-    Single-schema tables take one reader call.  Tables whose metadata
-    carries multiple schemas (evolution happened) group files by their
-    PHYSICAL parquet schema (a driver-side footer read per file — the
-    same order of metadata work the runtime spends on manifests) and
-    union the conformed groups: this is what lets an int32-era file
-    coexist with its int64 successor, which Spark's own mergeSchema
-    refuses to merge.
+    Every read passes the schema its files' parquet footer declares
+    (``parquet.footer_schema``, read on the driver), so no Spark
+    schema-inference job runs.  A table with one schema reads all files
+    under the first file's footer, as Spark's own inference would.
+    Files are grouped by PHYSICAL schema (footer schema and field ids),
+    each group conformed and the groups unioned, whenever the footers
+    may differ: the table has evolved (an int32-era file coexists with
+    its int64 successor, which Spark's mergeSchema refuses to merge),
+    it holds adopted files, or a writer scans its DML target (those
+    rows are written back, so no file's columns may be lost).
 
     ``part_proj`` (path → {source column: constant}) carries identity
     partition values for ADOPTED data files that physically lack
     their hive partition columns — projected via one broadcast join,
     see :func:`_project_partition_constants`."""
-    multi = len(meta.get("schemas") or []) > 1
+    import pyarrow.parquet as pq
 
-    def _scan(ps: list[str], ids: dict[int, str]) -> DataFrame:
-        need_proj = bool(part_proj) and any(p in part_proj for p in ps)
-        reader = spark.read
-        if need_proj:
-            # adopted + native files can share one scan: the unified
-            # schema must include columns only the native files carry
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*ps)
-        if with_meta_cols or need_proj:
-            df = df.select(
-                "*",
-                _delete_key(F.col("_metadata.file_path")).alias("_ice_file"),
-                F.col("_metadata.row_index").alias("_ice_pos"),
+    flags = infer_flags(spark)
+    need_proj = bool(part_proj) and any(p in part_proj for p in paths)
+    every = (
+        need_proj or coords == "path" or len(meta.get("schemas") or []) > 1
+    )
+    # (footer schema JSON, field ids) → (schema, ids, files)
+    groups: dict[tuple, tuple] = {}
+    key: tuple = ()
+    for p in paths:
+        if every or not groups:
+            md = pq.read_metadata(p)
+            arrow = md.schema.to_arrow_schema()
+            # footer ids first (files from id-stamping writers); the
+            # name-mapping property covers id-less files — without it a
+            # renamed column would not resolve in old files.  The ids
+            # are part of the key: a drop-then-re-add leaves files with
+            # identical columns but different ids.
+            ids = _arrow_field_ids(arrow) or _mapped_ids(meta, arrow)
+            schema = footer_schema(p, flags, md)
+            key = (schema.json(), tuple(sorted(ids.items())))
+            groups.setdefault(key, (schema, ids, []))
+        groups[key][2].append(p)
+    parts = []
+    for schema, ids, ps in groups.values():
+        df = spark.read.schema(schema).parquet(*ps)
+        extra = []
+        if coords:
+            extra += _coords(
+                coords,
+                F.col("_metadata.file_path"),
+                F.col("_metadata.row_index"),
             )
+        if need_proj and coords != "key":
+            extra.append(
+                _delete_key(F.col("_metadata.file_path")).alias("_ice_file")
+            )
+        if extra:
+            df = df.select("*", *extra)
         # projection AFTER conform: conform's field-id resolution nulls
         # columns the files lack; the constants coalesce over those
         # typed NULLs (and native files' physical values win)
         out = _conform_to_schema(df, meta, id_to_phys=ids or None)
         if need_proj:
             out = _project_partition_constants(spark, out, ps, part_proj)
-            if not with_meta_cols:
-                out = out.drop("_ice_file", "_ice_pos")
-        return out
-
-    import pyarrow.parquet as pq
-
-    if not multi:
-        try:
-            arrow0 = pq.read_schema(paths[0])
-            ids = _arrow_field_ids(arrow0) or _mapped_ids(meta, arrow0)
-        except Exception:
-            ids = {}
-        return _scan(paths, ids)
-
-    groups: dict[tuple, list[str]] = {}
-    group_ids: dict[tuple, dict[int, str]] = {}
-    for p in paths:
-        arrow = pq.read_schema(p)
-        # footer ids first (files from id-stamping writers); the
-        # name-mapping property covers this writer's id-less files —
-        # without it a renamed column would not resolve in old files
-        ids = _arrow_field_ids(arrow) or _mapped_ids(meta, arrow)
-        # field ids are part of the key: a drop-then-re-add leaves files
-        # with identical (name, type) but different ids, and those must
-        # not share one id→name map.
-        phys_to_id = {n: i for i, n in ids.items()}
-        key = tuple(
-            (f.name, str(f.type), phys_to_id.get(f.name)) for f in arrow
-        )
-        groups.setdefault(key, []).append(p)
-        group_ids[key] = ids
-    parts = [_scan(ps, group_ids[key]) for key, ps in groups.items()]
+            if coords != "key":
+                out = out.drop("_ice_file")
+        parts.append(out)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
@@ -803,7 +834,7 @@ def _project_partition_constants(
         tuple([_delete_key_py(p)] + [v.get(c) for c in cols])
         for p, v in sorted(sub.items())
     ]
-    mapdf = spark.createDataFrame(rows, ddl)
+    mapdf = local_frame(spark, rows, ddl)
     out = df.join(F.broadcast(mapdf), "_ice_file", "left")
     for pn, c in zip(proj, cols):
         if c in df.columns:

@@ -59,10 +59,13 @@ def iceberg_changelog(
     from pg_analytics_spark.sources.iceberg import (
         _current_fields,
         _ice_to_spark_type,
+        _pos_deletes,
+        _read_footer_schema,
+        _scan_files,
     )
     from pg_analytics_spark.sources.iceberg_write import (
         _adoption_projection,
-        _dml_scan_conformed,
+        _conform_eq_delete_names,
         _latest_metadata,
         _scan_snapshot_files,
         _visible_target,
@@ -142,9 +145,7 @@ def iceberg_changelog(
                 else:
                     ins_files.append(rec["file_path"])
         if ins_files:
-            df = _dml_scan_conformed(spark, sorted(ins_files), meta).drop(
-                "_ifile", "_ipos"
-            )
+            df = _scan_files(spark, sorted(ins_files), meta)
             pieces.append(_tag(df, "insert", seq, sid))
 
         # deletes need the PARENT-visible relation
@@ -197,8 +198,8 @@ def iceberg_changelog(
                             if int(p) not in old
                         )
                     if pairs_rows:
-                        dvdf = spark.createDataFrame(
-                            pairs_rows, "_ifile string, _ipos long"
+                        dvdf = local_frame(
+                            spark, pairs_rows, "_ifile string, _ipos long"
                         )
                         pieces.append(
                             _tag(
@@ -225,12 +226,7 @@ def iceberg_changelog(
                         )
                     )
                 if pos_files:
-                    pairs = spark.read.parquet(*sorted(set(pos_files))).select(
-                        F.regexp_replace(
-                            F.col("file_path"), "^file:/+", "/"
-                        ).alias("_ifile"),
-                        F.col("pos").cast("long").alias("_ipos"),
-                    )
+                    pairs = _pos_deletes(spark, pos_files, "path")
                     pieces.append(
                         _tag(
                             pv.join(pairs, ["_ifile", "_ipos"], "left_semi"),
@@ -240,12 +236,8 @@ def iceberg_changelog(
                         )
                     )
                 for dpath in sorted(eq_files):
-                    from pg_analytics_spark.sources.iceberg_write import (
-                        _conform_eq_delete_names,
-                    )
-
                     x = _conform_eq_delete_names(
-                        spark.read.parquet(dpath), meta
+                        _read_footer_schema(spark, dpath), meta
                     ).alias("x")
                     d = pv.alias("d")
                     cond = None

@@ -1280,7 +1280,7 @@ def alter_iceberg(
       ``schema.name-mapping.default`` table property: the mapping is
       seeded from the pre-alter schema (on-disk name → field id) and
       the new name is appended to the field's names list — the reader
-      (sources/iceberg.py::_read_conformed) consults it for any file
+      (sources/iceberg.py::_scan_files) consults it for any file
       without footer ids.
     * ``drop=name`` — field removed from the current schema (files
       keep the column; id-based conformance drops it on read).
@@ -1650,71 +1650,6 @@ def _scan_snapshot_files(prev_list, with_dvs: bool = False):
     return data_seq, pos_deletes, eq_deletes
 
 
-def _dml_scan_conformed(spark, paths: list[str], meta: dict):
-    """DML-side scan of data files conformed to the CURRENT schema
-    (same field-id / name-mapping resolution as the reader's
-    _read_conformed, carrying the ``_ifile``/``_ipos`` DML coordinates
-    through): after a RENAME/DROP COLUMN, predicates written against
-    current names must bind to pre-rename files' on-disk columns —
-    a raw mergeSchema union would surface the OLD name and silently
-    null the predicate instead."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from pg_analytics_spark.sources.iceberg import (
-        _arrow_field_ids,
-        _current_fields,
-        _ice_to_spark_type,
-        _mapped_ids,
-    )
-
-    fields = _current_fields(meta)
-    meta_cols = [
-        F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias(
-            "_ifile"
-        ),
-        F.col("_metadata.row_index").cast("long").alias("_ipos"),
-    ]
-    groups: dict[tuple, list[str]] = {}
-    group_ids: dict[tuple, dict[int, str]] = {}
-    for p in paths:
-        arrow = pq.read_schema(p)
-        ids = _arrow_field_ids(arrow) or _mapped_ids(meta, arrow)
-        phys_to_id = {n: i for i, n in ids.items()}
-        key = tuple(
-            (f.name, str(f.type), phys_to_id.get(f.name)) for f in arrow
-        )
-        groups.setdefault(key, []).append(p)
-        group_ids[key] = ids
-    parts = []
-    for key, ps in groups.items():
-        df = spark.read.option("mergeSchema", "true").parquet(*ps).select(
-            "*", *meta_cols
-        )
-        ids = group_ids[key]
-        have = {c.lower(): c for c in df.columns}
-        cols = []
-        for f in fields:
-            spark_t = _ice_to_spark_type(f.get("type"))
-            phys = None
-            if ids and f.get("id") in ids and ids[f["id"]] in df.columns:
-                phys = ids[f["id"]]
-            elif not ids and f["name"].lower() in have:
-                phys = have[f["name"].lower()]
-            if phys is not None:
-                c = F.col(phys)
-                cols.append(
-                    (c.cast(spark_t) if spark_t else c).alias(f["name"])
-                )
-            elif spark_t is not None:
-                cols.append(F.lit(None).cast(spark_t).alias(f["name"]))
-        parts.append(df.select(*cols, "_ifile", "_ipos"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _conform_eq_delete_names(x, meta: dict | None):
     """Equality-delete files carry the key columns under the names
     current AT WRITE TIME; after a rename the anti-join must compare
@@ -1781,81 +1716,38 @@ def _adoption_projection(meta, manifest_list_entries) -> dict | None:
 
 
 def _visible_target(
-    spark, data_seq, pos_deletes, eq_deletes, meta=None, part_proj=None,
+    spark, data_seq, pos_deletes, eq_deletes, meta, part_proj=None,
     dv_entries=None,
 ):
-    """The CURRENT snapshot's VISIBLE rows with ``_ifile``/``_ipos``
-    columns — position deletes anti-joined on (file, pos), equality
-    deletes anti-joined null-safely on the delete file's own columns
-    under the spec's sequence rule (data seq strictly below the
-    delete's).  DML predicates must evaluate against THIS relation:
-    building it from raw data files + position deletes alone would
-    resurrect equality-deleted rows into the match set (and no
-    double-delete bookkeeping would catch it).  ``meta``: when the
-    table has evolved schemas (ALTER TABLE), the scan conforms
-    per-file-schema groups to the CURRENT schema so DML predicates
-    bind renamed/added columns correctly."""
+    """The CURRENT snapshot's VISIBLE rows, conformed to the current
+    schema (``iceberg._scan_files``, so DML predicates bind renamed and
+    added columns), with ``_ifile``/``_ipos`` columns — position
+    deletes and v3 deletion vectors anti-joined on (file, pos),
+    equality deletes anti-joined null-safely on the delete file's own
+    columns under the spec's sequence rule (data seq strictly below
+    the delete's).  Every DML target (DELETE, UPDATE, MERGE, the
+    compaction rewrites, the changelog's parent rows) is THIS
+    relation: one built from raw data files + position deletes alone
+    would resurrect equality-deleted rows into the match set (and no
+    double-delete bookkeeping would catch it)."""
     from pyspark.sql import functions as F
 
-    if meta is not None and len(meta.get("schemas") or []) > 1:
-        tgt = _dml_scan_conformed(spark, sorted(data_seq), meta)
-    else:
-        tgt = spark.read.option("mergeSchema", "true").parquet(
-            *sorted(data_seq)
-        ).select(
-            "*",
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            ).alias("_ifile"),
-            F.col("_metadata.row_index").cast("long").alias("_ipos"),
-        )
-    if part_proj:
-        # identity partition constants for adopted files, keyed on the
-        # same normalized absolute path _ifile carries; COALESCE keeps
-        # native files' physical values (write-after-adoption appends)
-        import datetime as _dt
+    from pg_analytics_spark.sources.iceberg import (
+        _delete_key_py,
+        _pos_deletes,
+        _read_footer_schema,
+        _scan_files,
+    )
 
-        cols = sorted({c for v in part_proj.values() for c in v})
-
-        def _t(c: str) -> str:
-            for v in part_proj.values():
-                x = v.get(c)
-                if x is not None:
-                    if isinstance(x, bool):
-                        return "boolean"
-                    if isinstance(x, int):
-                        return "bigint"
-                    if isinstance(x, _dt.date):
-                        return "date"
-                    return "string"
-            return "string"
-
-        proj = [f"_iproj_{i}" for i in range(len(cols))]
-        ddl = ", ".join(
-            ["`_ifile` string"]
-            + [f"`{pn}` {_t(c)}" for pn, c in zip(proj, cols)]
-        )
-        rows = [
-            tuple([os.path.abspath(p)] + [v.get(c) for c in cols])
-            for p, v in sorted(part_proj.items())
-        ]
-        mapdf = spark.createDataFrame(rows, ddl)
-        have = set(tgt.columns)
-        tgt = tgt.join(F.broadcast(mapdf), "_ifile", "left")
-        for pn, c in zip(proj, cols):
-            if c in have:
-                tgt = tgt.withColumn(c, F.coalesce(F.col(c), F.col(pn)))
-            else:
-                tgt = tgt.withColumn(c, F.col(pn))
-        tgt = tgt.drop(*proj)
+    tgt = _scan_files(
+        spark, sorted(data_seq), meta, coords="path", part_proj=part_proj
+    )
     if pos_deletes:
-        prior = spark.read.parquet(*sorted(set(pos_deletes))).select(
-            F.regexp_replace(F.col("file_path"), "^file:/+", "/").alias(
-                "_ifile"
-            ),
-            F.col("pos").cast("long").alias("_ipos"),
+        tgt = tgt.join(
+            _pos_deletes(spark, pos_deletes, "path"),
+            ["_ifile", "_ipos"],
+            "left_anti",
         )
-        tgt = tgt.join(prior, ["_ifile", "_ipos"], "left_anti")
     if dv_entries:
         # v3 deletion vectors: decode the roaring blobs (KB-scale)
         # into the same (file, pos) anti-join the pos-delete path uses
@@ -1869,13 +1761,11 @@ def _visible_target(
             for p in positions
         ]
         if rows:
-            dvdf = spark.createDataFrame(rows, "_ifile string, _ipos long")
+            dvdf = local_frame(spark, rows, "_ifile string, _ipos long")
             tgt = tgt.join(
                 F.broadcast(dvdf), ["_ifile", "_ipos"], "left_anti"
             )
     if eq_deletes:
-        from pg_analytics_spark.sources.iceberg import _delete_key_py
-
         seq_map = local_frame(
             spark,
             [
@@ -1891,7 +1781,7 @@ def _visible_target(
         for dpath, dseq in sorted(eq_deletes):
             d = tgt.alias("d")
             x = _conform_eq_delete_names(
-                spark.read.parquet(dpath), meta
+                _read_footer_schema(spark, dpath), meta
             ).alias("x")
             cond = F.col("d._iseq") < F.lit(int(dseq))
             for c in x.columns:
@@ -1910,9 +1800,10 @@ def _publish_snapshot(
     seq: int,
     summary: dict,
 ) -> int:
-    """Commit tail shared by the equality-delete writers: manifest
-    list + metadata vN+1 (put-if-absent hard link; losers raise
-    ConcurrentWriteError) + version-hint.  Returns the new version."""
+    """Commit tail shared by the row-level writers (DELETE, UPDATE,
+    MERGE and the equality-delete writers): manifest list + metadata
+    vN+1 (put-if-absent hard link; losers raise ConcurrentWriteError)
+    + version-hint.  Returns the new version."""
     import time as _time
 
     from pg_analytics_spark.sources.avro import write_container
@@ -2003,21 +1894,20 @@ def _dv_manifest_entry_schema() -> dict:
     return _entry_schema_with_seq(base)
 
 
-def _commit_dv_delete(
-    spark, path, prev_meta, prev_version, prev_snap, prev_list, dels,
-    existing_dvs,
-):
-    """DELETE on a format-version-3 table: the matched rows' physical
-    positions become DELETION VECTORS (Puffin deletion-vector-v1
+def _dv_manifests(
+    path, prev_meta, prev_list, pos_rows, existing_dvs, snapshot_id, seq
+) -> tuple[list[dict], int]:
+    """The delete half of a commit on a format-version-3 table: the
+    matched rows' physical positions (``pos_rows``, ``file_path`` /
+    ``pos``) become DELETION VECTORS (Puffin deletion-vector-v1
     blobs) — one DV per affected data file, UNIONED with the file's
     existing DV, which this commit SUPERSEDES (the spec's one-live-DV-
     per-file rule): delete manifests holding a superseded entry are
     rewritten without it (other entries carried as EXISTING with
     explicit sequence numbers), and one new delete manifest adds the
-    fresh DV entries.  O(matched rows) driver work — the same bound
-    as the Delta DV path and the blob itself."""
-    import time as _time
-
+    fresh DV entries.  Returns (the manifest-list entries, the number
+    of files given a new DV).  O(matched rows) driver work — the same
+    bound as the Delta DV path and the blob itself."""
     from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg_dv import (
         read_dv_positions,
@@ -2025,19 +1915,11 @@ def _commit_dv_delete(
     )
 
     meta_dir = os.path.join(path, "metadata")
-    pos_rows = dels.collect()  # O(matched rows) — the DV payload itself
-    if not pos_rows:
-        return {
-            "snapshot_id": None,
-            "rows_deleted": 0,
-            "version": prev_version,
-        }
     new_pos: dict[str, list[int]] = {}
     for r in pos_rows:
         new_pos.setdefault(
             os.path.abspath(r["file_path"]), []
         ).append(int(r["pos"]))
-    n_del = len(pos_rows)
     # union with each affected file's EXISTING DV (superseded below)
     live_dv_by_ref = {
         os.path.abspath(e[3]): e for e in existing_dvs
@@ -2048,8 +1930,6 @@ def _commit_dv_delete(
         if old is not None:
             new_pos[ref].extend(read_dv_positions(old[0], old[1], old[2]))
             superseded.add((old[0], os.path.abspath(old[3])))
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = prev_meta.get("last-sequence-number", 0) + 1
     puffin_path = os.path.join(
         meta_dir, f"dv-{snapshot_id}-{uuid.uuid4().hex}.puffin"
     )
@@ -2145,12 +2025,27 @@ def _commit_dv_delete(
             }
         )
     mf_entries.append(new_mf_entry)
+    return mf_entries, len(new_pos)
+
+
+def _commit_dv_delete(path, prev_meta, prev_version, prev_list, dels, existing_dvs):
+    """DELETE on a format-version-3 table: one snapshot whose delete
+    half is :func:`_dv_manifests`."""
+    pos_rows = dels.collect()  # O(matched rows) — the DV payload itself
+    if not pos_rows:
+        return {"snapshot_id": None, "rows_deleted": 0, "version": prev_version}
+    n_del = len(pos_rows)
+    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    seq = prev_meta.get("last-sequence-number", 0) + 1
+    mf_entries, n_dvs = _dv_manifests(
+        path, prev_meta, prev_list, pos_rows, existing_dvs, snapshot_id, seq
+    )
     version = _publish_snapshot(
         path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
         {
             "operation": "delete",
             "added-delete-files": "1",
-            "added-dvs": str(len(new_pos)),
+            "added-dvs": str(n_dvs),
             "added-position-deletes": str(n_del),
             "deleted-records": str(n_del),
         },
@@ -2183,8 +2078,6 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
     snapshot.  Reference scope: the reference FDW is read-only —
     additive parity-plus, symmetric with the Delta DML surface.
     """
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from pg_analytics_spark.sources.avro import read_container, write_container
@@ -2225,8 +2118,7 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
         # v3: position deletes are DELETION VECTORS — new position-
         # delete files are forbidden by the spec
         return _commit_dv_delete(
-            spark, path, prev_meta, prev_version, prev_snap, prev_list,
-            dels, existing_dvs,
+            path, prev_meta, prev_version, prev_list, dels, existing_dvs
         )
     # position-delete files must sort by (file_path, pos) per spec
     staging = os.path.join(
@@ -2291,60 +2183,15 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
             "added_snapshot_id": snapshot_id,
         }
     ]
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
-    write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
-    now_ms = int(_time.time() * 1000)
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [
+    version = _publish_snapshot(
+        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
         {
-            "snapshot-id": snapshot_id,
-            "manifest-list": mlist,
-            "timestamp-ms": now_ms,
-            "sequence-number": seq,
-            # parent = the head this commit replaces — required for
-            # lineage walks (WAP fast-forward divergence refusal, the
-            # streaming source's main-lineage filter)
-            **(
-                {"parent-snapshot-id": prev_meta["current-snapshot-id"]}
-                if prev_meta.get("current-snapshot-id") not in (None, -1)
-                else {}
-            ),
-            "summary": {
-                "operation": "delete",
-                "added-delete-files": "1",
-                "added-position-deletes": str(n_del),
-                "deleted-records": str(n_del),
-            },
-        }
-    ]
-    meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+            "operation": "delete",
+            "added-delete-files": "1",
+            "added-position-deletes": str(n_del),
+            "deleted-records": str(n_del),
+        },
+    )
     return {
         "snapshot_id": snapshot_id,
         "rows_deleted": int(n_del),
@@ -2374,7 +2221,12 @@ def compact_iceberg(spark, path: str) -> dict:
     from pyspark.sql import functions as F
 
     from pg_analytics_spark.sources.avro import read_container, write_container
-    from pg_analytics_spark.sources.iceberg import _delete_key_py
+    from pg_analytics_spark.sources.iceberg import (
+        _delete_key_py,
+        _pos_deletes,
+        _read_footer_schema,
+        _scan_files,
+    )
 
     meta_dir = os.path.join(path, "metadata")
     prev_version, prev_meta = _latest_metadata(meta_dir)
@@ -2440,29 +2292,28 @@ def compact_iceberg(spark, path: str) -> dict:
     affected_keys = set()
     if pos_delete_paths:
         affected_keys |= {
-            _delete_key_py(r["file_path"])
-            for r in spark.read.parquet(*sorted(set(pos_delete_paths)))
-            .select("file_path")
+            r["_ice_file"]
+            for r in _pos_deletes(spark, pos_delete_paths, "key")
+            .select("_ice_file")
             .distinct()
             .collect()
         }
     # v3 DVs name their referenced file directly — no scan needed
     affected_keys |= {_delete_key_py(e[3]) for e in dv_list}
+    part_proj = _adoption_projection(prev_meta, prev_list)
     for dpath, dseq in eq_delete_files:
         eligible = sorted(
             p for p, s in data_seq_of.items() if s < dseq
         )
         if not eligible:
             continue
-        keys_df = spark.read.parquet(dpath)
-        probe = spark.read.option("mergeSchema", "true").parquet(
-            *eligible
-        ).select(
-            *keys_df.columns,
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            ).alias("_ifile"),
+        # both sides under CURRENT names, as _visible_target compares
+        keys_df = _conform_eq_delete_names(
+            _read_footer_schema(spark, dpath), prev_meta
         )
+        probe = _scan_files(
+            spark, eligible, prev_meta, coords="path", part_proj=part_proj
+        ).select(*keys_df.columns, "_ifile")
         cond = None
         for c in keys_df.columns:
             eq = F.col(f"d.{c}").eqNullSafe(F.col(f"x.{c}"))
@@ -2518,7 +2369,7 @@ def compact_iceberg(spark, path: str) -> dict:
             # adopted files' identity partition constants materialize
             # INTO the compacted rewrite (the new files physically
             # carry the columns, so they need no projection)
-            part_proj=_adoption_projection(prev_meta, prev_list),
+            part_proj=part_proj,
         )
         key_expr = F.regexp_replace(F.col("_ifile"), r"^.*/(?=data/)", "")
         idx_map = local_frame(spark, list(idx_of.items()), "_k string, _pt int")
@@ -2681,8 +2532,6 @@ def update_iceberg(
     machinery; use the Delta writer's copy-on-write UPDATE or an
     overwrite there (clear error says so).  Returns {"snapshot_id",
     "rows_updated", "version"}; matching nothing commits nothing."""
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from pg_analytics_spark.sources.avro import read_container, write_container
@@ -2869,55 +2718,10 @@ def update_iceberg(
             "added_snapshot_id": snapshot_id,
         },
     ]
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
-    write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
-    now_ms = int(_time.time() * 1000)
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [
-        {
-            "snapshot-id": snapshot_id,
-            "manifest-list": mlist,
-            "timestamp-ms": now_ms,
-            "sequence-number": seq,
-            # parent = the head this commit replaces — required for
-            # lineage walks (WAP fast-forward divergence refusal, the
-            # streaming source's main-lineage filter)
-            **(
-                {"parent-snapshot-id": prev_meta["current-snapshot-id"]}
-                if prev_meta.get("current-snapshot-id") not in (None, -1)
-                else {}
-            ),
-            "summary": {"operation": "overwrite"},
-        }
-    ]
-    meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_snapshot(
+        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
+        {"operation": "overwrite"},
+    )
     return {
         "snapshot_id": snapshot_id,
         "rows_updated": int(n_upd),
@@ -4938,9 +4742,11 @@ def merge_iceberg(
 ) -> dict:
     """``MERGE INTO`` for the native Iceberg v2 writer — MERGE-ON-READ:
     matched rows claimed by UPDATE/DELETE clauses become POSITION
-    DELETES, updated images and NOT-MATCHED inserts append as new data
-    files, and the delete + add manifests commit atomically in ONE
-    snapshot — a reader never observes a half-merged state.  The
+    DELETES (deletion vectors on a format-version-3 table), updated
+    images and NOT-MATCHED inserts append as new data files, and the
+    delete + add manifests commit atomically in ONE snapshot — a
+    reader never observes a half-merged state.  The target is
+    :func:`_visible_target`, the relation UPDATE and DELETE match.  The
     write-amplification mirror of :func:`merge_delta`'s copy-on-write:
     cost is O(matched + inserted rows) with NO data-file rewrites
     (compact_iceberg later folds the delete debt).  Clause dicts and
@@ -4955,8 +4761,6 @@ def merge_iceberg(
     "files_added", "files_removed", "version"} (files_removed is
     always 0 — MoR never rewrites).
     """
-    import time as _time
-
     from pyspark.sql import functions as F
 
     from pg_analytics_spark.sources.avro import read_container, write_container
@@ -5009,7 +4813,7 @@ def merge_iceberg(
             )
         return m
 
-    # ---- visible target rows (active data minus prior pos-deletes) ----
+    # ---- visible target rows: the same relation UPDATE and DELETE match
     prev_snap = next(
         (
             s
@@ -5018,43 +4822,21 @@ def merge_iceberg(
         ),
         None,
     )
-    data_paths: list[str] = []
-    existing_pos_deletes: list[str] = []
+    data_seq: dict[str, int] = {}
     prev_list: list = []
+    existing_dvs: list = []
     if prev_snap is not None:
         _s, prev_list = read_container(prev_snap["manifest-list"])
-        for m in prev_list:
-            _s2, entries = read_container(m["manifest_path"])
-            for e in entries:
-                if e.get("status", 0) == 2:
-                    continue
-                rec = e["data_file"]
-                if m.get("content", 0) == 1:
-                    if rec.get("content", 1) == 1:
-                        existing_pos_deletes.append(rec["file_path"])
-                else:
-                    data_paths.append(rec["file_path"])
-
-    if data_paths:
-        tgt = spark.read.option("mergeSchema", "true").parquet(
-            *sorted(data_paths)
-        ).select(
-            *colnames,
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            ).alias("_ifile"),
-            F.col("_metadata.row_index").cast("long").alias("_ipos"),
+        data_seq, pos_deletes, eq_deletes, existing_dvs = (
+            _scan_snapshot_files(prev_list, with_dvs=True)
         )
-        if existing_pos_deletes:
-            prior = spark.read.parquet(
-                *sorted(set(existing_pos_deletes))
-            ).select(
-                F.regexp_replace(F.col("file_path"), "^file:/+", "/").alias(
-                    "_ifile"
-                ),
-                F.col("pos").cast("long").alias("_ipos"),
-            )
-            tgt = tgt.join(prior, ["_ifile", "_ipos"], "left_anti")
+    if data_seq:
+        tgt = _visible_target(
+            spark, data_seq, pos_deletes, eq_deletes,
+            meta=prev_meta,
+            part_proj=_adoption_projection(prev_meta, prev_list),
+            dv_entries=existing_dvs,
+        )
     else:
         from pyspark.sql.types import StructType
 
@@ -5177,7 +4959,11 @@ def merge_iceberg(
         os.path.dirname(path.rstrip("/")) or ".",
         f"_ice_merge-{uuid.uuid4().hex}",
     )
-    if dels_df is not None:
+    # a format-version-3 table forbids new position-delete files: its
+    # delete half is deletion vectors, built from the collected pairs
+    v3 = int(prev_meta.get("format-version", 2)) >= 3
+    pos_rows = dels_df.collect() if v3 and dels_df is not None else []
+    if dels_df is not None and not v3:
         dels_df.coalesce(1).sortWithinPartitions(
             "file_path", "pos"
         ).write.mode("overwrite").parquet(os.path.join(staging, "del"))
@@ -5195,9 +4981,9 @@ def merge_iceberg(
                     return os.path.join(root, nme)
         return None
 
-    dpart = _one_part("del") if dels_df is not None else None
+    dpart = _one_part("del") if dels_df is not None and not v3 else None
     apart = _one_part("add") if adds_df is not None else None
-    n_del = _pq.ParquetFile(dpart).metadata.num_rows if dpart else 0
+    n_del = _pq.ParquetFile(dpart).metadata.num_rows if dpart else len(pos_rows)
     n_add = _pq.ParquetFile(apart).metadata.num_rows if apart else 0
     if not n_del and not n_add:
         shutil.rmtree(staging, ignore_errors=True)
@@ -5214,7 +5000,12 @@ def merge_iceberg(
     os.makedirs(data_dir, exist_ok=True)
     seq = prev_meta.get("last-sequence-number", 0) + 1
     mf_entries = list(prev_list)
-    if n_del:
+    if pos_rows:
+        mf_entries, _n_dvs = _dv_manifests(
+            path, prev_meta, prev_list, pos_rows, existing_dvs, snapshot_id,
+            seq,
+        )
+    elif n_del:
         dpath = os.path.join(
             data_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex}.parquet"
         )
@@ -5291,55 +5082,10 @@ def merge_iceberg(
             }
         )
     shutil.rmtree(staging, ignore_errors=True)
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
-    write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
-    now_ms = int(_time.time() * 1000)
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [
-        {
-            "snapshot-id": snapshot_id,
-            "manifest-list": mlist,
-            "timestamp-ms": now_ms,
-            "sequence-number": seq,
-            # parent = the head this commit replaces — required for
-            # lineage walks (WAP fast-forward divergence refusal, the
-            # streaming source's main-lineage filter)
-            **(
-                {"parent-snapshot-id": prev_meta["current-snapshot-id"]}
-                if prev_meta.get("current-snapshot-id") not in (None, -1)
-                else {}
-            ),
-            "summary": {"operation": "overwrite"},
-        }
-    ]
-    meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_snapshot(
+        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
+        {"operation": "overwrite"},
+    )
     return {
         "snapshot_id": snapshot_id,
         "rows_written": int(n_add),

@@ -21,15 +21,23 @@ session sets ``spark.sql.legacy.parquet.nanosAsLong`` and we convert
 the surfaced long back to a µs-precision timestamp here — the same
 ns→µs truncation the reference performs in its Arrow→Postgres
 conversion (src/schema/cell.rs:1234-1319).
+
+:func:`footer_schema` gives the schema Spark would infer for one file
+from the footer pyarrow reads on the driver, so a reader that knows its
+files can pass ``.schema(S)`` and skip Spark's inference job.
 """
 
 from __future__ import annotations
+
+import json
 
 import pyarrow.parquet as _pq
 import pyarrow.types as _pat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources.base import _truthy, apply_common
 
 #: (file fingerprints, reader-shape flags) → inferred read schema.
@@ -133,3 +141,145 @@ def _nano_columns(files: list[str]) -> list[str]:
                 if _pat.is_timestamp(f.type) and f.type.unit == "ns"
             ]
     return []
+
+
+#: The session confs that steer Spark's parquet schema inference, with
+#: their defaults, in the order :func:`footer_schema` takes them.
+_INFER_CONFS = (
+    ("spark.sql.parquet.binaryAsString", "false"),
+    ("spark.sql.parquet.int96AsTimestamp", "true"),
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+)
+
+#: (physical type, bit width, signed) of an INT-annotated column → Spark
+#: type (Spark's ParquetToSparkSchemaConverter; unsigned types widen)
+_INT_TYPES = {
+    ("INT32", 8, True): T.ByteType(),
+    ("INT32", 16, True): T.ShortType(),
+    ("INT32", 32, True): T.IntegerType(),
+    ("INT64", 64, True): T.LongType(),
+    ("INT32", 8, False): T.ShortType(),
+    ("INT32", 16, False): T.IntegerType(),
+    ("INT32", 32, False): T.LongType(),
+    ("INT64", 64, False): T.DecimalType(20, 0),
+}
+
+#: unannotated physical type → Spark type
+_PLAIN_TYPES = {
+    "BOOLEAN": T.BooleanType(),
+    "INT32": T.IntegerType(),
+    "INT64": T.LongType(),
+    "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+    "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+}
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def infer_flags(spark: SparkSession) -> tuple[bool, ...]:
+    """The session's parquet inference confs, for :func:`footer_schema`."""
+    return tuple(
+        spark.conf.get(k, d).lower() == "true" for k, d in _INFER_CONFS
+    )
+
+
+def footer_schema(path: str, flags: tuple[bool, ...], md=None) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, built from the
+    file's footer on the driver (``md``: its already-read
+    ``pq.FileMetaData``), so no Spark job runs.
+
+    It follows Spark's own rules: the row schema a Spark writer stored
+    in the footer wins; otherwise each leaf column maps by its physical
+    and logical type as ``ParquetToSparkSchemaConverter`` maps it under
+    ``flags`` (:func:`infer_flags`), nested in the footer's
+    struct/list/map shape.  Every field is nullable, as Spark makes an
+    inferred file schema.  A column Spark cannot read raises
+    ``UnsupportedFormat`` naming the file and the column."""
+    md = md if md is not None else _pq.read_metadata(path)
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        try:
+            return _nullable(T.StructType.fromJson(json.loads(stored)))
+        except (ValueError, KeyError, TypeError):
+            pass  # a legacy row-schema string: convert the footer instead
+    leaves = iter(md.schema.column(i) for i in range(md.num_columns))
+
+    def walk(t) -> T.DataType:
+        if _pat.is_struct(t):
+            return T.StructType(
+                [T.StructField(f.name, walk(f.type)) for f in t]
+            )
+        if _pat.is_map(t):
+            return T.MapType(walk(t.key_type), walk(t.item_type))
+        if (
+            _pat.is_list(t)
+            or _pat.is_large_list(t)
+            or _pat.is_fixed_size_list(t)
+        ):
+            return T.ArrayType(walk(t.value_type))
+        col = next(leaves)
+        out = _leaf_type(col, flags)
+        if out is None:
+            raise UnsupportedFormat(
+                f"parquet file {path}: column {col.path!r} has type "
+                f"{col.physical_type} {col.logical_type}, which Spark "
+                "cannot read"
+            )
+        return out
+
+    return T.StructType(
+        [
+            T.StructField(f.name, walk(f.type))
+            for f in md.schema.to_arrow_schema()
+        ]
+    )
+
+
+def _leaf_type(col, flags: tuple[bool, ...]) -> T.DataType | None:
+    """Spark type of one parquet leaf column, or None when Spark has
+    none for it."""
+    binary_as_string, int96_as_ts, infer_ntz, nanos_as_long = flags
+    lt = json.loads(col.logical_type.to_json())
+    kind, phys = lt["Type"], col.physical_type
+    if kind == "Decimal":
+        return T.DecimalType(lt["precision"], lt["scale"])
+    if kind in ("None", "Null"):
+        if phys == "INT96":
+            return T.TimestampType() if int96_as_ts else None
+        if phys == "BYTE_ARRAY":
+            return T.StringType() if binary_as_string else T.BinaryType()
+        return _PLAIN_TYPES.get(phys)
+    if kind == "Int":
+        return _INT_TYPES.get((phys, lt["bitWidth"], lt["isSigned"]))
+    if kind == "Date" and phys == "INT32":
+        return T.DateType()
+    if kind == "Timestamp" and phys == "INT64":
+        if lt["timeUnit"] == "nanoseconds":
+            return T.LongType() if nanos_as_long else None
+        if lt["isAdjustedToUTC"] or not infer_ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    if phys == "BYTE_ARRAY":
+        if kind in ("String", "Enum", "JSON"):
+            return T.StringType()
+        if kind == "BSON":
+            return T.BinaryType()
+    return None
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and map value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in t.fields
+            ]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t

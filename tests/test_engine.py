@@ -642,32 +642,52 @@ def test_two_engines_interleaved_sessions(engine, spark):
         engine.detach("conc_t")
 
 
-def test_insert_into_lake_rejects_uncastable_values(engine, spark, tmp_path):
+def _lake_version(fmt: str, root: str) -> int:
+    """The lake table's committed version: the newest Delta log entry or
+    the Iceberg version hint."""
+    if fmt == "delta":
+        return max(
+            int(f.split(".")[0])
+            for f in os.listdir(os.path.join(root, "_delta_log"))
+            if f.endswith(".json")
+        )
+    with open(os.path.join(root, "metadata", "version-hint.text")) as fh:
+        return int(fh.read())
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_insert_into_lake_rejects_uncastable_values(engine, spark, tmp_path, fmt):
     """Standard INSERT semantics: a value the target type cannot
     represent ERRORS (DuckDB does too) — it must not be silently
-    written as NULL by a non-ANSI cast."""
-    import pytest as _pytest
-
+    written as NULL by a non-ANSI cast.  The check rides the write's
+    own job, and the failed INSERT commits nothing."""
     from pg_analytics_spark.engine import EngineError
     from pg_analytics_spark.sources.delta_write import write_delta
+    from pg_analytics_spark.sources.iceberg_write import write_iceberg
 
-    root = str(tmp_path / "dtab2")
-    write_delta(spark.range(2).selectExpr("id"), root, mode="overwrite")
-    engine.attach("dtab2", root, format="delta")
+    writer = write_delta if fmt == "delta" else write_iceberg
+    root = str(tmp_path / "tab2")
+    writer(spark.range(2).selectExpr("id"), root, mode="overwrite")
+    engine.attach("tab2", root, format=fmt)
     try:
-        with _pytest.raises(EngineError, match="cannot be cast"):
-            engine.sql("INSERT INTO dtab2 VALUES ('abc')")
+        version = _lake_version(fmt, root)
+        with pytest.raises(
+            EngineError,
+            match=r"^INSERT INTO tab2: value\(s\) cannot be cast to id bigint$",
+        ):
+            engine.sql("INSERT INTO tab2 VALUES ('abc')")
         # nothing was committed by the failed insert
-        n = engine.sql("SELECT COUNT(*) AS n FROM dtab2").collect()[0]["n"]
+        assert _lake_version(fmt, root) == version
+        n = engine.sql("SELECT COUNT(*) AS n FROM tab2").collect()[0]["n"]
         assert n == 2
         # a representable string still coerces (positional bind + cast)
-        engine.sql("INSERT INTO dtab2 VALUES ('41')")
+        engine.sql("INSERT INTO tab2 VALUES ('41')")
         got = {
-            r["id"] for r in engine.sql("SELECT id FROM dtab2").collect()
+            r["id"] for r in engine.sql("SELECT id FROM tab2").collect()
         }
         assert got == {0, 1, 41}
     finally:
-        engine.detach("dtab2")
+        engine.detach("tab2")
 
 
 def test_insert_into_non_lake_table_still_errors_normally(engine):

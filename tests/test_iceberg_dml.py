@@ -547,6 +547,91 @@ def test_merge_partitioned_rejected_with_guidance(spark, tmp_path):
         )
 
 
+# MERGE matches the same visible relation as UPDATE and DELETE: rows an
+# equality delete or a deletion vector removed stay removed, and the
+# target binds the CURRENT column names.
+
+
+def _merge_update_v(src, root, set_col="v"):
+    from pg_analytics_spark.sources.iceberg_write import merge_iceberg
+
+    return merge_iceberg(
+        src, root, "t.id = s.id",
+        [{"when": "matched", "action": "update",
+          "set": {set_col: "s.v"}, "condition": None}],
+    )
+
+
+def _range_tbl(spark, tmp_path, **write_opts):
+    root = str(tmp_path / "ice_merge_vis")
+    write_iceberg(
+        spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v"),
+        root,
+        mode="overwrite",
+        **write_opts,
+    )
+    return root
+
+
+def _all_ids_times_100(spark):
+    return spark.range(10).selectExpr("id", "CAST(id * 100 AS DOUBLE) AS v")
+
+
+def test_merge_does_not_resurrect_eq_deleted_rows(spark, tmp_path):
+    from pg_analytics_spark.sources.iceberg_write import (
+        equality_delete_iceberg,
+    )
+
+    root = _range_tbl(spark, tmp_path)
+    equality_delete_iceberg(spark, root, spark.createDataFrame([(3,)], "id long"))
+    res = _merge_update_v(_all_ids_times_100(spark), root)
+    assert res["rows_written"] == 9
+    assert _rows(spark, root) == [
+        (i, float(i * 100)) for i in range(10) if i != 3
+    ]
+
+
+def test_merge_on_v3_table_with_deletion_vector(spark, tmp_path):
+    root = _range_tbl(spark, tmp_path, options={"format-version": "3"})
+    delete_iceberg(spark, root, "id = 3")
+    res = _merge_update_v(_all_ids_times_100(spark), root)
+    assert res["rows_deleted"] == 9 and res["rows_written"] == 9
+    assert _rows(spark, root) == [
+        (i, float(i * 100)) for i in range(10) if i != 3
+    ]
+    # v3 forbids position-delete files: the delete half is deletion
+    # vectors, one live DV per data file (the first DELETE's superseded)
+    meta, plan = _plan_current(root)
+    assert meta["format-version"] == 3 and plan[1] == []
+    refs = [e[3] for e in plan[5]]
+    assert refs and len(set(refs)) == len(refs)
+
+
+def test_merge_binds_renamed_column(spark, tmp_path):
+    from pg_analytics_spark.sources.iceberg_write import alter_iceberg
+
+    root = _range_tbl(spark, tmp_path)
+    alter_iceberg(root, rename=("v", "w"))
+    _merge_update_v(_all_ids_times_100(spark), root, set_col="w")
+    got = sorted(
+        (r["id"], r["w"])
+        for r in load_source(spark, root, "iceberg").collect()
+    )
+    assert got == [(i, float(i * 100)) for i in range(10)]
+
+
+def _plan_current(root):
+    from pg_analytics_spark.sources.iceberg import plan_snapshot
+    from pg_analytics_spark.sources.iceberg_write import _latest_metadata
+
+    _v, meta = _latest_metadata(os.path.join(root, "metadata"))
+    snap = next(
+        s for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    return meta, plan_snapshot(root, meta, snap)
+
+
 # ------------------------------------------------------------------ #
 # EQUALITY-delete WRITE (r9): equality_delete_iceberg /
 # upsert_iceberg_eq + the sequence-number rule with mixed delete kinds

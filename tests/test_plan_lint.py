@@ -35,7 +35,14 @@ instead of living invisibly behind healthy sf0.1 walls:
   codegen cache holds.
 - ``test_small_frames_go_through_arrow``: ``createDataFrame(<list>, …)``
   calls per package module are pinned; small frames are built from
-  Arrow by ``types.local_frame``.
+  Arrow by ``types.local_frame``.  ``engine.py`` passes no row
+  variable to ``createDataFrame`` either.
+- ``test_iceberg_reads_pass_a_schema``: the Iceberg modules' parquet
+  reads without an explicit schema (each a schema-inference job) are
+  pinned.
+- ``test_lake_commit_job_census``: the Spark jobs of each warm lake
+  commit kind and read-after-commit aggregate, on small Delta and
+  Iceberg tables, are pinned as upper bounds.
 
 Limit worth knowing: rows that materialize inside their function
 (streaming fixtures, writer round-trips returning
@@ -350,9 +357,9 @@ def test_warm_plans_compile_nothing(spark):
     assert compiles.getCount() == before, "a warm plan compiled again"
 
 
-def _list_frames(src: str) -> int:
+def _list_frames(src: str, rows=(ast.List, ast.ListComp)) -> int:
     """``createDataFrame(`` calls whose rows are a list literal or a
-    list comprehension."""
+    list comprehension (or any node type in ``rows``)."""
     return sum(
         1
         for node in ast.walk(ast.parse(src))
@@ -360,7 +367,7 @@ def _list_frames(src: str) -> int:
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "createDataFrame"
         and node.args
-        and isinstance(node.args[0], (ast.List, ast.ListComp))
+        and isinstance(node.args[0], rows)
     )
 
 
@@ -391,3 +398,130 @@ def test_small_frames_go_through_arrow():
         f"list-built createDataFrame census changed: {counts} vs pinned "
         f"{_LIST_FRAME_PINS} — build small frames with types.local_frame"
     )
+    # the engine builds every result frame with local_frame: its rows
+    # never reach createDataFrame as a variable either
+    engine_src = (_WORKLOAD.parent / "engine.py").read_text()
+    assert _list_frames(
+        engine_src, (ast.List, ast.ListComp, ast.Name)
+    ) == 0
+
+
+#: ``.parquet(`` reads with no ``.schema(`` in their reader chain, per
+#: Iceberg module.  Each runs a Spark schema-inference job; the one left
+#: is ``add_iceberg_files``, which mints a table schema from foreign
+#: files.  The pins only go down.
+_INFERRING_READ_PINS = {
+    "iceberg.py": 0,
+    "iceberg_changelog.py": 0,
+    "iceberg_write.py": 1,
+}
+
+
+def _inferring_parquet_reads(src: str) -> int:
+    """``.parquet(`` calls whose receiver chain has neither ``.write``
+    (a write) nor a ``.schema(`` call (an explicit read schema)."""
+    n = 0
+    for node in ast.walk(ast.parse(src)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            continue
+        chain, cur = set(), node.func.value
+        while isinstance(cur, (ast.Attribute, ast.Call)):
+            if isinstance(cur, ast.Attribute):
+                chain.add(cur.attr)
+                cur = cur.value
+            else:
+                cur = cur.func
+        n += not ({"write", "schema"} & chain)
+    return n
+
+
+def test_iceberg_reads_pass_a_schema():
+    src = _WORKLOAD.parent / "sources"
+    counts = {
+        mod: _inferring_parquet_reads((src / mod).read_text())
+        for mod in sorted(_INFERRING_READ_PINS)
+    }
+    assert counts == _INFERRING_READ_PINS, counts
+
+
+#: Spark jobs of one warm lake statement through ``Engine.fetch_arrow``
+#: (the ``lake_dml`` benchmark's statements, on a fresh copy of the test
+#: ``orders``), pinned as upper bounds.  A commit's jobs include the
+#: re-attach of the new snapshot.  The pins only go down.
+_COMMIT_JOB_PINS = {
+    ("delta", "insert"): 2,
+    ("delta", "update"): 4,
+    ("delta", "delete"): 4,
+    ("delta", "merge"): 10,
+    ("delta", "read"): 4,
+    ("iceberg", "insert"): 2,
+    ("iceberg", "update"): 5,
+    ("iceberg", "delete"): 3,
+    ("iceberg", "merge"): 12,
+    ("iceberg", "read"): 4,
+}
+
+_ORDER_COLS = (
+    "o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, "
+    "o_orderpriority"
+)
+
+
+def _lake_statement(kind: str, t: str, i: int) -> str:
+    pick = f"o_orderkey % 7 = {i}"
+    if kind == "insert":
+        return (
+            f"INSERT INTO {t} SELECT o_orderkey + {(i + 1) * 10_000_000} "
+            "AS o_orderkey, o_custkey, o_orderstatus, o_totalprice, "
+            f"o_orderdate, o_orderpriority FROM orders WHERE {pick}"
+        )
+    if kind == "update":
+        return f"UPDATE {t} SET o_totalprice = o_totalprice + 1 WHERE {pick}"
+    if kind == "delete":
+        return f"DELETE FROM {t} WHERE {pick}"
+    if kind == "merge":
+        src = (
+            f"(SELECT o_orderkey + {i * 3} AS k, o_totalprice * 2 AS p "
+            f"FROM orders WHERE {pick})"
+        )
+        new = "s.k, 0, 'N', s.p, TIMESTAMP '2000-01-01 00:00:00', '1-URGENT'"
+        return (
+            f"MERGE INTO {t} tgt USING {src} s ON tgt.o_orderkey = s.k "
+            "WHEN MATCHED THEN UPDATE SET o_totalprice = s.p "
+            f"WHEN NOT MATCHED THEN INSERT ({_ORDER_COLS}) VALUES ({new})"
+        )
+    return (
+        "SELECT o_orderstatus, COUNT(*) AS n, "
+        "SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS total, "
+        f"MAX(o_orderkey) AS max_key FROM {t} GROUP BY o_orderstatus "
+        "ORDER BY o_orderstatus"
+    )
+
+
+@pytest.mark.parametrize("fmt,kind", sorted(_COMMIT_JOB_PINS))
+def test_lake_commit_job_census(engine, spark, tmp_path, fmt, kind):
+    """The census method of ``test_dedup_rows_job_census`` on a fresh
+    copy of ``orders``: one warm statement, then the next one counted
+    under its own job group."""
+    t = f"census_{fmt}_{kind}"
+    engine.sql(
+        f"CREATE TABLE {t} USING {fmt} LOCATION '{tmp_path / t}' "
+        "AS SELECT * FROM orders"
+    )
+    try:
+        for i, tag in enumerate(("warm", "counted")):
+            _, jobs = _jobs_in(
+                spark,
+                f"commit-census-{fmt}-{kind}-{tag}",
+                lambda i=i: engine.fetch_arrow(
+                    _lake_statement(kind, t, i + 1)
+                ),
+            )
+    finally:
+        engine.detach(t)
+    pin = _COMMIT_JOB_PINS[(fmt, kind)]
+    assert jobs <= pin, f"{fmt} {kind} ran {jobs} Spark jobs, pinned {pin}"

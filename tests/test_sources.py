@@ -150,6 +150,74 @@ def test_parquet_binary_as_string(spark, tmp_path_factory):
     assert df.collect()[0]["b"] == "abc"
 
 
+def _footer_type_cases():
+    import datetime as dt
+    import decimal
+
+    import pyarrow as pa
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    return {
+        "int8": pa.array([1], pa.int8()),
+        "int16": pa.array([1], pa.int16()),
+        "int32": pa.array([1], pa.int32()),
+        "int64": pa.array([1], pa.int64()),
+        "float": pa.array([1.5], pa.float32()),
+        "double": pa.array([1.5], pa.float64()),
+        "decimal": pa.array([decimal.Decimal("1.25")], pa.decimal128(12, 2)),
+        "string": pa.array(["a"]),
+        "binary": pa.array([b"a"]),
+        "date": pa.array([dt.date(2024, 1, 2)]),
+        "timestamp_utc": pa.array([ts], pa.timestamp("us", "UTC")),
+        "timestamp_local": pa.array([ts], pa.timestamp("us")),
+        "int96": pa.array([ts], pa.timestamp("ns")),
+        "struct": pa.array([{"a": 1, "b": "x"}]),
+        "list": pa.array([[1, None]]),
+        "map": pa.array([[("k", 1.5)]], pa.map_(pa.string(), pa.float64())),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_footer_type_cases()))
+def test_footer_schema_matches_spark_inference(spark, tmp_path, case):
+    """The driver-side footer conversion that lets the Iceberg scan pass
+    ``.schema(S)`` gives exactly the schema Spark's own inference
+    gives, and Spark reads the file under it to the same values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg_analytics_spark.sources.parquet import footer_schema, infer_flags
+
+    path = str(tmp_path / f"{case}.parquet")
+    table = pa.table({"c": _footer_type_cases()[case]})
+    pq.write_table(
+        table, path, use_deprecated_int96_timestamps=case == "int96"
+    )
+    inferred = spark.read.parquet(path)
+    schema = footer_schema(path, infer_flags(spark))
+    assert schema == inferred.schema
+    assert spark.read.schema(schema).parquet(path).collect() == (
+        inferred.collect()
+    )
+
+
+def test_footer_schema_refuses_unreadable_types(spark, tmp_path):
+    """A column Spark cannot read raises UnsupportedFormat naming the
+    file and the column; it never falls back to inference."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg_analytics_spark.sources.parquet import footer_schema, infer_flags
+
+    path = str(tmp_path / "time.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([dt.time(1, 2)], pa.time64("us"))}), path
+    )
+    with pytest.raises(UnsupportedFormat, match=r"time\.parquet.*'t'"):
+        footer_schema(path, infer_flags(spark))
+
+
 def test_hive_partitioning_discovery(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("hive")
     spark.range(4).withColumn("part", F.col("id") % 2).write.partitionBy(
