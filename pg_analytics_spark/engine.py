@@ -2195,9 +2195,11 @@ class Engine:
         — NULL-predicate rows survive (SQL three-valued logic) on both
         writers.  Delta: COPY-ON-WRITE (fully-matching files drop via
         pure removes, partial files rewrite survivors, no WHERE
-        truncates metadata-only).  Iceberg: MERGE-ON-READ (v2
-        position-delete files + a content=1 manifest — O(matched rows)
-        commit, readers pay the anti-join) — the two halves of the
+        truncates metadata-only).  Iceberg: MERGE-ON-READ through the
+        writer's one row-delta commit (a position-delete file on v2,
+        deletion vectors on v3, each in a content=1 manifest — an
+        O(matched rows) commit, readers pay the anti-join); UPDATE and
+        MERGE commit through the same function.  The two halves of the
         write-amplification trade, each on the format whose protocol
         favors it."""
         att = self._dml_delta_attachment(

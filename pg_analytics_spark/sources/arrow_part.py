@@ -258,7 +258,34 @@ class WrittenFile(NamedTuple):
     size: int
     mtime: int  #: milliseconds
     rows: int
-    nan_cols: frozenset  #: float columns holding at least one NaN
+
+
+def stat_columns(schema) -> list[str]:
+    """Parquet column paths of the non-floating-point leaves of Arrow
+    ``schema``: the ``write_statistics`` of every data file the native
+    writers produce.  Arrow leaves NaN out of a float column's footer
+    min/max (``[1.0, NaN, 3.0]`` records [1.0, 3.0]), and Spark's
+    Parquet filter pushdown trusts those bounds, so a float column
+    carries no statistics at all."""
+    import pyarrow as pa
+
+    out: list[str] = []
+
+    def walk(path: str, t) -> None:
+        if pa.types.is_struct(t):
+            for f in t:
+                walk(f"{path}.{f.name}", f.type)
+        elif pa.types.is_map(t):
+            walk(f"{path}.key_value.key", t.key_type)
+            walk(f"{path}.key_value.value", t.item_type)
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            walk(f"{path}.list.element", t.value_type)
+        elif not pa.types.is_floating(t):
+            out.append(path)
+
+    for f in schema:
+        walk(f.name, f.type)
+    return out
 
 
 def hive_path(cols: list[str], key: tuple, fname: str) -> str:
@@ -319,14 +346,14 @@ def write_partitioned(
     relative to ``root``.  Rows of a tuple accumulate into ``FLUSH_BYTES`` row
     groups under the global ``TASK_BUFFER_CAP``.  Every file is
     written as ``.tmp`` and moved into place with ``os.replace``, so a
-    crash never leaves a half-file under a data name.  ``max_open``
+    crash never leaves a half-file under a data name.  Floating-point
+    columns carry no footer statistics (:func:`stat_columns`).  ``max_open``
     refuses a task that meets more distinct tuples than that.  Empty
     input writes no file."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    open_files: dict[tuple, list] = {}  # key -> [writer, rel, rows, nan]
+    open_files: dict[tuple, list] = {}  # key -> [writer, rel, rows]
 
     def _flush(key, t):
         got = open_files.get(key)
@@ -343,18 +370,12 @@ def write_partitioned(
             dst = os.path.join(root, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             w = pq.ParquetWriter(
-                dst + ".tmp", t.schema, compression=compression
+                dst + ".tmp", t.schema, compression=compression,
+                write_statistics=stat_columns(t.schema),
             )
-            got = open_files[key] = [w, rel, 0, set()]
+            got = open_files[key] = [w, rel, 0]
         got[0].write_table(t)
         got[2] += t.num_rows
-        for name, col in zip(t.column_names, t.columns):
-            if (
-                pa.types.is_floating(col.type)
-                and name not in got[3]
-                and pc.any(pc.is_nan(col)).as_py()
-            ):
-                got[3].add(name)
 
     buf = BoundedGroupBuffer(_flush, FLUSH_BYTES)
     for b in batches:
@@ -368,14 +389,13 @@ def write_partitioned(
         for key, idx in groups:
             buf.add(tuple(key), data if idx is None else data.take(idx))
     buf.close()
-    for key, (w, rel, rows, nan) in open_files.items():
+    for key, (w, rel, rows) in open_files.items():
         w.close()
         dst = os.path.join(root, rel)
         os.replace(dst + ".tmp", dst)
         st = os.stat(dst)
         yield WrittenFile(
-            key, rel, dst, st.st_size, int(st.st_mtime * 1000), rows,
-            frozenset(nan),
+            key, rel, dst, st.st_size, int(st.st_mtime * 1000), rows
         )
 
 

@@ -67,8 +67,8 @@ def _file_stats(path: str, schema) -> str | None:
     """stats JSON from the parquet footer: numRecords, nullCount for
     the file's top-level primitive columns, and min/max for the
     columns of ``schema`` with a statable type (the public Delta stats
-    shape).  A caller leaves a float column holding NaN out of
-    ``schema`` (see footer_stats).  Optional: an unreadable footer
+    shape).  A float column holding NaN gets no min/max (see
+    footer_stats).  Optional: an unreadable footer
     yields None (no stats, file still committed); the ROW COUNT the
     writer reports never depends on this."""
     try:
@@ -1158,8 +1158,6 @@ def _delta_files(
     ``file_stats`` replaces ``_file_stats``; ``kw`` (``compression``,
     ``max_open``) go to the kernel.  Yields ``(rel, stats|None, size,
     mtime_ms, rows)`` per file."""
-    from pyspark.sql.types import StructType
-
     from pg_analytics_spark.sources.arrow_part import (
         hive_path,
         write_partitioned,
@@ -1175,11 +1173,7 @@ def _delta_files(
         name_of=lambda key: hive_path(part_cols, key, fname()),
         **kw,
     ):
-        stats = None
-        if schema is not None:
-            # no min/max for a float column holding NaN (footer_stats)
-            keep = [x for x in schema.fields if x.name not in f.nan_cols]
-            stats = file_stats(f.dst, StructType(keep))
+        stats = None if schema is None else file_stats(f.dst, schema)
         yield f.rel, stats, f.size, f.mtime, f.rows
 
 
@@ -1913,27 +1907,13 @@ def merge_delta(
     tbl_fields = json.loads(prev_meta["schemaString"])["fields"]
     tbl_cols = [f["name"] for f in tbl_fields]
 
-    matched_clauses = [c for c in clauses if c["when"] == "matched"]
-    insert_clauses = [c for c in clauses if c["when"] == "not_matched"]
-    if not matched_clauses and not insert_clauses:
-        raise UnsupportedFormat("MERGE needs at least one WHEN clause")
+    from pg_analytics_spark.sources.merge_clauses import (
+        MergeClauses,
+        refuse_duplicate_matches,
+    )
 
-    def _set_map(c, kind):
-        m = c.get("set" if kind == "update" else "values")
-        if m == "all":
-            missing = [x for x in tbl_cols if x not in source.columns]
-            if missing:
-                raise UnsupportedFormat(
-                    f"MERGE {kind.upper()} *: source lacks column(s) "
-                    f"{missing}"
-                )
-            return {x: f"{source_alias}.{x}" for x in tbl_cols}
-        bad = [x for x in m if x not in tbl_cols]
-        if bad:
-            raise UnsupportedFormat(
-                f"MERGE {kind.upper()}: unknown target column(s) {bad}"
-            )
-        return m
+    mc = MergeClauses(clauses, tbl_cols, source.columns, source_alias)
+    matched_clauses, insert_clauses = mc.matched, mc.not_matched
 
     from pg_analytics_spark.sources import load_source
 
@@ -1980,18 +1960,7 @@ def merge_delta(
         joined = tgt.alias(target_alias).join(
             src.alias(source_alias), cond, "inner"
         )
-        dup = (
-            joined.groupBy("_tid")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise UnsupportedFormat(
-                "MERGE: a target row matches more than one source row — "
-                "deduplicate the source on the ON keys first"
-            )
+        refuse_duplicate_matches(joined, ["_tid"])
         touched_abs = [
             r["_tfile"] for r in joined.select("_tfile").distinct().collect()
         ]
@@ -2007,20 +1976,6 @@ def merge_delta(
                 "(concurrent writer?)"
             )
         removes.append(abs_of[key])
-
-    def _first_match_idx(clause_list, matched_col=None):
-        """CASE returning the index of the first applicable clause."""
-        expr = None
-        for idx, c in enumerate(clause_list):
-            hit = F.lit(True) if matched_col is None else matched_col
-            if c.get("condition"):
-                hit = hit & F.expr(c["condition"])
-            expr = (
-                F.when(hit, F.lit(idx))
-                if expr is None
-                else expr.when(hit, F.lit(idx))
-            )
-        return expr.otherwise(F.lit(-1))
 
     cdf_on = (
         str(
@@ -2038,8 +1993,7 @@ def merge_delta(
             src.alias(source_alias), cond, "left"
         )
         matched = F.col(f"{source_alias}._smark").isNotNull()
-        cidx = _first_match_idx(matched_clauses, matched)
-        rew = rew.withColumn("_cidx", cidx)
+        rew = rew.withColumn("_cidx", mc.index(matched_clauses, matched))
         del_idx = [
             i for i, c in enumerate(matched_clauses)
             if c["action"] == "delete"
@@ -2048,18 +2002,9 @@ def merge_delta(
             i for i, c in enumerate(matched_clauses)
             if c["action"] == "update"
         ]
-        out_cols = []
-        for col in tbl_cols:
-            e = F.col(f"{target_alias}.{col}")
-            for i, c in enumerate(matched_clauses):
-                if c["action"] != "update":
-                    continue
-                sm = _set_map(c, "update")
-                if col in sm:
-                    e = F.when(
-                        F.col("_cidx") == i, F.expr(sm[col])
-                    ).otherwise(e)
-            out_cols.append(e.alias(col))
+        out_cols = mc.images(
+            matched_clauses, lambda col: F.col(f"{target_alias}.{col}")
+        )
         if cdf_on:
             tgt_cols = [
                 F.col(f"{target_alias}.{c}").alias(c) for c in tbl_cols
@@ -2099,18 +2044,10 @@ def merge_delta(
         anti = src.alias(source_alias).join(
             tgt.alias(target_alias), cond, "left_anti"
         )
-        cidx = _first_match_idx(insert_clauses)
-        anti = anti.withColumn("_cidx", cidx).filter(F.col("_cidx") >= 0)
-        out_cols = []
-        for col in tbl_cols:
-            e = F.lit(None)
-            for i, c in enumerate(insert_clauses):
-                vm = _set_map(c, "insert")
-                if col in vm:
-                    e = F.when(
-                        F.col("_cidx") == i, F.expr(vm[col])
-                    ).otherwise(e)
-            out_cols.append(e.alias(col))
+        anti = anti.withColumn("_cidx", mc.index(insert_clauses)).filter(
+            F.col("_cidx") >= 0
+        )
+        out_cols = mc.images(insert_clauses, lambda col: F.lit(None))
         if cdf_on:
             cdf_pieces.append(
                 anti.select(

@@ -7,10 +7,13 @@ output ENCODING differs.  One walk, two encoders.  Delta also takes
 its ``nullCount`` from here.
 
 Arrow leaves NaN out of a float column's footer min/max (a column
-holding ``[1.0, NaN, 3.0]`` records [1.0, 3.0]).  The footer cannot
-tell such a column from a NaN-free one, so the write kernel
-(``arrow_part.write_partitioned``) reports the float columns in which
-it saw a NaN, and the Delta encoder leaves their min/max out.
+holding ``[1.0, NaN, 3.0]`` records [1.0, 3.0]), and Spark's Parquet
+filter pushdown trusts those bounds.  So the native writers write no
+footer statistics for floating-point columns
+(``arrow_part.stat_columns``), and a top-level float column's null
+count and [min, max] come from its VALUES instead: no bound when it
+holds a NaN.  A foreign file's NaN-blind float footer stats are
+ignored the same way.
 """
 
 from __future__ import annotations
@@ -23,9 +26,12 @@ def footer_stats(path: str) -> tuple[dict[str, tuple], dict[str, int], int]:
     count mixes its parents' nulls in).
 
     A column appears in either map only when EVERY row group carries
-    that statistic (a partial bound is not a bound).  Raises on an
-    unreadable footer — callers choose whether stats are optional."""
+    that statistic (a partial bound is not a bound).  Top-level float
+    and double columns are read to compute theirs (see the module
+    docstring).  Raises on an unreadable footer — callers choose
+    whether stats are optional."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
@@ -53,4 +59,17 @@ def footer_stats(path: str) -> tuple[dict[str, tuple], dict[str, int], int]:
             bounds[name] = (
                 min(st.min for st in stats), max(st.max for st in stats)
             )
+    floats = [
+        f.name
+        for f in pf.schema_arrow
+        if pa.types.is_float32(f.type) or pa.types.is_float64(f.type)
+    ]
+    values = pf.read(columns=floats) if floats else None
+    for name in floats:
+        col = values.column(name)
+        nulls[name] = col.null_count
+        bounds.pop(name, None)
+        mm = pc.min_max(col).as_py()
+        if mm["min"] is not None and not pc.any(pc.is_nan(col)).as_py():
+            bounds[name] = (mm["min"], mm["max"])
     return bounds, nulls, md.num_rows

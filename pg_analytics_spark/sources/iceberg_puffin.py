@@ -155,7 +155,10 @@ def compute_statistics_iceberg(
     {"version", "statistics_path", "ndv": {col: est}}."""
     from pg_analytics_spark.functions.hashing import shingle_hash60
     from pg_analytics_spark.sources.iceberg import load as load_iceberg
-    from pg_analytics_spark.sources.iceberg_write import _latest_metadata
+    from pg_analytics_spark.sources.iceberg_write import (
+        _latest_metadata,
+        _publish_metadata_version,
+    )
 
     if not cols:
         raise UnsupportedFormat("compute_statistics_iceberg: no columns")
@@ -245,38 +248,6 @@ def _current_schema_fields(meta: dict) -> list[dict]:
             return s.get("fields", [])
     sch = meta.get("schema")
     return (sch or {}).get("fields", [])
-
-
-def _publish_metadata_version(
-    path: str, new_meta: dict, prev_version: int
-) -> int:
-    """Put-if-absent vN+1.metadata.json + version-hint — the same
-    commit shape as every metadata writer here."""
-    meta_dir = os.path.join(path, "metadata")
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
-    return version
 
 
 def iceberg_statistics(spark: SparkSession, path: str) -> DataFrame:

@@ -25,8 +25,16 @@ last-column-id and a bumped schema id, so id-based readers surface
 nulls for them in pre-evolution files (the spec's add-column rule).
 Data files are written by executors; only
 the O(files) manifest/metadata construction is driver-side, the same
-disposition as every Iceberg writer.  Single-writer by design (no
-catalog/commit-race arbitration — same scope note as
+disposition as every Iceberg writer.
+
+How a snapshot is committed lives in three functions:
+:func:`_publish_metadata_version` is the only writer of
+``v{N}.metadata.json`` (put-if-absent, so a writer that loses a
+version race raises ``ConcurrentWriteError`` instead of overwriting the
+winner); :func:`_write_manifest` writes a manifest and returns its
+manifest-list entry; :func:`_commit_row_delta` is the one merge-on-read
+commit of DELETE, UPDATE and MERGE.  There is no catalog: concurrent
+writers are detected, not arbitrated (same scope note as
 sources/delta_write.py).
 """
 
@@ -549,6 +557,128 @@ def _latest_metadata(meta_dir: str) -> tuple[int, dict | None]:
         return v, json.load(fh)
 
 
+def _publish_metadata_version(
+    path: str, new_meta: dict, prev_version: int
+) -> int:
+    """The one Iceberg commit point, shared by every writer:
+    ``v{prev_version + 1}.metadata.json`` is written to a tmp file and
+    hard-linked into place PUT-IF-ABSENT.  A name that already exists
+    means a concurrent writer won this version, so the loser raises
+    ``ConcurrentWriteError`` instead of overwriting the winner's
+    commit.  ``version-hint.text`` follows.  Returns the new version."""
+    meta_dir = os.path.join(path, "metadata")
+    os.makedirs(meta_dir, exist_ok=True)
+    version = prev_version + 1
+    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
+    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(new_meta, fh)
+    try:
+        os.link(tmp, meta_path)
+    except FileExistsError:
+        from pg_analytics_spark.errors import ConcurrentWriteError
+
+        raise ConcurrentWriteError(
+            f"iceberg metadata version {version} already exists at "
+            f"{meta_path} — another writer won the race; retry"
+        ) from None
+    finally:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
+    with open(hint_tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    return version
+
+
+def _write_manifest(
+    mpath: str,
+    schema: dict,
+    entries: list[dict],
+    spec_id: int,
+    content: int,
+    seq: int,
+    snapshot_id: int,
+) -> dict:
+    """Write one manifest's ``entries`` (Avro ``schema``) at ``mpath``
+    and return that manifest's manifest-list entry (``content`` 0 for
+    data files, 1 for delete files)."""
+    write_container(schema, entries, mpath)
+    return {
+        "manifest_path": mpath,
+        "manifest_length": os.path.getsize(mpath),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": seq,
+        "added_snapshot_id": snapshot_id,
+    }
+
+
+def _added_entry(
+    snapshot_id: int,
+    content: int,
+    file_path: str,
+    rows: int,
+    size: int,
+    lowers=None,
+    uppers=None,
+    partition: dict | None = None,
+    **extra,
+) -> dict:
+    """An ADDED (status 1) manifest entry for one Parquet file (its
+    partition tuple only when given); ``extra`` adds data_file fields
+    (``equality_ids``)."""
+    return {
+        "status": 1,
+        "snapshot_id": snapshot_id,
+        "data_file": {
+            "content": content,
+            "file_path": file_path,
+            "file_format": "PARQUET",
+            "record_count": rows,
+            "file_size_in_bytes": size,
+            "lower_bounds": lowers or None,
+            "upper_bounds": uppers or None,
+            **({} if partition is None else {"partition": partition}),
+            **extra,
+        },
+    }
+
+
+def _new_snapshot_id() -> int:
+    return int(uuid.uuid4().int % (1 << 62)) + 1
+
+
+def _current_manifests(meta: dict) -> list[dict]:
+    """The current snapshot's manifest-list entries (none when the
+    table has no current snapshot)."""
+    snap = next(
+        (
+            s
+            for s in meta.get("snapshots", [])
+            if s["snapshot-id"] == meta.get("current-snapshot-id")
+        ),
+        None,
+    )
+    return [] if snap is None else read_container(snap["manifest-list"])[1]
+
+
+def _default_spec_fields(meta: dict) -> list[dict]:
+    """The fields of the table's default partition spec ([] when
+    unpartitioned)."""
+    return next(
+        (
+            sp
+            for sp in meta.get("partition-specs", [])
+            if sp.get("spec-id") == meta.get("default-spec-id", 0)
+        ),
+        {},
+    ).get("fields", [])
+
+
 #: table-property prefix persisting each streaming app's consumed-epoch
 #: high-water mark ALONGSIDE the snapshot summaries — summaries alone
 #: die with expire_snapshots, after which a delayed crash-replay of an
@@ -638,15 +768,11 @@ def _write_data_files_direct(
 
     Returns ``[(partition_values_raw, dst, rows, size, lowers,
     uppers)]`` where raw partition values are int/str/None (dates as
-    epoch days).
+    epoch days).  Rows-free input writes no file.
     """
     import datetime as dt
 
-    from pg_analytics_spark.sources.arrow_part import (
-        map_files,
-        shippable,
-        write_empty,
-    )
+    from pg_analytics_spark.sources.arrow_part import map_files, shippable
 
     bounds_ref = shippable(_file_bounds)
     partitioned = len(out_df.columns) > n_data_cols
@@ -667,12 +793,6 @@ def _write_data_files_direct(
         )
 
     files = map_files(out_df, _write_task, data_dir)
-    if not files and not partitioned:
-        dst = os.path.join(
-            data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
-        )
-        write_empty(out_df.schema, dst, compression)
-        return [([], dst, 0, os.path.getsize(dst), [], [])]
     epoch = dt.date(1970, 1, 1)
     return [
         (
@@ -927,17 +1047,9 @@ def write_iceberg(
         (*_parse_transform(c), None) for c in part_cols
     ]
     if prev_meta is not None:
-        prev_spec = next(
-            (
-                s
-                for s in prev_meta.get("partition-specs", [])
-                if s.get("spec-id") == prev_meta.get("default-spec-id", 0)
-            ),
-            {"fields": []},
-        )
         prev_entries: list[tuple] = []
         missing_sources = []
-        for pf in prev_spec.get("fields", []):
+        for pf in _default_spec_fields(prev_meta):
             src = id_to_name.get(pf["source-id"])
             tr = pf.get("transform", "identity")
             if src is None:
@@ -1047,54 +1159,43 @@ def write_iceberg(
         for dc, e in zip(dir_cols, part_exprs):
             out_df = out_df.withColumn(dc, e)
     os.makedirs(data_dir, exist_ok=True)
-    entries = []
-    n_rows = 0
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
+    compression = str((options or {}).get("compression", "snappy"))
     files = _write_data_files_direct(
-        out_df,
-        len(df.columns),
-        data_dir,
-        snapshot_id,
-        fields,
-        str((options or {}).get("compression", "snappy")),
+        out_df, len(df.columns), data_dir, snapshot_id, fields, compression
     )
-    for parts_raw, dst, rows, size, lowers, uppers in files:
-        n_rows += rows
-        data_file = {
-            "content": 0,
-            "file_path": dst,
-            "file_format": "PARQUET",
-            "record_count": rows,
-            "file_size_in_bytes": size,
-            "lower_bounds": lowers or None,
-            "upper_bounds": uppers or None,
-        }
-        if part_fields:
-            data_file["partition"] = {
+    if not files and not part_entries:
+        # an empty UNPARTITIONED commit publishes one schema-only file
+        # (Iceberg readers treat a snapshot with no live data file as
+        # corrupt)
+        from pg_analytics_spark.sources.arrow_part import write_empty
+
+        dst = os.path.join(
+            data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
+        )
+        write_empty(out_df.schema, dst, compression)
+        files = [([], dst, 0, os.path.getsize(dst), [], [])]
+    entries = [
+        _added_entry(
+            snapshot_id, 0, dst, rows, size, lowers, uppers,
+            partition={
                 pf["name"]: _typed_partition_value(v, pf["_ice_type"])
                 for v, pf in zip(parts_raw, part_fields)
             }
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": data_file,
-            }
+            or None,
         )
-
-    os.makedirs(meta_dir, exist_ok=True)
+        for parts_raw, dst, rows, size, lowers, uppers in files
+    ]
+    n_rows = sum(f[2] for f in files)
     seq = (prev_meta or {}).get("last-sequence-number", 0) + 1
-    manifest = os.path.join(meta_dir, f"man-{snapshot_id}.avro")
-    write_container(_manifest_entry_schema(part_fields), entries, manifest)
+    os.makedirs(meta_dir, exist_ok=True)
     mf_entries = [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": spec_id,
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        }
+        _write_manifest(
+            os.path.join(meta_dir, f"man-{snapshot_id}.avro"),
+            _manifest_entry_schema(part_fields),
+            entries,
+            spec_id, 0, seq, snapshot_id,
+        )
     ]
     if mode == "append" and prev_meta is not None:
         # the parent is the BRANCH head when this is a branch write
@@ -1220,16 +1321,7 @@ def write_iceberg(
             else {}
         ),
     }
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    _publish_metadata_version(path, meta, prev_version)
     return {"snapshot_id": snapshot_id, "files": len(entries), "rows": n_rows}
 
 
@@ -1371,15 +1463,10 @@ def alter_iceberg(
                 "DROP COLUMN: cannot drop the only column"
             )
         fid = next(f["id"] for f in fields if f["name"] == drop)
-        spec = next(
-            (
-                s
-                for s in prev_meta.get("partition-specs", [])
-                if s.get("spec-id") == prev_meta.get("default-spec-id", 0)
-            ),
-            {"fields": []},
-        )
-        if any(pf.get("source-id") == fid for pf in spec.get("fields", [])):
+        if any(
+            pf.get("source-id") == fid
+            for pf in _default_spec_fields(prev_meta)
+        ):
             raise UnsupportedFormat(
                 f"DROP COLUMN: {drop!r} is a partition source field"
             )
@@ -1400,29 +1487,7 @@ def alter_iceberg(
     props["schema.name-mapping.default"] = json.dumps(nm)
     meta["properties"] = props
 
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {"version": version, "schema_id": new_schema_id, "operation": op}
 
 
@@ -1514,29 +1579,7 @@ def alter_iceberg_partition(
     meta["default-spec-id"] = spec_id
     meta["last-partition-id"] = _last_partition_field_id(prev_specs)
     meta["last-updated-ms"] = int(time.time() * 1000)
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {
         "version": version,
         "spec_id": spec_id,
@@ -1571,29 +1614,7 @@ def alter_iceberg_properties(
         props.pop(k, None)
     meta = dict(prev_meta)
     meta["properties"] = props
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {"version": version, "properties": props}
 
 
@@ -1800,13 +1821,12 @@ def _publish_snapshot(
     seq: int,
     summary: dict,
 ) -> int:
-    """Commit tail shared by the row-level writers (DELETE, UPDATE,
-    MERGE and the equality-delete writers): manifest list + metadata
-    vN+1 (put-if-absent hard link; losers raise ConcurrentWriteError)
-    + version-hint.  Returns the new version."""
+    """Commit tail of every writer that adds a snapshot on top of the
+    current one (the row deltas, the equality-delete writers and the
+    maintenance rewrites): the manifest list, then the snapshot in the
+    next metadata version through :func:`_publish_metadata_version`.
+    Returns the new version."""
     import time as _time
-
-    from pg_analytics_spark.sources.avro import write_container
 
     meta_dir = os.path.join(path, "metadata")
     mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
@@ -1835,30 +1855,7 @@ def _publish_snapshot(
     meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
         {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
     ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
-    return version
+    return _publish_metadata_version(path, meta, prev_version)
 
 
 def _eq_manifest_entry_schema() -> dict:
@@ -1908,7 +1905,6 @@ def _dv_manifests(
     fresh DV entries.  Returns (the manifest-list entries, the number
     of files given a new DV).  O(matched rows) driver work — the same
     bound as the Delta DV path and the blob itself."""
-    from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg_dv import (
         read_dv_positions,
         write_dv_puffin,
@@ -1956,16 +1952,12 @@ def _dv_manifests(
         }
         for ref in sorted(new_pos)
     ]
-    manifest = os.path.join(meta_dir, f"man-dv-{snapshot_id}.avro")
-    write_container(dv_schema, added, manifest)
-    new_mf_entry = {
-        "manifest_path": manifest,
-        "manifest_length": os.path.getsize(manifest),
-        "partition_spec_id": prev_meta.get("default-spec-id", 0),
-        "content": 1,
-        "sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-    }
+    new_mf_entry = _write_manifest(
+        os.path.join(meta_dir, f"man-dv-{snapshot_id}.avro"),
+        dv_schema,
+        added,
+        prev_meta.get("default-spec-id", 0), 1, seq, snapshot_id,
+    )
     # carry/rewrite the previous manifests: data manifests verbatim;
     # delete manifests verbatim UNLESS they hold a superseded DV entry
     # — those rewrite without it (surviving entries carried EXISTING
@@ -2010,59 +2002,136 @@ def _dv_manifests(
             }
             for e in keep
         ]
-        rman = os.path.join(
-            meta_dir, f"man-dvcarry-{snapshot_id}-{uuid.uuid4().hex}.avro"
-        )
-        write_container(_entry_schema_with_seq(schema_m), carried, rman)
         mf_entries.append(
-            {
-                "manifest_path": rman,
-                "manifest_length": os.path.getsize(rman),
-                "partition_spec_id": m.get("partition_spec_id", 0),
-                "content": 1,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
+            _write_manifest(
+                os.path.join(
+                    meta_dir,
+                    f"man-dvcarry-{snapshot_id}-{uuid.uuid4().hex}.avro",
+                ),
+                _entry_schema_with_seq(schema_m),
+                carried,
+                m.get("partition_spec_id", 0), 1, seq, snapshot_id,
+            )
         )
     mf_entries.append(new_mf_entry)
     return mf_entries, len(new_pos)
 
 
-def _commit_dv_delete(path, prev_meta, prev_version, prev_list, dels, existing_dvs):
-    """DELETE on a format-version-3 table: one snapshot whose delete
-    half is :func:`_dv_manifests`."""
-    pos_rows = dels.collect()  # O(matched rows) — the DV payload itself
-    if not pos_rows:
-        return {"snapshot_id": None, "rows_deleted": 0, "version": prev_version}
-    n_del = len(pos_rows)
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+def _commit_row_delta(
+    path: str,
+    prev_meta: dict,
+    prev_version: int,
+    prev_list: list[dict],
+    existing_dvs: list,
+    dels: DataFrame | None,
+    adds: DataFrame | None,
+    operation: str,
+) -> tuple[int | None, int, int, int]:
+    """The one merge-on-read commit of DELETE, UPDATE and MERGE: a
+    snapshot that deletes the rows named by ``dels`` (``file_path``,
+    ``pos``) and adds the rows of ``adds`` (the current schema's
+    columns), both halves in ONE metadata version, so a reader never
+    sees one without the other.  Either half may be None.
+
+    * Delete half, format version 2: one position-delete file sorted
+      by (file_path, pos) as the spec requires, staged by
+      :func:`_stage_one_parquet` and counted from its footer.
+    * Delete half, format version 3: deletion vectors through
+      :func:`_dv_manifests` (v3 forbids new position-delete files);
+      the collected pairs are the DV payload itself.
+    * Data half: one file written by the INSERT kernel
+      (:func:`_write_data_files_direct`) with its bounds computed in
+      the task; no rows, no file.
+
+    Returns (snapshot_id, rows deleted, rows added, version); when both
+    halves are empty nothing is committed and snapshot_id is None."""
+    import pyarrow.parquet as pq
+
+    meta_dir = os.path.join(path, "metadata")
+    data_dir = os.path.join(path, "data")
+    os.makedirs(data_dir, exist_ok=True)
+    snapshot_id = _new_snapshot_id()
     seq = prev_meta.get("last-sequence-number", 0) + 1
-    mf_entries, n_dvs = _dv_manifests(
-        path, prev_meta, prev_list, pos_rows, existing_dvs, snapshot_id, seq
-    )
+    spec_id = prev_meta.get("default-spec-id", 0)
+    v3 = int(prev_meta.get("format-version", 2)) >= 3
+    mf_entries = list(prev_list)
+    n_del = n_dvs = 0
+    if dels is not None and v3:
+        pos_rows = dels.collect()
+        n_del = len(pos_rows)
+        if n_del:
+            mf_entries, n_dvs = _dv_manifests(
+                path, prev_meta, prev_list, pos_rows, existing_dvs,
+                snapshot_id, seq,
+            )
+    elif dels is not None:
+        part, staging = _stage_one_parquet(
+            dels.coalesce(1).sortWithinPartitions("file_path", "pos"),
+            path, "del",
+        )
+        n_del = pq.ParquetFile(part).metadata.num_rows if part else 0
+        if n_del:
+            dpath = os.path.join(
+                data_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex}.parquet"
+            )
+            os.replace(part, dpath)
+            mf_entries.append(
+                _write_manifest(
+                    os.path.join(meta_dir, f"man-del-{snapshot_id}.avro"),
+                    _manifest_entry_schema([]),
+                    [
+                        _added_entry(
+                            snapshot_id, 1, dpath, n_del,
+                            os.path.getsize(dpath),
+                        )
+                    ],
+                    spec_id, 1, seq, snapshot_id,
+                )
+            )
+        shutil.rmtree(staging, ignore_errors=True)
+    added = []
+    if adds is not None:
+        added = _write_data_files_direct(
+            adds.coalesce(1), len(adds.columns), data_dir, snapshot_id,
+            _schema_fields(prev_meta), "snappy",
+        )
+    n_add = sum(rows for _k, _dst, rows, *_rest in added)
+    if not n_del and not n_add:
+        return None, 0, 0, prev_version
+    if added:
+        mf_entries.append(
+            _write_manifest(
+                os.path.join(meta_dir, f"man-{snapshot_id}.avro"),
+                _manifest_entry_schema([]),
+                [
+                    _added_entry(snapshot_id, 0, dst, rows, size, lo, up)
+                    for _k, dst, rows, size, lo, up in added
+                ],
+                spec_id, 0, seq, snapshot_id,
+            )
+        )
+    summary = {"operation": operation}
+    if operation == "delete":
+        summary.update(
+            {
+                "added-delete-files": "1",
+                **({"added-dvs": str(n_dvs)} if v3 else {}),
+                "added-position-deletes": str(n_del),
+                "deleted-records": str(n_del),
+            }
+        )
     version = _publish_snapshot(
-        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
-        {
-            "operation": "delete",
-            "added-delete-files": "1",
-            "added-dvs": str(n_dvs),
-            "added-position-deletes": str(n_del),
-            "deleted-records": str(n_del),
-        },
+        path, prev_meta, prev_version, snapshot_id, mf_entries, seq, summary
     )
-    return {
-        "snapshot_id": snapshot_id,
-        "rows_deleted": n_del,
-        "version": version,
-    }
+    return snapshot_id, n_del, n_add, version
 
 
 def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
     """``DELETE FROM <iceberg table> [WHERE cond]`` as a MERGE-ON-READ
-    commit (Iceberg v2 position deletes, spec §position-delete-files):
-    matched VISIBLE rows are recorded as (file_path, pos) in a
-    position-delete parquet file referenced by a ``content=1`` delete
-    manifest; no data file rewrites.  This is the other half of the
+    commit (Iceberg v2 position deletes, spec §position-delete-files;
+    deletion vectors on a format-version-3 table): matched VISIBLE rows
+    are recorded as (file_path, pos) by :func:`_commit_row_delta`; no
+    data file rewrites.  This is the other half of the
     write-amplification trade vs the Delta writer's copy-on-write
     DELETE (sources/delta_write.delete_delta): merge-on-read commits
     O(matched rows) instead of rewriting touched files, and readers
@@ -2071,8 +2140,8 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
     closes end-to-end with zero external dependencies.
 
     SQL three-valued logic: NULL-predicate rows are NOT matched.
-    Rows already deleted by prior position-delete files are invisible
-    to the predicate (no double-count).  A missing WHERE deletes every
+    Rows already deleted by prior delete files are invisible to the
+    predicate (no double-count).  A missing WHERE deletes every
     visible row.  Returns {"snapshot_id", "rows_deleted", "version"};
     matching nothing returns rows_deleted=0 WITHOUT committing a
     snapshot.  Reference scope: the reference FDW is read-only —
@@ -2080,32 +2149,21 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
-
-    meta_dir = os.path.join(path, "metadata")
-    prev_version, prev_meta = _latest_metadata(meta_dir)
+    prev_version, prev_meta = _latest_metadata(os.path.join(path, "metadata"))
     if prev_meta is None:
         raise UnsupportedFormat(f"DELETE target is not an iceberg table: {path}")
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
-    data_seq, existing_pos_deletes, existing_eq_deletes, existing_dvs = (
-        _scan_snapshot_files(prev_list, with_dvs=True)
+    prev_list = _current_manifests(prev_meta)
+    data_seq, pos_deletes, eq_deletes, existing_dvs = _scan_snapshot_files(
+        prev_list, with_dvs=True
     )
     if not data_seq:
         return {"snapshot_id": None, "rows_deleted": 0, "version": prev_version}
-
-    # mergeSchema: an EVOLVED table's older files lack added columns —
-    # the union schema surfaces them as NULL there, and three-valued
-    # logic then correctly leaves those rows unmatched (a raw read
-    # would bind one footer's schema and fail to resolve the column).
-    # _visible_target also applies EQUALITY deletes under the sequence
-    # rule — the predicate must never match an eq-deleted row.
+    # the target is every VISIBLE row under the current schema: older
+    # files of an evolved table surface added columns as NULL (so
+    # three-valued logic leaves them unmatched), and equality deletes
+    # apply under the sequence rule
     tgt = _visible_target(
-        spark, data_seq, existing_pos_deletes, existing_eq_deletes,
+        spark, data_seq, pos_deletes, eq_deletes,
         meta=prev_meta,
         part_proj=_adoption_projection(prev_meta, prev_list),
         dv_entries=existing_dvs,
@@ -2114,89 +2172,11 @@ def delete_iceberg(spark, path: str, where: str | None = None) -> dict:
     dels = tgt.filter(F.coalesce(match, F.lit(False))).select(
         F.col("_ifile").alias("file_path"), F.col("_ipos").alias("pos")
     )
-    if int(prev_meta.get("format-version", 2)) >= 3:
-        # v3: position deletes are DELETION VECTORS — new position-
-        # delete files are forbidden by the spec
-        return _commit_dv_delete(
-            path, prev_meta, prev_version, prev_list, dels, existing_dvs
-        )
-    # position-delete files must sort by (file_path, pos) per spec
-    staging = os.path.join(
-        os.path.dirname(path.rstrip("/")) or ".",
-        f"_ice_del-{uuid.uuid4().hex}",
+    snapshot_id, n_del, _n_add, version = _commit_row_delta(
+        path, prev_meta, prev_version, prev_list, existing_dvs, dels, None,
+        "delete",
     )
-    dels.coalesce(1).sortWithinPartitions("file_path", "pos").write.mode(
-        "overwrite"
-    ).parquet(staging)
-    part = next(
-        (
-            os.path.join(r, n)
-            for r, _d, ns in os.walk(staging)
-            for n in sorted(ns)
-            if n.endswith(".parquet")
-        ),
-        None,
-    )
-    import pyarrow.parquet as _pq
-
-    n_del = _pq.ParquetFile(part).metadata.num_rows if part else 0
-    if not n_del:
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"snapshot_id": None, "rows_deleted": 0, "version": prev_version}
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    dpath = os.path.join(
-        data_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex}.parquet"
-    )
-    os.replace(part, dpath)
-    shutil.rmtree(staging, ignore_errors=True)
-
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    manifest = os.path.join(meta_dir, f"man-del-{snapshot_id}.avro")
-    write_container(
-        _manifest_entry_schema([]),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": dpath,
-                    "file_format": "PARQUET",
-                    "record_count": n_del,
-                    "file_size_in_bytes": os.path.getsize(dpath),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ],
-        manifest,
-    )
-    mf_entries = list(prev_list) + [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 1,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        }
-    ]
-    version = _publish_snapshot(
-        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
-        {
-            "operation": "delete",
-            "added-delete-files": "1",
-            "added-position-deletes": str(n_del),
-            "deleted-records": str(n_del),
-        },
-    )
-    return {
-        "snapshot_id": snapshot_id,
-        "rows_deleted": int(n_del),
-        "version": version,
-    }
+    return {"snapshot_id": snapshot_id, "rows_deleted": n_del, "version": version}
 
 
 def compact_iceberg(spark, path: str) -> dict:
@@ -2216,11 +2196,8 @@ def compact_iceberg(spark, path: str) -> dict:
     Returns {"snapshot_id", "files_rewritten", "files_untouched",
     "deletes_dropped", "version"} (no-op: snapshot_id None).
     """
-    import time as _time
-
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg import (
         _delete_key_py,
         _pos_deletes,
@@ -2232,12 +2209,7 @@ def compact_iceberg(spark, path: str) -> dict:
     prev_version, prev_meta = _latest_metadata(meta_dir)
     if prev_meta is None:
         raise UnsupportedFormat(f"compact target is not an iceberg table: {path}")
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
+    prev_list = _current_manifests(prev_meta)
     entry_schema = None
     data_entries: list[dict] = []
     data_seq_of: dict[str, int] = {}
@@ -2335,14 +2307,11 @@ def compact_iceberg(spark, path: str) -> dict:
     for e in data_entries:
         (affected if _delete_key_py(e["data_file"]["file_path"]) in affected_keys
          else untouched).append(e)
-    fields = next(
-        s for s in prev_meta.get("schemas", [])
-        if s.get("schema-id") == prev_meta.get("current-schema-id", 0)
-    )["fields"]
+    fields = _schema_fields(prev_meta)
     colnames = [f["name"] for f in fields]
 
     new_entries: list[dict] = []
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
     if affected:
         # per-source-file tuple index rides a synthetic dir column so
         # ONE distributed write regroups rows under their partition
@@ -2388,29 +2357,16 @@ def compact_iceberg(spark, path: str) -> dict:
                 "snappy",
             )
         ):
-            pt = int(parts[0])
-            rec = {
-                "content": 0,
-                "file_path": dst,
-                "file_format": "PARQUET",
-                "record_count": rows,
-                "file_size_in_bytes": size,
-                "lower_bounds": lowers or None,
-                "upper_bounds": uppers or None,
-            }
-            src_rec = affected[pt]["data_file"]
-            if "partition" in src_rec and src_rec["partition"] is not None:
-                rec["partition"] = src_rec["partition"]
             new_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "data_file": rec,
-                }
+                _added_entry(
+                    snapshot_id, 0, dst, rows, size, lowers, uppers,
+                    partition=affected[int(parts[0])]["data_file"].get(
+                        "partition"
+                    ),
+                )
             )
 
     seq = prev_meta.get("last-sequence-number", 0) + 1
-    manifest = os.path.join(meta_dir, f"man-compact-{snapshot_id}.avro")
     # Iceberg v2 spec: entries CARRIED into a rewritten manifest are
     # status=0 EXISTING and keep their ORIGINAL snapshot_id AND their
     # ORIGINAL data sequence number explicitly (inheritance applies
@@ -2427,87 +2383,39 @@ def compact_iceberg(spark, path: str) -> dict:
     ]
     for e in new_entries:
         e["sequence_number"] = seq
-    write_container(entry_schema, carried + new_entries, manifest)
     mf_entries = [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        }
+        _write_manifest(
+            os.path.join(meta_dir, f"man-compact-{snapshot_id}.avro"),
+            entry_schema,
+            carried + new_entries,
+            prev_meta.get("default-spec-id", 0), 0, seq, snapshot_id,
+        )
     ]
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
-    write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
-    now_ms = int(_time.time() * 1000)
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(prev_meta.get("snapshots", [])) + [
+    # spec-required operation + the count fields external clients
+    # expect on a replace (all values are strings)
+    version = _publish_snapshot(
+        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
         {
-            "snapshot-id": snapshot_id,
-            "manifest-list": mlist,
-            "timestamp-ms": now_ms,
-            "sequence-number": seq,
-            # parent = the head this commit replaces — required for
-            # lineage walks (WAP fast-forward divergence refusal, the
-            # streaming source's main-lineage filter)
-            **(
-                {"parent-snapshot-id": prev_meta["current-snapshot-id"]}
-                if prev_meta.get("current-snapshot-id") not in (None, -1)
-                else {}
+            "operation": "replace",
+            "added-data-files": str(len(new_entries)),
+            "deleted-data-files": str(len(affected)),
+            "removed-delete-files": str(n_delete_files),
+            "total-data-files": str(len(untouched) + len(new_entries)),
+            "total-delete-files": "0",
+            "added-records": str(
+                sum(
+                    int(e["data_file"].get("record_count") or 0)
+                    for e in new_entries
+                )
             ),
-            # spec-required operation + the count fields external
-            # clients expect on a replace (all values are strings)
-            "summary": {
-                "operation": "replace",
-                "added-data-files": str(len(new_entries)),
-                "deleted-data-files": str(len(affected)),
-                "removed-delete-files": str(n_delete_files),
-                "total-data-files": str(len(untouched) + len(new_entries)),
-                "total-delete-files": "0",
-                "added-records": str(
-                    sum(
-                        int(e["data_file"].get("record_count") or 0)
-                        for e in new_entries
-                    )
-                ),
-                "total-records": str(
-                    sum(
-                        int(e["data_file"].get("record_count") or 0)
-                        for e in untouched + new_entries
-                    )
-                ),
-            },
-        }
-    ]
-    meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
-        {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+            "total-records": str(
+                sum(
+                    int(e["data_file"].get("record_count") or 0)
+                    for e in untouched + new_entries
+                )
+            ),
+        },
+    )
     return {
         "snapshot_id": snapshot_id,
         "files_rewritten": len(affected),
@@ -2521,212 +2429,83 @@ def update_iceberg(
     spark, path: str, set_map: dict[str, str], where: str | None = None
 ) -> dict:
     """``UPDATE <iceberg table> SET col = expr[, …] [WHERE cond]`` as
-    ONE merge-on-read snapshot: matched VISIBLE rows become position
-    deletes AND their updated images append as new data files — both
-    manifests commit atomically in a single metadata version, so a
-    reader never observes the half-updated state a delete-then-append
-    pair would expose.  SET expressions evaluate against the OLD row
-    (SQL UPDATE semantics, parallel assignment); NULL predicates match
-    nothing (three-valued logic).  Unpartitioned tables only — new
-    rows for a partitioned spec need the write-side transform
-    machinery; use the Delta writer's copy-on-write UPDATE or an
-    overwrite there (clear error says so).  Returns {"snapshot_id",
-    "rows_updated", "version"}; matching nothing commits nothing."""
+    ONE merge-on-read snapshot (:func:`_commit_row_delta`): matched
+    VISIBLE rows are deleted (a position-delete file, or deletion
+    vectors on a format-version-3 table) AND their updated images
+    append as one new data file — both halves commit atomically in a
+    single metadata version, so a reader never observes the
+    half-updated state a delete-then-append pair would expose.  SET
+    expressions evaluate against the OLD row (SQL UPDATE semantics,
+    parallel assignment); NULL predicates match nothing (three-valued
+    logic).  Unpartitioned tables only — new rows for a partitioned
+    spec need the write-side transform machinery; use the Delta
+    writer's copy-on-write UPDATE or an overwrite there (clear error
+    says so).  Returns {"snapshot_id", "rows_updated", "version"};
+    matching nothing commits nothing."""
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg import _ice_to_spark_type
 
-    meta_dir = os.path.join(path, "metadata")
-    prev_version, prev_meta = _latest_metadata(meta_dir)
+    prev_version, prev_meta = _latest_metadata(os.path.join(path, "metadata"))
     if prev_meta is None:
         raise UnsupportedFormat(f"UPDATE target is not an iceberg table: {path}")
-    spec = next(
-        (
-            sp
-            for sp in prev_meta.get("partition-specs", [])
-            if sp.get("spec-id") == prev_meta.get("default-spec-id", 0)
-        ),
-        {"fields": []},
-    )
-    if spec.get("fields"):
+    if _default_spec_fields(prev_meta):
         raise UnsupportedFormat(
             "update_iceberg supports UNPARTITIONED tables; partitioned "
             "targets need write-side transforms for the new rows — use "
             "the Delta writer's copy-on-write UPDATE or an overwrite"
         )
-    if int(prev_meta.get("format-version", 2)) >= 3:
-        raise UnsupportedFormat(
-            "UPDATE on a format-version-3 table is not supported by "
-            "this writer yet (v3 forbids new position-delete files; "
-            "the update's delete half must be a deletion vector) — "
-            "use upsert_iceberg_eq (equality deletes are v3-legal) or "
-            "DELETE + append"
-        )
-    fields = next(
-        s for s in prev_meta.get("schemas", [])
-        if s.get("schema-id") == prev_meta.get("current-schema-id", 0)
-    )["fields"]
+    fields = _schema_fields(prev_meta)
     colnames = [f["name"] for f in fields]
     bad = [c for c in set_map if c not in colnames]
     if bad:
         raise UnsupportedFormat(f"UPDATE: unknown column(s) {bad}")
+    # only SET targets cast (to the column's declared type); untouched
+    # columns pass through AS-IS — casting them through a string
+    # fallback would corrupt nested types
+    upd_cols = []
+    for f in fields:
+        c = f["name"]
+        if c not in set_map:
+            upd_cols.append(F.col(c))
+            continue
+        t = _ice_to_spark_type(f["type"])
+        if t is None:
+            raise UnsupportedFormat(
+                f"UPDATE: column {c!r} has a nested type — unsupported "
+                "as a SET target"
+            )
+        upd_cols.append(F.expr(set_map[c]).cast(t).alias(c))
 
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
-    data_seq, existing_pos_deletes, existing_eq_deletes = (
-        _scan_snapshot_files(prev_list)
+    prev_list = _current_manifests(prev_meta)
+    data_seq, pos_deletes, eq_deletes, existing_dvs = _scan_snapshot_files(
+        prev_list, with_dvs=True
     )
     if not data_seq:
         return {"snapshot_id": None, "rows_updated": 0, "version": prev_version}
-
     # eq-aware visibility: see delete_iceberg (sequence-rule anti-join)
     tgt = _visible_target(
-        spark, data_seq, existing_pos_deletes, existing_eq_deletes,
+        spark, data_seq, pos_deletes, eq_deletes,
         meta=prev_meta,
         part_proj=_adoption_projection(prev_meta, prev_list),
+        dv_entries=existing_dvs,
     )
     match = F.expr(where) if where is not None else F.lit(True)
+    # both halves read the matched rows: scan and filter once
     matched = tgt.filter(F.coalesce(match, F.lit(False))).persist()
     try:
-        # only SET targets cast (to the column's declared type);
-        # untouched columns pass through AS-IS — casting them through a
-        # string fallback would corrupt nested types
-        upd_cols = []
-        for c in colnames:
-            if c in set_map:
-                t = _ice_to_spark_type(
-                    next(f["type"] for f in fields if f["name"] == c)
-                )
-                if t is None:
-                    raise UnsupportedFormat(
-                        f"UPDATE: column {c!r} has a nested type — "
-                        "unsupported as a SET target"
-                    )
-                upd_cols.append(F.expr(set_map[c]).cast(t).alias(c))
-            else:
-                upd_cols.append(F.col(c))
-        updated = matched.select(*upd_cols)
-        dels = matched.select(
-            F.col("_ifile").alias("file_path"), F.col("_ipos").alias("pos")
-        )
-        staging = os.path.join(
-            os.path.dirname(path.rstrip("/")) or ".",
-            f"_ice_upd-{uuid.uuid4().hex}",
-        )
-        dels.coalesce(1).sortWithinPartitions("file_path", "pos").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(staging, "del"))
-        updated.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(staging, "add")
+        snapshot_id, n_upd, _n_add, version = _commit_row_delta(
+            path, prev_meta, prev_version, prev_list, existing_dvs,
+            matched.select(
+                F.col("_ifile").alias("file_path"),
+                F.col("_ipos").alias("pos"),
+            ),
+            matched.select(*upd_cols),
+            "overwrite",
         )
     finally:
         matched.unpersist()
-    import pyarrow.parquet as _pq
-
-    def _one_part(sub):
-        for root, _d, ns in os.walk(os.path.join(staging, sub)):
-            for nme in sorted(ns):
-                if nme.endswith(".parquet"):
-                    return os.path.join(root, nme)
-        return None
-
-    dpart, apart = _one_part("del"), _one_part("add")
-    n_upd = _pq.ParquetFile(dpart).metadata.num_rows if dpart else 0
-    if not n_upd:
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"snapshot_id": None, "rows_updated": 0, "version": prev_version}
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    dpath = os.path.join(
-        data_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex}.parquet"
-    )
-    apath = os.path.join(
-        data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
-    )
-    os.replace(dpart, dpath)
-    os.replace(apart, apath)
-    shutil.rmtree(staging, ignore_errors=True)
-
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    del_manifest = os.path.join(meta_dir, f"man-del-{snapshot_id}.avro")
-    write_container(
-        _manifest_entry_schema([]),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": dpath,
-                    "file_format": "PARQUET",
-                    "record_count": n_upd,
-                    "file_size_in_bytes": os.path.getsize(dpath),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ],
-        del_manifest,
-    )
-    lowers, uppers, a_rows, a_size = None, None, n_upd, os.path.getsize(apath)
-    try:
-        lo, up, a_rows = _file_bounds(apath, fields)
-        lowers, uppers = lo or None, up or None
-    except Exception:
-        pass
-    add_manifest = os.path.join(meta_dir, f"man-{snapshot_id}.avro")
-    write_container(
-        _manifest_entry_schema([]),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": apath,
-                    "file_format": "PARQUET",
-                    "record_count": a_rows,
-                    "file_size_in_bytes": a_size,
-                    "lower_bounds": lowers,
-                    "upper_bounds": uppers,
-                },
-            }
-        ],
-        add_manifest,
-    )
-    mf_entries = list(prev_list) + [
-        {
-            "manifest_path": del_manifest,
-            "manifest_length": os.path.getsize(del_manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 1,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        },
-        {
-            "manifest_path": add_manifest,
-            "manifest_length": os.path.getsize(add_manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        },
-    ]
-    version = _publish_snapshot(
-        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
-        {"operation": "overwrite"},
-    )
-    return {
-        "snapshot_id": snapshot_id,
-        "rows_updated": int(n_upd),
-        "version": version,
-    }
+    return {"snapshot_id": snapshot_id, "rows_updated": n_upd, "version": version}
 
 
 def _schema_fields(prev_meta: dict) -> list[dict]:
@@ -2835,7 +2614,10 @@ def _stage_upsert_parts(
 
         if repo_root not in _sys.path:
             _sys.path.insert(0, repo_root)
-        from pg_analytics_spark.sources.arrow_part import resolve
+        from pg_analytics_spark.sources.arrow_part import (
+            resolve,
+            stat_columns,
+        )
 
         _file_bounds = resolve(bounds_ref)
 
@@ -2844,18 +2626,17 @@ def _stage_upsert_parts(
         key_part = _os.path.join(staging, f"keys-{tag}.parquet")
         writer = None
         kparts = []
-        n_rows = 0
         for b in batches:
             if b.num_rows == 0:
                 continue
             t = _pa.Table.from_batches([b])
             if writer is None:
                 writer = _pq.ParquetWriter(
-                    add_part + ".tmp", t.schema, compression="snappy"
+                    add_part + ".tmp", t.schema, compression="snappy",
+                    write_statistics=stat_columns(t.schema),
                 )
             writer.write_table(t)
             kparts.append(t.select(kcols))
-            n_rows += t.num_rows
         if writer is None:
             return
         writer.close()
@@ -2871,12 +2652,7 @@ def _stage_upsert_parts(
         kt = kt.group_by(kcols).aggregate([])
         _pq.write_table(kt, key_part + ".tmp", compression="snappy")
         _os.replace(key_part + ".tmp", key_part)
-        lowers, uppers, a_rows = None, None, n_rows
-        try:
-            lo, up, a_rows = _file_bounds(add_part, fields)
-            lowers, uppers = lo or None, up or None
-        except Exception:
-            pass
+        lowers, uppers, a_rows = _file_bounds(add_part, fields)
         yield _pa.RecordBatch.from_pydict(
             {
                 "add": [add_part],
@@ -2936,8 +2712,6 @@ def equality_delete_iceberg(
     — additive parity-plus, the MoR twin of Delta CDC upserts."""
     import pyarrow.parquet as _pq
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
-
     meta_dir = os.path.join(path, "metadata")
     prev_version, prev_meta = _latest_metadata(meta_dir)
     if prev_meta is None:
@@ -2954,13 +2728,8 @@ def equality_delete_iceberg(
     if not n_keys:
         shutil.rmtree(staging, ignore_errors=True)
         return {"snapshot_id": None, "keys_deleted": 0, "version": prev_version}
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    prev_list = _current_manifests(prev_meta)
+    snapshot_id = _new_snapshot_id()
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
     dpath = os.path.join(
@@ -2969,36 +2738,18 @@ def equality_delete_iceberg(
     os.replace(part, dpath)
     shutil.rmtree(staging, ignore_errors=True)
     seq = prev_meta.get("last-sequence-number", 0) + 1
-    manifest = os.path.join(meta_dir, f"man-eqdel-{snapshot_id}.avro")
-    write_container(
-        _eq_manifest_entry_schema(),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,
-                    "file_path": dpath,
-                    "equality_ids": eq_ids,
-                    "file_format": "PARQUET",
-                    "record_count": n_keys,
-                    "file_size_in_bytes": os.path.getsize(dpath),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ],
-        manifest,
-    )
     mf_entries = list(prev_list) + [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 1,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        }
+        _write_manifest(
+            os.path.join(meta_dir, f"man-eqdel-{snapshot_id}.avro"),
+            _eq_manifest_entry_schema(),
+            [
+                _added_entry(
+                    snapshot_id, 2, dpath, n_keys, os.path.getsize(dpath),
+                    equality_ids=eq_ids,
+                )
+            ],
+            prev_meta.get("default-spec-id", 0), 1, seq, snapshot_id,
+        )
     ]
     version = _publish_snapshot(
         path,
@@ -3040,22 +2791,13 @@ def upsert_iceberg_eq(spark, path: str, source, key_cols: list[str]) -> dict:
     "rows_upserted", "version"}."""
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg import _ice_to_spark_type
 
     meta_dir = os.path.join(path, "metadata")
     prev_version, prev_meta = _latest_metadata(meta_dir)
     if prev_meta is None:
         raise UnsupportedFormat(f"upsert target is not an iceberg table: {path}")
-    spec = next(
-        (
-            sp
-            for sp in prev_meta.get("partition-specs", [])
-            if sp.get("spec-id") == prev_meta.get("default-spec-id", 0)
-        ),
-        {"fields": []},
-    )
-    if spec.get("fields"):
+    if _default_spec_fields(prev_meta):
         raise UnsupportedFormat(
             "upsert_iceberg_eq supports UNPARTITIONED tables; partitioned "
             "targets need write-side transforms for the new rows"
@@ -3067,7 +2809,7 @@ def upsert_iceberg_eq(spark, path: str, source, key_cols: list[str]) -> dict:
         raise UnsupportedFormat(
             f"upsert source is missing table column(s) {missing}"
         )
-    key_exprs, eq_ids = _key_exprs(fields, list(key_cols), "upsert")
+    _key, eq_ids = _key_exprs(fields, list(key_cols), "upsert")
     conform = []
     for f in fields:
         t = _ice_to_spark_type(f["type"])
@@ -3097,13 +2839,8 @@ def upsert_iceberg_eq(spark, path: str, source, key_cols: list[str]) -> dict:
             f"{n_keys} distinct {key_cols}): reduce to one change per "
             "key first (e.g. streaming.cdc_upsert.latest_per_key)"
         )
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    prev_list = _current_manifests(prev_meta)
+    snapshot_id = _new_snapshot_id()
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
     dpath = os.path.join(
@@ -3119,66 +2856,26 @@ def upsert_iceberg_eq(spark, path: str, source, key_cols: list[str]) -> dict:
         adds_final.append((apath, a_rows, a_size, lowers, uppers))
     shutil.rmtree(staging, ignore_errors=True)
     seq = prev_meta.get("last-sequence-number", 0) + 1
-    del_manifest = os.path.join(meta_dir, f"man-eqdel-{snapshot_id}.avro")
-    write_container(
-        _eq_manifest_entry_schema(),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,
-                    "file_path": dpath,
-                    "equality_ids": eq_ids,
-                    "file_format": "PARQUET",
-                    "record_count": n_keys,
-                    "file_size_in_bytes": os.path.getsize(dpath),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ],
-        del_manifest,
-    )
-    add_manifest = os.path.join(meta_dir, f"man-{snapshot_id}.avro")
+    spec_id = prev_meta.get("default-spec-id", 0)
     total_added = sum(a_rows for _p, a_rows, _sz, _lo, _up in adds_final)
-    write_container(
-        _manifest_entry_schema([]),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": apath,
-                    "file_format": "PARQUET",
-                    "record_count": a_rows,
-                    "file_size_in_bytes": a_size,
-                    "lower_bounds": lowers,
-                    "upper_bounds": uppers,
-                },
-            }
-            for apath, a_rows, a_size, lowers, uppers in adds_final
-        ],
-        add_manifest,
-    )
     mf_entries = list(prev_list) + [
-        {
-            "manifest_path": del_manifest,
-            "manifest_length": os.path.getsize(del_manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 1,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        },
-        {
-            "manifest_path": add_manifest,
-            "manifest_length": os.path.getsize(add_manifest),
-            "partition_spec_id": prev_meta.get("default-spec-id", 0),
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        },
+        _write_manifest(
+            os.path.join(meta_dir, f"man-eqdel-{snapshot_id}.avro"),
+            _eq_manifest_entry_schema(),
+            [
+                _added_entry(
+                    snapshot_id, 2, dpath, n_keys, os.path.getsize(dpath),
+                    equality_ids=eq_ids,
+                )
+            ],
+            spec_id, 1, seq, snapshot_id,
+        ),
+        _write_manifest(
+            os.path.join(meta_dir, f"man-{snapshot_id}.avro"),
+            _manifest_entry_schema([]),
+            [_added_entry(snapshot_id, 0, *add) for add in adds_final],
+            spec_id, 0, seq, snapshot_id,
+        ),
     ]
     version = _publish_snapshot(
         path,
@@ -3244,20 +2941,13 @@ def rewrite_manifests_iceberg(path: str, *, min_group: int = 2) -> dict:
     Returns {"snapshot_id", "manifests_before", "manifests_after",
     "version"} (no-op when nothing consolidates: snapshot_id None).
     """
-    from pg_analytics_spark.sources.avro import read_container, write_container
-
     meta_dir = os.path.join(path, "metadata")
     prev_version, prev_meta = _latest_metadata(meta_dir)
     if prev_meta is None:
         raise UnsupportedFormat(
             f"rewrite_manifests target is not an iceberg table: {path}"
         )
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
+    prev_list = _current_manifests(prev_meta)
     groups: dict[int, list[dict]] = {}
     keep_mf: list[dict] = []
     for m in prev_list:
@@ -3272,7 +2962,7 @@ def rewrite_manifests_iceberg(path: str, *, min_group: int = 2) -> dict:
             "manifests_after": len(prev_list),
             "version": prev_version,
         }
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
     seq = prev_meta.get("last-sequence-number", 0) + 1
     new_mf: list[dict] = []
     n_entries = 0
@@ -3299,22 +2989,16 @@ def rewrite_manifests_iceberg(path: str, *, min_group: int = 2) -> dict:
                         ),
                     }
                 )
-        manifest = os.path.join(
-            meta_dir, f"man-rewrite-{snapshot_id}-{spec_id}.avro"
-        )
-        write_container(
-            _entry_schema_with_seq(entry_schema), merged, manifest
-        )
         n_entries += len(merged)
         new_mf.append(
-            {
-                "manifest_path": manifest,
-                "manifest_length": os.path.getsize(manifest),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
+            _write_manifest(
+                os.path.join(
+                    meta_dir, f"man-rewrite-{snapshot_id}-{spec_id}.avro"
+                ),
+                _entry_schema_with_seq(entry_schema),
+                merged,
+                spec_id, 0, seq, snapshot_id,
+            )
         )
     new_mf.extend(keep_mf)
     version = _publish_snapshot(
@@ -3399,11 +3083,7 @@ def rewrite_data_files_iceberg(
     Returns {"snapshot_id", "files_rewritten", "files_added",
     "files_untouched", "version"}; nothing to pack returns
     snapshot_id None."""
-    import time as _time
-
     from pyspark.sql import functions as F
-
-    from pg_analytics_spark.sources.avro import read_container, write_container
 
     if strategy not in ("binpack", "sort", "zorder"):
         raise ValueError(
@@ -3424,12 +3104,7 @@ def rewrite_data_files_iceberg(
         raise UnsupportedFormat(
             f"rewrite_data_files target is not an iceberg table: {path}"
         )
-    prev_snap = next(
-        s
-        for s in prev_meta["snapshots"]
-        if s["snapshot-id"] == prev_meta["current-snapshot-id"]
-    )
-    _s, prev_list = read_container(prev_snap["manifest-list"])
+    prev_list = _current_manifests(prev_meta)
     # walk: data entries with resolved seqs; delete files for the
     # visible-row rewrite scan; per-manifest bookkeeping for carries
     data_seq_of: dict[str, int] = {}
@@ -3540,11 +3215,7 @@ def rewrite_data_files_iceberg(
     # applied), regrouped under a synthetic bin column so the whole
     # rewrite is ONE distributed write; repartition on the bin keeps
     # each bin in one task → exactly one output file per bin
-    fields = next(
-        s
-        for s in prev_meta.get("schemas", [])
-        if s.get("schema-id") == prev_meta.get("current-schema-id", 0)
-    )["fields"]
+    fields = _schema_fields(prev_meta)
     colnames = [f["name"] for f in fields]
     if cluster_cols:
         missing = [c for c in cluster_cols if c not in colnames]
@@ -3553,7 +3224,7 @@ def rewrite_data_files_iceberg(
                 f"rewrite_data_files: clustering columns {missing} not "
                 f"in the current schema {colnames}"
             )
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
     part_proj = _adoption_projection(prev_meta, prev_list)
     data_dir = os.path.join(path, "data")
     os.makedirs(data_dir, exist_ok=True)
@@ -3651,26 +3322,13 @@ def rewrite_data_files_iceberg(
     new_by_spec: dict[int, list[dict]] = {}
     n_added = 0
     for b, dst, rows, size, lowers, uppers in written:
-        rec = {
-            "content": 0,
-            "file_path": dst,
-            "file_format": "PARQUET",
-            "record_count": rows,
-            "file_size_in_bytes": size,
-            "lower_bounds": lowers or None,
-            "upper_bounds": uppers or None,
-        }
         spec_id, bin_entries = bins[b]
-        src_rec = bin_entries[0]["data_file"]
-        if "partition" in src_rec and src_rec["partition"] is not None:
-            rec["partition"] = src_rec["partition"]
+        entry = _added_entry(
+            snapshot_id, 0, dst, rows, size, lowers, uppers,
+            partition=bin_entries[0]["data_file"].get("partition"),
+        )
         new_by_spec.setdefault(spec_id, []).append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "data_file": rec,
-            }
+            {**entry, "sequence_number": seq}
         )
         n_added += 1
 
@@ -3701,41 +3359,27 @@ def rewrite_data_files_iceberg(
         n_untouched += len(survivors)
         if not survivors:
             continue
-        mpath = os.path.join(
-            meta_dir,
-            f"man-rwsurv-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro",
-        )
-        write_container(
-            _entry_schema_with_seq(schema_m), survivors, mpath
-        )
         new_mf.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": m.get("partition_spec_id", 0),
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
+            _write_manifest(
+                os.path.join(
+                    meta_dir,
+                    f"man-rwsurv-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro",
+                ),
+                _entry_schema_with_seq(schema_m),
+                survivors,
+                m.get("partition_spec_id", 0), 0, seq, snapshot_id,
+            )
         )
     for spec_id in sorted(new_by_spec):
-        add_manifest = os.path.join(
-            meta_dir, f"man-rwadd-{snapshot_id}-{spec_id}.avro"
-        )
-        write_container(
-            _entry_schema_with_seq(schema_of_spec[spec_id]),
-            new_by_spec[spec_id],
-            add_manifest,
-        )
         new_mf.append(
-            {
-                "manifest_path": add_manifest,
-                "manifest_length": os.path.getsize(add_manifest),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
+            _write_manifest(
+                os.path.join(
+                    meta_dir, f"man-rwadd-{snapshot_id}-{spec_id}.avro"
+                ),
+                _entry_schema_with_seq(schema_of_spec[spec_id]),
+                new_by_spec[spec_id],
+                spec_id, 0, seq, snapshot_id,
+            )
         )
     version = _publish_snapshot(
         path,
@@ -3780,11 +3424,22 @@ def remove_orphan_files_iceberg(
     resolvable version never loses a file; ``older_than_hours``
     (default 3 days, the runtime's default) additionally protects
     in-flight writers staging files that are not yet committed.
-    Never follows paths OUTSIDE the table root.  Returns
+    Never follows paths OUTSIDE the table root.
+
+    A metadata JSON, manifest list or manifest that exists but cannot
+    be read raises ``UnsupportedFormat`` naming it, before any file is
+    unlinked: the files it references would otherwise drop out of the
+    referenced set and be deleted.  A manifest list or manifest that
+    no longer exists (an expired snapshot's) is skipped.  Returns
     {"files_deleted", "bytes_deleted", "files_kept"}."""
     import time as _time
 
-    from pg_analytics_spark.sources.avro import read_container
+    def _unreadable(what: str, f: str, e: Exception):
+        return UnsupportedFormat(
+            f"remove_orphan_files: cannot read {what} {f} ({e}); "
+            "refusing to sweep — the files it references would be "
+            "deleted"
+        )
 
     meta_dir = os.path.join(path, "metadata")
     if not os.path.isdir(meta_dir):
@@ -3800,8 +3455,8 @@ def remove_orphan_files_iceberg(
             try:
                 with open(full) as fh:
                     meta = json.load(fh)
-            except (OSError, ValueError):
-                continue
+            except (OSError, ValueError) as e:
+                raise _unreadable("metadata", full, e) from e
             # Puffin statistics files are part of the referenced set —
             # an orphan sweep must never delete a live stats file
             for st in meta.get("statistics", []):
@@ -3814,8 +3469,8 @@ def remove_orphan_files_iceberg(
                 referenced.add(os.path.abspath(ml))
                 try:
                     _s, mlist = read_container(ml)
-                except Exception:
-                    continue
+                except Exception as e:
+                    raise _unreadable("manifest list", ml, e) from e
                 for m in mlist:
                     mp = m["manifest_path"]
                     referenced.add(os.path.abspath(mp))
@@ -3823,8 +3478,8 @@ def remove_orphan_files_iceberg(
                         continue
                     try:
                         _s2, entries = read_container(mp)
-                    except Exception:
-                        continue
+                    except Exception as e:
+                        raise _unreadable("manifest", mp, e) from e
                     for e in entries:
                         # status=2 DELETED entries still name a real
                         # file other snapshots may reference; keep
@@ -4042,29 +3697,7 @@ def expire_iceberg_snapshots(
                 f"internal: expire would dangle ref {_name!r} at "
                 f"{ref.get('snapshot-id')} — retention-root union bug"
             )
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, new_meta, prev_version)
 
     # physical deletion AFTER the commit: a crash mid-delete leaves
     # only orphans (re-expire cleans them), never a broken table
@@ -4150,48 +3783,29 @@ def _mint_adopted_table(
     ]
     files = [p for p, _ in file_tuples]
     per_file = _bounds_for_files(spark, files, fields)
-    entry_schema = _manifest_entry_schema(part_fields)
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
     entries = []
     n_rows = 0
     for f, tup in file_tuples:
         lowers, uppers, rows, size = per_file[f]
         n_rows += rows
-        data_file = {
-            "content": 0,
-            "file_path": f,
-            "file_format": "PARQUET",
-            "record_count": rows,
-            "file_size_in_bytes": size,
-            "lower_bounds": lowers or None,
-            "upper_bounds": uppers or None,
-        }
-        if part_fields:
-            data_file["partition"] = {
-                pf["name"]: (tup or {}).get(pf["name"])
-                for pf in part_fields
-            }
+        part = {pf["name"]: (tup or {}).get(pf["name"]) for pf in part_fields}
         entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": data_file,
-            }
+            _added_entry(
+                snapshot_id, 0, f, rows, size, lowers, uppers,
+                partition=part or None,
+            )
         )
     meta_dir = os.path.join(target_path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
-    manifest = os.path.join(meta_dir, f"man-snapshot-{snapshot_id}.avro")
-    write_container(entry_schema, entries, manifest)
     mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
     mf_entries = [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": 1,
-            "added_snapshot_id": snapshot_id,
-        }
+        _write_manifest(
+            os.path.join(meta_dir, f"man-snapshot-{snapshot_id}.avro"),
+            _manifest_entry_schema(part_fields),
+            entries,
+            0, 0, 1, snapshot_id,
+        )
     ]
     write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
     now_ms = int(time.time() * 1000)
@@ -4239,16 +3853,8 @@ def _mint_adopted_table(
             {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
         ],
     }
-    meta_path = os.path.join(meta_dir, "v1.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write("1")
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
-    return {"files": len(files), "rows": n_rows, "version": 1}
+    version = _publish_metadata_version(target_path, meta, 0)
+    return {"files": len(files), "rows": n_rows, "version": version}
 
 
 def add_iceberg_files(
@@ -4531,29 +4137,7 @@ def fast_forward_iceberg(path: str, branch: str) -> dict:
     meta["snapshot-log"] = list(prev_meta.get("snapshot-log", [])) + [
         {"snapshot-id": sid, "timestamp-ms": meta["last-updated-ms"]}
     ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {"version": version, "snapshot_id": sid}
 
 
@@ -4644,29 +4228,7 @@ def alter_iceberg_refs(
     meta = dict(prev_meta)
     meta["refs"] = refs
     meta["last-updated-ms"] = int(_time.time() * 1000)
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {
         "version": version,
         "name": name,
@@ -4705,29 +4267,7 @@ def rollback_iceberg(spark, path: str, snapshot_id: int) -> dict:
             "timestamp-ms": int(_time.time() * 1000),
         }
     ]
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    version = _publish_metadata_version(path, meta, prev_version)
     return {"rolled_back_to": snapshot_id, "version": version}
 
 
@@ -4740,96 +4280,59 @@ def merge_iceberg(
     target_alias: str = "t",
     source_alias: str = "s",
 ) -> dict:
-    """``MERGE INTO`` for the native Iceberg v2 writer — MERGE-ON-READ:
-    matched rows claimed by UPDATE/DELETE clauses become POSITION
-    DELETES (deletion vectors on a format-version-3 table), updated
-    images and NOT-MATCHED inserts append as new data files, and the
-    delete + add manifests commit atomically in ONE snapshot — a
-    reader never observes a half-merged state.  The target is
-    :func:`_visible_target`, the relation UPDATE and DELETE match.  The
-    write-amplification mirror of :func:`merge_delta`'s copy-on-write:
-    cost is O(matched + inserted rows) with NO data-file rewrites
-    (compact_iceberg later folds the delete debt).  Clause dicts and
-    semantics are merge_delta's exactly — first matching clause wins,
-    a target row matching >1 source row errors, NULL join conditions
-    never match — so `iceberg_merge_roundtrip` can share the delta
-    twin's relational oracle (CoW == MoR, proven at the gate).
-    Unpartitioned tables only (new rows under a partitioned spec need
-    write-side transforms; clear error says so, like update_iceberg).
+    """``MERGE INTO`` for the native Iceberg writer — MERGE-ON-READ,
+    committed by :func:`_commit_row_delta`: matched rows claimed by
+    UPDATE/DELETE clauses become POSITION DELETES (deletion vectors on
+    a format-version-3 table), updated images and NOT-MATCHED inserts
+    append as one new data file, and both halves commit atomically in
+    ONE snapshot — a reader never observes a half-merged state.  The
+    target is :func:`_visible_target`, the relation UPDATE and DELETE
+    match.  The source joins it ONCE (a left join when there are
+    NOT MATCHED clauses); the join is persisted, so the duplicate-match
+    probe, the delete half, the update images and the inserts all read
+    that one join.  The write-amplification mirror of
+    :func:`merge_delta`'s copy-on-write: cost is O(matched + inserted
+    rows) with NO data-file rewrites (compact_iceberg later folds the
+    delete debt).  Clause dicts and semantics are merge_delta's
+    exactly (``merge_clauses``) — first matching clause wins, a target
+    row matching >1 source row errors, NULL join conditions never
+    match — so `iceberg_merge_roundtrip` can share the delta twin's
+    relational oracle (CoW == MoR, proven at the gate).  Unpartitioned
+    tables only (new rows under a partitioned spec need write-side
+    transforms; clear error says so, like update_iceberg).
 
     Returns {"snapshot_id", "rows_written", "rows_deleted",
     "files_added", "files_removed", "version"} (files_removed is
     always 0 — MoR never rewrites).
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, StructType
 
-    from pg_analytics_spark.sources.avro import read_container, write_container
     from pg_analytics_spark.sources.iceberg import _ice_to_spark_type
+    from pg_analytics_spark.sources.merge_clauses import (
+        MergeClauses,
+        refuse_duplicate_matches,
+    )
 
     spark = source.sparkSession
-    meta_dir = os.path.join(path, "metadata")
-    prev_version, prev_meta = _latest_metadata(meta_dir)
+    prev_version, prev_meta = _latest_metadata(os.path.join(path, "metadata"))
     if prev_meta is None:
         raise UnsupportedFormat(f"MERGE target is not an iceberg table: {path}")
-    spec = next(
-        (
-            sp
-            for sp in prev_meta.get("partition-specs", [])
-            if sp.get("spec-id") == prev_meta.get("default-spec-id", 0)
-        ),
-        {"fields": []},
-    )
-    if spec.get("fields"):
+    if _default_spec_fields(prev_meta):
         raise UnsupportedFormat(
             "merge_iceberg supports UNPARTITIONED tables; partitioned "
             "targets need write-side transforms for the new rows — use "
             "the Delta writer's MERGE or an overwrite"
         )
-    fields = next(
-        s for s in prev_meta.get("schemas", [])
-        if s.get("schema-id") == prev_meta.get("current-schema-id", 0)
-    )["fields"]
-    colnames = [f["name"] for f in fields]
-
-    matched_clauses = [c for c in clauses if c["when"] == "matched"]
-    insert_clauses = [c for c in clauses if c["when"] == "not_matched"]
-    if not matched_clauses and not insert_clauses:
-        raise UnsupportedFormat("MERGE needs at least one WHEN clause")
-
-    def _set_map(c, kind):
-        m = c.get("set" if kind == "update" else "values")
-        if m == "all":
-            missing = [x for x in colnames if x not in source.columns]
-            if missing:
-                raise UnsupportedFormat(
-                    f"MERGE {kind.upper()} *: source lacks column(s) "
-                    f"{missing}"
-                )
-            return {x: f"{source_alias}.{x}" for x in colnames}
-        bad = [x for x in m if x not in colnames]
-        if bad:
-            raise UnsupportedFormat(
-                f"MERGE {kind.upper()}: unknown target column(s) {bad}"
-            )
-        return m
+    fields = _schema_fields(prev_meta)
+    types = {f["name"]: _ice_to_spark_type(f["type"]) for f in fields}
+    mc = MergeClauses(clauses, list(types), source.columns, source_alias)
 
     # ---- visible target rows: the same relation UPDATE and DELETE match
-    prev_snap = next(
-        (
-            s
-            for s in prev_meta.get("snapshots", [])
-            if s["snapshot-id"] == prev_meta.get("current-snapshot-id")
-        ),
-        None,
+    prev_list = _current_manifests(prev_meta)
+    data_seq, pos_deletes, eq_deletes, existing_dvs = _scan_snapshot_files(
+        prev_list, with_dvs=True
     )
-    data_seq: dict[str, int] = {}
-    prev_list: list = []
-    existing_dvs: list = []
-    if prev_snap is not None:
-        _s, prev_list = read_container(prev_snap["manifest-list"])
-        data_seq, pos_deletes, eq_deletes, existing_dvs = (
-            _scan_snapshot_files(prev_list, with_dvs=True)
-        )
     if data_seq:
         tgt = _visible_target(
             spark, data_seq, pos_deletes, eq_deletes,
@@ -4838,258 +4341,81 @@ def merge_iceberg(
             dv_entries=existing_dvs,
         )
     else:
-        from pyspark.sql.types import StructType
-
-        sch = StructType()
-        for f in fields:
-            t = _ice_to_spark_type(f["type"])
-            if t is None:
-                raise UnsupportedFormat(
-                    f"MERGE: column {f['name']!r} has a nested type"
-                )
-            sch = sch.add(f["name"], t)
+        nested = [n for n, t in types.items() if t is None]
+        if nested:
+            raise UnsupportedFormat(
+                f"MERGE: column {nested[0]!r} has a nested type"
+            )
         tgt = (
-            local_frame(spark, [], sch)
+            local_frame(
+                spark, [], StructType([StructField(n, t) for n, t in types.items()])
+            )
             .withColumn("_ifile", F.lit(""))
             .withColumn("_ipos", F.lit(0).cast("long"))
         )
 
-    src = source.withColumn("_smark", F.lit(1))
-    cond = F.expr(on)
-
-    def _first_match_idx(clause_list):
-        expr = None
-        for idx, c in enumerate(clause_list):
-            hit = F.lit(True)
-            if c.get("condition"):
-                hit = hit & F.expr(c["condition"])
-            expr = (
-                F.when(hit, F.lit(idx))
-                if expr is None
-                else expr.when(hit, F.lit(idx))
+    t_file = F.col(f"{target_alias}._ifile")
+    t_pos = F.col(f"{target_alias}._ipos")
+    joined = source.alias(source_alias).join(
+        tgt.alias(target_alias),
+        F.expr(on),
+        "left" if mc.not_matched else "inner",
+    )
+    if mc.matched:
+        joined = joined.persist()
+    try:
+        dels, pieces = None, []
+        if mc.matched:
+            hits = joined.filter(t_file.isNotNull())
+            refuse_duplicate_matches(hits, [t_file, t_pos])
+            claimed = hits.withColumn(
+                "_cidx", mc.index(mc.matched)
+            ).filter(F.col("_cidx") >= 0)
+            dels = claimed.select(
+                t_file.alias("file_path"), t_pos.alias("pos")
             )
-        return expr.otherwise(F.lit(-1)) if expr is not None else F.lit(-1)
-
-    pieces = []
-    dels_df = None
-    if matched_clauses:
-        joined = tgt.alias(target_alias).join(
-            src.alias(source_alias), cond, "inner"
-        )
-        dup = (
-            joined.groupBy(
-                F.col(f"{target_alias}._ifile"),
-                F.col(f"{target_alias}._ipos"),
-            )
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise UnsupportedFormat(
-                "MERGE: a target row matches more than one source row — "
-                "deduplicate the source on the ON keys first"
-            )
-        claimed = joined.withColumn(
-            "_cidx", _first_match_idx(matched_clauses)
-        ).filter(F.col("_cidx") >= 0)
-        dels_df = claimed.select(
-            F.col(f"{target_alias}._ifile").alias("file_path"),
-            F.col(f"{target_alias}._ipos").alias("pos"),
-        )
-        upd_idx = [
-            i
-            for i, c in enumerate(matched_clauses)
-            if c["action"] == "update"
-        ]
-        if upd_idx:
-            out_cols = []
-            for col in colnames:
-                e = F.col(f"{target_alias}.{col}")
-                for i in upd_idx:
-                    sm = _set_map(matched_clauses[i], "update")
-                    if col in sm:
-                        t = _ice_to_spark_type(
-                            next(
-                                f["type"]
-                                for f in fields
-                                if f["name"] == col
-                            )
+            upd_idx = [
+                i for i, c in enumerate(mc.matched) if c["action"] == "update"
+            ]
+            if upd_idx:
+                pieces.append(
+                    claimed.filter(F.col("_cidx").isin(upd_idx)).select(
+                        *mc.images(
+                            mc.matched,
+                            lambda col: F.col(f"{target_alias}.{col}"),
+                            types,
                         )
-                        ne = F.expr(sm[col])
-                        if t is not None:
-                            ne = ne.cast(t)
-                        e = F.when(F.col("_cidx") == i, ne).otherwise(e)
-                out_cols.append(e.alias(col))
+                    )
+                )
+        if mc.not_matched:
+            # unmatched source rows, under the source alias alone (what
+            # a source anti-join returns)
+            new = (
+                joined.filter(t_file.isNull())
+                .select(f"{source_alias}.*")
+                .alias(source_alias)
+            )
+            new = new.withColumn(
+                "_cidx", mc.index(mc.not_matched)
+            ).filter(F.col("_cidx") >= 0)
             pieces.append(
-                claimed.filter(F.col("_cidx").isin(upd_idx)).select(*out_cols)
+                new.select(
+                    *mc.images(mc.not_matched, lambda col: F.lit(None), types)
+                )
             )
-    if insert_clauses:
-        anti = src.alias(source_alias).join(
-            tgt.alias(target_alias), cond, "left_anti"
+        adds = None
+        for p in pieces:
+            adds = p if adds is None else adds.unionByName(p)
+        snapshot_id, n_del, n_add, version = _commit_row_delta(
+            path, prev_meta, prev_version, prev_list, existing_dvs, dels,
+            adds, "overwrite",
         )
-        anti = anti.withColumn(
-            "_cidx", _first_match_idx(insert_clauses)
-        ).filter(F.col("_cidx") >= 0)
-        out_cols = []
-        for col in colnames:
-            e = F.lit(None)
-            t = _ice_to_spark_type(
-                next(f["type"] for f in fields if f["name"] == col)
-            )
-            for i, c in enumerate(insert_clauses):
-                vm = _set_map(c, "insert")
-                if col in vm:
-                    ne = F.expr(vm[col])
-                    if t is not None:
-                        ne = ne.cast(t)
-                    e = F.when(F.col("_cidx") == i, ne).otherwise(e)
-            if t is not None:
-                e = e.cast(t)
-            out_cols.append(e.alias(col))
-        pieces.append(anti.select(*out_cols))
-
-    adds_df = None
-    for p in pieces:
-        adds_df = p if adds_df is None else adds_df.unionByName(p)
-
-    # ---- stage, then commit both manifests as ONE snapshot ----
-    staging = os.path.join(
-        os.path.dirname(path.rstrip("/")) or ".",
-        f"_ice_merge-{uuid.uuid4().hex}",
-    )
-    # a format-version-3 table forbids new position-delete files: its
-    # delete half is deletion vectors, built from the collected pairs
-    v3 = int(prev_meta.get("format-version", 2)) >= 3
-    pos_rows = dels_df.collect() if v3 and dels_df is not None else []
-    if dels_df is not None and not v3:
-        dels_df.coalesce(1).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.mode("overwrite").parquet(os.path.join(staging, "del"))
-    if adds_df is not None:
-        adds_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(staging, "add")
-        )
-
-    import pyarrow.parquet as _pq
-
-    def _one_part(sub):
-        for root, _d, ns in os.walk(os.path.join(staging, sub)):
-            for nme in sorted(ns):
-                if nme.endswith(".parquet"):
-                    return os.path.join(root, nme)
-        return None
-
-    dpart = _one_part("del") if dels_df is not None and not v3 else None
-    apart = _one_part("add") if adds_df is not None else None
-    n_del = _pq.ParquetFile(dpart).metadata.num_rows if dpart else len(pos_rows)
-    n_add = _pq.ParquetFile(apart).metadata.num_rows if apart else 0
-    if not n_del and not n_add:
-        shutil.rmtree(staging, ignore_errors=True)
-        return {
-            "snapshot_id": None,
-            "rows_written": 0,
-            "rows_deleted": 0,
-            "files_added": 0,
-            "files_removed": 0,
-            "version": prev_version,
-        }
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    mf_entries = list(prev_list)
-    if pos_rows:
-        mf_entries, _n_dvs = _dv_manifests(
-            path, prev_meta, prev_list, pos_rows, existing_dvs, snapshot_id,
-            seq,
-        )
-    elif n_del:
-        dpath = os.path.join(
-            data_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex}.parquet"
-        )
-        os.replace(dpart, dpath)
-        del_manifest = os.path.join(meta_dir, f"man-del-{snapshot_id}.avro")
-        write_container(
-            _manifest_entry_schema([]),
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": dpath,
-                        "file_format": "PARQUET",
-                        "record_count": n_del,
-                        "file_size_in_bytes": os.path.getsize(dpath),
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                    },
-                }
-            ],
-            del_manifest,
-        )
-        mf_entries.append(
-            {
-                "manifest_path": del_manifest,
-                "manifest_length": os.path.getsize(del_manifest),
-                "partition_spec_id": prev_meta.get("default-spec-id", 0),
-                "content": 1,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
-        )
-    if n_add:
-        apath = os.path.join(
-            data_dir, f"{snapshot_id}-{uuid.uuid4().hex}.parquet"
-        )
-        os.replace(apart, apath)
-        lowers, uppers, a_rows = None, None, n_add
-        try:
-            lo, up, a_rows = _file_bounds(apath, fields)
-            lowers, uppers = lo or None, up or None
-        except Exception:
-            pass
-        add_manifest = os.path.join(meta_dir, f"man-{snapshot_id}.avro")
-        write_container(
-            _manifest_entry_schema([]),
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": apath,
-                        "file_format": "PARQUET",
-                        "record_count": a_rows,
-                        "file_size_in_bytes": os.path.getsize(apath),
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                    },
-                }
-            ],
-            add_manifest,
-        )
-        mf_entries.append(
-            {
-                "manifest_path": add_manifest,
-                "manifest_length": os.path.getsize(add_manifest),
-                "partition_spec_id": prev_meta.get("default-spec-id", 0),
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    version = _publish_snapshot(
-        path, prev_meta, prev_version, snapshot_id, mf_entries, seq,
-        {"operation": "overwrite"},
-    )
+    finally:
+        joined.unpersist()
     return {
         "snapshot_id": snapshot_id,
-        "rows_written": int(n_add),
-        "rows_deleted": int(n_del),
+        "rows_written": n_add,
+        "rows_deleted": n_del,
         "files_added": int(bool(n_add)) + int(bool(n_del)),
         "files_removed": 0,
         "version": version,
@@ -5157,21 +4483,13 @@ def commit_iceberg_data_files(
         fields = next(
             s for s in prev_schemas if s.get("schema-id") == schema_id
         )["fields"]
-        spec_id = prev_meta.get("default-spec-id", 0)
-        spec = next(
-            (
-                s
-                for s in prev_meta.get("partition-specs", [])
-                if s.get("spec-id") == spec_id
-            ),
-            {"fields": []},
-        )
-        if spec.get("fields"):
+        spec_fields = _default_spec_fields(prev_meta)
+        if spec_fields:
             id_name = {f["id"]: f["name"] for f in fields}
             prev_canon = [
                 f"{pf.get('transform', 'identity')}"
                 f"({id_name.get(pf['source-id'])})"
-                for pf in spec["fields"]
+                for pf in spec_fields
             ]
             req_canon = [_requested_canon(p) for p in part_by]
             if req_canon != prev_canon:
@@ -5192,17 +4510,7 @@ def commit_iceberg_data_files(
     if part_by:
         ftype = {f["name"]: f["type"] for f in fields}
         fid = {f["name"]: f["id"] for f in fields}
-        prev_spec_fields = []
-        if prev_meta is not None:
-            sid = prev_meta.get("default-spec-id", 0)
-            prev_spec_fields = next(
-                (
-                    s
-                    for s in prev_meta.get("partition-specs", [])
-                    if s.get("spec-id") == sid
-                ),
-                {"fields": []},
-            ).get("fields", [])
+        prev_spec_fields = _default_spec_fields(prev_meta or {})
         for i, p in enumerate(part_by):
             kind, param, c = _parse_transform(p)
             t = ftype.get(c)
@@ -5239,7 +4547,7 @@ def commit_iceberg_data_files(
             )
     os.makedirs(meta_dir, exist_ok=True)
     seq = (prev_meta or {}).get("last-sequence-number", 0) + 1
-    snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+    snapshot_id = _new_snapshot_id()
     import datetime as _dt
 
     def _tuple_value(v, t):
@@ -5254,60 +4562,31 @@ def commit_iceberg_data_files(
         return str(v)
 
     entries = []
-    n_rows = 0
     for rec in files:
         fpath, size, rows, lowers, uppers = rec[:5]
-        n_rows += int(rows)
-        data_file = {
-            "content": 0,
-            "file_path": fpath,
-            "file_format": "PARQUET",
-            "record_count": int(rows),
-            "file_size_in_bytes": int(size),
-            "lower_bounds": lowers or None,
-            "upper_bounds": uppers or None,
+        raw = rec[5] if len(rec) > 5 and rec[5] else {}
+        part = {
+            pf["name"]: _tuple_value(raw.get(part_by[i]), pf["_ice_type"])
+            for i, pf in enumerate(part_fields)
         }
-        if part_fields:
-            raw = rec[5] if len(rec) > 5 and rec[5] else {}
-            data_file["partition"] = {
-                pf["name"]: _tuple_value(
-                    raw.get(part_by[i]), pf["_ice_type"]
-                )
-                for i, pf in enumerate(part_fields)
-            }
         entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": data_file,
-            }
+            _added_entry(
+                snapshot_id, 0, fpath, int(rows), int(size), lowers, uppers,
+                partition=part or None,
+            )
         )
-    manifest = os.path.join(meta_dir, f"man-{snapshot_id}.avro")
-    write_container(_manifest_entry_schema(part_fields), entries, manifest)
+    n_rows = sum(int(rec[2]) for rec in files)
     mf_entries = [
-        {
-            "manifest_path": manifest,
-            "manifest_length": os.path.getsize(manifest),
-            "partition_spec_id": (prev_meta or {}).get(
-                "default-spec-id", 0
-            ),
-            "content": 0,
-            "sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-        }
-    ]
-    parent_id = None
-    if mode == "append" and prev_meta is not None:
-        parent_id = prev_meta["current-snapshot-id"]
-        prev_snap = next(
-            s
-            for s in prev_meta["snapshots"]
-            if s["snapshot-id"] == parent_id
+        _write_manifest(
+            os.path.join(meta_dir, f"man-{snapshot_id}.avro"),
+            _manifest_entry_schema(part_fields),
+            entries,
+            (prev_meta or {}).get("default-spec-id", 0), 0, seq, snapshot_id,
         )
-        _schema, prev_list = read_container(prev_snap["manifest-list"])
-        mf_entries = list(prev_list) + mf_entries
-    elif prev_meta is not None:
-        parent_id = prev_meta.get("current-snapshot-id")
+    ]
+    parent_id = (prev_meta or {}).get("current-snapshot-id")
+    if mode == "append" and prev_meta is not None:
+        mf_entries = _current_manifests(prev_meta) + mf_entries
     mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
     write_container(_MANIFEST_LIST_SCHEMA, mf_entries, mlist)
     now_ms = int(time.time() * 1000)
@@ -5380,27 +4659,5 @@ def commit_iceberg_data_files(
             else {}
         ),
     }
-    version = prev_version + 1
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    try:
-        os.link(tmp, meta_path)
-    except FileExistsError:
-        from pg_analytics_spark.errors import ConcurrentWriteError
-
-        raise ConcurrentWriteError(
-            f"iceberg metadata version {version} already exists at "
-            f"{meta_path} — another writer won the race; retry"
-        ) from None
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-    hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
-    with open(hint_tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(hint_tmp, os.path.join(meta_dir, "version-hint.text"))
+    _publish_metadata_version(path, meta, prev_version)
     return {"snapshot_id": snapshot_id, "files": len(entries), "rows": n_rows}

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import contextlib
 import os
+import signal
+import threading
 
 import duckdb
 import pytest
@@ -20,6 +22,87 @@ TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
 ).split()
+
+#: Seconds one test phase (setup, call or teardown) may run.  The
+#: slowest phase in the suite takes about 45 s on 4 cores.  A phase
+#: still running at the limit fails with the traceback of where it
+#: stood, its Spark jobs and streaming queries are stopped, and the run
+#: goes on to the next test.
+PHASE_LIMIT_S = 300
+
+
+class PhaseTimeLimit(BaseException):
+    """Raised in the main thread when a test phase outlives
+    ``PHASE_LIMIT_S``.  A BaseException, so py4j's ``except Exception``
+    around its socket read passes it through unchanged."""
+
+
+def _drop_py4j_connection() -> None:
+    """Close the calling thread's py4j connection.  Its reply may still
+    be in flight, and a later call on it would read that reply as its
+    own; the next call opens a fresh connection instead."""
+    from pyspark import SparkContext
+
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    get = getattr(client, "get_thread_connection", None)
+    conn = get() if get is not None else None
+    if conn is not None:
+        conn.close()
+
+
+def _raise_phase_limit(signum, frame):
+    _drop_py4j_connection()
+    raise PhaseTimeLimit(f"test phase ran past {PHASE_LIMIT_S} s")
+
+
+def _stop_spark_work() -> None:
+    from pyspark.sql import SparkSession
+
+    # the active session is per JVM thread, and this call already runs
+    # on a fresh py4j connection: fall back to the process's session
+    spark = (
+        SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    )
+    if spark is None:
+        return
+    for q in spark.streams.active:
+        q.stop()
+    spark.sparkContext.cancelAllJobs()
+
+
+@contextlib.contextmanager
+def _phase_limit():
+    if threading.current_thread() is not threading.main_thread():
+        yield
+        return
+    prev = signal.signal(signal.SIGALRM, _raise_phase_limit)
+    signal.alarm(PHASE_LIMIT_S)
+    try:
+        yield
+    except PhaseTimeLimit:
+        _stop_spark_work()
+        raise
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_setup(item):
+    with _phase_limit():
+        return (yield)
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_call(item):
+    with _phase_limit():
+        return (yield)
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_teardown(item, nextitem):
+    with _phase_limit():
+        return (yield)
 
 
 @pytest.fixture(scope="session")

@@ -12,7 +12,10 @@ import pytest
 from pg_analytics_spark.errors import ConcurrentWriteError, UnsupportedFormat
 from pg_analytics_spark.sources import load_source
 from pg_analytics_spark.sources.iceberg_write import (
+    alter_iceberg_properties,
     delete_iceberg,
+    merge_iceberg,
+    update_iceberg,
     write_iceberg,
 )
 
@@ -123,10 +126,36 @@ def test_statement_routing_iceberg_delete(spark, tmp_path):
     ]
 
 
-def test_metadata_version_race_is_loud(spark, tmp_path, monkeypatch):
+_RACE_COMMITS = {
+    "append": lambda spark, path: write_iceberg(
+        spark.createDataFrame([(2, 2.0)], "id bigint, v double"),
+        path,
+        mode="append",
+    ),
+    "update": lambda spark, path: update_iceberg(
+        spark, path, {"v": "v + 1"}, "v > 0"
+    ),
+    "merge": lambda spark, path: merge_iceberg(
+        spark.createDataFrame([(1, 5.0), (3, 3.0)], "id bigint, v double"),
+        path,
+        "t.id = s.id",
+        [
+            {"when": "matched", "action": "update", "set": "all"},
+            {"when": "not_matched", "action": "insert", "values": "all"},
+        ],
+    ),
+    "delete": lambda spark, path: delete_iceberg(spark, path, "v > 0"),
+    "properties": lambda spark, path: alter_iceberg_properties(
+        path, {"owner": "x"}
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_RACE_COMMITS))
+def test_metadata_version_race_is_loud(spark, tmp_path, monkeypatch, kind):
     """A writer that allocated its version BEFORE a concurrent commit
     landed must fail loudly at publish (put-if-absent link), never
-    clobber the winner's metadata JSON."""
+    clobber the winner's metadata JSON — on every commit path."""
     import pg_analytics_spark.sources.iceberg_write as iw
 
     path = str(tmp_path / "t")
@@ -143,7 +172,7 @@ def test_metadata_version_race_is_loud(spark, tmp_path, monkeypatch):
         json.dump({"winner": True}, fh)
     monkeypatch.setattr(iw, "_latest_metadata", lambda d: snapshot)
     with pytest.raises(ConcurrentWriteError, match="version 2"):
-        delete_iceberg(spark, path, "v > 0")
+        _RACE_COMMITS[kind](spark, path)
     with open(winner) as fh:
         assert json.load(fh) == {"winner": True}
     assert not [f for f in os.listdir(meta_dir) if ".tmp-" in f]

@@ -140,6 +140,28 @@ def test_rewrite_keeps_delete_manifests_and_changelog_skips(
     assert ch_before  # the real history is still there
 
 
+def test_remove_orphans_refuses_an_unreadable_manifest(spark, tmp_path):
+    """A live manifest the sweep cannot read would drop its data files
+    out of the referenced set: the sweep raises, naming it, before it
+    unlinks anything."""
+    path = str(tmp_path / "t")
+    _mk(spark, path, n_appends=2)
+    data_dir = os.path.join(path, "data")
+    before = sorted(os.listdir(data_dir))
+    _v, meta = _latest_metadata(os.path.join(path, "metadata"))
+    snap = next(
+        s
+        for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    manifest = read_container(snap["manifest-list"])[1][0]["manifest_path"]
+    with open(manifest, "r+b") as fh:
+        fh.truncate(10)
+    with pytest.raises(UnsupportedFormat, match="cannot read manifest"):
+        remove_orphan_files_iceberg(path, older_than_hours=0)
+    assert sorted(os.listdir(data_dir)) == before
+
+
 def test_remove_orphans_never_touches_referenced_files(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk(spark, path, n_appends=3)

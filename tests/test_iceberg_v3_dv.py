@@ -142,9 +142,18 @@ def test_v3_time_travel_predates_dv(spark, v3_table):
     assert old.count() == 200  # pre-DV snapshot unaffected
 
 
-def test_v3_update_refused_eq_upsert_allowed(spark, v3_table):
-    with pytest.raises(UnsupportedFormat, match="format-version-3"):
-        update_iceberg(spark, v3_table, {"s": "'u'"}, "k = 1")
+def test_v3_update_writes_dv_eq_upsert_allowed(spark, v3_table):
+    """UPDATE on a v3 table deletes the old images with deletion vectors
+    (v3 forbids position-delete files) and appends the new ones; the
+    equality-delete upsert works there too."""
+    res = update_iceberg(spark, v3_table, {"s": "'u'"}, "k = 1")
+    assert res["rows_updated"] == sum(1 for i in range(200) if i % 7 == 1)
+    _meta, plan = _plan(v3_table)
+    assert plan[1] == [] and len(plan[5]) == 2  # one DV per data file
+    out = load_source(spark, v3_table, "iceberg")
+    assert out.count() == 200
+    assert {r["s"] for r in out.filter("k = 1").collect()} == {"u"}
+    assert out.filter("id = 2").collect()[0]["s"] == "s2"
     from pg_analytics_spark.sources.iceberg_write import upsert_iceberg_eq
 
     src = spark.createDataFrame(

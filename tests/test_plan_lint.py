@@ -43,6 +43,10 @@ instead of living invisibly behind healthy sf0.1 walls:
 - ``test_lake_commit_job_census``: the Spark jobs of each warm lake
   commit kind and read-after-commit aggregate, on small Delta and
   Iceberg tables, are pinned as upper bounds.
+- ``test_one_iceberg_commit_point`` / ``test_one_iceberg_staging_write``:
+  one function in ``sources/`` publishes an Iceberg
+  ``v{N}.metadata.json``, and ``iceberg_write.py`` holds one Spark
+  Parquet write (the delete-file staging).
 
 Limit worth knowing: rows that materialize inside their function
 (streaming fixtures, writer round-trips returning
@@ -461,7 +465,7 @@ _COMMIT_JOB_PINS = {
     ("iceberg", "insert"): 2,
     ("iceberg", "update"): 5,
     ("iceberg", "delete"): 3,
-    ("iceberg", "merge"): 12,
+    ("iceberg", "merge"): 8,
     ("iceberg", "read"): 4,
 }
 
@@ -525,3 +529,72 @@ def test_lake_commit_job_census(engine, spark, tmp_path, fmt, kind):
         engine.detach(t)
     pin = _COMMIT_JOB_PINS[(fmt, kind)]
     assert jobs <= pin, f"{fmt} {kind} ran {jobs} Spark jobs, pinned {pin}"
+
+
+#: Functions in ``sources/`` that publish an Iceberg ``v{N}.metadata.json``
+#: (name one and ``os.link``/``os.replace`` it into place), and Spark
+#: ``.parquet(`` writes in ``iceberg_write.py``.  Every commit goes
+#: through the one put-if-absent publish, and every row delta through
+#: one staging write; the pins only go down.
+_METADATA_WRITER_PINS = {"iceberg_write.py": ["_publish_metadata_version"]}
+_ICEBERG_SPARK_WRITES = 1
+
+
+def _metadata_writers(src: str) -> list[str]:
+    out = []
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        nodes = list(ast.walk(fn))
+        names = any(
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.endswith(".metadata.json")
+            for n in nodes
+        )
+        moves = any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("link", "replace")
+            and getattr(n.func.value, "id", None) == "os"
+            for n in nodes
+        )
+        if names and moves:
+            out.append(fn.name)
+    return out
+
+
+def test_one_iceberg_commit_point():
+    src = _WORKLOAD.parent / "sources"
+    counts = {
+        p.name: _metadata_writers(p.read_text())
+        for p in sorted(src.glob("*.py"))
+    }
+    counts = {k: v for k, v in counts.items() if v}
+    assert counts == _METADATA_WRITER_PINS, counts
+
+
+def _spark_parquet_writes(src: str) -> int:
+    """``.parquet(`` calls whose receiver chain holds ``.write``."""
+    n = 0
+    for node in ast.walk(ast.parse(src)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            continue
+        chain, cur = set(), node.func.value
+        while isinstance(cur, (ast.Attribute, ast.Call)):
+            if isinstance(cur, ast.Attribute):
+                chain.add(cur.attr)
+                cur = cur.value
+            else:
+                cur = cur.func
+        n += "write" in chain
+    return n
+
+
+def test_one_iceberg_staging_write():
+    src = (_WORKLOAD.parent / "sources" / "iceberg_write.py").read_text()
+    assert _spark_parquet_writes(src) == _ICEBERG_SPARK_WRITES

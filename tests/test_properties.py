@@ -611,9 +611,9 @@ def test_bounded_group_buffer_key_flush_precedes_cap():
 
 def test_write_partitioned_kernel(tmp_path):
     """Spark-free: multi-key grouping into one file per tuple (NULL
-    keys in the Hive sentinel directory), no ``.tmp`` left behind, NaN
-    float columns reported, the ``max_open`` refusal, and no file for
-    empty input."""
+    keys in the Hive sentinel directory), no ``.tmp`` left behind, no
+    footer statistics on float columns, the ``max_open`` refusal, and
+    no file for empty input."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
@@ -646,19 +646,20 @@ def test_write_partitioned_kernel(tmp_path):
         }
     )
     files = run([b, b.slice(0, 2)], tmp_path / "t")
-    got = {f.key: (f.rel, f.rows, f.nan_cols) for f in files}
+    got = {f.key: (f.rel, f.rows) for f in files}
     assert got == {
-        (1, "x"): ("a=1/b=x/f.parquet", 2, frozenset()),
-        (1, "y"): ("a=1/b=y/f.parquet", 2, frozenset({"v"})),
-        (2, "x"): ("a=2/b=x/f.parquet", 2, frozenset()),
-        (None, "x"): (
-            "a=__HIVE_DEFAULT_PARTITION__/b=x/f.parquet", 1, frozenset()
-        ),
+        (1, "x"): ("a=1/b=x/f.parquet", 2),
+        (1, "y"): ("a=1/b=y/f.parquet", 2),
+        (2, "x"): ("a=2/b=x/f.parquet", 2),
+        (None, "x"): ("a=__HIVE_DEFAULT_PARTITION__/b=x/f.parquet", 1),
     }
     for f in files:
         t = pq.read_table(f.dst)
         assert t.column_names == ["v", "n"] and t.num_rows == f.rows
         assert f.size == (tmp_path / "t" / f.rel).stat().st_size
+        rg = pq.ParquetFile(f.dst).metadata.row_group(0)
+        assert rg.column(0).statistics is None  # v: NaN-blind min/max
+        assert rg.column(1).statistics.has_min_max
     two_x = pq.read_table(tmp_path / "t" / "a=2/b=x/f.parquet")
     assert two_x["n"].to_pylist() == [12, 13]
     assert not [p for p in (tmp_path / "t").rglob("*") if p.suffix == ".tmp"]

@@ -218,6 +218,23 @@ def test_footer_schema_refuses_unreadable_types(spark, tmp_path):
         footer_schema(path, infer_flags(spark))
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_nan_rows_survive_parquet_pushdown(spark, tmp_path, fmt):
+    """A float column holding NaN carries no footer min/max (Arrow's
+    leave NaN out): Spark's Parquet pushdown must not drop the NaN row,
+    which sorts above every other value."""
+    from pg_analytics_spark.sources.delta_write import write_delta
+    from pg_analytics_spark.sources.iceberg_write import write_iceberg
+
+    path = str(tmp_path / fmt)
+    df = spark.createDataFrame(
+        [(1.0,), (float("nan"),), (3.0,)], "v double"
+    ).coalesce(1)
+    (write_delta if fmt == "delta" else write_iceberg)(df, path)
+    assert spark.conf.get("spark.sql.parquet.filterPushdown") == "true"
+    assert load_source(spark, path, fmt).filter("v >= 5").count() == 1
+
+
 def test_hive_partitioning_discovery(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("hive")
     spark.range(4).withColumn("part", F.col("id") % 2).write.partitionBy(
