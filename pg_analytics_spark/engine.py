@@ -3255,12 +3255,9 @@ class Engine:
             )
             props = dict((meta_i or {}).get("properties") or {})
         else:
-            from pg_analytics_spark.sources.delta import _replay_log
+            from pg_analytics_spark.sources.delta import snapshot
 
-            _a, meta_d = _replay_log(
-                os.path.join(att.files[0], "_delta_log")
-            )
-            props = dict((meta_d or {}).get("configuration") or {})
+            props = dict(snapshot(att.files[0]).configuration)
         rows = sorted((str(k), str(v)) for k, v in props.items())
         return local_frame(self.spark, rows, "key string, value string")
 

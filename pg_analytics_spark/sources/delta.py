@@ -5,9 +5,42 @@ files/select/preserve_casing.  Spark's native integration is the
 ``delta`` format from the delta-spark package; when that is absent
 (this environment), a built-in MINIMAL log reader takes over: it
 replays the public Delta transaction log (_delta_log JSON commits on
-top of the latest parquet checkpoint) to resolve the table's active
-file set and partition values, then reads those parquet files
-directly.
+top of the newest checkpoint) to resolve the table's active file set
+and partition values, then reads those parquet files directly.
+
+One snapshot: :func:`snapshot` is the only replay of the log.  It
+needs no SparkContext (the ``delta_native`` DataSource plan worker
+calls it too) and returns one :class:`Snapshot` — version, protocol,
+metaData, active adds, SetTransaction watermarks, live domainMetadata
+and the decoded schema — that every Delta reader and writer reads.  A
+statement passes the snapshot it read down to its scan and to its
+commit, which it publishes at ``snapshot.version + 1``.
+
+Types: one context-free decoder, :func:`_delta_type_to_spark`, maps
+the schemaString (PROTOCOL.md, "Schema Serialization Format" and
+"Primitive Types",
+https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
+
+==================  ======================
+Delta type          Spark type
+==================  ======================
+``string``          ``StringType``
+``long``            ``LongType``
+``integer``         ``IntegerType``
+``short``           ``ShortType``
+``byte``            ``ByteType``
+``float``           ``FloatType``
+``double``          ``DoubleType``
+``decimal(p,s)``    ``DecimalType(p, s)``
+``boolean``         ``BooleanType``
+``binary``          ``BinaryType``
+``date``            ``DateType``
+``timestamp``       ``TimestampType`` (microseconds, adjusted to UTC)
+``timestamp_ntz``   ``TimestampNTZType`` (no time zone)
+``struct``          ``StructType``
+``array``           ``ArrayType``
+``map``             ``MapType``
+==================  ======================
 
 Supported by the fallback: append/overwrite tables, partitioned
 tables (partition columns reconstructed from add-action
@@ -37,18 +70,17 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pg_analytics_spark.errors import MissingDependency
+from pg_analytics_spark.errors import MissingDependency, UnsupportedFormat
 from pg_analytics_spark.sources.base import apply_common
-from pg_analytics_spark.sources.delta_write import (
-    _decode_log_path,
-    _phys_renames,
-)
-from pg_analytics_spark.types import duckdb_type_to_spark, local_frame
+from pg_analytics_spark.types import local_frame
 
 
 #: Tri-state memo for "is the delta-spark format installed?": None =
@@ -97,8 +129,7 @@ def load(spark: SparkSession, files: list[str], opts: dict) -> DataFrame:
             )
         df = _load_via_log(
             spark,
-            path,
-            version=None if version is None else int(version),
+            snapshot(path, None if version is None else int(version)),
             stats_filter=opts.get("stats_filter"),
         )
     # stats_filter is exact: files provably outside the range are
@@ -155,9 +186,9 @@ def _resolve_timestamp(log_dir: str, ts_ms: int) -> int:
     if not os.path.isdir(log_dir):
         raise MissingDependency(f"not a Delta table (no _delta_log): {log_dir}")
     versions = sorted(
-        int(f[:20])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f[:20].isdigit()
+        int(m.group(1))
+        for m in map(_COMMIT_FILE.match, os.listdir(log_dir))
+        if m
     )
     best = None
     for v in versions:
@@ -251,14 +282,14 @@ def _file_key(uri) -> F.Column:
 
 def _load_via_log(
     spark: SparkSession,
-    table_path: str,
-    version: int | None = None,
+    snap: Snapshot,
+    *,
     stats_filter: dict | None = None,
     keep_meta: bool = False,
     keep_phys: list[str] | None = None,
 ) -> DataFrame:
-    """The snapshot at ``version`` (latest by default) as one
-    :func:`_scan_files` over its active files.
+    """The snapshot ``snap`` as one :func:`_scan_files` over its active
+    files.
 
     ``keep_meta=True`` keeps the internal ``_dv_file`` (file key) and
     ``_dv_pos`` (physical parquet row index) columns on the result —
@@ -270,68 +301,43 @@ def _load_via_log(
     ``keep_phys`` names HIDDEN physical long columns to carry (NULL
     where a file lacks them) — the row-tracking materialized identity
     columns live outside the table schema and are otherwise not read."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise MissingDependency(
-            f"not a Delta table (no _delta_log): {table_path}"
-        )
-    active, meta = _replay_log(log_dir, version=version)
-    if meta is None:
-        raise MissingDependency(f"Delta log has no metaData action: {table_path}")
-    part_cols = meta.get("partitionColumns", [])
-    # partitionValues keys are PHYSICAL names under column mapping
-    phys_of = _phys_renames(meta) or {}
-
     files: list[tuple[str, tuple]] = []
     deletions: list[tuple[str, int]] = []  # (file key, row index)
-    for add in active.values():
+    for add in snap.active.values():
         if stats_filter and not all(
-            _file_overlaps_stats(add, phys_of.get(c, c), lo, hi)
+            _file_overlaps_stats(add, snap.phys_of.get(c, c), lo, hi)
             for c, (lo, hi) in dict(stats_filter).items()
         ):
             continue  # provably outside the requested range
         if stats_filter and not _partition_overlaps(
-            add, part_cols, phys_of, stats_filter
+            add, snap.part_cols, snap.phys_of, stats_filter
         ):
             continue  # hive partition value outside the range
         pv = add.get("partitionValues") or {}
-        abs_path = _abs_file(table_path, add["path"])
-        key = tuple(pv.get(phys_of.get(c, c)) for c in part_cols)
+        abs_path = _abs_file(snap.path, add["path"])
+        key = tuple(pv.get(snap.phys_of.get(c, c)) for c in snap.part_cols)
         files.append((abs_path, key))
         dv = add.get("deletionVector")
         if dv:
             from pg_analytics_spark.sources.delta_dv import dv_deleted_rows
 
             deletions.extend(
-                (abs_path, int(r)) for r in dv_deleted_rows(table_path, dv)
+                (abs_path, int(r)) for r in dv_deleted_rows(snap.path, dv)
             )
     if not files:
         # a truncated / just-created table is EMPTY, not broken: read
         # back as 0 rows under the declared schema (DELETE without
         # WHERE commits pure removes — the protocol allows zero adds)
-        from pyspark.sql import types as T
-
-        fields = json.loads(meta["schemaString"])["fields"]
-        schema = T.StructType(
-            [
-                T.StructField(
-                    f["name"],
-                    _delta_type_to_spark(f["type"]),
-                    bool(f.get("nullable", True)),
-                )
-                for f in fields
-            ]
-        )
-        return local_frame(spark, [], schema)
+        return local_frame(spark, [], snap.schema)
     return _scan_files(
-        spark, meta, files, deletions=deletions, keep_meta=keep_meta,
+        spark, snap, files, deletions=deletions, keep_meta=keep_meta,
         keep_phys=keep_phys or (),
     )
 
 
 def _scan_files(
     spark: SparkSession,
-    meta: dict,
+    snap: Snapshot,
     files: list[tuple[str, tuple]],
     *,
     deletions: list[tuple[str, int]] = (),
@@ -341,8 +347,8 @@ def _scan_files(
 ) -> DataFrame:
     """ONE parquet scan of ``files`` — (file key, partition-value
     tuple) pairs, the tuple in ``partitionColumns`` order — projected
-    onto the table's CURRENT schema: data columns in schemaString
-    order, then ``keep_phys``, ``extra``, the ``_dv_*`` columns
+    onto the snapshot's schema: data columns in schemaString order,
+    then ``keep_phys``, ``extra``, the ``_dv_*`` columns
     (``keep_meta``) and the partition columns.
 
     The read schema is the schemaString under its PHYSICAL names
@@ -358,14 +364,10 @@ def _scan_files(
     anti-joined away.  ``keep_phys`` are hidden long
     columns to carry (row tracking); ``extra`` are StructFields read
     and kept as they are (the cdc ``_change_type``)."""
-    from pyspark.sql import types as T
-
-    part_cols = meta.get("partitionColumns") or []
-    part_types = _partition_types(meta, part_cols)
-    phys_of = _phys_renames(meta) or {}
+    part_cols, phys_of = snap.part_cols, snap.phys_of
     fields = [
         (f["name"], phys_of.get(f["name"], f["name"]), f["type"])
-        for f in json.loads(meta["schemaString"])["fields"]
+        for f in snap.fields
         if f["name"] not in part_cols
     ]
     read_schema = T.StructType(
@@ -381,8 +383,8 @@ def _scan_files(
     need_pos = bool(deletions) or keep_meta
     df = df.select(
         *[
-            F.col(phys).cast(_delta_type_to_spark(t)).alias(name)
-            for name, phys, t in fields
+            F.col(phys).cast(snap.schema[name].dataType).alias(name)
+            for name, phys, _t in fields
         ],
         *keep_phys,
         *[f.name for f in extra],
@@ -398,7 +400,7 @@ def _scan_files(
         df = df.select(
             "*",
             *[
-                F.lit(v).cast(part_types[c]).alias(c)
+                F.lit(v).cast(snap.part_types[c]).alias(c)
                 for c, v in zip(part_cols, key)
             ],
         )
@@ -416,7 +418,7 @@ def _scan_files(
             *[
                 F.when(F.col("_pv").isNull(), miss)
                 .otherwise(F.col("_pv")[f"v{i}"])
-                .cast(part_types[c])
+                .cast(snap.part_types[c])
                 .alias(c)
                 for i, c in enumerate(part_cols)
             ],
@@ -460,188 +462,288 @@ def _partition_lookup(files: list[tuple[str, tuple]], width: int) -> F.Column:
     return F.try_element_at(F.element_at(table, slot), key)
 
 
-def _delta_type_to_spark(t, physical: bool = False):
-    """Delta schemaString type JSON → Spark DataType.  Nested field
-    names are the LOGICAL ones (a positional cast onto this type
-    renames every nested level in one expression), or with
-    ``physical`` the column-mapping physical names the files carry."""
-    from pyspark.sql.types import (
-        ArrayType,
-        MapType,
-        StructField,
-        StructType,
-    )
+#: Delta primitive type name → Spark type (PROTOCOL.md, "Primitive
+#: Types"); ``decimal(p,s)`` is parsed, complex types recurse.
+_PRIMITIVES: dict[str, T.DataType] = {
+    "string": T.StringType(),
+    "long": T.LongType(),
+    "integer": T.IntegerType(),
+    "short": T.ShortType(),
+    "byte": T.ByteType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "boolean": T.BooleanType(),
+    "binary": T.BinaryType(),
+    "date": T.DateType(),
+    "timestamp": T.TimestampType(),
+    "timestamp_ntz": T.TimestampNTZType(),
+}
+_DECIMAL = re.compile(r"decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)$")
+_PHYSICAL_NAME = "delta.columnMapping.physicalName"
 
+
+def _delta_type_to_spark(t, physical: bool = False) -> T.DataType:
+    """Delta schemaString type JSON → Spark DataType, the one Delta
+    type decoder (see the module docstring's table).  Pure Python: no
+    SparkContext, no DDL parser.  Nested field names are the LOGICAL
+    ones (a positional cast onto this type renames every nested level
+    in one expression), or with ``physical`` the column-mapping
+    physical names the files carry."""
     if isinstance(t, str):
-        return duckdb_type_to_spark(t)
-    kind = t["type"]
+        if t in _PRIMITIVES:
+            return _PRIMITIVES[t]
+        m = _DECIMAL.match(t)
+        if m:
+            return T.DecimalType(int(m.group(1)), int(m.group(2)))
+        raise UnsupportedFormat(f"unsupported Delta type {t!r}")
+    kind = t.get("type")
     if kind == "struct":
-        return StructType(
+        return T.StructType(
             [
-                StructField(
-                    (f.get("metadata") or {}).get(
-                        "delta.columnMapping.physicalName", f["name"]
-                    )
+                T.StructField(
+                    (f.get("metadata") or {}).get(_PHYSICAL_NAME, f["name"])
                     if physical
                     else f["name"],
                     _delta_type_to_spark(f["type"], physical),
-                    f.get("nullable", True),
+                    bool(f.get("nullable", True)),
                 )
                 for f in t["fields"]
             ]
         )
     if kind == "array":
-        return ArrayType(
+        return T.ArrayType(
             _delta_type_to_spark(t["elementType"], physical),
-            t.get("containsNull", True),
+            bool(t.get("containsNull", True)),
         )
     if kind == "map":
-        return MapType(
+        return T.MapType(
             _delta_type_to_spark(t["keyType"], physical),
             _delta_type_to_spark(t["valueType"], physical),
-            t.get("valueContainsNull", True),
+            bool(t.get("valueContainsNull", True)),
         )
-    raise MissingDependency(f"unsupported Delta type {t!r}")
+    raise UnsupportedFormat(f"unsupported Delta type {t!r}")
 
 
-def _replay_log(
-    log_dir: str, version: int | None = None
-) -> tuple[dict[str, dict], dict | None]:
-    """Replay checkpoint + JSON commits → (active add-actions by path,
-    latest metaData action).  ``version`` replays only commits ≤ that
-    version (time travel, delta-spark's versionAsOf), based on the
-    NEWEST checkpoint at or before the requested version — early
-    commits may have been cleaned up after checkpointing, so replaying
-    from 0 would silently drop files.  Commits from the replay base to
-    the requested version must be contiguous or the travel fails
-    loudly.
-    """
-    start_version = -1
-    active: dict[str, dict] = {}
-    meta: dict | None = None
+def _schema_fields(meta: dict) -> list[dict]:
+    """A metaData action's schemaString → its top-level field dicts."""
+    return json.loads(meta["schemaString"])["fields"]
 
-    cp_paths: list[str] = []
-    if version is None:
-        last_cp = os.path.join(log_dir, "_last_checkpoint")
-        if os.path.exists(last_cp):
-            with open(last_cp) as fh:
-                cp = json.load(fh)
-            cp_version = int(cp["version"])
-            parts = cp.get("parts")
-            cp_paths = [
-                os.path.join(log_dir, name)
-                for name in (
-                    [f"{cp_version:020d}.checkpoint.parquet"]
-                    if not parts
-                    else [
-                        f"{cp_version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet"
-                        for i in range(parts)
-                    ]
-                )
-            ]
-            start_version = cp_version
-    else:
-        checkpoints = _list_checkpoints(log_dir)
-        usable = [v for v in checkpoints if v <= version]
-        if usable:
-            start_version = max(usable)
-            cp_paths = checkpoints[start_version]
-    for cp_path in cp_paths:
-        a, m = _read_checkpoint(cp_path)
-        active.update(a)
-        meta = m or meta
 
-    commits = sorted(
-        f for f in os.listdir(log_dir)
-        if f.endswith(".json") and f[:20].isdigit()
-        and int(f[:20]) > start_version
-        and (version is None or int(f[:20]) <= version)
+@dataclass(frozen=True)
+class Snapshot:
+    """One Delta table version, from one replay (:func:`snapshot`).
+
+    ``active`` maps each active add's log ``path`` to the add action;
+    ``txns`` maps a SetTransaction appId to (version, lastUpdated ms);
+    ``domains`` maps each live (not removed) domainMetadata domain to
+    its action.  ``fields`` are the schemaString's top-level fields,
+    ``schema`` their decoded logical Spark type.  ``phys_of`` maps a
+    logical top-level name to its column-mapping physical name (empty
+    on an unmapped table, whose files carry the logical names);
+    ``part_types`` types each partition column."""
+
+    path: str
+    version: int
+    protocol: dict
+    metadata: dict
+    active: dict[str, dict]
+    txns: dict[str, tuple[int, int]]
+    domains: dict[str, dict]
+    fields: list[dict]
+    schema: T.StructType
+    phys_of: dict[str, str]
+    part_cols: list[str]
+    part_types: dict[str, T.DataType]
+
+    @property
+    def log_dir(self) -> str:
+        return os.path.join(self.path, "_delta_log")
+
+    @property
+    def configuration(self) -> dict:
+        return self.metadata.get("configuration") or {}
+
+
+def snapshot(path: str, version: int | None = None) -> Snapshot:
+    """The table at ``path`` as of ``version`` (latest by default):
+    one :func:`_replay_log`, decoded once."""
+    log_dir = os.path.join(path, "_delta_log")
+    if not os.path.isdir(log_dir):
+        raise MissingDependency(f"not a Delta table (no _delta_log): {path}")
+    v, protocol, meta, active, txns, domains = _replay_log(log_dir, version)
+    if meta is None:
+        raise MissingDependency(f"Delta log has no metaData action: {path}")
+    fields = _schema_fields(meta)
+    schema = _delta_type_to_spark({"type": "struct", "fields": fields})
+    cfg = meta.get("configuration") or {}
+    mapped = cfg.get("delta.columnMapping.mode", "none") in ("name", "id")
+    part_cols = list(meta.get("partitionColumns") or [])
+    return Snapshot(
+        path=path,
+        version=v,
+        protocol=protocol,
+        metadata=meta,
+        active=active,
+        txns=txns,
+        domains=domains,
+        fields=fields,
+        schema=schema,
+        phys_of={
+            f["name"]: (f.get("metadata") or {}).get(_PHYSICAL_NAME, f["name"])
+            for f in fields
+        }
+        if mapped
+        else {},
+        part_cols=part_cols,
+        part_types={
+            c: schema[c].dataType if c in schema.names else T.StringType()
+            for c in part_cols
+        },
     )
-    if version is not None:
-        have = {int(f[:20]) for f in commits}
-        need = set(range(start_version + 1, version + 1))
-        missing = need - have
-        if missing:
-            raise MissingDependency(
-                f"Delta time travel to version {version} incomplete: "
-                f"commit version(s) {sorted(missing)} missing from "
-                f"{log_dir} (log cleaned up?); replay base is "
-                f"{'checkpoint ' + str(start_version) if start_version >= 0 else 'version 0'}"
-            )
-    for name in commits:
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action: dict[str, Any] = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    active[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    active.pop(action["remove"]["path"], None)
-    return active, meta
 
 
-def _list_checkpoints(log_dir: str) -> dict[int, list[str]]:
-    """All checkpoint versions present on disk → their file paths
-    (single-file and multi-part forms), independent of _last_checkpoint
-    — time travel needs older checkpoints the pointer no longer names."""
-    import re
+_COMMIT_FILE = re.compile(r"^(\d{20})\.json$")
+_CHECKPOINT_FILE = re.compile(
+    r"^(\d{20})\.checkpoint(?:\.(\d{10})\.(\d{10}))?\.parquet$"
+)
 
-    out: dict[int, list[str]] = {}
-    pat = re.compile(r"^(\d{20})\.checkpoint(?:\.\d{10}\.\d{10})?\.parquet$")
+
+def _replay_log(log_dir: str, version: int | None = None) -> tuple:
+    """Replay checkpoint + JSON commits → (version, protocol, metaData,
+    active adds by path, txns, live domains) as of ``version`` (latest
+    by default, delta-spark's versionAsOf otherwise).
+
+    One replay-base rule for both: the listing finds the newest
+    COMPLETE checkpoint at or below the target (every part of a
+    multi-part one present); ``_last_checkpoint`` is only a hint a
+    listing makes unnecessary.  Every commit after that checkpoint up
+    to the target must be present, or the replay fails loudly — early
+    commits may have been cleaned up after checkpointing, and a gap
+    would silently drop actions.  Each checkpoint part is read once,
+    for its add, metaData, protocol, txn and domainMetadata rows; an
+    unreadable one raises."""
+    commits: set[int] = set()
+    parts: dict[int, dict[int, str]] = {}
+    n_parts: dict[int, int] = {}
     for f in os.listdir(log_dir):
-        m = pat.match(f)
+        m = _COMMIT_FILE.match(f)
         if m:
-            out.setdefault(int(m.group(1)), []).append(os.path.join(log_dir, f))
-    for v in out:
-        out[v].sort()
-    return out
+            commits.add(int(m.group(1)))
+            continue
+        m = _CHECKPOINT_FILE.match(f)
+        if m:
+            v = int(m.group(1))
+            parts.setdefault(v, {})[int(m.group(2) or 1)] = f
+            n_parts[v] = int(m.group(3) or 1)
+    checkpoints = {
+        v: [os.path.join(log_dir, p[i]) for i in sorted(p)]
+        for v, p in parts.items()
+        if sorted(p) == list(range(1, n_parts[v] + 1))
+    }
+    target = (
+        max(commits | set(checkpoints), default=-1)
+        if version is None
+        else int(version)
+    )
+    if target < 0:
+        raise MissingDependency(f"empty Delta log (no commit): {log_dir}")
+    base = max((v for v in checkpoints if v <= target), default=-1)
+    missing = sorted(set(range(base + 1, target + 1)) - commits)
+    if missing:
+        raise MissingDependency(
+            f"Delta log replay to version {target} incomplete: commit "
+            f"version(s) {missing} missing from {log_dir} (log cleaned "
+            "up?); replay base is "
+            f"{'checkpoint ' + str(base) if base >= 0 else 'version 0'}"
+        )
+    state: dict[str, Any] = {
+        "protocol": None, "metaData": None, "active": {}, "txns": {},
+        "domains": {},
+    }
+    for cp in checkpoints.get(base, []):
+        import pyarrow.parquet as pq
+
+        try:
+            rows = pq.read_table(cp).to_pylist()
+        except Exception as exc:
+            raise UnsupportedFormat(
+                f"unreadable Delta checkpoint {cp}: {exc}"
+            ) from exc
+        for row in rows:
+            _apply_action(state, _checkpoint_action(row))
+    for v in range(base + 1, target + 1):
+        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
+            for line in fh:
+                if line.strip():
+                    _apply_action(state, json.loads(line))
+    return (
+        target,
+        state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2},
+        state["metaData"],
+        state["active"],
+        state["txns"],
+        {d: a for d, a in state["domains"].items() if not a.get("removed")},
+    )
 
 
-def _read_checkpoint(path: str) -> tuple[dict[str, dict], dict | None]:
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(path)
-    cols = tbl.to_pylist()
-    active: dict[str, dict] = {}
-    meta: dict | None = None
-    for row in cols:
-        add = row.get("add")
-        if add and add.get("path"):
-            pv = add.get("partitionValues")
-            if isinstance(pv, list):  # pyarrow renders map<k,v> as pairs
-                add["partitionValues"] = dict(pv)
-            # a checkpointed NULL deletionVector reads back as a struct
-            # of NULL fields — normalize to "no DV"
-            dv = add.get("deletionVector")
-            if dv is not None and dv.get("storageType") is None:
-                add["deletionVector"] = None
-            active[add["path"]] = add
-        md = row.get("metaData")
-        if md and md.get("id"):
-            # pyarrow renders map<k,v> as pair lists — normalize the
-            # configuration (and format.options) back to dicts, or
-            # every property read after a checkpoint replay breaks
-            # (cfg.get on a list)
-            if isinstance(md.get("configuration"), list):
-                md["configuration"] = dict(md["configuration"])
-            fmt = md.get("format")
-            if fmt and isinstance(fmt.get("options"), list):
-                fmt["options"] = dict(fmt["options"])
-            meta = md
-    return active, meta
+def _apply_action(state: dict, action: dict) -> None:
+    """Fold one log action into the replay state (later wins)."""
+    if action.get("add"):
+        state["active"][action["add"]["path"]] = action["add"]
+    elif action.get("remove"):
+        state["active"].pop(action["remove"]["path"], None)
+    elif action.get("metaData"):
+        state["metaData"] = action["metaData"]
+    elif action.get("protocol"):
+        state["protocol"] = action["protocol"]
+    elif action.get("txn"):
+        t = action["txn"]
+        state["txns"][t["appId"]] = (
+            int(t["version"]), int(t.get("lastUpdated") or 0)
+        )
+    elif action.get("domainMetadata"):
+        state["domains"][action["domainMetadata"]["domain"]] = action[
+            "domainMetadata"
+        ]
 
 
-def _partition_types(meta: dict, part_cols: list[str]) -> dict[str, Any]:
-    """Partition column Spark types from the metaData schemaString."""
-    types: dict[str, Any] = {c: "string" for c in part_cols}
-    schema_string = meta.get("schemaString")
-    if schema_string:
-        schema = json.loads(schema_string)
-        for field in schema.get("fields", []):
-            if field["name"] in types and isinstance(field["type"], str):
-                types[field["name"]] = duckdb_type_to_spark(field["type"])
-    return types
+def _checkpoint_action(row: dict) -> dict:
+    """One checkpoint row → the JSON-commit shape of its action, or
+    ``{}``: a checkpoint row carries one non-null action struct (the
+    others are NULL or, for columns pyarrow fills, structs of NULLs),
+    and pyarrow renders ``map<k,v>`` as pair lists."""
+    add = row.get("add")
+    if add and add.get("path"):
+        if isinstance(add.get("partitionValues"), list):
+            add["partitionValues"] = dict(add["partitionValues"])
+        dv = add.get("deletionVector")
+        if dv is not None and dv.get("storageType") is None:
+            add["deletionVector"] = None
+        return {"add": add}
+    md = row.get("metaData")
+    if md and md.get("id"):
+        if isinstance(md.get("configuration"), list):
+            md["configuration"] = dict(md["configuration"])
+        fmt = md.get("format")
+        if fmt and isinstance(fmt.get("options"), list):
+            fmt["options"] = dict(fmt["options"])
+        return {"metaData": md}
+    proto = row.get("protocol")
+    if proto and proto.get("minReaderVersion") is not None:
+        return {"protocol": {k: v for k, v in proto.items() if v is not None}}
+    txn = row.get("txn")
+    if txn and txn.get("appId"):
+        return {"txn": txn}
+    dm = row.get("domainMetadata")
+    if dm and dm.get("domain"):
+        return {"domainMetadata": dm}
+    return {}
+
+
+def _decode_log_path(p: str) -> str:
+    """An action's ``path`` (RFC 2396 percent-encoded, see
+    delta_write._encode_log_path) → the literal filesystem path
+    (relative or absolute)."""
+    from urllib.parse import unquote
+
+    return unquote(p)

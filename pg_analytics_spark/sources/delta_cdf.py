@@ -25,8 +25,9 @@ version range then works per commit:
 Output: the table's CURRENT columns + ``_change_type``,
 ``_commit_version``, ``_commit_timestamp`` — delta-spark's
 ``table_changes`` shape.  Every per-version read is the snapshot
-reader's own scan (sources/delta.py::_scan_files) under the CURRENT
-schema and column mapping, so feeds survive ALTER TABLE renames.
+reader's own scan (sources/delta.py::_scan_files) under the latest
+``delta.snapshot``'s schema and column mapping, so feeds survive
+ALTER TABLE renames; that one snapshot also bounds the version range.
 
 Reference scope: the reference reads Delta snapshots only
 (src/duckdb/delta.rs); CDF is additive parity-plus mirroring
@@ -47,7 +48,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_analytics_spark.errors import UnsupportedFormat
-from pg_analytics_spark.sources.delta_write import _decode_log_path
+from pg_analytics_spark.sources.delta import (
+    _COMMIT_FILE,
+    _abs_file,
+    _commit_info,
+    _decode_log_path,
+    _scan_files,
+    snapshot,
+)
+from pg_analytics_spark.sources.delta_write import (
+    _cdf_enabled,
+    _partition_values,
+)
 from pg_analytics_spark.types import local_frame
 
 
@@ -66,15 +78,14 @@ def _version_at_timestamp(log_dir: str, ts: str, side: str) -> int:
     qualifies."""
     import datetime as _dt
 
-    from pg_analytics_spark.sources.delta import _commit_info
-    from pg_analytics_spark.sources.delta_write import _next_version
-
     ts_ms = int(_dt.datetime.fromisoformat(ts).timestamp() * 1000)
-    latest = _next_version(log_dir) - 1
     stamped = [
         (v, _commit_info(log_dir, v)[0])
-        for v in range(latest + 1)
-        if os.path.isfile(os.path.join(log_dir, f"{v:020d}.json"))
+        for v in sorted(
+            int(m.group(1))
+            for m in map(_COMMIT_FILE.match, os.listdir(log_dir))
+            if m
+        )
     ]
     if side == "start":
         ok = [v for v, t in stamped if t >= ts_ms]
@@ -103,31 +114,13 @@ def read_table_changes(
     delta-spark's startingTimestamp/endingTimestamp forms: a start
     timestamp resolves to the earliest commit at-or-after it, an end
     timestamp to the latest at-or-before."""
+    # the latest snapshot drives the output schema + column mapping
+    snap = snapshot(path)
+    log_dir, latest = snap.log_dir, snap.version
     if isinstance(start_version, str):
-        start_version = _version_at_timestamp(
-            os.path.join(path, "_delta_log"), start_version, "start"
-        )
+        start_version = _version_at_timestamp(log_dir, start_version, "start")
     if isinstance(end_version, str):
-        end_version = _version_at_timestamp(
-            os.path.join(path, "_delta_log"), end_version, "end"
-        )
-    from pg_analytics_spark.sources.delta import (
-        _abs_file,
-        _commit_info,
-        _delta_type_to_spark,
-        _replay_log,
-        _scan_files,
-    )
-    from pg_analytics_spark.sources.delta_write import (
-        _next_version,
-        _partition_values,
-        _phys_renames,
-    )
-
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"not a Delta table (no _delta_log): {path}")
-    latest = _next_version(log_dir) - 1
+        end_version = _version_at_timestamp(log_dir, end_version, "end")
     if end_version is None:
         end_version = latest
     if not (0 <= start_version <= end_version <= latest):
@@ -135,24 +128,14 @@ def read_table_changes(
             f"table_changes: bad version range {start_version}.."
             f"{end_version} (latest is {latest})"
         )
-    # current metadata drives output schema + column-mapping resolution
-    _active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"Delta log has no metaData action: {path}")
-    cfg = meta.get("configuration") or {}
-    if str(cfg.get("delta.enableChangeDataFeed", "")).lower() != "true":
+    if not _cdf_enabled(snap):
         raise UnsupportedFormat(
             "table_changes: delta.enableChangeDataFeed is not set on "
             f"{path} — ALTER TABLE … SET TBLPROPERTIES "
             "('delta.enableChangeDataFeed' = 'true') first"
         )
-    part_cols = meta.get("partitionColumns") or []
-    phys_of = _phys_renames(meta) or {}
-    data_cols = [
-        f["name"]
-        for f in json.loads(meta["schemaString"])["fields"]
-        if f["name"] not in part_cols
-    ]
+    part_cols, phys_of = snap.part_cols, snap.phys_of
+    data_cols = [c for c in snap.schema.names if c not in part_cols]
     change_types = {"add": "insert", "remove": "delete"}
     change_type = T.StructField("_change_type", T.StringType())
 
@@ -180,7 +163,7 @@ def read_table_changes(
             extra, ct = [change_type], F.col("_change_type")
         else:
             extra, ct = (), F.lit(change_types[kind])
-        df = _scan_files(spark, meta, files, extra=extra)
+        df = _scan_files(spark, snap, files, extra=extra)
         pieces.append(
             df.select(
                 *data_cols,
@@ -240,13 +223,10 @@ def read_table_changes(
             _files_piece(removes, "remove", v, ts)
 
     if not pieces:
-        fields = json.loads(meta["schemaString"])["fields"]
         schema = T.StructType(
             [
-                T.StructField(
-                    f["name"], _delta_type_to_spark(f["type"]), True
-                )
-                for f in fields
+                T.StructField(f.name, f.dataType, True)
+                for f in snap.schema.fields
             ]
             + [
                 T.StructField("_change_type", T.StringType(), True),

@@ -30,6 +30,15 @@ docs, "Delta table as a source"):
   position minted by ``maxFilesPerTrigger``), so checkpoint recovery
   resumes at the exact next unconsumed file.
 
+Table state: every reader and the sink read one ``delta.snapshot`` —
+the same context-free replay and type decoder ``load_source(path,
+"delta")`` uses, so both surfaces return one schema for one table
+(a Delta ``timestamp`` is ``TimestampType``, ``timestamp_ntz``
+``TimestampNTZType``).  A batch read and a stream run are bound to
+the snapshot they planned from; the sink commits at that snapshot's
+version + 1, put-if-absent, and takes its SetTransaction watermark
+and protocol from it.
+
 Scale: ``latestOffset``/``partitions`` are metadata-sized driver work
 (one log listing / replay); data reading is one task per file.  The
 batch reader pushes partition-column EqualTo/In filters into the file
@@ -164,109 +173,25 @@ def _read_file_partition(part: _DeltaFilePartition):
     yield from out.to_batches()
 
 
-def _delta_type_contextfree(t):
-    """Delta schemaString type → Spark type WITHOUT a SparkContext:
-    DataSource methods run in Spark's plan-python worker, where
-    ``DataType.fromDDL`` (and any ``F.col``) would die with
-    SESSION_OR_CONTEXT_NOT_EXISTS — so primitives map directly and
-    complex types recurse."""
-    from pyspark.sql import types as T
-
-    if isinstance(t, dict):
-        k = t.get("type")
-        if k == "struct":
-            return T.StructType(
-                [
-                    T.StructField(
-                        f["name"],
-                        _delta_type_contextfree(f["type"]),
-                        bool(f.get("nullable", True)),
-                    )
-                    for f in t.get("fields", [])
-                ]
-            )
-        if k == "array":
-            return T.ArrayType(
-                _delta_type_contextfree(t["elementType"]),
-                bool(t.get("containsNull", True)),
-            )
-        if k == "map":
-            return T.MapType(
-                _delta_type_contextfree(t["keyType"]),
-                _delta_type_contextfree(t["valueType"]),
-                bool(t.get("valueContainsNull", True)),
-            )
-        raise UnsupportedFormat(f"delta type {t!r}")
-    prim = {
-        "string": T.StringType,
-        "long": T.LongType,
-        "integer": T.IntegerType,
-        "short": T.ShortType,
-        "byte": T.ByteType,
-        "double": T.DoubleType,
-        "float": T.FloatType,
-        "boolean": T.BooleanType,
-        "binary": T.BinaryType,
-        "date": T.DateType,
-        "timestamp": T.TimestampType,
-        "timestamp_ntz": T.TimestampNTZType,
-        "timestampNtz": T.TimestampNTZType,
-    }
-    if t in prim:
-        return prim[t]()
-    if t.startswith("decimal"):
-        import re
-
-        m = re.match(r"decimal\((\d+),\s*(\d+)\)", t)
-        if m:
-            return T.DecimalType(int(m.group(1)), int(m.group(2)))
-    raise UnsupportedFormat(f"delta type {t!r}")
-
-
-def _table_state(path: str, version: int | None = None):
-    """(active adds, meta, part_cols, phys_of, spark schema).
-    Context-free: runs inside the DataSource plan worker."""
+def _snapshot(path: str, version: int | None = None):
+    """``delta.snapshot`` from the DataSource plan worker (no
+    SparkContext there; the package may need the repo-root path)."""
     _ensure_importable()
-    from pg_analytics_spark.sources.delta import _replay_log
-    from pg_analytics_spark.sources.delta_write import _phys_renames
-    from pyspark.sql import types as T
+    from pg_analytics_spark.sources.delta import snapshot
 
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(
-            f"not a Delta table (no _delta_log): {path}"
-        )
-    active, meta = _replay_log(log_dir, version=version)
-    if meta is None:
-        raise UnsupportedFormat(f"Delta log has no metaData: {path}")
-    part_cols = list(meta.get("partitionColumns") or [])
-    fields = json.loads(meta["schemaString"])["fields"]
-    phys_of = _phys_renames(meta) or {}
-    schema = T.StructType(
-        [
-            T.StructField(
-                f["name"],
-                _delta_type_contextfree(f["type"]),
-                bool(f.get("nullable", True)),
-            )
-            for f in fields
-        ]
-    )
-    return active, meta, part_cols, phys_of, schema
+    return snapshot(path, version)
 
 
 def _partitions_for_adds(
-    path: str,
-    adds: dict[str, dict],
-    part_cols: list[str],
-    phys_of: dict[str, str],
-    arrow_schema,
-    part_filters: list | None = None,
+    snap, adds: dict[str, dict], part_filters: list | None = None
 ) -> list[_DeltaFilePartition]:
+    """One task per add of ``snap``'s table, conformed to its schema."""
     _ensure_importable()
     from pg_analytics_spark.sources.delta import _abs_file
     from pg_analytics_spark.sources.delta_dv import dv_blob
 
+    path, part_cols, phys_of = snap.path, snap.part_cols, snap.phys_of
+    arrow_schema = _arrow_schema_for(snap.schema)
     out = []
     for add in adds.values():
         pv_raw = add.get("partitionValues") or {}
@@ -352,14 +277,7 @@ def _part_value_parser(dtype):
 
 class _DeltaBatchReader(DataSourceReader):
     def __init__(self, path: str, version: int | None) -> None:
-        self._path = path
-        (
-            self._active,
-            self._meta,
-            self._part_cols,
-            self._phys_of,
-            self._schema,
-        ) = _table_state(path, version)
+        self._snap = _snapshot(path, version)
         self._part_filters: list = []
 
     def pushFilters(self, filters):
@@ -374,20 +292,18 @@ class _DeltaBatchReader(DataSourceReader):
         declared type, because '9' > '10' lexicographically.  A NULL
         partition value satisfies no predicate (SQL 3VL; Spark's
         re-applied filter agrees)."""
-        types_of = {
-            f.name: f.dataType for f in self._schema.fields
-        }
+        types_of = dict(self._snap.part_types)
         for f in filters:
             if isinstance(f, EqualTo) and len(f.attribute) == 1:
                 c = f.attribute[0]
-                if c in self._part_cols:
+                if c in self._snap.part_cols:
                     want = str(f.value)
                     self._part_filters.append(
                         lambda pv, c=c, want=want: pv.get(c) == want
                     )
             elif isinstance(f, In) and len(f.attribute) == 1:
                 c = f.attribute[0]
-                if c in self._part_cols:
+                if c in self._snap.part_cols:
                     wants = {str(v) for v in f.value}
                     self._part_filters.append(
                         lambda pv, c=c, wants=wants: pv.get(c) in wants
@@ -406,7 +322,7 @@ class _DeltaBatchReader(DataSourceReader):
             ):
                 c = f.attribute[0]
                 parse = _part_value_parser(types_of.get(c))
-                if c in self._part_cols and parse is not None:
+                if c in self._snap.part_cols and parse is not None:
                     try:
                         rhs = parse(f.value)
                     except Exception:
@@ -432,12 +348,7 @@ class _DeltaBatchReader(DataSourceReader):
 
     def partitions(self):
         return _partitions_for_adds(
-            self._path,
-            self._active,
-            self._part_cols,
-            self._phys_of,
-            _arrow_schema_for(self._schema),
-            self._part_filters,
+            self._snap, self._snap.active, self._part_filters
         )
 
     def read(self, partition):
@@ -476,19 +387,11 @@ class _DeltaStreamReader(DataSourceStreamReader):
                     f"{label} must be a positive integer"
                 )
         self._last_end: dict | None = None
-        (
-            _active,
-            meta,
-            self._part_cols,
-            self._phys_of,
-            self._schema,
-        ) = _table_state(path)
-        #: the schema this RUN is bound to — a mid-stream metaData
-        #: action that changes it fails the stream (delta-spark's
-        #: contract; see partitions()), and a restart re-binds here
-        self._schema_fields = json.loads(meta["schemaString"])[
-            "fields"
-        ]
+        #: the snapshot (and so the schema) this RUN is bound to — a
+        #: mid-stream metaData action that changes it fails the stream
+        #: (delta-spark's contract; see partitions()), and a restart
+        #: re-binds here
+        self._snap = _snapshot(path)
 
     def _latest_version(self) -> int:
         log_dir = os.path.join(self._path, "_delta_log")
@@ -575,7 +478,6 @@ class _DeltaStreamReader(DataSourceStreamReader):
             return [json.loads(line) for line in fh if line.strip()]
 
     def partitions(self, start: dict, end: dict):
-        arrow_schema = _arrow_schema_for(self._schema)
         sv, ev = int(start["version"]), int(end["version"])
         si = int(start.get("index", -1))
         ei = int(end.get("index", -1))
@@ -584,13 +486,8 @@ class _DeltaStreamReader(DataSourceStreamReader):
         if sv < 0:
             # initial snapshot AT the end version: active files with
             # DVs applied — the stream's baseline batch
-            active, _m, _p, _ph, _s = _table_state(self._path, ev)
             return _partitions_for_adds(
-                self._path,
-                active,
-                self._part_cols,
-                self._phys_of,
-                arrow_schema,
+                self._snap, _snapshot(self._path, ev).active
             )
         adds: dict[str, dict] = {}
         first_v = sv if si >= 0 else sv + 1
@@ -611,11 +508,14 @@ class _DeltaStreamReader(DataSourceStreamReader):
                 # null-fill missing columns — see
                 # _read_file_partition), which is delta-spark's
                 # documented recovery (restart / schemaTrackingLocation).
-                new_fields = json.loads(md["schemaString"])["fields"]
-                new_parts = list(md.get("partitionColumns") or [])
+                from pg_analytics_spark.sources.delta import (
+                    _schema_fields,
+                )
+
                 if (
-                    new_fields != self._schema_fields
-                    or new_parts != self._part_cols
+                    _schema_fields(md) != self._snap.fields
+                    or list(md.get("partitionColumns") or [])
+                    != self._snap.part_cols
                 ):
                     raise UnsupportedFormat(
                         f"delta stream: detected schema change in "
@@ -625,7 +525,13 @@ class _DeltaStreamReader(DataSourceStreamReader):
                         "schema (reads resume from the checkpoint; "
                         "pre-evolution files null-fill added columns)."
                     )
-            removes = [a for a in actions if "remove" in a]
+            # dataChange=false removes rearrange data (OPTIMIZE): no
+            # row left the table, so the stream has nothing to refuse
+            removes = [
+                a
+                for a in actions
+                if "remove" in a and a["remove"].get("dataChange", True)
+            ]
             if removes and not (
                 self._ignore_deletes or self._ignore_changes
             ):
@@ -675,13 +581,7 @@ class _DeltaStreamReader(DataSourceStreamReader):
             hi = ei if (v == ev and ei >= 0) else len(commit_adds)
             for add in commit_adds[lo:hi]:
                 adds[add["path"]] = add
-        return _partitions_for_adds(
-            self._path,
-            adds,
-            self._part_cols,
-            self._phys_of,
-            arrow_schema,
-        )
+        return _partitions_for_adds(self._snap, adds)
 
     def read(self, partition):
         yield from _read_file_partition(partition)
@@ -748,20 +648,18 @@ def _commit_files(
     import time as _time
     import uuid as _uuid
 
-    from pg_analytics_spark.sources.delta import _replay_log
     from pg_analytics_spark.sources.delta_write import (
         _encode_log_path,
-        _latest_protocol,
-        _next_version,
+        _removes,
+        _schema_shape,
         _write_commit,
-        last_txn_version,
     )
 
     log_dir = os.path.join(path, "_delta_log")
-    exists = os.path.isdir(log_dir)
-    if txn is not None and exists:
-        last = last_txn_version(path, txn[0])
-        if last is not None and int(txn[1]) <= last:
+    snap = _snapshot(path) if os.path.isdir(log_dir) else None
+    if txn is not None and snap is not None:
+        last = snap.txns.get(txn[0])
+        if last is not None and int(txn[1]) <= last[0]:
             _abort_files(path, messages)  # replayed epoch: drop stage
             return
     part_cols = list(part_cols or [])
@@ -785,18 +683,14 @@ def _commit_files(
         actions.append(
             {"txn": {"appId": txn[0], "version": int(txn[1])}}
         )
-    prev_active: dict = {}
     replace_schema = False
-    if exists:
-        prev_active, meta = _replay_log(log_dir)
-        if meta is None:
-            raise UnsupportedFormat(f"no Delta metaData at {path}")
+    if snap is not None:
         # enforcement features need a SparkSession to evaluate their
         # expressions over the batch — which the DataSource commit
         # worker does not have.  Silently skipping them would commit
         # WRONG data (unvalidated constraints / ungenerated columns),
         # so such tables refuse this writer outright.
-        cfg = meta.get("configuration") or {}
+        cfg = snap.configuration
         if any(k.startswith("delta.constraints.") for k in cfg):
             raise UnsupportedFormat(
                 "delta_native writer cannot enforce this table's CHECK "
@@ -805,7 +699,7 @@ def _commit_files(
             )
         if any(
             (f.get("metadata") or {}).get("delta.generationExpression")
-            for f in json.loads(meta["schemaString"])["fields"]
+            for f in snap.fields
         ):
             raise UnsupportedFormat(
                 "delta_native writer cannot compute/validate this "
@@ -824,23 +718,17 @@ def _commit_files(
                 "ids (baseRowId / the domainMetadata high-water mark) "
                 "— write via write_delta, which assigns them"
             )
-        have = {
-            (f["name"], json.dumps(f["type"]))
-            for f in json.loads(meta["schemaString"])["fields"]
-        }
-        want = {
-            (f.name, json.dumps(f.jsonValue()["type"]))
-            for f in schema.fields
-        }
+        have = set(_schema_shape(snap.fields))
+        want = set(_schema_shape(schema.jsonValue()["fields"]))
         if have != want and not overwrite:
             raise UnsupportedFormat(
                 "delta_native append schema mismatch — evolve via "
                 "write_delta(mergeSchema) or overwrite"
             )
-        if (meta.get("partitionColumns") or []) != part_cols:
+        if snap.part_cols != part_cols:
             raise UnsupportedFormat(
                 f"delta_native partition mismatch: table is "
-                f"partitioned by {meta.get('partitionColumns') or []}, "
+                f"partitioned by {snap.part_cols}, "
                 f"write requested {part_cols}"
             )
         if have != want and overwrite:
@@ -849,12 +737,12 @@ def _commit_files(
         # existing table's protocol is CARRIED — including on a
         # schema-replacing overwrite, which must never downgrade the
         # protocol external readers negotiated features from.
-        actions.append({"protocol": _latest_protocol(log_dir)})
+        actions.append({"protocol": snap.protocol})
     else:
         actions.append(
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
         )
-    if not exists or replace_schema:
+    if snap is None or replace_schema:
         actions.append(
             {
                 "metaData": {
@@ -867,17 +755,8 @@ def _commit_files(
                 }
             }
         )
-    if overwrite:
-        for p in sorted(prev_active):
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+    if overwrite and snap is not None:
+        actions += _removes(snap.active, now_ms)
     for fname, size, mtime_ms, stats, pv in files:
         actions.append(
             {
@@ -891,7 +770,7 @@ def _commit_files(
                 }
             }
         )
-    version = _next_version(log_dir) if os.path.isdir(log_dir) else 0
+    version = 0 if snap is None else snap.version + 1
     _write_commit(path, log_dir, version, actions)
 
 
@@ -1033,8 +912,7 @@ class DeltaNativeDataSource(DataSource):
         return version
 
     def schema(self):
-        *_, schema = _table_state(self._path(), self._as_of_version())
-        return schema
+        return _snapshot(self._path(), self._as_of_version()).schema
 
     def reader(self, schema):
         return _DeltaBatchReader(self._path(), self._as_of_version())

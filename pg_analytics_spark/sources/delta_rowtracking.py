@@ -27,6 +27,12 @@ Spec shape mirrored here:
   columns never appear in the table schema, and the normal read path
   (delta._scan_files) does not read them.
 
+Every input comes from the one ``delta.Snapshot`` the statement read:
+the high-water mark from its live ``domains``, each file's baseRowId
+from its ``active`` adds; nothing here walks the log itself.  A
+high-water mark that cannot be read raises UnsupportedFormat instead
+of restarting ids from 0.
+
 Scale shape: id assignment is O(add actions) driver-side arithmetic
 off footer ``numRecords`` (already computed for stats); the read path
 adds one broadcast join of a file→(baseRowId, version) map — metadata-
@@ -36,12 +42,17 @@ sized — plus the parquet reader's free ``_metadata.row_index``.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.sources.delta import (
+    Snapshot,
+    _abs_file,
+    _load_via_log,
+    snapshot,
+)
 from pg_analytics_spark.types import local_frame
 
 #: domainMetadata domain name the spec reserves for row tracking.
@@ -71,82 +82,35 @@ def materialized_cols(meta_like: dict) -> tuple[str, str]:
     return id_col, ver_col
 
 
-def _domain_rows_from_checkpoint(cp_paths: list[str]) -> dict[str, dict]:
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    for cp in cp_paths:
-        t = pq.read_table(cp)
-        if "domainMetadata" not in t.column_names:
-            continue
-        for row in t.column("domainMetadata").to_pylist():
-            if row and row.get("domain"):
-                out[row["domain"]] = row
-    return out
-
-
-def live_domain_metadata(log_dir: str) -> dict[str, dict]:
-    """domain → newest domainMetadata action, replayed from the newest
-    checkpoint (when present) plus every JSON commit after it — the
-    same replay-base rule as the main log reader.  ``removed`` domains
-    drop out."""
-    out: dict[str, dict] = {}
-    if not os.path.isdir(log_dir):
-        return out
-    base = -1
-    last_cp = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(last_cp):
-        try:
-            with open(last_cp) as fh:
-                base = int(json.load(fh)["version"])
-            out.update(
-                _domain_rows_from_checkpoint(
-                    [os.path.join(log_dir, f"{base:020d}.checkpoint.parquet")]
-                )
-            )
-        except Exception:
-            base = -1
-            out = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not (name.endswith(".json") and name[:20].isdigit()):
-            continue
-        if int(name[:20]) <= base:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                dm = a.get("domainMetadata")
-                if dm and dm.get("domain"):
-                    out[dm["domain"]] = dm
-    return {d: m for d, m in out.items() if not m.get("removed")}
-
-
-def row_id_high_watermark(log_dir: str) -> int:
-    """The table's current row-id high-water mark (-1 before any ids
-    were allocated)."""
-    dm = live_domain_metadata(log_dir).get(ROW_TRACKING_DOMAIN)
+def row_id_high_watermark(snap: Snapshot | None) -> int:
+    """The table's row-id high-water mark in ``snap`` (-1 before any
+    ids were allocated, and for a table being created).  A mark that
+    cannot be read raises: guessing one would re-issue row ids."""
+    dm = None if snap is None else snap.domains.get(ROW_TRACKING_DOMAIN)
     if not dm:
         return -1
     try:
-        return int(json.loads(dm.get("configuration") or "{}").get(
-            "rowIdHighWaterMark", -1
-        ))
-    except Exception:
-        return -1
+        return int(json.loads(dm["configuration"])["rowIdHighWaterMark"])
+    except (KeyError, TypeError, ValueError) as exc:
+        raise UnsupportedFormat(
+            f"Delta table {snap.path}: unreadable row-id high-water mark "
+            f"in its {ROW_TRACKING_DOMAIN} domainMetadata "
+            f"({dm.get('configuration')!r}: {exc!r}) — refusing to "
+            "allocate row ids"
+        ) from None
 
 
 def assign_fresh_row_ids(
-    log_dir: str, adds: list[dict], version: int
+    snap: Snapshot | None, adds: list[dict], version: int
 ) -> dict:
     """Stamp ``baseRowId`` + ``defaultRowCommitVersion`` onto every
-    staged add (IN PLACE, sorted by path so assignment is
-    deterministic) and return the domainMetadata action carrying the
-    advanced high-water mark.  Requires footer stats (numRecords) on
-    every add — this writer always computes them; a statless add is
-    refused rather than guessed."""
-    hwm = row_id_high_watermark(log_dir)
+    staged add of the commit at ``version`` against ``snap`` (None
+    when it creates the table) — IN PLACE, sorted by path so
+    assignment is deterministic — and return the domainMetadata
+    action carrying the advanced high-water mark.  Requires footer
+    stats (numRecords) on every add — this writer always computes
+    them; a statless add is refused rather than guessed."""
+    hwm = row_id_high_watermark(snap)
     for entry in sorted(adds, key=lambda e: e["add"]["path"]):
         add = entry["add"]
         stats = add.get("stats")
@@ -195,25 +159,21 @@ def strip_hidden_stats(adds: list[dict], hidden: tuple[str, str]) -> None:
 
 def attach_current_ids(
     spark: SparkSession,
-    table_path: str,
+    snap: Snapshot,
     df: DataFrame,
-    prev_active: dict,
-    meta: dict,
     *,
     file_col: str = "_tfile",
     pos_col: str = "_tpos",
 ) -> DataFrame:
     """Attach ``_rt_id`` / ``_rt_ver`` (each row's CURRENT identity)
-    to a target scan that already carries the file path + physical
-    position coordinates, then drop the raw hidden columns.  One
-    broadcast join of a file→(baseRowId, defaultRowCommitVersion)
+    to a scan of ``snap`` that already carries the file path +
+    physical position coordinates, then drop the raw hidden columns.
+    One broadcast join of a file→(baseRowId, defaultRowCommitVersion)
     map — metadata-sized.  Shared by UPDATE/DELETE/MERGE so the
     preservation arithmetic cannot drift between DML paths."""
-    from pg_analytics_spark.sources.delta import _abs_file
-
-    mat_id, mat_ver = materialized_cols(meta)
+    mat_id, mat_ver = materialized_cols(snap.metadata)
     base_rows = []
-    for a in prev_active.values():
+    for a in snap.active.values():
         if a.get("baseRowId") is None:
             raise UnsupportedFormat(
                 f"row-tracking table has active file {a['path']} "
@@ -221,7 +181,7 @@ def attach_current_ids(
             )
         base_rows.append(
             (
-                _abs_file(table_path, a["path"]),
+                _abs_file(snap.path, a["path"]),
                 int(a["baseRowId"]),
                 int(a["defaultRowCommitVersion"]),
             )
@@ -257,27 +217,26 @@ def with_current_row_ids(
     table_path: str,
     version: int | None = None,
 ) -> DataFrame:
-    """The table with two extra columns ``_row_id`` and
+    """:func:`row_ids_of` the table at ``version`` (latest by
+    default)."""
+    return row_ids_of(spark, snapshot(table_path, version))
+
+
+def row_ids_of(spark: SparkSession, snap: Snapshot) -> DataFrame:
+    """The snapshot with two extra columns ``_row_id`` and
     ``_row_commit_version`` — materialized values when a rewrite
     preserved them, fresh ``baseRowId + position`` defaults otherwise.
     DV-deleted rows are (as always) invisible; surviving rows keep
     their physical positions, exactly the spec's fresh-id coordinate.
     """
-    from pg_analytics_spark.sources.delta import _load_via_log, _replay_log
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    active, meta = _replay_log(log_dir, version=version)
-    if meta is None:
-        raise UnsupportedFormat(f"not a Delta table: {table_path}")
-    if not row_tracking_enabled(meta):
+    if not row_tracking_enabled(snap.metadata):
         raise UnsupportedFormat(
-            f"row tracking is not enabled on {table_path} "
+            f"row tracking is not enabled on {snap.path} "
             f"(set {PROP_ENABLE}=true at creation)"
         )
-    id_col, ver_col = materialized_cols(meta)
+    id_col, ver_col = materialized_cols(snap.metadata)
     df = _load_via_log(
-        spark, table_path, version=version, keep_meta=True,
-        keep_phys=[id_col, ver_col],
+        spark, snap, keep_meta=True, keep_phys=[id_col, ver_col]
     )
     if "_dv_file" not in df.columns:  # empty table: typed empty frame
         return df.select(
@@ -286,8 +245,7 @@ def with_current_row_ids(
             F.lit(None).cast("long").alias("_row_commit_version"),
         ).drop(id_col, ver_col)
     out = attach_current_ids(
-        spark, table_path, df, active, meta,
-        file_col="_dv_file", pos_col="_dv_pos",
+        spark, snap, df, file_col="_dv_file", pos_col="_dv_pos"
     )
     keep = [
         c for c in out.columns

@@ -46,7 +46,15 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-from pg_analytics_spark.errors import UnsupportedFormat
+from pg_analytics_spark.errors import UnsupportedFormat, fallback_warning
+from pg_analytics_spark.sources.delta import (
+    Snapshot,
+    _abs_file,
+    _decode_log_path,
+    _file_key,
+    _load_via_log,
+    snapshot,
+)
 from pg_analytics_spark.sources.footer_stats import footer_stats
 
 _STATS_TYPES = {
@@ -135,13 +143,9 @@ def per_file_on_executors(spark, files: list[str], one) -> dict:
     return dict(sc.parallelize(sorted(files), slices).map(one).collect())
 
 
-def _schema_shape(schema_string: str) -> list[tuple]:
-    """(name, type) pairs of a Spark schema JSON — the comparison that
+def _schema_shape(fields: list[dict]) -> list[tuple]:
+    """(name, type) pairs of schema field dicts — the comparison that
     matters for append safety; nullability/metadata are ignored."""
-    try:
-        fields = json.loads(schema_string).get("fields", [])
-    except (ValueError, AttributeError):
-        return []
     return [
         (f.get("name"), json.dumps(f.get("type"), sort_keys=True))
         for f in fields
@@ -152,7 +156,22 @@ def _truthy_opt(v) -> bool:
     return str(v).lower() in ("1", "true", "yes", "on")
 
 
-def _conform_append_schema(df, prev_schema: str, *, merge_schema: bool):
+def _snapshot_of(path: str, version: int | None = None) -> Snapshot:
+    """:func:`delta.snapshot` for a writer: a path that is not a
+    readable Delta table (or lacks ``version``) is UnsupportedFormat."""
+    from pg_analytics_spark.errors import MissingDependency
+
+    try:
+        return snapshot(path, version)
+    except MissingDependency as exc:
+        if version is None:
+            raise UnsupportedFormat(str(exc)) from None
+        raise UnsupportedFormat(
+            f"delta table at {path} has no version {version}: {exc}"
+        ) from None
+
+
+def _conform_append_schema(df, snap: Snapshot, *, merge_schema: bool):
     """Align an append dataframe with the table schema, delta-spark
     semantics:
 
@@ -170,14 +189,10 @@ def _conform_append_schema(df, prev_schema: str, *, merge_schema: bool):
     """
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.delta import _delta_type_to_spark
-
-    prev_fields = json.loads(prev_schema).get("fields", [])
+    prev_fields = snap.fields
     df_fields = {f.name: f for f in df.schema.fields}
-    df_shape = {
-        f[0]: f[1] for f in _schema_shape(df.schema.json())
-    }
-    prev_shape = {f[0]: f[1] for f in _schema_shape(prev_schema)}
+    df_shape = dict(_schema_shape(df.schema.jsonValue()["fields"]))
+    prev_shape = dict(_schema_shape(prev_fields))
     cols = []
     for pf in prev_fields:
         name = pf["name"]
@@ -190,9 +205,7 @@ def _conform_append_schema(df, prev_schema: str, *, merge_schema: bool):
             cols.append(F.col(name))
         elif pf.get("nullable", True):
             cols.append(
-                F.lit(None)
-                .cast(_delta_type_to_spark(pf["type"]))
-                .alias(name)
+                F.lit(None).cast(snap.schema[name].dataType).alias(name)
             )
         else:
             raise UnsupportedFormat(
@@ -216,9 +229,7 @@ def _conform_append_schema(df, prev_schema: str, *, merge_schema: bool):
     # nullable FORCED true — older files have no values for them, so
     # the schema must admit nulls regardless of the append dataframe's
     # own (possibly literal-non-null) nullability
-    out_fields = {
-        f["name"]: f for f in json.loads(out.schema.json())["fields"]
-    }
+    out_fields = {f["name"]: f for f in out.schema.jsonValue()["fields"]}
     evolved_fields = list(prev_fields) + [
         {**out_fields[n], "nullable": True} for n in new_names
     ]
@@ -242,28 +253,6 @@ def _partition_values(rel_path: str) -> dict[str, str | None]:
     return pv
 
 
-def _phys_renames(meta_like: dict) -> dict[str, str] | None:
-    """Column mapping's name rule: logical top-level name → physical
-    parquet name, from a metaData action's schemaString.  None when
-    the table has no mapping (the common case) — files then carry the
-    logical names.  The one copy of the rule: the snapshot and
-    change-feed reader (sources/delta.py::_scan_files), the
-    ``delta_native`` DataSource and this writer all call it; pure
-    Python, so the DataSource plan worker (no SparkContext) can too.
-    Nested fields need no write-side handling: the reader's positional
-    cast onto the logical type renames every nested level on read."""
-    cfg = meta_like.get("configuration") or {}
-    if cfg.get("delta.columnMapping.mode", "none") not in ("name", "id"):
-        return None
-    fields = json.loads(meta_like["schemaString"])["fields"]
-    return {
-        f["name"]: (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in fields
-    }
-
-
 def _stage_as_physical(df: DataFrame, renames: dict[str, str] | None):
     if not renames:
         return df
@@ -275,7 +264,7 @@ def _stage_as_physical(df: DataFrame, renames: dict[str, str] | None):
 
 
 def _apply_column_mapping(
-    prev_meta: dict | None, schema_string: str, create_cfg: dict | None
+    snap: Snapshot | None, schema_string: str, create_cfg: dict | None
 ) -> tuple[str, dict, dict[str, str] | None, dict | None]:
     """Annotate ``schema_string`` for column mapping when the table
     (or the creating ``configuration``) has mapping enabled: every
@@ -287,18 +276,14 @@ def _apply_column_mapping(
     logical→physical renames or None, protocol action dict when the
     CREATING commit must declare mapping support).  Protocol floor per
     the Delta spec's column-mapping feature: reader 2 / writer 5."""
-    cfg = dict(
-        (prev_meta or {}).get("configuration")
-        if prev_meta is not None
-        else (create_cfg or {})
-    )
+    cfg = dict(snap.configuration if snap is not None else (create_cfg or {}))
     if cfg.get("delta.columnMapping.mode", "none") not in ("name", "id"):
         return schema_string, cfg, None, None
-    prev_by_name: dict[str, dict] = {}
-    if prev_meta is not None:
-        for f in json.loads(prev_meta["schemaString"])["fields"]:
-            if (f.get("metadata") or {}).get("delta.columnMapping.id"):
-                prev_by_name[f["name"]] = f["metadata"]
+    prev_by_name: dict[str, dict] = {
+        f["name"]: f["metadata"]
+        for f in (snap.fields if snap is not None else [])
+        if (f.get("metadata") or {}).get("delta.columnMapping.id")
+    }
     max_id = int(cfg.get("delta.columnMapping.maxColumnId", 0) or 0)
     max_id = max(
         [max_id]
@@ -320,53 +305,10 @@ def _apply_column_mapping(
     cfg["delta.columnMapping.maxColumnId"] = str(max_id)
     proto = (
         {"minReaderVersion": 2, "minWriterVersion": 5}
-        if prev_meta is None
+        if snap is None
         else None
     )
     return json.dumps(schema), cfg, renames, proto
-
-
-def _latest_protocol(log_dir: str) -> dict:
-    """The table's current protocol action — newest JSON commit that
-    carries one, falling back to the newest checkpoint's protocol row,
-    else the writer's base (1, 2).  Metadata-sized IO: checkpoints and
-    ALTER upgrades are rare, commits are small."""
-    try:
-        names = sorted(
-            (f for f in os.listdir(log_dir) if f.endswith(".json")),
-            reverse=True,
-        )
-    except OSError:
-        names = []
-    for name in names:
-        try:
-            with open(os.path.join(log_dir, name)) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "protocol" in a:
-                        return a["protocol"]
-        except (OSError, ValueError):
-            continue
-    cps = sorted(
-        (f for f in os.listdir(log_dir)
-         if ".checkpoint." in f and f.endswith(".parquet")),
-        reverse=True,
-    ) if os.path.isdir(log_dir) else []
-    for cp in cps:
-        try:
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(
-                os.path.join(log_dir, cp), columns=["protocol"]
-            ).to_pylist()
-            for row in t:
-                if row.get("protocol") and row["protocol"].get(
-                    "minReaderVersion"
-                ) is not None:
-                    return row["protocol"]
-        except Exception:
-            continue
-    return {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
 def alter_delta(
@@ -396,21 +338,17 @@ def alter_delta(
     parity-plus mirroring delta-spark's ALTER TABLE surface.
     Returns {"version": n, "operation": ...}.
     """
+    import copy
     import time as _time
 
-    from pg_analytics_spark.sources.delta import _replay_log
     from pg_analytics_spark.types import duckdb_type_to_spark
 
     if sum(x is not None for x in (add, rename, drop)) != 1:
         raise UnsupportedFormat(
             "alter_delta takes exactly one of add=/rename=/drop="
         )
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"not a Delta table (no _delta_log): {path}")
-    _active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"Delta log has no metaData action: {path}")
+    snap = _snapshot_of(path)
+    meta = snap.metadata
     if (rename is not None or drop is not None):
         from pg_analytics_spark.sources import delta_rowtracking as _rtm
 
@@ -420,11 +358,10 @@ def alter_delta(
                 "mapping, which this writer does not combine with row "
                 "tracking — ADD COLUMN is supported"
             )
-    schema = json.loads(meta["schemaString"])
-    fields = schema.get("fields", [])
+    fields = copy.deepcopy(snap.fields)
     names = [f["name"] for f in fields]
-    cfg = dict(meta.get("configuration") or {})
-    part_cols = list(meta.get("partitionColumns") or [])
+    cfg = dict(snap.configuration)
+    part_cols = list(snap.part_cols)
     proto_action: dict | None = None
 
     def _ensure_mapping() -> None:
@@ -443,7 +380,7 @@ def alter_delta(
             f["metadata"] = md
         cfg["delta.columnMapping.mode"] = "name"
         cfg["delta.columnMapping.maxColumnId"] = str(next_id)
-        proto = _latest_protocol(log_dir)
+        proto = snap.protocol
         proto_action = {
             "minReaderVersion": max(2, int(proto.get("minReaderVersion", 1))),
             "minWriterVersion": max(5, int(proto.get("minWriterVersion", 2))),
@@ -499,8 +436,7 @@ def alter_delta(
         fields[:] = [f for f in fields if f["name"] != drop]
         op, op_params = "DROP COLUMNS", {"column": drop}
 
-    schema["fields"] = fields
-    version = _next_version(log_dir)
+    version = snap.version + 1
     now_ms = int(_time.time() * 1000)
     actions: list[dict] = [
         {
@@ -520,7 +456,9 @@ def alter_delta(
                 "id": meta.get("id") or str(uuid.uuid4()),
                 "format": meta.get("format")
                 or {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema),
+                "schemaString": json.dumps(
+                    {"type": "struct", "fields": fields}
+                ),
                 "partitionColumns": part_cols,
                 "configuration": cfg,
                 "createdTime": meta.get("createdTime") or now_ms,
@@ -528,7 +466,7 @@ def alter_delta(
         }
     )
     actions[0]["commitInfo"]["timestamp"] = int(_time.time() * 1000)
-    _write_commit(path, log_dir, version, actions)
+    _write_commit(path, snap.log_dir, version, actions)
     return {"version": version, "operation": op}
 
 
@@ -643,14 +581,8 @@ def alter_delta_properties(
     alter_delta's RENAME/DROP path performs."""
     import time as _time
 
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"not a Delta table (no _delta_log): {path}")
-    _active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"Delta log has no metaData action: {path}")
+    snap = _snapshot_of(path)
+    meta = snap.metadata
     for k in list(set_props or {}):
         if k.startswith("delta.columnMapping."):
             raise UnsupportedFormat(
@@ -675,7 +607,7 @@ def alter_delta_properties(
                     "orphan the materialized identity columns — "
                     "recreate the table instead"
                 )
-    cfg = dict(meta.get("configuration") or {})
+    cfg = dict(snap.configuration)
     cfg.update({k: str(v) for k, v in (set_props or {}).items()})
     for k in unset_props or []:
         cfg.pop(k, None)
@@ -685,14 +617,14 @@ def alter_delta_properties(
         .lower()
         == "true"
     ):
-        proto = _latest_protocol(log_dir)
+        proto = snap.protocol
         if int(proto.get("minWriterVersion", 2)) < 4:
             # the spec's changeDataFeed floor: writer version 4
             proto_action = {
                 "minReaderVersion": int(proto.get("minReaderVersion", 1)),
                 "minWriterVersion": 4,
             }
-    version = _next_version(log_dir)
+    version = snap.version + 1
     now_ms = int(_time.time() * 1000)
     actions = [
         {
@@ -721,23 +653,8 @@ def alter_delta_properties(
     ]
     if proto_action is not None:
         actions.insert(1, {"protocol": proto_action})
-    _write_commit(path, log_dir, version, actions)
+    _write_commit(path, snap.log_dir, version, actions)
     return {"version": version, "configuration": cfg}
-
-
-def _next_version(log_dir: str) -> int:
-    """Next commit version: one past the max of JSON commits AND
-    checkpoints — after log cleanup the checkpoint may be the only
-    witness of the latest version."""
-    if not os.path.isdir(log_dir):
-        return 0
-    vs = [
-        int(f[:20])
-        for f in os.listdir(log_dir)
-        if f[:20].isdigit()
-        and (f.endswith(".json") or ".checkpoint." in f)
-    ]
-    return max(vs) + 1 if vs else 0
 
 
 def checkpoint_delta(path: str) -> dict:
@@ -751,15 +668,9 @@ def checkpoint_delta(path: str) -> dict:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    log_dir = os.path.join(path, "_delta_log")
-    version = _next_version(log_dir) - 1
-    if version < 0:
-        raise UnsupportedFormat(f"no Delta log at {path}")
-    active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"Delta log has no metaData action: {path}")
+    snap = _snapshot_of(path)
+    log_dir, version = snap.log_dir, snap.version
+    active, meta = snap.active, snap.metadata
 
     dv_type = pa.struct(
         [
@@ -863,7 +774,7 @@ def checkpoint_delta(path: str) -> dict:
             # the table's ACTUAL protocol — a column-mapping upgrade
             # (alter_delta) raises it to (2, 5), and a checkpoint that
             # demoted it would let a cleanup drop the upgrade commit
-            "protocol": _latest_protocol(log_dir),
+            "protocol": snap.protocol,
         }
     )
     # SetTransaction watermarks survive the checkpoint (protocol: txn
@@ -876,7 +787,7 @@ def checkpoint_delta(path: str) -> dict:
             ("lastUpdated", pa.int64()),
         ]
     )
-    for app_id, (txn_v, txn_ts) in sorted(_txn_versions(log_dir).items()):
+    for app_id, (txn_v, txn_ts) in sorted(snap.txns.items()):
         rows.append(
             {
                 "add": None,
@@ -892,10 +803,6 @@ def checkpoint_delta(path: str) -> dict:
     # live domainMetadata survives the checkpoint (the row-tracking
     # high-water mark lives here; dropping it would let a cleaned-up
     # log re-allocate already-issued row ids)
-    from pg_analytics_spark.sources.delta_rowtracking import (
-        live_domain_metadata,
-    )
-
     dm_type = pa.struct(
         [
             ("domain", pa.string()),
@@ -903,7 +810,7 @@ def checkpoint_delta(path: str) -> dict:
             ("removed", pa.bool_()),
         ]
     )
-    for domain, dm in sorted(live_domain_metadata(log_dir).items()):
+    for domain, dm in sorted(snap.domains.items()):
         rows.append(
             {
                 "add": None,
@@ -942,57 +849,49 @@ def compact_delta(
     zorder_by: list[str] | None = None,
 ) -> dict:
     """Small-file compaction as a Delta COMMIT (not a directory swap —
-    that would corrupt the log): read the active file set, rewrite at
-    ~target_file_mb, commit as one overwrite (remove actions for every
-    old file + adds for the compacted ones).  Readers see the old or
-    the new file set atomically; history stays time-travelable.
+    that would corrupt the log): read one snapshot's active file set,
+    rewrite it at ~target_file_mb, and commit the replace against that
+    snapshot at its version + 1 (remove actions for every file it read
+    + adds for the compacted ones, all ``dataChange: false`` — the
+    protocol's rearrangement marker, so the change feed and streaming
+    readers see no change).  A commit that landed after the read makes
+    the publish raise ConcurrentWriteError instead of dropping the
+    other writer's files.  Readers see the old or the new file set
+    atomically; history stays time-travelable.
 
     ``zorder_by``: Delta's ``OPTIMIZE … ZORDER BY (cols)`` — the
     rewrite range-partitions AND sorts on the Morton interleave of the
     named columns (operators/zorder.py), so each output file covers a
     tight min/max envelope on EVERY clustered column and the per-file
     ``stats`` already recorded in each add action skip files for box
-    predicates on any of them.  Returns {files_before, files_after,
-    bytes, version} — Engine.compact's parquet shape plus the commit
-    version."""
+    predicates on any of them.  A row-tracking table keeps every row's
+    identity: the rewrite materializes the current ids into the hidden
+    columns.  Returns {files_before, files_after, bytes, version} —
+    Engine.compact's parquet shape plus the commit version."""
     import math
+    import time as _time
 
-    from pg_analytics_spark.sources import load_source
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    log_dir = os.path.join(path, "_delta_log")
-    active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"no Delta table at {path}")
     from pg_analytics_spark.sources import delta_rowtracking as _rtm
 
-    rt = _rtm.row_tracking_enabled(meta)
-    n_before = len(active)
-    total = sum(int(a.get("size") or 0) for a in active.values())
-    part_cols = meta.get("partitionColumns") or []
-    rt_cols: list[str] = []
-    if rt:
-        # OPTIMIZE must PRESERVE identities: read the table WITH its
-        # current row ids and materialize them into the rewritten
-        # files under the hidden column names (values there override
-        # the fresh defaults the new adds also carry, per the spec)
-        mat_id, mat_ver = _rtm.materialized_cols(meta)
-        df = (
-            _rtm.with_current_row_ids(spark, path)
-            .withColumnRenamed("_row_id", mat_id)
-            .withColumnRenamed("_row_commit_version", mat_ver)
+    snap = _snapshot_of(path)
+    rt = _rtm.row_tracking_enabled(snap.metadata)
+    total = sum(int(a.get("size") or 0) for a in snap.active.values())
+    part_cols = snap.part_cols
+    if zorder_by and part_cols:
+        raise UnsupportedFormat(
+            "ZORDER BY on a partitioned delta table is not "
+            "supported — cluster within partitions is a follow-up; "
+            "drop partitioning or zorder_by"
         )
-        rt_cols = [mat_id, mat_ver]
+    if rt:
+        mat_id, mat_ver = _rtm.materialized_cols(snap.metadata)
+        df = _rtm.row_ids_of(spark, snap).withColumnsRenamed(
+            {"_row_id": mat_id, "_row_commit_version": mat_ver}
+        )
     else:
-        df = load_source(spark, path, "delta")
+        df = _load_via_log(spark, snap)
     n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     if zorder_by:
-        if part_cols:
-            raise UnsupportedFormat(
-                "ZORDER BY on a partitioned delta table is not "
-                "supported — cluster within partitions is a follow-up; "
-                "drop partitioning or zorder_by"
-            )
         from pg_analytics_spark.operators.zorder import (
             zorder_bins,
             zorder_key_expr,
@@ -1009,54 +908,55 @@ def compact_delta(
         )
     else:
         out = df.repartition(n, *part_cols) if part_cols else df.repartition(n)
+    version = snap.version + 1
+    renames = snap.phys_of
+    adds, _n_rows = _stage_files(
+        _stage_as_physical(out, renames), path, version,
+        [renames.get(c, c) for c in part_cols], None,
+    )
     if rt:
-        # own commit path: write_delta would read the hidden identity
-        # columns into the minted schemaString — here the table schema
-        # is UNCHANGED, the commit is a pure physical replace
-        import time as _time
-
-        version = _next_version(log_dir)
-        adds, _n_rows = _stage_files(out, path, version, part_cols, None)
-        _rtm.strip_hidden_stats(adds, (rt_cols[0], rt_cols[1]))
-        now_ms = int(_time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetFileMb": target_file_mb,
-                        "zOrderBy": json.dumps(zorder_by or []),
-                    },
-                    "engineInfo": "pg_analytics_spark-native-writer",
-                }
+        _rtm.strip_hidden_stats(adds, (mat_id, mat_ver))
+    now_ms = int(_time.time() * 1000)
+    actions: list[dict] = [
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": "OPTIMIZE",
+                "operationParameters": {
+                    "targetFileMb": target_file_mb,
+                    "zOrderBy": json.dumps(zorder_by or []),
+                },
+                "engineInfo": "pg_analytics_spark-native-writer",
             }
-        ]
-        for p in sorted(active):
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        actions.append(_rtm.assign_fresh_row_ids(log_dir, adds, version))
-        actions.extend(adds)
-        _write_commit(path, log_dir, version, actions)
-        res = {"version": version, "files": len(adds)}
-    else:
-        res = write_delta(
-            out, path, mode="overwrite",
-            partition_by=part_cols or None,
-        )
+        }
+    ]
+    actions += _removes(snap.active, now_ms, data_change=False)
+    if rt:
+        actions.append(_rtm.assign_fresh_row_ids(snap, adds, version))
+    for a in adds:
+        a["add"]["dataChange"] = False
+    actions.extend(adds)
+    _write_commit(path, snap.log_dir, version, actions)
     return {
-        "files_before": n_before,
-        "files_after": res["files"],
+        "files_before": len(snap.active),
+        "files_after": len(adds),
         "bytes": total,
-        "version": res["version"],
+        "version": version,
     }
+
+
+def _removes(paths, now_ms: int, data_change: bool = True) -> list[dict]:
+    """One remove action per log path, in sorted order."""
+    return [
+        {
+            "remove": {
+                "path": p,
+                "deletionTimestamp": now_ms,
+                "dataChange": data_change,
+            }
+        }
+        for p in sorted(paths)
+    ]
 
 
 def restore_delta(spark, path: str, version: int) -> dict:
@@ -1073,27 +973,11 @@ def restore_delta(spark, path: str, version: int) -> dict:
     delta-spark."""
     import time as _time
 
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    log_dir = os.path.join(path, "_delta_log")
-    active_now, meta_now = _replay_log(log_dir)
-    if meta_now is None:
-        raise UnsupportedFormat(f"no Delta table at {path}")
-    from pg_analytics_spark.errors import MissingDependency
-
-    try:
-        active_old, meta_old = _replay_log(log_dir, version)
-    except MissingDependency as exc:
-        raise UnsupportedFormat(
-            f"delta table at {path} has no version {version}: {exc}"
-        ) from None
-    if meta_old is None:
-        raise UnsupportedFormat(
-            f"delta table at {path} has no version {version}"
-        )
+    now = _snapshot_of(path)
+    old = _snapshot_of(path, version)
     missing = [
-        p for p in active_old
-        if p not in active_now
+        p for p in old.active
+        if p not in now.active
         and not os.path.isfile(
             os.path.join(path, _decode_log_path(p))
         )
@@ -1105,33 +989,24 @@ def restore_delta(spark, path: str, version: int) -> dict:
         )
     now_ms = int(_time.time() * 1000)
     actions: list[dict] = []
-    if meta_old.get("schemaString") != meta_now.get("schemaString") or (
-        meta_old.get("partitionColumns") != meta_now.get("partitionColumns")
-    ):
-        actions.append({"metaData": meta_old})
-    n_removed = n_readded = 0
-    for p in active_now:
-        if p not in active_old:
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-            n_removed += 1
-    for p, add in active_old.items():
-        if p not in active_now:
-            actions.append({"add": {**add, "dataChange": True}})
-            n_readded += 1
-    new_version = _next_version(log_dir)
-    _write_commit(path, log_dir, new_version, actions)
+    if old.metadata.get("schemaString") != now.metadata.get(
+        "schemaString"
+    ) or old.part_cols != now.part_cols:
+        actions.append({"metaData": old.metadata})
+    gone = [p for p in now.active if p not in old.active]
+    actions += _removes(gone, now_ms)
+    readded = [
+        {"add": {**add, "dataChange": True}}
+        for p, add in old.active.items()
+        if p not in now.active
+    ]
+    actions += readded
+    new_version = now.version + 1
+    _write_commit(path, now.log_dir, new_version, actions)
     return {
         "restored_to": version,
-        "files_removed": n_removed,
-        "files_readded": n_readded,
+        "files_removed": len(gone),
+        "files_readded": len(readded),
         "version": new_version,
     }
 
@@ -1353,57 +1228,11 @@ def _stage_files_spark(
     return adds, n_rows
 
 
-def _txn_versions(log_dir: str) -> dict[str, tuple[int, int]]:
-    """SetTransaction watermarks: appId → (version, lastUpdated_ms),
-    replayed from the newest checkpoint's txn rows (when present) plus
-    every JSON commit after it — the same replay base rule as the main
-    log reader."""
-    out: dict[str, tuple[int, int]] = {}
-    if not os.path.isdir(log_dir):
-        return out
-    base = -1
-    last_cp = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(last_cp):
-        try:
-            import pyarrow.parquet as _pq
-
-            with open(last_cp) as fh:
-                base = int(json.load(fh)["version"])
-            cp = os.path.join(log_dir, f"{base:020d}.checkpoint.parquet")
-            t = _pq.read_table(cp)
-            if "txn" in t.column_names:
-                for row in t.column("txn").to_pylist():
-                    if row and row.get("appId"):
-                        out[row["appId"]] = (
-                            int(row["version"]),
-                            int(row.get("lastUpdated") or 0),
-                        )
-        except Exception:
-            base = -1
-    for name in sorted(os.listdir(log_dir)):
-        if not (name.endswith(".json") and name[:20].isdigit()):
-            continue
-        if int(name[:20]) <= base:
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                t = a.get("txn")
-                if t and t.get("appId"):
-                    out[t["appId"]] = (
-                        int(t["version"]),
-                        int(t.get("lastUpdated") or 0),
-                    )
-    return out
-
-
 def last_txn_version(path: str, app_id: str) -> int | None:
     """The newest committed SetTransaction version for ``app_id``
     (None if the app never wrote) — what an idempotent streaming
     writer consults on restart."""
-    got = _txn_versions(os.path.join(path, "_delta_log")).get(app_id)
+    got = _snapshot_of(path).txns.get(app_id)
     return got[0] if got else None
 
 
@@ -1456,7 +1285,8 @@ def write_delta(
         else list(partition_by or [])
     )
     log_dir = os.path.join(path, "_delta_log")
-    version = _next_version(log_dir)
+    snap = _snapshot_of(path) if os.path.isdir(log_dir) else None
+    version = 0 if snap is None else snap.version + 1
     if version == 0 and mode == "append":
         mode = "overwrite"  # first commit of a fresh table
 
@@ -1493,12 +1323,8 @@ def write_delta(
             _rt.PROP_MAT_VER, f"_row-ver-col-{uuid.uuid4().hex[:12]}"
         )
 
-    prev_meta = None
+    prev_meta = None if snap is None else snap.metadata
     append_evolved_schema = None
-    if version > 0:
-        from pg_analytics_spark.sources.delta import _replay_log
-
-        prev_active, prev_meta = _replay_log(log_dir)
     if generated and version > 0:
         raise UnsupportedFormat(
             "generated columns are declared when the table is CREATED "
@@ -1513,20 +1339,17 @@ def write_delta(
         )
     gen_map = (
         dict(generated or {})
-        if version == 0
-        else _generated_expressions(prev_meta)
+        if snap is None
+        else _generated_expressions(snap.fields)
     )
-    if gen_map and version > 0 and mode == "overwrite" and prev_meta:
+    if gen_map and snap is not None and mode == "overwrite":
         # a shape-changing overwrite of a GENERATED-COLUMNS table would
         # either die resolving the generation inputs against the new
         # frame or (worse) mint a metaData without the generation
         # expressions, silently ending enforcement — refuse it up
         # front.  Allowed: the table's own shape, with generated
         # columns optionally omitted (they are recomputed).
-        prev_fields = {
-            f["name"]: json.dumps(f["type"])
-            for f in json.loads(prev_meta["schemaString"])["fields"]
-        }
+        prev_fields = {f["name"]: json.dumps(f["type"]) for f in snap.fields}
         new_fields = {
             f.name: json.dumps(f.jsonValue()["type"])
             for f in df.schema.fields
@@ -1563,29 +1386,24 @@ def write_delta(
                 md["delta.generationExpression"] = generated[f["name"]]
                 f["metadata"] = md
         schema_string = json.dumps(ss)
-    if prev_meta is not None:
-        prev_parts = prev_meta.get("partitionColumns") or []
-        prev_schema = prev_meta.get("schemaString")
-        if mode == "append":
-            if part_cols and part_cols != prev_parts:
-                raise UnsupportedFormat(
-                    f"delta append partition mismatch: table is "
-                    f"partitioned by {prev_parts}, requested {part_cols}"
-                )
-            part_cols = prev_parts
-            # names+types only — a nullability flip (e.g. data read back
-            # from the table itself) is not a shape change
-            if prev_schema is not None and _schema_shape(
-                prev_schema
-            ) != _schema_shape(schema_string):
-                df, append_evolved_schema = _conform_append_schema(
-                    df,
-                    prev_schema,
-                    merge_schema=_truthy_opt(
-                        (options or {}).get("mergeSchema")
-                    ),
-                )
-                schema_string = df.schema.json()
+    if snap is not None and mode == "append":
+        if part_cols and part_cols != snap.part_cols:
+            raise UnsupportedFormat(
+                f"delta append partition mismatch: table is "
+                f"partitioned by {snap.part_cols}, requested {part_cols}"
+            )
+        part_cols = snap.part_cols
+        # names+types only — a nullability flip (e.g. data read back
+        # from the table itself) is not a shape change
+        if _schema_shape(snap.fields) != _schema_shape(
+            json.loads(schema_string)["fields"]
+        ):
+            df, append_evolved_schema = _conform_append_schema(
+                df,
+                snap,
+                merge_schema=_truthy_opt((options or {}).get("mergeSchema")),
+            )
+            schema_string = df.schema.json()
 
     # column mapping (mode name|id, from the table or the creating
     # configuration): annotate the schemaString that will RIDE THE
@@ -1594,9 +1412,9 @@ def write_delta(
     # new columns read non-nullable and would poison later appends) —
     # stage parquet under PHYSICAL names, and keep LOGICAL names in
     # partitionColumns: exactly the split the reader resolves
-    # (_phys_renames)
+    # (Snapshot.phys_of)
     annotated, eff_cfg, renames, map_proto = _apply_column_mapping(
-        prev_meta,
+        snap,
         append_evolved_schema
         if append_evolved_schema is not None
         else schema_string,
@@ -1632,7 +1450,7 @@ def write_delta(
         # watermark was already applied — skip BEFORE staging, so a
         # foreachBatch replay after a crash commits nothing twice
         app_id, txn_version = str(txn[0]), int(txn[1])
-        seen = _txn_versions(log_dir).get(app_id)
+        seen = snap.txns.get(app_id) if snap is not None else None
         if seen is not None and txn_version <= seen[0]:
             return {
                 "version": version - 1,
@@ -1640,10 +1458,8 @@ def write_delta(
                 "rows": 0,
                 "skipped_txn": True,
             }
-    rt_enabled = rt_requested or (
-        version > 0 and _rt.row_tracking_enabled(prev_meta)
-    )
-    if rt_enabled and version > 0:
+    rt_enabled = rt_requested or _rt.row_tracking_enabled(prev_meta)
+    if rt_enabled and snap is not None:
         hidden = _rt.materialized_cols(prev_meta)
         clash = [c for c in df.columns if c in hidden]
         if clash:
@@ -1653,7 +1469,7 @@ def write_delta(
                 "(write_delta assigns fresh row ids itself; DML "
                 "preserves them)"
             )
-    _check_constraints(df, {"configuration": eff_cfg})
+    _check_constraints(df, eff_cfg)
     adds, n_rows = _stage_files(
         _stage_as_physical(df, renames), path, version,
         stage_part_cols, options,
@@ -1718,14 +1534,9 @@ def write_delta(
         # logical replace: remove every previously-active file; when the
         # shape changed, the updated metaData rides the same commit so
         # the reader conforms to the NEW schema/spec
-        if (
-            prev_meta is not None
-            and (
-                _schema_shape(prev_meta.get("schemaString") or schema_string)
-                != _schema_shape(schema_string)
-                or (prev_meta.get("partitionColumns") or []) != part_cols
-            )
-        ):
+        if _schema_shape(snap.fields) != _schema_shape(
+            json.loads(schema_string)["fields"]
+        ) or snap.part_cols != part_cols:
             actions.append(
                 {
                     "metaData": {
@@ -1739,16 +1550,7 @@ def write_delta(
                     }
                 }
             )
-        for p in sorted(prev_active):
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions += _removes(snap.active, now_ms)
     elif mode == "append" and append_evolved_schema is not None:
         # mergeSchema append: the widened schema rides the commit; old
         # files read back with nulls for the new columns (the reader's
@@ -1756,21 +1558,20 @@ def write_delta(
         actions.append(
             {
                 "metaData": {
-                    "id": (prev_meta or {}).get("id") or str(uuid.uuid4()),
-                    "format": (prev_meta or {}).get("format")
+                    "id": prev_meta.get("id") or str(uuid.uuid4()),
+                    "format": prev_meta.get("format")
                     or {"provider": "parquet", "options": {}},
                     "schemaString": append_evolved_schema,
                     "partitionColumns": part_cols,
                     "configuration": eff_cfg,
-                    "createdTime": (prev_meta or {}).get("createdTime")
-                    or now_ms,
+                    "createdTime": prev_meta.get("createdTime") or now_ms,
                 }
             }
         )
     if rt_enabled:
         # every add carries baseRowId + defaultRowCommitVersion; the
         # advanced high-water mark rides a domainMetadata action
-        actions.append(_rt.assign_fresh_row_ids(log_dir, adds, version))
+        actions.append(_rt.assign_fresh_row_ids(snap, adds, version))
     actions.extend(adds)
 
     _write_commit(path, log_dir, version, actions)
@@ -1786,7 +1587,8 @@ def _write_commit(
     instead of every JSON commit, and commits <= the checkpointed
     version become eligible for log cleanup.  Checkpoint failure is
     non-fatal — the commit already succeeded and a later write (or an
-    explicit checkpoint_delta) retries."""
+    explicit checkpoint_delta) retries — but never silent: a fallback
+    warning names the table, the version and the error."""
     from pg_analytics_spark.errors import ConcurrentWriteError
 
     os.makedirs(log_dir, exist_ok=True)
@@ -1812,8 +1614,12 @@ def _write_commit(
     if version > 0 and version % 10 == 0:
         try:
             checkpoint_delta(path)
-        except Exception:
-            pass
+        except Exception as exc:
+            fallback_warning(
+                f"delta checkpoint of {path} at version {version} failed "
+                f"({exc!r}); the commit stands and readers replay its "
+                "JSON commits"
+            )
 
 
 def _encode_log_path(rel: str) -> str:
@@ -1831,14 +1637,6 @@ def _encode_log_path(rel: str) -> str:
     return quote(rel, safe="/:@&=+$,;")
 
 
-def _decode_log_path(p: str) -> str:
-    """Inverse of :func:`_encode_log_path` — a log entry's ``path``
-    field → literal filesystem path (relative or absolute)."""
-    from urllib.parse import unquote
-
-    return unquote(p)
-
-
 def _active_by_abs(path: str, prev_active: dict) -> dict[str, str]:
     """Map each active file's key — the decoded absolute path
     (delta._abs_file) a DML scan's ``_tfile`` carries — to its log
@@ -1847,9 +1645,25 @@ def _active_by_abs(path: str, prev_active: dict) -> dict[str, str]:
     partition directories (basename keying silently collapsed them —
     duplicate rows after DML, caught by the convert gate row), and
     shallow clones store absolute paths outright."""
-    from pg_analytics_spark.sources.delta import _abs_file
-
     return {_abs_file(path, p): p for p in prev_active}
+
+
+def _cdf_enabled(snap: Snapshot) -> bool:
+    return (
+        str(snap.configuration.get("delta.enableChangeDataFeed", "")).lower()
+        == "true"
+    )
+
+
+def _table_casts(snap: Snapshot) -> list:
+    """Each table column cast to its declared type, in schema order —
+    what every DML image is conformed to before staging."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in snap.schema.fields
+    ]
 
 
 def merge_delta(
@@ -1893,19 +1707,14 @@ def merge_delta(
     """
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    spark = source.sparkSession
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"MERGE target is not a delta table: {path}")
-    prev_active, prev_meta = _replay_log(log_dir)
     from pg_analytics_spark.sources import delta_rowtracking as _rtm
 
+    spark = source.sparkSession
+    snap = _snapshot_of(path)
+    prev_active, prev_meta = snap.active, snap.metadata
     rt = _rtm.row_tracking_enabled(prev_meta)
-    part_cols = prev_meta.get("partitionColumns") or []
-    tbl_fields = json.loads(prev_meta["schemaString"])["fields"]
-    tbl_cols = [f["name"] for f in tbl_fields]
+    part_cols = snap.part_cols
+    tbl_cols = snap.schema.names
 
     from pg_analytics_spark.sources.merge_clauses import (
         MergeClauses,
@@ -1915,28 +1724,22 @@ def merge_delta(
     mc = MergeClauses(clauses, tbl_cols, source.columns, source_alias)
     matched_clauses, insert_clauses = mc.matched, mc.not_matched
 
-    from pg_analytics_spark.sources import load_source
-
-    version = _next_version(log_dir)
+    version = snap.version + 1
     if rt:
         # rewrites must PRESERVE identities: the target scan carries
         # each row's current (_rt_id, _rt_ver) via the shared
         # attachment helper; inserted rows get NULL materialized
         # values and take the new file's fresh defaults
-        from pg_analytics_spark.sources.delta import _load_via_log
-
         tgt = (
             _load_via_log(
-                spark, path, keep_meta=True,
+                spark, snap, keep_meta=True,
                 keep_phys=list(_rtm.materialized_cols(prev_meta)),
             )
             .withColumnRenamed("_dv_file", "_tfile")
             .withColumnRenamed("_dv_pos", "_tpos")
         )
         if "_tfile" in tgt.columns:
-            tgt = _rtm.attach_current_ids(
-                spark, path, tgt, prev_active, prev_meta
-            ).drop("_tpos")
+            tgt = _rtm.attach_current_ids(spark, snap, tgt).drop("_tpos")
         else:  # empty table
             tgt = (
                 tgt.withColumn("_tfile", F.lit(None).cast("string"))
@@ -1945,10 +1748,8 @@ def merge_delta(
             )
         tgt = tgt.withColumn("_tid", F.monotonically_increasing_id())
     else:
-        from pg_analytics_spark.sources.delta import _file_key
-
         tgt = (
-            load_source(spark, path, "delta")
+            _load_via_log(spark, snap)
             .withColumn("_tfile", _file_key(F.input_file_name()))
             .withColumn("_tid", F.monotonically_increasing_id())
         )
@@ -1977,14 +1778,7 @@ def merge_delta(
             )
         removes.append(abs_of[key])
 
-    cdf_on = (
-        str(
-            (prev_meta.get("configuration") or {}).get(
-                "delta.enableChangeDataFeed", ""
-            )
-        ).lower()
-        == "true"
-    )
+    cdf_on = _cdf_enabled(snap)
     cdf_pieces: list = []  # row-level change images when CDF is on
     pieces = []
     if removes:
@@ -2066,16 +1860,9 @@ def merge_delta(
     for p in pieces[1:]:
         new_df = new_df.unionByName(p)
     # conform to the table's declared types (same contract as INSERT)
-    from pg_analytics_spark.sources.delta import _delta_type_to_spark
-
     mat_cols = list(_rtm.materialized_cols(prev_meta)) if rt else []
     new_df = new_df.select(
-        *[
-            F.col(f["name"]).cast(_delta_type_to_spark(f["type"])).alias(
-                f["name"]
-            )
-            for f in tbl_fields
-        ],
+        *_table_casts(snap),
         *(
             [
                 F.col("_rt_keep_id").alias(mat_cols[0]),
@@ -2086,32 +1873,25 @@ def merge_delta(
         ),
     )
 
-    renames = _phys_renames(prev_meta)
+    renames = snap.phys_of
     cdc_actions: list[dict] = []
     if cdf_on and cdf_pieces:
         change = cdf_pieces[0]
         for p in cdf_pieces[1:]:
             change = change.unionByName(p)
         change = change.select(
-            *[
-                F.col(f["name"])
-                .cast(_delta_type_to_spark(f["type"]))
-                .alias(f["name"])
-                for f in tbl_fields
-            ],
-            "_change_type",
+            *_table_casts(snap), "_change_type"
         ).coalesce(max(1, len(removes) or 1))
         cdc_actions = _stage_cdc_files(
             change, path, version, part_cols, renames
         )
     new_df = _apply_generated_columns(
-        new_df, _generated_expressions(prev_meta), recompute=True
+        new_df, _generated_expressions(snap.fields), recompute=True
     )
-    _check_constraints(new_df, prev_meta)
+    _check_constraints(new_df, snap.configuration)
     adds, n_rows = _stage_files(
         _stage_as_physical(new_df, renames), path, version,
-        [renames.get(c, c) for c in part_cols] if renames else part_cols,
-        options,
+        [renames.get(c, c) for c in part_cols], options,
     )
     if rt:
         _rtm.strip_hidden_stats(adds, (mat_cols[0], mat_cols[1]))
@@ -2128,18 +1908,9 @@ def merge_delta(
             }
         }
     ]
-    for p in sorted(removes):
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
+    actions += _removes(removes, now_ms)
     if rt and adds:
-        actions.append(_rtm.assign_fresh_row_ids(log_dir, adds, version))
+        actions.append(_rtm.assign_fresh_row_ids(snap, adds, version))
     actions.extend(adds)
     actions.extend(cdc_actions)
     # commitInfo.timestamp = PUBLICATION time, not operation entry:
@@ -2147,7 +1918,7 @@ def merge_delta(
     # just before the statement must NOT resolve to this version
     # (protocol: timestamps order the commits as they became visible)
     actions[0]["commitInfo"]["timestamp"] = int(_time.time() * 1000)
-    _write_commit(path, log_dir, version, actions)
+    _write_commit(path, snap.log_dir, version, actions)
     return {
         "version": version,
         "files_added": len(adds),
@@ -2236,35 +2007,22 @@ def _rewrite_where(
 
     from pyspark.sql import functions as F
 
-    from pg_analytics_spark.sources import load_source
-    from pg_analytics_spark.sources.delta import (
-        _delta_type_to_spark,
-        _load_via_log,
-        _replay_log,
-    )
-
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"{op} target is not a delta table: {path}")
-    prev_active, prev_meta = _replay_log(log_dir)
+    snap = _snapshot_of(path)
+    prev_active, prev_meta = snap.active, snap.metadata
     if not dv:
         # delta-spark's property contract: a table opts its DML into
         # merge-on-read via TBLPROPERTIES, no per-statement flag
-        cfg = prev_meta.get("configuration") or {}
         dv = str(
-            cfg.get("delta.enableDeletionVectors", "")
+            snap.configuration.get("delta.enableDeletionVectors", "")
         ).lower() == "true"
-    part_cols = prev_meta.get("partitionColumns") or []
-    tbl_fields = json.loads(prev_meta["schemaString"])["fields"]
-    tbl_cols = [f["name"] for f in tbl_fields]
+    part_cols = snap.part_cols
+    tbl_cols = snap.schema.names
     if set_map:
         bad = [c for c in set_map if c not in tbl_cols]
         if bad:
             raise UnsupportedFormat(f"{op}: unknown column(s) {bad}")
 
-    version = _next_version(log_dir)
-    import time as _time
-
+    version = snap.version + 1
     now_ms = int(_time.time() * 1000)
     actions: list[dict] = [
         {
@@ -2279,18 +2037,9 @@ def _rewrite_where(
 
     if where is None and set_map is None:
         # DELETE without WHERE: truncate — pure remove actions
-        for p in sorted(prev_active):
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions += _removes(prev_active, now_ms)
         actions[0]["commitInfo"]["timestamp"] = int(_time.time() * 1000)
-        _write_commit(path, log_dir, version, actions)
+        _write_commit(path, snap.log_dir, version, actions)
         return {
             "version": version,
             "files_added": 0,
@@ -2311,7 +2060,7 @@ def _rewrite_where(
         # prior rewrite preserved one, else baseRowId + _tpos.
         tgt = (
             _load_via_log(
-                spark, path, keep_meta=True,
+                spark, snap, keep_meta=True,
                 keep_phys=list(_rtm.materialized_cols(prev_meta))
                 if rt
                 else None,
@@ -2320,9 +2069,7 @@ def _rewrite_where(
             .withColumnRenamed("_dv_pos", "_tpos")
         )
     else:
-        from pg_analytics_spark.sources.delta import _file_key
-
-        tgt = load_source(spark, path, "delta").withColumn(
+        tgt = _load_via_log(spark, snap).withColumn(
             "_tfile", _file_key(F.input_file_name())
         )
     if "_tfile" not in tgt.columns:  # empty table: no files to touch
@@ -2330,9 +2077,7 @@ def _rewrite_where(
         if dv:
             tgt = tgt.withColumn("_tpos", F.lit(None).cast("long"))
     if rt and "_tpos" in tgt.columns:
-        tgt = _rtm.attach_current_ids(
-            spark, path, tgt, prev_active, prev_meta
-        )
+        tgt = _rtm.attach_current_ids(spark, snap, tgt)
         rt_cols = list(_rtm.materialized_cols(prev_meta))
     match = F.expr(where) if where is not None else F.lit(True)
     # SQL three-valued logic: a NULL predicate is NOT a match — the row
@@ -2422,7 +2167,7 @@ def _rewrite_where(
         # repo's replay ignores protocol actions; standard clients
         # honor it).  MERGE with the table's current feature lists —
         # a row-tracking table must not lose rowTracking/domainMetadata
-        cur = _latest_protocol(os.path.join(path, "_delta_log"))
+        cur = snap.protocol
         actions.append(
             {
                 "protocol": {
@@ -2445,15 +2190,7 @@ def _rewrite_where(
     # 'delete'; UPDATE: matched pre- AND post-images.  Written before
     # staging so the cdc read never depends on the rewrite's outcome.
     cdc_actions: list[dict] = []
-    if (
-        str(
-            (prev_meta.get("configuration") or {}).get(
-                "delta.enableChangeDataFeed", ""
-            )
-        ).lower()
-        == "true"
-        and touched_abs
-    ):
+    if _cdf_enabled(snap) and touched_abs:
         matched_rows = tgt.filter(
             F.col("_tfile").isin(touched_abs)
         ).filter(match_safe)
@@ -2476,16 +2213,10 @@ def _rewrite_where(
             )
             change = pre.unionByName(post)
         change = change.select(
-            *[
-                F.col(f["name"])
-                .cast(_delta_type_to_spark(f["type"]))
-                .alias(f["name"])
-                for f in tbl_fields
-            ],
-            "_change_type",
+            *_table_casts(snap), "_change_type"
         ).coalesce(max(1, len(touched_abs)))
         cdc_actions = _stage_cdc_files(
-            change, path, version, part_cols, _phys_renames(prev_meta)
+            change, path, version, part_cols, snap.phys_of
         )
 
     # Files whose rows must land in NEW files: copy-on-write rewrites
@@ -2543,12 +2274,7 @@ def _rewrite_where(
                 *rt_keep,
             )
         new_df = new_df.select(
-            *[
-                F.col(f["name"])
-                .cast(_delta_type_to_spark(f["type"]))
-                .alias(f["name"])
-                for f in tbl_fields
-            ],
+            *_table_casts(snap),
             *(
                 [
                     F.col("_rt_keep_id").alias(rt_cols[0]),
@@ -2562,14 +2288,13 @@ def _rewrite_where(
         # count): rewrite cost and file granularity track touched data
         new_df = new_df.coalesce(max(1, len(rewrite_abs)))
         new_df = _apply_generated_columns(
-            new_df, _generated_expressions(prev_meta), recompute=True
+            new_df, _generated_expressions(snap.fields), recompute=True
         )
-        _check_constraints(new_df, prev_meta)
-        renames = _phys_renames(prev_meta)
+        _check_constraints(new_df, snap.configuration)
+        renames = snap.phys_of
         adds, n_rows = _stage_files(
             _stage_as_physical(new_df, renames), path, version,
-            [renames.get(c, c) for c in part_cols] if renames else part_cols,
-            options,
+            [renames.get(c, c) for c in part_cols], options,
         )
         if rt_cols:
             # hidden identity columns: out of the stats maps, and every
@@ -2581,43 +2306,21 @@ def _rewrite_where(
         # remove+re-add pair for every file gaining a DV (the
         # protocol's DV-rewrite shape; the remove carries the OLD
         # descriptor so vacuum tooling can see the superseded blob)
-        removes_dv: list[dict] = []
-        for f in sorted(full_abs):
-            removes_dv.append(
-                {
-                    "remove": {
-                        "path": abs_of[os.path.normpath(f)],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
+        actions += _removes(
+            [abs_of[os.path.normpath(f)] for f in full_abs], now_ms
+        )
+        for entry in _removes([e["add"]["path"] for e in dv_readds], now_ms):
+            old_desc = prev_active[entry["remove"]["path"]].get(
+                "deletionVector"
             )
-        for entry in dv_readds:
-            rel = entry["add"]["path"]
-            rm = {
-                "path": rel,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-            old_desc = prev_active[rel].get("deletionVector")
             if old_desc:
-                rm["deletionVector"] = old_desc
-            removes_dv.append({"remove": rm})
-        actions.extend(removes_dv)
+                entry["remove"]["deletionVector"] = old_desc
+            actions.append(entry)
         actions.extend(dv_readds)  # adds AFTER removes: replay order
     else:
-        for p in sorted(removes):
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+        actions += _removes(removes, now_ms)
     if rt and adds:
-        actions.append(_rtm.assign_fresh_row_ids(log_dir, adds, version))
+        actions.append(_rtm.assign_fresh_row_ids(snap, adds, version))
     actions.extend(adds)
     actions.extend(cdc_actions)
     # commitInfo.timestamp = PUBLICATION time, not operation entry:
@@ -2625,7 +2328,7 @@ def _rewrite_where(
     # just before the statement must NOT resolve to this version
     # (protocol: timestamps order the commits as they became visible)
     actions[0]["commitInfo"]["timestamp"] = int(_time.time() * 1000)
-    _write_commit(path, log_dir, version, actions)
+    _write_commit(path, snap.log_dir, version, actions)
     out = {
         "version": version,
         "files_added": len(adds),
@@ -2640,19 +2343,15 @@ def _rewrite_where(
     return out
 
 
-def _generated_expressions(meta_like: dict | None) -> dict[str, str]:
-    """Generated-column declarations from the schemaString's field
-    metadata (protocol key ``delta.generationExpression``, writer
-    feature ``generatedColumns``)."""
-    ss = (meta_like or {}).get("schemaString")
-    if not ss:
-        return {}
-    out: dict[str, str] = {}
-    for f in json.loads(ss).get("fields", []):
-        expr = (f.get("metadata") or {}).get("delta.generationExpression")
-        if expr:
-            out[f["name"]] = expr
-    return out
+def _generated_expressions(fields: list[dict]) -> dict[str, str]:
+    """Generated-column declarations from the schema fields' metadata
+    (protocol key ``delta.generationExpression``, writer feature
+    ``generatedColumns``)."""
+    return {
+        f["name"]: (f.get("metadata") or {})["delta.generationExpression"]
+        for f in fields
+        if (f.get("metadata") or {}).get("delta.generationExpression")
+    }
 
 
 def _apply_generated_columns(
@@ -2701,7 +2400,7 @@ def _apply_generated_columns(
     return df
 
 
-def _check_constraints(df: DataFrame, meta_like: dict) -> None:
+def _check_constraints(df: DataFrame, cfg: dict) -> None:
     """Enforce the table's CHECK constraints (protocol: writer feature
     ``checkConstraints``, configuration keys ``delta.constraints.
     <name>``) on every row about to be WRITTEN — append, overwrite,
@@ -2709,8 +2408,7 @@ def _check_constraints(df: DataFrame, meta_like: dict) -> None:
     violates only when the expression is FALSE (NULL passes).  One
     aggregate job per constrained write (zero cost on tables without
     constraints); violation raises BEFORE staging, so no commit and no
-    orphan files."""
-    cfg = meta_like.get("configuration") or {}
+    orphan files.  ``cfg`` is the table configuration."""
     cons = sorted(
         (k[len("delta.constraints."):], v)
         for k, v in cfg.items()
@@ -2758,13 +2456,8 @@ def alter_delta_constraints(
     {"version", "operation", "name"}."""
     import time as _time
 
-    from pg_analytics_spark.sources.delta import _replay_log
-
-    log_dir = os.path.join(path, "_delta_log")
-    _active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"not a Delta table: {path}")
-    cfg = dict(meta.get("configuration") or {})
+    snap = _snapshot_of(path)
+    cfg = dict(snap.configuration)
     actions: list[dict] = []
     if add is not None:
         name, expr = add
@@ -2778,14 +2471,9 @@ def alter_delta_constraints(
                 "ADD CONSTRAINT needs a SparkSession to validate "
                 "existing rows"
             )
-        from pg_analytics_spark.sources import load_source
-
-        _check_constraints(
-            load_source(spark, path, "delta"),
-            {"configuration": {key: expr}},
-        )
+        _check_constraints(_load_via_log(spark, snap), {key: expr})
         cfg[key] = expr
-        proto = _latest_protocol(log_dir)
+        proto = snap.protocol
         if int(proto.get("minWriterVersion", 2)) < 3:
             actions.append(
                 {
@@ -2807,9 +2495,8 @@ def alter_delta_constraints(
             )
         del cfg[key]
         op = "DROP CONSTRAINT"
-    new_meta = dict(meta)
-    new_meta["configuration"] = cfg
-    version = _next_version(log_dir)
+    new_meta = {**snap.metadata, "configuration": cfg}
+    version = snap.version + 1
     actions = [
         {
             "commitInfo": {
@@ -2819,7 +2506,7 @@ def alter_delta_constraints(
             }
         }
     ] + actions + [{"metaData": new_meta}]
-    _write_commit(path, log_dir, version, actions)
+    _write_commit(path, snap.log_dir, version, actions)
     return {"version": version, "operation": op, "name": name}
 
 
@@ -2831,13 +2518,9 @@ def vacuum_delta(path: str, retention_hours: float = 168.0) -> dict:
     retention window is what keeps concurrent readers of recent
     versions safe.  The log itself is never touched (history/metadata
     stay auditable).  Returns {files_deleted, bytes_deleted}."""
-    from pg_analytics_spark.sources.delta import _replay_log
     from pg_analytics_spark.sources.delta_dv import _dv_file_path
 
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(f"VACUUM target is not a delta table: {path}")
-    active, _meta = _replay_log(log_dir)
+    active = _snapshot_of(path).active
     keep = {os.path.normpath(_decode_log_path(p)) for p in active}
     # deletion-vector blobs referenced by the CURRENT version survive
     # under the same contract as data files; superseded DV files (each
@@ -3033,8 +2716,6 @@ def clone_delta(
     Returns {"version", "files", "source_version"}."""
     import time as _time
 
-    from pg_analytics_spark.errors import MissingDependency
-    from pg_analytics_spark.sources.delta import _replay_log
     from pg_analytics_spark.sources.delta_dv import _dv_file_path
 
     src = os.path.abspath(source_path)
@@ -3045,14 +2726,8 @@ def clone_delta(
         raise UnsupportedFormat(
             f"CLONE target already exists: {target_path}"
         )
-    try:
-        active, meta = _replay_log(log_dir, version)
-    except MissingDependency as exc:
-        raise UnsupportedFormat(
-            f"delta table at {src} has no version {version}: {exc}"
-        ) from None
-    if meta is None:
-        raise UnsupportedFormat(f"no Delta metaData at {src}")
+    snap = _snapshot_of(src, version)
+    active, meta = snap.active, snap.metadata
     from pg_analytics_spark.sources import delta_rowtracking as _rtm
 
     if _rtm.row_tracking_enabled(meta):
@@ -3061,9 +2736,7 @@ def clone_delta(
             "this writer (the clone would not carry the row-id "
             "high-water mark; fresh appends would reuse ids)"
         )
-    src_version = (
-        version if version is not None else _next_version(log_dir) - 1
-    )
+    src_version = snap.version
     now_ms = int(_time.time() * 1000)
     new_meta = dict(meta)
     new_meta["id"] = str(uuid.uuid4())  # a clone is a NEW table
@@ -3079,7 +2752,7 @@ def clone_delta(
                 },
             }
         },
-        {"protocol": _latest_protocol(log_dir)},
+        {"protocol": snap.protocol},
         {"metaData": new_meta},
     ]
     for rel, add in sorted(active.items()):
@@ -3117,17 +2790,12 @@ def describe_detail_delta(path: str) -> dict:
     partition columns, active file count and byte size, properties,
     protocol versions.  Metadata-sized: one log replay plus the add
     actions' recorded sizes (no data file is opened)."""
-    from pg_analytics_spark.sources.delta import _commit_info, _replay_log
+    from pg_analytics_spark.sources.delta import _commit_info
 
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise UnsupportedFormat(
-            f"DESCRIBE DETAIL target is not a delta table: {path}"
-        )
-    active, meta = _replay_log(log_dir)
-    if meta is None:
-        raise UnsupportedFormat(f"no Delta metaData at {path}")
-    proto = _latest_protocol(log_dir)
+    snap = _snapshot_of(path)
+    log_dir, active, meta, proto = (
+        snap.log_dir, snap.active, snap.metadata, snap.protocol
+    )
     commits = sorted(
         f for f in os.listdir(log_dir)
         if f.endswith(".json") and f[:20].isdigit()

@@ -4011,23 +4011,17 @@ def snapshot_delta_to_iceberg(spark, delta_path: str, target_path: str) -> dict:
     untouched and keeps working; like a shallow clone, VACUUM on the
     SOURCE is the one shared-fate hazard.  Returns {"files", "rows",
     "version"}."""
-    from pg_analytics_spark.sources.delta import (
-        _delta_type_to_spark,
-        _replay_log,
-    )
+    from pg_analytics_spark.sources.delta_write import _snapshot_of
 
-    log_dir = os.path.join(delta_path, "_delta_log")
-    if not os.path.isdir(log_dir):
+    if not os.path.isdir(os.path.join(delta_path, "_delta_log")):
         raise UnsupportedFormat(f"not a Delta table: {delta_path}")
     if os.path.isdir(os.path.join(target_path, "metadata")):
         raise UnsupportedFormat(
             f"snapshot target already exists: {target_path}"
         )
-    active, meta_d = _replay_log(log_dir)
-    if meta_d is None:
-        raise UnsupportedFormat(f"no Delta metaData at {delta_path}")
-    cfg_d = meta_d.get("configuration") or {}
-    if cfg_d.get("delta.columnMapping.mode", "none") in ("name", "id"):
+    snap = _snapshot_of(delta_path)
+    active = snap.active
+    if snap.phys_of:
         raise UnsupportedFormat(
             "snapshot_delta_to_iceberg: column-mapped sources store "
             "PHYSICAL column names on disk — rewrite via CTAS"
@@ -4038,14 +4032,13 @@ def snapshot_delta_to_iceberg(spark, delta_path: str, target_path: str) -> dict:
             "vectors — referencing its files would resurrect erased "
             "rows; compact the Delta table first (OPTIMIZE)"
         )
-    spark_struct = _delta_type_to_spark(json.loads(meta_d["schemaString"]))
     fields = [
         {"id": i + 1, "name": f.name, "type": _ice_type(f), "required": False}
-        for i, f in enumerate(spark_struct.fields)
+        for i, f in enumerate(snap.schema.fields)
     ]
     ftype = {f["name"]: f["type"] for f in fields}
     part_decls: list[tuple[str, str]] = []
-    for c in meta_d.get("partitionColumns") or []:
+    for c in snap.part_cols:
         t = ftype.get(c)
         if t not in ("int", "long", "string", "date"):
             raise UnsupportedFormat(
@@ -4055,7 +4048,7 @@ def snapshot_delta_to_iceberg(spark, delta_path: str, target_path: str) -> dict:
                 "rewrite via CTAS"
             )
         part_decls.append((c, t))
-    from pg_analytics_spark.sources.delta_write import _decode_log_path
+    from pg_analytics_spark.sources.delta import _decode_log_path
 
     src = os.path.abspath(delta_path)
     file_tuples: list[tuple[str, dict]] = []

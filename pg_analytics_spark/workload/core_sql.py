@@ -3197,7 +3197,7 @@ def delta_dv_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from pg_analytics_spark.sources import load_source
-    from pg_analytics_spark.sources.delta import _load_via_log
+    from pg_analytics_spark.sources.delta import _load_via_log, snapshot
     from pg_analytics_spark.sources.delta_write import (
         delete_delta,
         update_delta,
@@ -3232,7 +3232,7 @@ def delta_dv_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     still = [s for s in _state() if s[0] in {p for p, _, _ in orig}]
     if still != orig:  # MoR contract: originals byte-identical
         raise AssertionError("DV DML rewrote original data files")
-    if _load_via_log(spark, root, version=0).count() != n0:
+    if _load_via_log(spark, snapshot(root, 0)).count() != n0:
         raise AssertionError("version-0 time travel broken after DV DML")
     return (
         load_source(spark, root, "delta")
@@ -6116,7 +6116,7 @@ def cdf_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from pg_analytics_spark.engine import Engine
-    from pg_analytics_spark.sources.delta import _load_via_log
+    from pg_analytics_spark.sources.delta import _load_via_log, snapshot
     from pg_analytics_spark.sources.delta_cdf import read_table_changes
     from pg_analytics_spark.sources.delta_write import write_delta
 
@@ -6158,7 +6158,7 @@ def cdf_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # seed: the rollup as of version 0 (time travel)
     seed = (
-        _load_via_log(spark, root, version=0)
+        _load_via_log(spark, snapshot(root, 0))
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
@@ -6601,7 +6601,7 @@ def delta_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from pg_analytics_spark.engine import Engine
-    from pg_analytics_spark.sources.delta import _load_via_log
+    from pg_analytics_spark.sources.delta import _load_via_log, snapshot
     from pg_analytics_spark.sources.delta_write import (
         vacuum_delta,
         write_delta,
@@ -6626,7 +6626,7 @@ def delta_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.attach("vac_tgt", [root], "delta")
     eng.sql("UPDATE vac_tgt SET v = v * 2 WHERE v < 100000")
     eng.sql("DELETE FROM vac_tgt WHERE v > 250000")
-    if _load_via_log(spark, root, version=0).count() != n0:
+    if _load_via_log(spark, snapshot(root, 0)).count() != n0:
         raise AssertionError("version-0 travel broken BEFORE vacuum")
     res = vacuum_delta(root)  # default 168h retention: all files young
     if res["files_deleted"] != 0:
@@ -6640,15 +6640,11 @@ def delta_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # failure leaves a poisoned lazy QueryExecution that the
     # Observation listener later re-raises as an ExecutionListenerBus
     # ERROR line (the round-7 gate-log rule)
-    from pg_analytics_spark.sources.delta import (
-        _decode_log_path,
-        _replay_log,
-    )
+    from pg_analytics_spark.sources.delta import _decode_log_path
 
-    active0, _m0 = _replay_log(_os.path.join(root, "_delta_log"), version=0)
     gone = [
         p
-        for p in active0
+        for p in snapshot(root, 0).active
         if not _os.path.exists(_os.path.join(root, _decode_log_path(p)))
     ]
     if not gone:

@@ -187,14 +187,11 @@ def test_delta_add_column_on_mapped_table_gets_fresh_physical(
     write_delta(_base(spark), path, mode="overwrite")
     alter_delta(path, rename=("v", "val"))
     alter_delta(path, add=("extra", "double"))
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
 
-    _a, meta = _replay_log(os.path.join(path, "_delta_log"))
-    f = next(
-        f
-        for f in json.loads(meta["schemaString"])["fields"]
-        if f["name"] == "extra"
-    )
+    snap = snapshot(path)
+    meta = snap.metadata
+    f = next(f for f in snap.fields if f["name"] == "extra")
     md = f["metadata"]
     assert md["delta.columnMapping.physicalName"].startswith("col-")
     assert int(meta["configuration"]["delta.columnMapping.maxColumnId"]) == (
@@ -212,13 +209,13 @@ def test_delta_drop_partition_column_refused(spark, tmp_path):
 
 
 def test_delta_time_travel_preserves_pre_alter_schema(spark, tmp_path):
-    from pg_analytics_spark.sources.delta import _load_via_log
+    from pg_analytics_spark.sources.delta import _load_via_log, snapshot
 
     path = str(tmp_path / "t")
     write_delta(_base(spark), path, mode="overwrite")
     alter_delta(path, rename=("v", "val"))
     alter_delta(path, drop="s")
-    v0 = _load_via_log(spark, path, version=0)
+    v0 = _load_via_log(spark, snapshot(path, 0))
     assert v0.columns == ["k", "v", "s"] and v0.count() == 8
     now = load_source(spark, path, "delta")
     assert now.columns == ["k", "val"]
@@ -366,7 +363,7 @@ def test_delta_set_tblproperties_routes_dv(spark, tmp_path):
 
 
 def test_delta_unset_tblproperties(spark, tmp_path):
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_write import (
         alter_delta_properties,
     )
@@ -377,8 +374,7 @@ def test_delta_unset_tblproperties(spark, tmp_path):
         configuration={"custom.tag": "x", "other": "y"},
     )
     alter_delta_properties(path, None, ["custom.tag"])
-    _a, meta = _replay_log(os.path.join(path, "_delta_log"))
-    cfg = meta["configuration"]
+    cfg = snapshot(path).configuration
     assert "custom.tag" not in cfg and cfg["other"] == "y"
 
 
@@ -441,10 +437,9 @@ def test_engine_tblproperties_statement(spark, tmp_path, fmt):
     r = eng.sql("ALTER TABLE t UNSET TBLPROPERTIES ('e')").collect()
     assert r[0]["operation"] == "UNSET"
     if fmt == "delta":
-        from pg_analytics_spark.sources.delta import _replay_log
+        from pg_analytics_spark.sources.delta import snapshot
 
-        _a, meta = _replay_log(os.path.join(path, "_delta_log"))
-        cfg = meta["configuration"]
+        cfg = snapshot(path).configuration
     else:
         from pg_analytics_spark.sources.iceberg_write import (
             _latest_metadata,

@@ -6,15 +6,14 @@ overwrite, UPDATE rewrite, MERGE output
 
 from __future__ import annotations
 
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources import load_source
+from pg_analytics_spark.sources.delta import snapshot
 from pg_analytics_spark.sources.delta_write import (
-    _latest_protocol,
     alter_delta_constraints,
     merge_delta,
     update_delta,
@@ -38,7 +37,7 @@ def test_add_validates_existing_and_bumps_protocol(spark, tmp_path):
         alter_delta_constraints(path, add=("v_big", "v >= 10"), spark=spark)
     r = alter_delta_constraints(path, add=("v_pos", "v >= 0"), spark=spark)
     assert r["operation"] == "ADD CONSTRAINT"
-    proto = _latest_protocol(os.path.join(path, "_delta_log"))
+    proto = snapshot(path).protocol
     assert proto["minWriterVersion"] >= 3
     with pytest.raises(UnsupportedFormat, match="already exists"):
         alter_delta_constraints(path, add=("v_pos", "v >= 0"), spark=spark)

@@ -241,9 +241,9 @@ class TestWriter:
         ).option("path", d).save()
         assert load_source(ds, d, "delta").count() == 3
         # time travel across the sink's commits still works
-        from pg_analytics_spark.sources.delta import _load_via_log
+        from pg_analytics_spark.sources.delta import _load_via_log, snapshot
 
-        assert _load_via_log(ds, d, version=1).count() == 15
+        assert _load_via_log(ds, snapshot(d, 1)).count() == 15
 
     def test_add_actions_carry_stats_for_skipping(self, ds, tmp_path):
         import json as _json
@@ -267,9 +267,9 @@ class TestWriter:
         assert st["numRecords"] > 0
         assert "id" in st["minValues"] and "id" in st["maxValues"]
         # the replay reader's stats filter can now skip these files
-        from pg_analytics_spark.sources.delta import _load_via_log
+        from pg_analytics_spark.sources.delta import _load_via_log, snapshot
 
-        lo = _load_via_log(ds, d, stats_filter={"id": (0, 5)})
+        lo = _load_via_log(ds, snapshot(d), stats_filter={"id": (0, 5)})
         assert lo.count() >= 6  # at least the matching file's rows
 
     def test_append_schema_mismatch_refused(self, ds, tmp_path):
@@ -532,9 +532,9 @@ def test_dv_partition_payload_is_roaring_blob(ds, tmp_path):
     per task), and values must be unchanged."""
     import pickle
 
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_datasource import (
         _partitions_for_adds,
-        _table_state,
     )
 
     d = str(tmp_path / "t")
@@ -544,14 +544,8 @@ def test_dv_partition_payload_is_roaring_blob(ds, tmp_path):
     )
     write_delta(df.coalesce(1), d, mode="overwrite")
     delete_delta(ds, d, "id % 3 != 0", dv=True)  # 80k deleted rows
-    active, _m, part_cols, phys_of, schema = _table_state(d, None)
-    from pg_analytics_spark.sources.delta_datasource import (
-        _arrow_schema_for,
-    )
-
-    parts = _partitions_for_adds(
-        d, active, part_cols, phys_of, _arrow_schema_for(schema)
-    )
+    snap = snapshot(d)
+    parts = _partitions_for_adds(snap, snap.active)
     assert len(parts) == 1
     blob = parts[0].dv_blob
     assert blob is not None and len(blob) < 64_000, len(blob)
@@ -788,18 +782,17 @@ def test_dv_blob_cardinality_mismatch_raises(ds, tmp_path):
     """Inline DVs carry no CRC; a blob that decodes to a different
     bit count than the descriptor's cardinality must raise instead of
     silently resurrecting deleted rows."""
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_datasource import (
-        _arrow_schema_for,
         _partitions_for_adds,
         _read_file_partition,
-        _table_state,
     )
 
     d = str(tmp_path / "t")
     write_delta(_mk(ds, 0, 100).coalesce(1), d, mode="overwrite")
     delete_delta(ds, d, "id < 10", dv=True)
-    active, _m, pc, po, schema = _table_state(d, None)
-    parts = _partitions_for_adds(d, active, pc, po, _arrow_schema_for(schema))
+    snap = snapshot(d)
+    parts = _partitions_for_adds(snap, snap.active)
     assert len(parts) == 1 and parts[0].dv_card == 10
     list(_read_file_partition(parts[0]))  # matching card: fine
     parts[0].dv_card = 11  # corrupt descriptor

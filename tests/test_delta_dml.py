@@ -382,7 +382,7 @@ def test_optimize_statement_compacts_and_zorders(spark, tmp_path):
     the zordered files carry DISJOINT-ish min/max envelopes on BOTH
     clustered columns (the data-skipping property)."""
     from pg_analytics_spark.engine import Engine
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
 
     path = str(tmp_path / "o")
     df = spark.range(4000).selectExpr(
@@ -408,7 +408,7 @@ def test_optimize_statement_compacts_and_zorders(spark, tmp_path):
         spark, zpath, target_file_mb=0.01, zorder_by=["x", "y"]
     )
     assert res["files_after"] >= 4
-    active, _meta = _replay_log(os.path.join(zpath, "_delta_log"))
+    active = snapshot(zpath).active
     spans = []
     for a in active.values():
         st = json.loads(a["stats"])

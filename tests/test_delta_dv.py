@@ -486,7 +486,7 @@ def test_dv_delete_marks_positions_without_rewriting(spark, tmp_path, dirname):
     """Also under directory names that Spark's file URIs percent-encode:
     the DV anti-join and the DML's file lookup must key on the path the
     log names, decoded exactly once (``%41`` is not ``A``)."""
-    from pg_analytics_spark.sources.delta import _load_via_log
+    from pg_analytics_spark.sources.delta import _load_via_log, snapshot
     from pg_analytics_spark.sources.delta_write import delete_delta
 
     t = tmp_path / dirname
@@ -501,7 +501,7 @@ def test_dv_delete_marks_positions_without_rewriting(spark, tmp_path, dirname):
     assert out.count() == 350
     assert out.filter("k = 3").count() == 0
     # old snapshot still time-travels (DV is a NEW version's overlay)
-    assert _load_via_log(spark, str(t), version=0).count() == 400
+    assert _load_via_log(spark, snapshot(str(t), 0)).count() == 400
     # commit shape: remove precedes the re-add of the same path, and a
     # protocol upgrade announces the deletionVectors feature
     log = (t / "_delta_log" / "00000000000000000001.json").read_text()
@@ -525,7 +525,7 @@ def test_dv_delete_marks_positions_without_rewriting(spark, tmp_path, dirname):
 
 
 def test_dv_successive_deletes_union(spark, tmp_path):
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_write import delete_delta
 
     t = tmp_path / "t"
@@ -536,7 +536,7 @@ def test_dv_successive_deletes_union(spark, tmp_path):
     assert out.count() == 300
     assert out.filter("k in (1, 2)").count() == 0
     # the second commit's descriptors carry the UNION's cardinality
-    active, _ = _replay_log(str(t / "_delta_log"))
+    active = snapshot(str(t)).active
     cards = sorted(
         a["deletionVector"]["cardinality"] for a in active.values()
     )
@@ -544,7 +544,7 @@ def test_dv_successive_deletes_union(spark, tmp_path):
 
 
 def test_dv_delete_fully_matched_file_is_pure_remove(spark, tmp_path):
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_write import (
         delete_delta,
         write_delta,
@@ -561,7 +561,7 @@ def test_dv_delete_fully_matched_file_is_pure_remove(spark, tmp_path):
     assert out.count() == 50 and out.filter("lo").count() == 0
     # at least one file dropped entirely: active set shrank, and the
     # dropped file has NO deletion vector (pure remove, no DV blob)
-    active, _ = _replay_log(str(t / "_delta_log"))
+    active = snapshot(str(t)).active
     assert res["files_removed"] >= 1
     assert all(
         not a.get("deletionVector")
@@ -571,7 +571,7 @@ def test_dv_delete_fully_matched_file_is_pure_remove(spark, tmp_path):
 
 
 def test_dv_update_stages_only_matched_images(spark, tmp_path):
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_write import update_delta
 
     t = tmp_path / "t"
@@ -684,7 +684,7 @@ def test_property_routing_survives_checkpoint_replay(spark, tmp_path):
     table had a checkpoint.  Pin: checkpoint, then DELETE still takes
     the merge-on-read DV path (same file re-added with a descriptor).
     """
-    from pg_analytics_spark.sources.delta import _replay_log
+    from pg_analytics_spark.sources.delta import snapshot
     from pg_analytics_spark.sources.delta_write import (
         checkpoint_delta,
         delete_delta,
@@ -701,7 +701,8 @@ def test_property_routing_survives_checkpoint_replay(spark, tmp_path):
     )
     checkpoint_delta(t)
     delete_delta(spark, t, "k = 3")  # routing comes from the PROPERTY
-    active, meta = _replay_log(t + "/_delta_log")
+    snap = snapshot(t)
+    active, meta = snap.active, snap.metadata
     assert isinstance(meta.get("configuration"), dict)
     assert any(a.get("deletionVector") for a in active.values()), (
         "post-checkpoint DELETE lost the DV routing property"

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from pg_analytics_spark.errors import UnsupportedFormat
 from pg_analytics_spark.sources import load_source
+from pg_analytics_spark.sources.delta import snapshot
 from pg_analytics_spark.sources.delta_rowtracking import (
     row_id_high_watermark,
     with_current_row_ids,
@@ -55,7 +56,7 @@ def test_append_assigns_fresh_ids(spark, rt_table):
     assert {got[k] for k in range(10)} == {(i, 0) for i in range(10)}
     assert {got[k] for k in range(10, 15)} == {(i, 1) for i in range(10, 15)}
     log_dir = os.path.join(rt_table, "_delta_log")
-    assert row_id_high_watermark(log_dir) == 14
+    assert row_id_high_watermark(snapshot(rt_table)) == 14
     with open(os.path.join(log_dir, f"{0:020d}.json")) as fh:
         actions = [json.loads(ln) for ln in fh if ln.strip()]
     proto = next(a["protocol"] for a in actions if "protocol" in a)
@@ -134,7 +135,7 @@ def test_checkpoint_carries_watermark_and_base_ids(spark, rt_table):
         if n.endswith(".json") and int(n[:20]) <= cp_v:
             os.remove(os.path.join(log_dir, n))
     assert _ids(spark, rt_table) == before
-    assert row_id_high_watermark(log_dir) == 14
+    assert row_id_high_watermark(snapshot(rt_table)) == 14
     df = spark.createDataFrame([(99, "z")], "k long, s string")
     write_delta(df, rt_table, mode="append")
     assert _ids(spark, rt_table)[99][0] == 15

@@ -42,7 +42,11 @@ instead of living invisibly behind healthy sf0.1 walls:
   pinned.
 - ``test_lake_commit_job_census``: the Spark jobs of each warm lake
   commit kind and read-after-commit aggregate, on small Delta and
-  Iceberg tables, are pinned as upper bounds.
+  Iceberg tables, are pinned as upper bounds; so are the Delta log
+  replays (``delta._replay_log`` calls) of each statement.
+- ``test_one_delta_snapshot``: ``sources/`` defines none of the
+  retired per-purpose Delta log walks and type decoders, and parses a
+  ``schemaString`` at one site.
 - ``test_one_iceberg_commit_point`` / ``test_one_iceberg_staging_write``:
   one function in ``sources/`` publishes an Iceberg
   ``v{N}.metadata.json``, and ``iceberg_write.py`` holds one Spark
@@ -452,6 +456,16 @@ def test_iceberg_reads_pass_a_schema():
     assert counts == _INFERRING_READ_PINS, counts
 
 
+#: Delta log replays of one warm statement: the commit's snapshot read
+#: plus the re-attach of the new snapshot.  The pins only go down.
+_COMMIT_REPLAY_PINS = {
+    "insert": 2,
+    "update": 2,
+    "delete": 2,
+    "merge": 2,
+    "read": 0,
+}
+
 #: Spark jobs of one warm lake statement through ``Engine.fetch_arrow``
 #: (the ``lake_dml`` benchmark's statements, on a fresh copy of the test
 #: ``orders``), pinned as upper bounds.  A commit's jobs include the
@@ -507,10 +521,21 @@ def _lake_statement(kind: str, t: str, i: int) -> str:
 
 
 @pytest.mark.parametrize("fmt,kind", sorted(_COMMIT_JOB_PINS))
-def test_lake_commit_job_census(engine, spark, tmp_path, fmt, kind):
+def test_lake_commit_job_census(
+    engine, spark, tmp_path, monkeypatch, fmt, kind
+):
     """The census method of ``test_dedup_rows_job_census`` on a fresh
     copy of ``orders``: one warm statement, then the next one counted
-    under its own job group."""
+    under its own job group, with its Delta log replays counted."""
+    from pg_analytics_spark.sources import delta
+
+    replay = delta._replay_log
+    replays: list[str] = []
+
+    def _counted(log_dir, version=None):
+        replays.append(log_dir)
+        return replay(log_dir, version)
+
     t = f"census_{fmt}_{kind}"
     engine.sql(
         f"CREATE TABLE {t} USING {fmt} LOCATION '{tmp_path / t}' "
@@ -518,6 +543,8 @@ def test_lake_commit_job_census(engine, spark, tmp_path, fmt, kind):
     )
     try:
         for i, tag in enumerate(("warm", "counted")):
+            if tag == "counted":
+                monkeypatch.setattr(delta, "_replay_log", _counted)
             _, jobs = _jobs_in(
                 spark,
                 f"commit-census-{fmt}-{kind}-{tag}",
@@ -526,9 +553,16 @@ def test_lake_commit_job_census(engine, spark, tmp_path, fmt, kind):
                 ),
             )
     finally:
+        monkeypatch.undo()
         engine.detach(t)
     pin = _COMMIT_JOB_PINS[(fmt, kind)]
     assert jobs <= pin, f"{fmt} {kind} ran {jobs} Spark jobs, pinned {pin}"
+    if fmt == "delta":
+        pin = _COMMIT_REPLAY_PINS[kind]
+        assert len(replays) <= pin, (
+            f"delta {kind} replayed the log {len(replays)} times, "
+            f"pinned {pin}"
+        )
 
 
 #: Functions in ``sources/`` that publish an Iceberg ``v{N}.metadata.json``
@@ -598,3 +632,66 @@ def _spark_parquet_writes(src: str) -> int:
 def test_one_iceberg_staging_write():
     src = (_WORKLOAD.parent / "sources" / "iceberg_write.py").read_text()
     assert _spark_parquet_writes(src) == _ICEBERG_SPARK_WRITES
+
+
+#: Per-purpose Delta log walks and type decoders that the one snapshot
+#: (``delta.snapshot``) and its one decoder replaced; ``sources/``
+#: defines none of them again.
+_RETIRED_DELTA_HELPERS = {
+    "_latest_protocol",
+    "_txn_versions",
+    "live_domain_metadata",
+    "_domain_rows_from_checkpoint",
+    "_delta_type_contextfree",
+    "_partition_types",
+    "_table_state",
+    "_next_version",
+}
+#: ``json.loads`` calls on a ``schemaString`` (subscript or ``.get``)
+#: per ``sources/`` module; the pins only go down.
+_SCHEMA_STRING_PARSE_PINS = {"delta.py": 1}
+
+
+def _schema_string_parses(src: str) -> int:
+    def _names_schema_string(node) -> bool:
+        if isinstance(node, ast.Subscript):
+            key = node.slice
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "get"
+            and node.args
+        ):
+            key = node.args[0]
+        else:
+            return False
+        return isinstance(key, ast.Constant) and key.value == "schemaString"
+
+    return sum(
+        1
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "loads"
+        and getattr(n.func.value, "id", None) == "json"
+        and n.args
+        and _names_schema_string(n.args[0])
+    )
+
+
+def test_one_delta_snapshot():
+    src = _WORKLOAD.parent / "sources"
+    defined = {
+        (mod.name, n.name)
+        for mod in sorted(src.glob("*.py"))
+        for n in ast.walk(ast.parse(mod.read_text()))
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        and n.name in _RETIRED_DELTA_HELPERS
+    }
+    assert defined == set(), defined
+    parses = {
+        mod.name: k
+        for mod in sorted(src.glob("*.py"))
+        if (k := _schema_string_parses(mod.read_text()))
+    }
+    assert parses == _SCHEMA_STRING_PARSE_PINS, parses
