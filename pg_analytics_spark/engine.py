@@ -3703,14 +3703,21 @@ class Engine:
     def fetch(self, query: str, args: dict | None = None):
         """Run SQL and return all rows (the full-pushdown sink path,
         E2).  Arrow-accelerated under the hood for pandas interchange;
-        use :meth:`iter_rows` for results larger than driver memory."""
-        return self.sql(query, args).collect()
+        use :meth:`iter_rows` for results larger than driver memory.
+
+        The whole result goes to the driver, so a final ``ORDER BY``
+        sorts in one task (:func:`_sort_in_one_task`): no
+        range-sampling job and no sort shuffle across partitions."""
+        return _sort_in_one_task(self.sql(query, args)).collect()
 
     def iter_rows(self, query: str, args: dict | None = None):
         """Run SQL and stream rows lazily, one executor partition at a
         time — the analog of the reference's batched ``iter_scan``
         cursor (E3): the driver holds one batch, never the full result.
-        """
+
+        A final ``ORDER BY`` keeps Spark's range-partitioned sort: the
+        result may exceed driver memory, and one task would have to
+        hold and sort all of it."""
         return self.sql(query, args).toLocalIterator()
 
     def summarize(self, table_or_query: str) -> DataFrame:
@@ -3780,8 +3787,12 @@ class Engine:
         from DuckDB to Postgres, src/duckdb/connection.rs:176-229 /
         src/hooks/query.rs:134-194).  Spark 4's native ``toArrow`` keeps
         the transfer columnar end to end; downstream pandas/polars/
-        DuckDB consumers take the table zero-copy."""
-        return self.sql(query, args).toArrow()
+        DuckDB consumers take the table zero-copy.
+
+        The whole result goes to the driver, so a final ``ORDER BY``
+        sorts in one task (:func:`_sort_in_one_task`): no
+        range-sampling job and no sort shuffle across partitions."""
+        return _sort_in_one_task(self.sql(query, args)).toArrow()
 
     def iter_arrow(
         self, query: str, args: dict | None = None, batch_rows: int = 65536
@@ -3801,7 +3812,11 @@ class Engine:
         ``toLocalIterator``+``Row.asDict``+``from_pylist`` per-row hop
         — 2× overall, with the gap entirely in the conversion.  Use
         :meth:`fetch_arrow` when the whole result fits in driver
-        memory."""
+        memory.
+
+        A final ``ORDER BY`` keeps Spark's range-partitioned sort, as
+        in :meth:`iter_rows`: the stream may exceed driver memory, and
+        one task would have to hold and sort all of it."""
         import pyarrow as pa
 
         df = self.sql(query, args)
@@ -3900,6 +3915,50 @@ class Engine:
                     _prev(signum, frame)
 
             _signal.signal(s, _handler)
+
+
+def _sort_in_one_task(df: DataFrame) -> DataFrame:
+    """``df`` for a result delivered whole to the driver.
+
+    When the analyzed plan's root is a global ``Sort`` (under any chain
+    of ``Project`` nodes, or as the main plan of a ``WithCTE``), this
+    returns the same plan with ``Repartition(1, shuffle=true)`` under
+    that ``Sort``.  Spark's ``RangePartitioner`` needs no sampling job
+    for one output partition, so the statement runs no range-sampling
+    job and no sort shuffle across partitions.  The child still runs
+    in parallel; only the sort of the rows bound for the driver runs
+    in one task.  Every other plan is returned as it is: a ``LIMIT``
+    root plans as ``TakeOrderedAndProject`` already, and a sort whose
+    input is bounded (``maxRows``: a ``LIMIT``, a global aggregate,
+    ``VALUES``) arrives in one partition or is dropped by the
+    optimizer, where the inserted shuffle would be one stage more.
+    """
+    jvm = df.sparkSession._jvm
+
+    def rewrite(node):
+        name = node.nodeName()
+        if name in ("Project", "WithCTE"):
+            # a WithCTE lists its CTE definitions first, its main plan last
+            kids = node.children()
+            new = rewrite(kids.last())
+            return None if new is None else node.withNewChildren(
+                kids.init().appended(new)
+            )
+        if (name == "Sort" and getattr(node, "global")()
+                and node.child().maxRows().isEmpty()):
+            one = jvm.org.apache.spark.sql.catalyst.plans.logical.Repartition(
+                1, True, node.child()
+            )
+            return node.withNewChildren(jvm.PythonUtils.toSeq([one]))
+        return None
+
+    plan = rewrite(df._jdf.queryExecution().analyzed())
+    if plan is None:
+        return df
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df._jdf.sparkSession(), plan
+    )
+    return type(df)(jdf, df.sparkSession)
 
 
 def _cast_error(table: str, f) -> str:

@@ -140,15 +140,13 @@ def assign_fresh_row_ids(
 def strip_hidden_stats(adds: list[dict], hidden: tuple[str, str]) -> None:
     """Remove the materialized columns from each add's stats min/max
     maps (delta-spark stats only table-schema columns; the hidden
-    identity columns must not leak into data skipping)."""
+    identity columns must not leak into data skipping).  The stats
+    are this commit's own, so stats that do not parse raise."""
     for entry in adds:
         add = entry["add"]
         if not add.get("stats"):
             continue
-        try:
-            s = json.loads(add["stats"])
-        except Exception:
-            continue
+        s = json.loads(add["stats"])
         for key in ("minValues", "maxValues", "nullCount"):
             m = s.get(key)
             if isinstance(m, dict):

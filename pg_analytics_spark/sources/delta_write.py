@@ -71,18 +71,15 @@ def _json_stat(v):
     return v
 
 
-def _file_stats(path: str, schema) -> str | None:
+def _file_stats(path: str, schema) -> str:
     """stats JSON from the parquet footer: numRecords, nullCount for
     the file's top-level primitive columns, and min/max for the
     columns of ``schema`` with a statable type (the public Delta stats
     shape).  A float column holding NaN gets no min/max (see
-    footer_stats).  Optional: an unreadable footer
-    yields None (no stats, file still committed); the ROW COUNT the
-    writer reports never depends on this."""
-    try:
-        bounds, nulls, num_rows = footer_stats(path)
-    except Exception:
-        return None
+    footer_stats).  An unreadable footer raises: a file whose footer
+    does not read is not committed (see :func:`_stats_for_files` for
+    files this commit did not write)."""
+    bounds, nulls, num_rows = footer_stats(path)
     statable = {
         f.name
         for f in schema.fields
@@ -104,8 +101,15 @@ def _file_stats(path: str, schema) -> str | None:
     )
 
 
-def _stats_for_files(spark, files: list[str], schema) -> dict[str, tuple]:
+def _stats_for_files(
+    spark, files: list[str], schema, *, foreign: bool = False
+) -> dict[str, tuple]:
     """path → (stats_json, size, mtime_ms) for every committed file.
+
+    A file this commit wrote must read: an unreadable footer raises.
+    ``foreign=True`` (CONVERT, which commits files it did not write)
+    commits such a file without stats instead, and logs a
+    ``fallback_warning`` naming it.
 
     Large commits compute the parquet-footer reads ON THE EXECUTORS
     (one Spark job over the file list) — at 100k files a sequential
@@ -121,13 +125,30 @@ def _stats_for_files(spark, files: list[str], schema) -> dict[str, tuple]:
     """
 
     def _one(p: str):
+        try:
+            stats, err = _file_stats(p, schema), None
+        except Exception as exc:
+            if not foreign:
+                raise
+            stats, err = None, f"{type(exc).__name__}: {exc}"
         return p, (
-            _file_stats(p, schema),
+            stats,
             os.path.getsize(p),
             int(os.path.getmtime(p) * 1000),
+            err,
         )
 
-    return per_file_on_executors(spark, files, _one)
+    out = {}
+    for p, (stats, size, mtime_ms, err) in per_file_on_executors(
+        spark, files, _one
+    ).items():
+        if err is not None:
+            fallback_warning(
+                f"delta stats: footer of {p} does not read ({err}); "
+                "committed without stats, so no data skipping on it"
+            )
+        out[p] = (stats, size, mtime_ms)
+    return out
 
 
 def per_file_on_executors(spark, files: list[str], one) -> dict:
@@ -2647,7 +2668,7 @@ def convert_parquet_to_delta(
         ]
     )
     per_file = _stats_for_files(
-        spark, [os.path.join(path, r) for r in rels], schema
+        spark, [os.path.join(path, r) for r in rels], schema, foreign=True
     )
     now_ms = int(_time.time() * 1000)
     actions: list[dict] = [

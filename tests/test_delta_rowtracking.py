@@ -254,3 +254,15 @@ def test_add_column_ok_and_ids_survive(spark, rt_table):
     got = {r["k"]: (r["_row_id"], r["_row_commit_version"])
            for r in out.collect()}
     assert got == before
+
+
+def test_strip_hidden_stats_refuses_stats_that_do_not_parse():
+    from pg_analytics_spark.sources.delta_rowtracking import strip_hidden_stats
+
+    good = {"add": {"stats": json.dumps(
+        {"numRecords": 1, "minValues": {"k": 1, "_id": 0}, "nullCount": {}}
+    )}}
+    strip_hidden_stats([good], ("_id", "_ver"))
+    assert json.loads(good["add"]["stats"])["minValues"] == {"k": 1}
+    with pytest.raises(json.JSONDecodeError):
+        strip_hidden_stats([{"add": {"stats": "{not json"}}], ("_id", "_ver"))

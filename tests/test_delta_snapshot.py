@@ -247,6 +247,35 @@ def test_auto_checkpoint_failure_warns(tmp_path, monkeypatch, caplog):
     ), msgs
 
 
+def test_unreadable_footer_of_a_written_file_raises(tmp_path):
+    bad = tmp_path / "part-0.parquet"
+    bad.write_bytes(b"not a parquet file")
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    with pytest.raises(Exception):
+        delta_write._file_stats(str(bad), schema)
+    with pytest.raises(Exception):
+        delta_write._stats_for_files(None, [str(bad)], schema)
+
+
+def test_unreadable_footer_of_a_converted_file_warns(tmp_path, caplog):
+    """CONVERT commits files it did not write: one whose footer does not
+    read is committed without stats, and the warning names it."""
+    bad = tmp_path / "part-0.parquet"
+    bad.write_bytes(b"not a parquet file")
+    good = tmp_path / "part-1.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), str(good))
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    with caplog.at_level(logging.WARNING, logger="pg_analytics_spark"):
+        out = delta_write._stats_for_files(
+            None, [str(bad), str(good)], schema, foreign=True
+        )
+    assert out[str(bad)][0] is None
+    assert json.loads(out[str(good)][0])["numRecords"] == 2
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(str(bad) in m and "without stats" in m for m in msgs), msgs
+    assert not any(str(good) in m for m in msgs), msgs
+
+
 # ------------------------------------------------------------------ #
 # with Spark
 # ------------------------------------------------------------------ #

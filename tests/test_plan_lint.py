@@ -44,6 +44,12 @@ instead of living invisibly behind healthy sf0.1 walls:
   commit kind and read-after-commit aggregate, on small Delta and
   Iceberg tables, are pinned as upper bounds; so are the Delta log
   replays (``delta._replay_log`` calls) of each statement.
+- ``test_delivery_job_census``: the Spark jobs of a warm
+  ``Engine.fetch_arrow`` of a sorted, a ``WithCTE``, a ``LIMIT`` and an
+  unsorted TPC-H statement are pinned as upper bounds.
+- ``test_driver_deliveries_sort_in_one_task``: every ``.toArrow()`` or
+  ``.collect()`` of a ``self.sql(...)`` result in ``engine.py`` goes
+  through ``_sort_in_one_task``.
 - ``test_one_delta_snapshot``: ``sources/`` defines none of the
   retired per-purpose Delta log walks and type decoders, and parses a
   ``schemaString`` at one site.
@@ -475,12 +481,12 @@ _COMMIT_JOB_PINS = {
     ("delta", "update"): 4,
     ("delta", "delete"): 4,
     ("delta", "merge"): 10,
-    ("delta", "read"): 4,
+    ("delta", "read"): 3,
     ("iceberg", "insert"): 2,
     ("iceberg", "update"): 5,
     ("iceberg", "delete"): 3,
     ("iceberg", "merge"): 8,
-    ("iceberg", "read"): 4,
+    ("iceberg", "read"): 3,
 }
 
 _ORDER_COLS = (
@@ -563,6 +569,98 @@ def test_lake_commit_job_census(
             f"delta {kind} replayed the log {len(replays)} times, "
             f"pinned {pin}"
         )
+
+
+#: Spark jobs of one warm ``Engine.fetch_arrow`` of four plan shapes at
+#: the test SF, pinned as upper bounds: a global ``Sort`` root (q1), a
+#: ``WithCTE`` root over a sort (q15), a ``LIMIT`` root (q3, planned as
+#: ``TakeOrderedAndProject``) and no sort (q6).  The two sorted roots
+#: sort in one task, with no range-sampling job.  The pins only go down.
+_DELIVERY_JOB_PINS = {
+    "q1_pricing_summary": 3,
+    "q15_top_supplier": 7,
+    "q3_shipping_priority": 4,
+    "q6_forecast_revenue": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DELIVERY_JOB_PINS))
+def test_delivery_job_census(engine, spark, name):
+    sql = REGISTRY[name].oracle
+    for tag in ("warm", "counted"):
+        _, jobs = _jobs_in(
+            spark, f"delivery-census-{name}-{tag}",
+            lambda: engine.fetch_arrow(sql),
+        )
+    pin = _DELIVERY_JOB_PINS[name]
+    assert jobs <= pin, f"{name} ran {jobs} Spark jobs, pinned {pin}"
+
+
+_DELIVERY_HELPER = "_sort_in_one_task"
+
+
+def _deliveries(src: str) -> tuple[int, list[int]]:
+    """(deliveries through the helper, lines of the others): every
+    ``.toArrow()`` / ``.collect()`` on a ``self.sql(...)`` result, taken
+    directly or through a local name bound to it, in ``src``."""
+
+    def is_sql(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "sql"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "self"
+        )
+
+    helped, direct = 0, []
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        bound = {
+            t.id
+            for a in ast.walk(fn)
+            if isinstance(a, ast.Assign) and is_sql(a.value)
+            for t in a.targets
+            if isinstance(t, ast.Name)
+        }
+        for call in ast.walk(fn):
+            if not (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr in ("toArrow", "collect")
+            ):
+                continue
+            recv = call.func.value
+            if (
+                isinstance(recv, ast.Call)
+                and isinstance(recv.func, ast.Name)
+                and recv.func.id == _DELIVERY_HELPER
+            ):
+                helped += 1
+            elif is_sql(recv) or (
+                isinstance(recv, ast.Name) and recv.id in bound
+            ):
+                direct.append(call.lineno)
+    return helped, direct
+
+
+def test_driver_deliveries_sort_in_one_task():
+    """Every driver-bound delivery of a ``self.sql`` result in
+    ``engine.py`` goes through ``_sort_in_one_task``."""
+    src = (Path(__file__).resolve().parent.parent
+           / "pg_analytics_spark/engine.py").read_text()
+    helped, direct = _deliveries(src)
+    assert not direct, (
+        f"engine.py lines {direct} deliver a self.sql result without "
+        f"{_DELIVERY_HELPER}"
+    )
+    assert helped >= 2, "fetch and fetch_arrow go through the helper"
+    # the lint sees both spellings of a delivery it must refuse
+    assert _deliveries(
+        "def f(self):\n    return self.sql(q).toArrow()\n"
+        "def g(self):\n    df = self.sql(q)\n    return df.collect()\n"
+    ) == (0, [2, 5])
 
 
 #: Functions in ``sources/`` that publish an Iceberg ``v{N}.metadata.json``

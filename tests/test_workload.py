@@ -21,3 +21,24 @@ def test_query_matches_oracle(name, spark, oracle):
         assert df.count() >= 0  # rows-only check, like the driver's weak gate
         return
     assert_df_matches_oracle(df, oracle, qd.oracle, float_tol=0.0)
+
+
+def test_freeze_holds_its_rows_without_the_files(spark, tmp_path):
+    """``freeze`` returns exactly the input's rows, plans no file scan,
+    and still returns them after the scratch files are gone."""
+    import shutil
+
+    from pg_analytics_spark.workload.base import freeze
+
+    path = str(tmp_path / "scratch")
+    spark.range(0, 500, 1, 4).selectExpr(
+        "id", "id % 7 AS g", "CAST(id AS STRING) AS s"
+    ).write.parquet(path)
+    src = spark.read.parquet(path)
+    want = sorted(tuple(r) for r in src.collect())
+    frozen = freeze(src)
+    plan = frozen._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan, plan
+    assert sorted(tuple(r) for r in frozen.collect()) == want
+    shutil.rmtree(path)
+    assert sorted(tuple(r) for r in frozen.collect()) == want
